@@ -8,8 +8,8 @@ Run from the root of a checkout of the repository. The run:
    (excluded from every metric);
 2. starts a Spark session with ``logpipe.session.get_spark`` defaults on
    ``local[<cores>]`` and warms it (``setup_s``);
-3. runs a closed loop with one client: a cold batch (``first_batch_s``),
-   then warm batches, each starting after the previous one committed,
+3. runs a closed loop with one client: a cold batch (its wall is the
+   traced run's ``batch.first_s``), then warm batches, each starting after the previous one committed,
    for ``--seconds`` seconds (at least two);
    ``rows_per_s`` is the input rows over the median warm batch wall;
 4. checks every batch's output against an expectation computed without
@@ -41,12 +41,12 @@ ROOT = os.path.dirname(HERE)
 END_TO_END = {
     "setup_s": "s",
     "rows_per_s": "1/s",
-    "first_batch_s": "s",
 }
 
 PER_LAYER = {
     "session.start_s": "s",
     "memory.peak_rss_mb": "MB",
+    "batch.first_s": "s",
     "logfiles.read.build_s": "s",
     "logfiles.read.exec_s": "s",
     "logfiles.read.rows": "count",
@@ -300,6 +300,7 @@ def measure(args, base: str, work: str) -> int:
         metrics = {k: 0.0 for k in units}
         metrics["session.start_s"] = start_s
         metrics["memory.peak_rss_mb"] = peak / 2**20
+        metrics["batch.first_s"] = batches[0]["wall"]
         if traced:
             for k in traced[0]["layers"]:
                 metrics[k] = statistics.median(float(b["layers"][k]) for b in traced)
@@ -321,7 +322,6 @@ def measure(args, base: str, work: str) -> int:
         metrics = {
             "setup_s": setup_s,
             "rows_per_s": info["rows"] / statistics.median(plain),
-            "first_batch_s": batches[0]["wall"],
         }
         units = END_TO_END
 
