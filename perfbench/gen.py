@@ -234,8 +234,8 @@ def _word(rng: random.Random) -> str:
 
 # full-size inputs; --scale multiplies the row-count knob of each
 SIZES = {
-    "ds_tail": {"n_files": 128, "lines_per_file": 250},
-    "eci_export": {"n_rows": 50_000, "n_convs": 4096},
+    "ds_tail": {"n_files": 128, "lines_per_file": 64},
+    "eci_export": {"n_rows": 12_500, "n_convs": 4096},
     "curation": {"n_docs": 5000},
 }
 

@@ -1,6 +1,6 @@
 """logpipe benchmark: one seeded workload, end to end or traced.
 
-    python3 perfbench/run.py --workload ds_tail --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload ds_tail --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout of the repository. The run:
 
@@ -9,16 +9,19 @@ Run from the root of a checkout of the repository. The run:
 2. starts a Spark session with ``logpipe.session.get_spark`` defaults on
    ``local[<cores>]`` and warms it (``setup_s``);
 3. runs a closed loop with one client: a cold batch (its wall is the
-   traced run's ``batch.first_s``), then warm batches, each starting after the previous one committed,
-   for ``--seconds`` seconds (at least two);
-   ``rows_per_s`` is the input rows over the median warm batch wall;
+   traced run's ``batch.first_s``), then a fixed number of warm batches
+   that take about ``--seconds`` on an idle 4-core host, each starting
+   after the previous one committed; ``rows_per_cpu_s`` is the input
+   rows of all these batches, the cold one included, over the CPU
+   seconds this process, the JVM and the Python workers spent on them;
 4. checks every batch's output against an expectation computed without
    the program, and counts mismatches and exceptions in ``failed``.
 
-``--trace 1`` alternates plain and traced batches instead and reports
-the per-layer metrics; see README.md. Everything the run writes stays
-under ``.perfbench/`` in the checkout. The last line of standard output
-is one JSON object: ``correct``, ``attempted``, ``failed``, ``metrics``.
+``--trace 1`` alternates plain and traced batches for ``--seconds``
+instead and reports the per-layer metrics; see README.md. Everything
+the run writes stays under ``.perfbench/`` in the checkout. The last
+line of standard output is one JSON object: ``correct``, ``attempted``,
+``failed``, ``metrics``.
 """
 
 from __future__ import annotations
@@ -40,10 +43,11 @@ ROOT = os.path.dirname(HERE)
 
 END_TO_END = {
     "setup_s": "s",
-    "rows_per_s": "1/s",
+    "rows_per_cpu_s": "1/s",
 }
 
 PER_LAYER = {
+    "rows_per_s": "1/s",
     "session.start_s": "s",
     "memory.peak_rss_mb": "MB",
     "batch.first_s": "s",
@@ -113,6 +117,55 @@ CURATION_LAYERS = {
 
 WORKLOAD_NAMES = ("ds_tail", "eci_export")
 
+# A plain run measures a fixed number of warm batches, not a time
+# window: the JVM is still compiling (JIT) through the first minute of
+# batches, and each batch costs less CPU and wall than the one before,
+# so a window that holds fewer batches when the host is slow would
+# measure an earlier, costlier stage. The count is --seconds over the
+# workload's warm-batch wall on an idle 4-core host, at least MIN_WARM.
+NOMINAL_BATCH_S = {"ds_tail": 5.5, "eci_export": 4.5, "curation": 12.0}
+MIN_WARM = 3
+
+
+def warm_batches(workload: str, seconds: float) -> int:
+    return max(MIN_WARM, round(seconds / NOMINAL_BATCH_S[workload]))
+
+
+def _tree_stats() -> dict[int, list[str]]:
+    """The /proc/<pid>/stat fields after the command name (the state
+    first) of this process and all its descendants: the JVM and the
+    Python workers."""
+    stats: dict[int, list[str]] = {}
+    children: dict[int, list[int]] = {}
+    for name in os.listdir("/proc"):
+        if name.isdigit():
+            try:
+                with open(f"/proc/{name}/stat") as f:
+                    fields = f.read().rsplit(")", 1)[1].split()
+            except (OSError, IndexError):
+                continue
+            stats[int(name)] = fields
+            children.setdefault(int(fields[1]), []).append(int(name))
+    out, todo = {}, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        todo += children.get(pid, [])
+        if pid in stats:
+            out[pid] = stats[pid]
+    return out
+
+
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds (user and system) used so far by this process, its
+    descendants and the descendants they have reaped. Time the host's
+    hypervisor steals from the VM is not in it."""
+    return sum(
+        sum(int(x) for x in f[11:15]) for f in _tree_stats().values()
+    ) / _TICK
+
 
 class RssSampler(threading.Thread):
     """Peak resident memory of this process and all its descendants (the
@@ -124,25 +177,8 @@ class RssSampler(threading.Thread):
         self._page = os.sysconf("SC_PAGE_SIZE")
 
     def _tree_rss(self) -> int:
-        children: dict[int, list[int]] = {}
-        for name in os.listdir("/proc"):
-            if name.isdigit():
-                try:
-                    with open(f"/proc/{name}/stat") as f:
-                        ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-                except (OSError, IndexError, ValueError):
-                    continue
-                children.setdefault(ppid, []).append(int(name))
-        total, todo = 0, [os.getpid()]
-        while todo:
-            pid = todo.pop()
-            todo += children.get(pid, [])
-            try:
-                with open(f"/proc/{pid}/statm") as f:
-                    total += int(f.read().split()[1]) * self._page
-            except (OSError, IndexError, ValueError):
-                pass
-        return total
+        # field 24 of /proc/<pid>/stat: resident pages
+        return sum(int(f[21]) for f in _tree_stats().values()) * self._page
 
     def run(self) -> None:
         while not self._done.is_set():
@@ -187,13 +223,16 @@ def stop_session(spark) -> None:
             proc.wait()
 
 
-def run_loop(wl, seconds: float, trace: bool, spans, store):
-    """The closed loop: one record per batch, cold batch first."""
+def run_loop(wl, seconds: float, trace: bool, n_warm: int, spans, store):
+    """The closed loop, one record per batch: the cold batch, then
+    ``n_warm`` warm batches, or with ``trace`` pairs of a plain and a
+    traced batch for ``seconds``."""
     batches: list[dict] = []
 
     def one(i: int, traced: bool) -> None:
         rec = {"i": i, "traced": traced, "result": None, "error": None, "layers": None}
         mark = store.mark()
+        cpu = tree_cpu_s()
         t = time.perf_counter()
         try:
             if traced:
@@ -206,21 +245,23 @@ def run_loop(wl, seconds: float, trace: bool, spans, store):
             rec["error"] = f"{type(e).__name__}: {e}"
             print(f"batch {i} failed: {rec['error']}", file=sys.stderr)
         rec["wall"] = time.perf_counter() - t
+        rec["cpu"] = tree_cpu_s() - cpu
         if trace and not traced:
             rec["stages"] = store.stage_stats(mark)
         batches.append(rec)
 
     one(0, False)  # the cold batch
+    if not trace:
+        for i in range(1, n_warm + 1):
+            one(i, False)
+        return batches
     t_end = time.perf_counter() + seconds
     i = 1
     while True:
         one(i, False)
-        i += 1
-        if trace:
-            one(i, True)
-            i += 1
-        warm = [b for b in batches[1:] if not b["traced"]]
-        if time.perf_counter() >= t_end and len(warm) >= (1 if trace else 2):
+        one(i + 1, True)
+        i += 2
+        if time.perf_counter() >= t_end:
             break
     return batches
 
@@ -268,8 +309,10 @@ def measure(args, base: str, work: str) -> int:
     with open(os.path.join(data, "bookkeeping.json")) as f:
         info = json.load(f)
 
+    # the sampler's /proc walks cost CPU in this process: traced runs only
     rss = RssSampler()
-    rss.start()
+    if args.trace:
+        rss.start()
     t0 = time.perf_counter()
     spark, start_s = start_session()
     setup_s = time.perf_counter() - t0
@@ -279,8 +322,11 @@ def measure(args, base: str, work: str) -> int:
 
         spans, store = Spans(), StatusStore(spark)
         wl = WORKLOADS[args.workload](spark, info, work)
-        batches = run_loop(wl, args.seconds, bool(args.trace), spans, store)
-        peak = rss.stop()
+        batches = run_loop(
+            wl, args.seconds, bool(args.trace), warm_batches(args.workload, args.seconds),
+            spans, store,
+        )
+        peak = rss.stop() if args.trace else 0
         expected = wl.expected()
         failed = 0
         for b in batches:
@@ -293,11 +339,14 @@ def measure(args, base: str, work: str) -> int:
             rss.stop()
         stop_session(spark)
 
-    plain = [b["wall"] for b in batches[1:] if not b["traced"] and b["error"] is None]
+    warm = [b for b in batches[1:] if not b["traced"] and b["error"] is None]
+    plain = [b["wall"] for b in warm]
+    done = [b for b in batches if not b["traced"] and b["error"] is None]
     if args.trace:
         traced = [b for b in batches if b["traced"] and b["layers"] is not None]
         units = {**PER_LAYER, **(CURATION_LAYERS if args.workload == "curation" else {})}
         metrics = {k: 0.0 for k in units}
+        metrics["rows_per_s"] = info["rows"] / statistics.median(plain)
         metrics["session.start_s"] = start_s
         metrics["memory.peak_rss_mb"] = peak / 2**20
         metrics["batch.first_s"] = batches[0]["wall"]
@@ -321,14 +370,21 @@ def measure(args, base: str, work: str) -> int:
     else:
         metrics = {
             "setup_s": setup_s,
-            "rows_per_s": info["rows"] / statistics.median(plain),
+            # every batch's rows, the cold one's too, over all their CPU
+            # time: the JIT compiler's bursts and the Python workers'
+            # start-up land in one batch or the next, and the total is
+            # steadier than any one batch
+            "rows_per_cpu_s": info["rows"] * len(done) / sum(b["cpu"] for b in done),
         }
         units = END_TO_END
 
     for k, v in metrics.items():
         print(f"{k:32s} {v:14.4f} {units[k]}", file=sys.stderr)
-    print(f"batches {len(batches)} (warm plain walls: "
-          f"{', '.join(f'{w:.2f}' for w in plain)}), failed {failed}, "
+    walls = ", ".join(f"{b['wall']:.2f}" for b in warm)
+    cpus = ", ".join(f"{b['cpu']:.2f}" for b in warm)
+    cold = batches[0]
+    print(f"batches {len(batches)} (warm plain walls: {walls}; CPU s: {cpus}; "
+          f"cold batch {cold['wall']:.2f} s, {cold['cpu']:.2f} CPU s), failed {failed}, "
           f"failed_frac {failed / len(batches):.3f}", file=sys.stderr)
     print(json.dumps({
         "correct": failed == 0,
