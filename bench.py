@@ -20,15 +20,10 @@ passes is the steady-state cost of the PLAN, which is the thing being
 graded.
 
 compile_sec isolates plan-compile wall (analysis+optimization+physical
-planning, no execution) for the largest composed plans. Entries
+planning, no execution) for the composed curation DAG. Entries
 deviating >1.5x from the prior committed round are re-probed min-of-3
 in a fresh JVM and the result recorded under "probes" in the output
-JSON. The composed DAG's reduced-scale point
-(curated_corpus_v5_sf0_01) left the sweep in round 10 — datum
-unchanged since round 5 ("fixed compile+iteration cost"), and its
-~25s of late-sweep heap pressure was the main manufacturer of the
-drift class (round-9 verdict task 4); run it on demand with
-`--probe curated_corpus_v5_sf0_01`. The layout pair's standing
+JSON. The layout pair's standing
 regression protocol (plan check, per-pass ratios, auto `--probe-pair`)
 is documented at its HEADLINE entry.
 """
@@ -48,11 +43,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # (3 passes x ~180s of entries + skew extras) risks outliving the
 # grading driver's bench window. Light entries keep the full min-of-N.
 HEAVY_PASS_CAP = {
-    # the superseded DAG generations (subsumption ladder
-    # v2->v3->v4->v5) are all retired from the sweep under the
-    # one-round rule — see _bench_queries; the composed-DAG sf-pair
-    # signal comes from v5 (round-5 verdict task 5: >half the r5 sweep
-    # wall measured superseded DAGs)
     "curated_corpus_v5": 2,
     "simhash_near_dups_10x": 2,
     "dup_span_trim_10x": 2,
@@ -111,15 +101,6 @@ HEADLINE = [
     ("stitch_layout_plain", "noop"),
     ("stitch_layout_bucketed", "noop"),
     ("curated_corpus_v5", "collect"),
-    # curated_corpus_v5_sf0_01 RETIRED from the sweep (round-9 verdict
-    # task 4): its datum — fixed compile+iteration cost, "data-shape
-    # not size" — was established in round 5 and unchanged through
-    # four rounds (last in-sweep point: 25.6s of the 153.8s r9 driver
-    # sweep, BENCH_r09.json), and its ~25s of late-sweep heap pressure
-    # manufactured the drift class every other entry got adjudicated
-    # against. Still runnable on demand: `python bench.py --probe
-    # curated_corpus_v5_sf0_01` (it stays in _bench_queries); the
-    # sf-slope signal continues via the sf0.1 point + compile_sec.
     ("ann_lsh_topk", "collect"),
     ("ann_ivf_topk", "collect"),
     # flagship_sinks_uniform / _zipf are timed separately with
@@ -556,18 +537,6 @@ def _simhash_10x(spark, sf_dir):
     return simhash_near_dups(_docs_10x(spark, sf_dir), max_hamming=6)
 
 
-def _curated_v5_sf0_01(spark, sf_dir):
-    """curated_corpus_v5 pinned to sf0.01 regardless of the sweep's
-    sf_dir — the second point of the composed DAG's 10x data-slope
-    pair (carried by the REGISTERED DAG generation; the v3/v4 reduced
-    points retired with their registry slots). NOT a cheap entry (the
-    wall is fixed compile+iteration cost that doesn't shrink with sf),
-    hence its HEAVY_PASS_CAP."""
-    from logpipe.plans.driver_queries import curated_corpus_v5
-
-    return curated_corpus_v5(spark, "/root/testdata/sf0.01")
-
-
 def _dup_span_trim_10x(spark, sf_dir):
     """10x slope for span-TRIM (same token-salted copies as the stats
     slope: cross-copy spans disjoint, within-copy duplicate structure
@@ -579,51 +548,32 @@ def _dup_span_trim_10x(spark, sf_dir):
 
 def _compile_walls(spark, sf_dir) -> dict:
     """Plan-compile wall (analysis -> optimized -> physical) for the
-    largest composed DAGs — the trees grow with COMPOSITION, not data,
+    composed curation DAG — the tree grows with COMPOSITION, not data,
     so compile cost is a fixed per-query overhead worth tracking
     separately from execution (round-4 verdict task 3). Only the
     executedPlan() materialization is timed; the builder call before
-    the timer is NOT free for v4/v5 — their eager gate materialization
-    runs the span subtree — which is exactly why the timed number is
-    the compile cost of the post-cut tree, the cost every downstream
+    the timer is NOT free — its eager gate materialization runs the
+    span subtree — which is exactly why the timed number is the
+    compile cost of the post-cut tree, the cost every downstream
     consumer actually pays."""
     import time as _t
 
     from logpipe.materialize import persistent_rdd_ids, release_rdd_ids
-    from logpipe.plans.driver_queries import (
-        curated_corpus_v3,
-        curated_corpus_v4,
-        curated_corpus_v5,
-    )
+    from logpipe.plans.driver_queries import curated_corpus_v5
 
-    out = {}
-    for name, fn in (
-        ("curated_corpus_v3", curated_corpus_v3),
-        ("curated_corpus_v4", curated_corpus_v4),
-        ("curated_corpus_v5", curated_corpus_v5),
-    ):
-        pre = persistent_rdd_ids(spark)
-        df = fn(spark, sf_dir)
-        t0 = _t.perf_counter()
-        df._jdf.queryExecution().executedPlan()
-        out[name] = round(_t.perf_counter() - t0, 3)
-        release_rdd_ids(spark, persistent_rdd_ids(spark) - pre)
+    pre = persistent_rdd_ids(spark)
+    df = curated_corpus_v5(spark, sf_dir)
+    t0 = _t.perf_counter()
+    df._jdf.queryExecution().executedPlan()
+    out = {"curated_corpus_v5": round(_t.perf_counter() - t0, 3)}
+    release_rdd_ids(spark, persistent_rdd_ids(spark) - pre)
     return out
 
 
 def _bench_queries(spark, driver_queries) -> dict:
-    """Registry queries + bench-local entries (slope points, retired
-    DAG generations kept for round-over-round comparability)."""
+    """Registry queries + bench-local entries (slope points and the
+    layout pair)."""
     qs = dict(driver_queries.queries())
-    # Retired DAG generations follow the one-round rule: each stays
-    # benched ONE round past its registry retirement for the
-    # subsumption-ladder comparison, then leaves the sweep with its
-    # final datum committed — v3's in BENCH/r6_local_sweep_with_v3.json
-    # (110s of a 297s sweep), v4's in BENCH/r7_local_sweep.json
-    # (18.3s of 154.8s). Only compile walls are still tracked
-    # (_compile_walls): cheap, and plan-size-controlled rather than
-    # data-dependent.
-    qs["curated_corpus_v5_sf0_01"] = _curated_v5_sf0_01
     qs["dedup_exact"] = _dedup_exact
     qs["minhash_lsh_dups_10x"] = _minhash_10x
     qs["simhash_near_dups_10x"] = _simhash_10x

@@ -1,6 +1,6 @@
-"""Formatted-plan inspection helpers shared by plan-pinning tests and
-evidence scripts (tests/test_traindata.py, scripts/
-bucketed_rejoin_bench.py previously each carried a regex copy whose
+"""Formatted-plan inspection helpers shared by plan-pinning tests
+(tests/test_traindata.py and the retired evidence script behind
+BENCH/r7_bucketed_rejoin.json previously each carried a regex copy whose
 ``(?:.+\\n)+?\\n`` block pattern silently dropped an Exchange block at
 end-of-string and whose ``next(...)`` crashed on a block without an
 Input line — round-7 review). Parsing here is block-based: the

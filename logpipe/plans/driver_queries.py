@@ -15,7 +15,7 @@ correctness window is order-sensitive):
 - logpipe.plans.q_traindata — text analysis, PII, dedup families,
   span dedup, media, sampling (also exports the per-operator oracle
   CTE builders the composed DAGs reuse);
-- logpipe.plans.q_curation  — curated-corpus v2..v5, streaming,
+- logpipe.plans.q_curation  — curated_corpus_v5, streaming,
   simhash + cosine/ANN similarity.
 
 Numeric-parity rules used throughout (Spark double math vs DuckDB):
@@ -38,8 +38,9 @@ materializes the count table the same way; the block is driver-owned
 for the session — bench/dump_plans release it by rdd-id delta) all
 execute Spark jobs, and may raise, when the registry callable is
 invoked. Registry consumers that only want a PLAN must use the lazy
-helpers instead (`flagship_rules_frame`, the unregistered
-`curated_corpus_v3/v4` builders) — the pattern dump_plans.py follows.
+helper instead where one exists (`flagship_rules_frame`), or release
+the eager entries' checkpoint blocks by rdd-id delta after reading the
+plan — the pattern dump_plans.py follows.
 """
 
 from __future__ import annotations
@@ -55,7 +56,7 @@ from logpipe.plans.registry import (  # noqa: F401  (public machinery)
 
 # Import the gate modules IN ORDER (this is what populates the
 # registry), then re-export their names so every pre-split consumer —
-# `from logpipe.plans.driver_queries import curated_corpus_v3`,
+# `from logpipe.plans.driver_queries import curated_corpus_v5`,
 # dump_plans' `getattr(driver_queries, "flagship_rules_frame")`,
 # bench's direct gate imports — keeps working unchanged. setdefault:
 # the machinery names above win; later modules never shadow earlier

@@ -76,6 +76,11 @@ def run_pipeline(
     stays exchange-free, preserving the 100TB shape the plan pins
     assert (the only exchange a spread ever adds is
     RoundRobinPartitioning — parallelism, not a keyed shuffle).
+    Bucketed-scan caveat: the derivation reads ``.rdd``, which compiles
+    with bucketing disabled and under-reports a bucketed scan's splits,
+    so it can add a spurious round-robin exchange that breaks a
+    storage-partitioned layout downstream. Layout-sensitive callers
+    (bucketed transcripts) pass ``spread=False``.
     """
     from logpipe.spread import spread_for_compute
 

@@ -1,9 +1,9 @@
-"""Composed curated-corpus DAGs (v2..v5), the streaming gate, and the
-similarity gates (simhash, cosine/ANN) — section 3 of the registry;
-see logpipe.plans.driver_queries for the registry-wide docs. The
-curation oracles stitch together the per-operator CTE builders from
-logpipe.plans.q_traindata so a fix in a standalone gate cannot drift
-from the composed replay.
+"""The composed curated-corpus DAG (curated_corpus_v5), the streaming
+gate, and the similarity gates (simhash, cosine/ANN) — section 3 of the
+registry; see logpipe.plans.driver_queries for the registry-wide docs.
+The curation oracle stitches together the per-operator CTE builders
+from logpipe.plans.q_traindata so a fix in a standalone gate cannot
+drift from the composed replay.
 """
 
 from __future__ import annotations
@@ -17,11 +17,9 @@ from logpipe.plans.q_traindata import (
     _BLOCKLIST,
     _C4_KEEP_WHERE_SQL,
     _C4_TEXT_SQL,
-    _PII_SUFFIX_SQL,
     _TRIGRAM_SQL,
     _WORDS_SQL,
     _closure_ctes,
-    _dup_span_ctes,
     _dup_span_trim_ctes,
     _gopher_ctes,
     _hash_frac_sql,
@@ -41,43 +39,28 @@ from logpipe.sources.events import (
     load_events,
 )
 
-def _curation_tail_sql(
-    kept_cte: str = "keptc4",
-    near_threshold: float = 0.1,
-    min_overlap: int = 5,
-    budget: int = 512,
-    gopher_min_tokens: int | None = None,
-) -> str:
-    """The shared curation TAIL consumed by curated_corpus_v2 AND _v3
-    (review finding: the two builders had copy-pasted it, the exact
-    drift the shared-CTE helpers exist to prevent): benchmark
-    decontamination -> exact-dedup winners -> minhash near-dup winners
-    -> [optional Gopher keep] -> mixture -> packing -> per-bucket
-    stats. Consumes ``kept_cte`` = (doc_id, source, text); returns the
-    CTE chain plus the final SELECT, to be appended after the caller's
-    WITH RECURSIVE head. Hot multiply-referenced CTEs are MATERIALIZED
-    (DuckDB inlines CTEs per reference; un-hinted, the recursive
-    closure re-ran per consumer)."""
-    mh = _minhash_sql(threshold=near_threshold, src="kept2").strip()
+# the tail's Gopher keep threshold (textstats.gopher_keep min_tokens)
+_GOPHER_MIN_TOKENS = 20
+
+
+def _curation_tail_sql() -> str:
+    """The curation TAIL of the v5 oracle: benchmark decontamination ->
+    exact-dedup winners -> minhash near-dup winners -> Gopher keep ->
+    mixture -> packing -> per-bucket stats. Consumes the ``keptc4`` CTE
+    = (doc_id, source, text); returns the CTE chain plus the final
+    SELECT, to be appended after the caller's WITH RECURSIVE head. Hot
+    multiply-referenced CTEs are MATERIALIZED (DuckDB inlines CTEs per
+    reference; un-hinted, the recursive closure re-ran per consumer)."""
+    mh = _minhash_sql(threshold=0.1, src="kept2").strip()
     if not mh.startswith("WITH "):  # survives python -O, like the gates
         raise AssertionError("minhash oracle SQL no longer starts with WITH")
     mh_body = mh[len("WITH "):]
     mh_ctes, mh_select = mh_body.rsplit("SELECT doc_a, doc_b", 1)
-    if gopher_min_tokens is not None:
-        gopher_block = (
-            f", {_gopher_ctes('final', out='gk', min_tokens=gopher_min_tokens).lstrip()},"
-            " gkept AS MATERIALIZED (\n"
-            "  SELECT f.doc_id, f.source, f.text\n"
-            "  FROM final f JOIN gk ON f.doc_id = gk.doc_id AND gk.keep\n)"
-        )
-        mix_src = "gkept"
-    else:
-        gopher_block = ""
-        mix_src = "final"
+    gk = _gopher_ctes("final", out="gk", min_tokens=_GOPHER_MIN_TOKENS).lstrip()
     return f"""kw AS MATERIALIZED (
   SELECT doc_id, source, text,
          list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS words
-  FROM {kept_cte}
+  FROM keptc4
 ), dg AS (
   SELECT doc_id, {_TRIGRAM_SQL} AS grams FROM kw
 ), bwords AS (
@@ -95,7 +78,7 @@ def _curation_tail_sql(
 ), hits AS (
   SELECT DISTINCT doc_id FROM (
     SELECT de.doc_id FROM de JOIN be USING (gram)
-    GROUP BY de.doc_id, be.bench_id HAVING count(*) >= {min_overlap}
+    GROUP BY de.doc_id, be.bench_id HAVING count(*) >= 5
   )
 ), clean AS MATERIALIZED (
   SELECT k.doc_id, k.source, k.text FROM kw k
@@ -110,7 +93,10 @@ def _curation_tail_sql(
 ), {_closure_ctes(seed_cte="kept2")}, final AS MATERIALIZED (
   SELECT k.doc_id, k.source, k.text
   FROM kept2 k JOIN cl ON k.doc_id = cl.doc_id AND cl.doc_id = cl.cluster_id
-){gopher_block}, mr AS (
+), {gk}, gkept AS MATERIALIZED (
+  SELECT f.doc_id, f.source, f.text
+  FROM final f JOIN gk ON f.doc_id = gk.doc_id AND gk.keep
+), mr AS (
   SELECT doc_id, source, text,
          CAST(floor(rate) AS INT)
            + CASE WHEN {_hash_frac_sql('mix')} < rate - floor(rate) THEN 1 ELSE 0 END AS n_copies
@@ -118,7 +104,7 @@ def _curation_tail_sql(
     SELECT *, CASE WHEN source IN ('src0','src1','src2','src3') THEN 0.5
                    WHEN source IN ('src4','src5') THEN 2.25
                    ELSE 1.0 END AS rate
-    FROM {mix_src}
+    FROM gkept
   )
 ), mexp AS (
   SELECT doc_id, source, text, unnest(generate_series(0, n_copies - 1)) AS copy
@@ -131,7 +117,7 @@ def _curation_tail_sql(
 ), pc AS (
   SELECT bucket, doc_id, n_tokens,
          CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id, copy
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / {budget}.0)
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 512.0)
               AS BIGINT) AS chunk
   FROM pk
 )
@@ -144,9 +130,9 @@ FROM pc GROUP BY bucket
 """
 
 
-def _curation_tail(kept: DataFrame, gopher_min_tokens: int | None = None) -> DataFrame:
-    """Spark twin of _curation_tail_sql — the shared post-quality
-    curation stages for v2/v3, composed from the shipped operators.
+def _curation_tail(kept: DataFrame) -> DataFrame:
+    """Spark twin of _curation_tail_sql — the post-quality curation
+    stages of curated_corpus_v5, composed from the shipped operators.
     ``kept``: (doc_id, source, text), post-quality, pre-decontamination.
 
     Round-11 shape: the tail's multiply-consumed frames are
@@ -194,15 +180,13 @@ def _curation_tail(kept: DataFrame, gopher_min_tokens: int | None = None) -> Dat
     cl = near_dup_clusters(kept2, n=2, k=32, bands=8, threshold=0.1)
     held.append(cl)  # lazy over its labels checkpoint — released with the result
     winners = cl.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
-    final = kept2.join(winners, "doc_id", "left_semi")
-    if gopher_min_tokens is not None:
-        final = cut(final)
-        g_ids = (
-            ts.gopher_keep(final, min_tokens=gopher_min_tokens)
-            .filter(F.col("keep"))
-            .select("doc_id")
-        )
-        final = final.join(g_ids, "doc_id", "left_semi")
+    final = cut(kept2.join(winners, "doc_id", "left_semi"))
+    g_ids = (
+        ts.gopher_keep(final, min_tokens=_GOPHER_MIN_TOKENS)
+        .filter(F.col("keep"))
+        .select("doc_id")
+    )
+    final = final.join(g_ids, "doc_id", "left_semi")
     rates = {f"src{i}": 0.5 for i in range(4)} | {"src4": 2.25, "src5": 2.25}
     mixed = mixture_sample(final, rates)
     packed = pack_chunks(mixed, budget=512, n_buckets=8)
@@ -216,8 +200,6 @@ def _curation_tail(kept: DataFrame, gopher_min_tokens: int | None = None) -> Dat
     # set ids in allocation order — nondeterministic plan text, the
     # PLANS.md churn class. One distinct (doc_id) plans as the
     # deterministic two-phase aggregate.
-    from pyspark.sql.window import Window
-
     order_cols = ["doc_id"] + (["copy"] if "copy" in packed.columns else [])
     w = Window.partitionBy("bucket").orderBy(*order_cols)
     prev_chunk = F.lag("chunk").over(w)
@@ -235,78 +217,15 @@ def _curation_tail(kept: DataFrame, gopher_min_tokens: int | None = None) -> Dat
     )
 
 
-def _curated_corpus_v2_sql(
-    near_threshold: float = 0.1, min_overlap: int = 5, budget: int = 512
-) -> str:
-    return f"""
-WITH RECURSIVE base AS (
-  SELECT doc_id, source, ({_C4_TEXT_SQL}) || {_PII_SUFFIX_SQL} AS txt
-  FROM documents
-), c4 AS (
-  SELECT doc_id, source, txt,
-         list_filter(list_transform(string_split(txt, chr(10)), x -> trim(x)),
-                     x -> x <> '') AS lines
-  FROM base
-), keptc4 AS (
-  SELECT doc_id, source, {_pii_redact_sql("txt")} AS text
-  FROM c4 WHERE {_C4_KEEP_WHERE_SQL}
-), {_curation_tail_sql("keptc4", near_threshold, min_overlap, budget)}"""
+# --- curated_corpus_v5: EVERY curation operator in one DAG ----------------
+# normalize -> domain blocklist -> duplicate-span trim/drop/keep gate ->
+# global line dedup -> C4 + lang + quality keep -> PII redaction ->
+# benchmark decontamination -> exact dedup -> near-dup winners -> Gopher
+# keep -> mixture -> packing. The construction plants newline
+# structure, shared footer/URL lines, PII, lorem/brace markers, AND
+# control/NBSP garbage so no stage is vacuous.
 
-
-def curated_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END curation, v2 — every safety/quality stage in one DAG.
-
-    UNREGISTERED since round 5 (the round-4 verdict's portfolio audit:
-    v2 is strictly subsumed by v3/v4 — same tail, fewer stages — and
-    the slot was spent on the previously-ungated multimodal family).
-    Kept as a bench entry for round-over-round comparability; its
-    oracle lives on in _curated_corpus_v2_sql for local crosschecks.
-
-    Stages:
-
-      C4 line-quality keep (textstats.c4_keep)
-      -> PII redaction (textstats.redact_pii)
-      -> benchmark decontamination drop (dedup.benchmark_contamination,
-         bench = first-12-token snippets of doc_id%31==0 docs)
-      -> exact-dedup winners (dedup.exact_dedup)
-      -> near-dup cluster winners (dedup.near_dup_clusters)
-      -> mixture re-weighting (sampling.mixture_sample)
-      -> sequence packing (sampling.pack_chunks)
-      -> per-bucket chunk/row/token stats.
-
-    Scale shape: every filter stage communicates ids only (left_semi /
-    left_anti joins; payloads stay columnar in place); the bench gram
-    set is broadcast; mixture is a projection + generator; packing
-    shuffles once on the 8-way pack bucket. The only payload-bearing
-    exchange end-to-end is the packing bucket shuffle, sized by the
-    CURATED corpus, not the input."""
-    from logpipe.traindata import textstats as ts
-
-    c4_txt = F.concat(
-        F.when(F.col("doc_id") % 17 == 0, F.lit("lorem ipsum dolor sit. "))
-        .otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 13 == 0, F.lit('{"k": 1} ')).otherwise(F.lit("")),
-        F.expr("replace(text, ' the ', concat('.', chr(10)))"),
-        *_pii_suffix_cols(" contact user"),
-    )
-    base = _docs(spark, sf_dir).select("doc_id", "source", c4_txt.alias("text"))
-    kept = base.filter(ts.c4_keep(F.col("text")))
-    red = kept.select(
-        "doc_id", "source", ts.redact_pii(F.col("text")).alias("text")
-    )
-    return _curation_tail(red)
-
-
-# --- curated_corpus_v3/v4: EVERY curation operator in one DAG -------------
-# normalize -> domain blocklist -> global line dedup -> C4 + lang +
-# quality keep -> PII redaction -> benchmark decontamination -> exact
-# dedup -> near-dup winners -> Gopher keep -> mixture -> packing.
-# Subsumes v1 (lang/quality) and adds the round-4 operators to v2's
-# composition; the construction plants newline structure, shared
-# footer/URL lines, PII, lorem/brace markers, AND control/NBSP garbage
-# so no stage is vacuous.
-
-_V3_TEXT_SQL = (
+_V5_TEXT_SQL = (
     f"({_C4_TEXT_SQL})"
     " || chr(10) || 'visit https://cdn' || CAST(doc_id % 3 AS VARCHAR) || '.net/x now.'"
     " || chr(10) || 'footer-' || CAST(doc_id % 7 AS VARCHAR) || ' end.'"
@@ -314,16 +233,17 @@ _V3_TEXT_SQL = (
     + " || chr(9) || chr(9) || 'a' || chr(7) || 'b ok.'"
 )
 
+# v5's band over rmf (= fraction of a doc's tokens removed by the
+# span-dedup winner rule): measured on the construction at sf0.01 AND
+# sf0.001 the rmf population is stable (quantiles 5/25/50/75/90:
+# ~0.15/0.35/0.52/0.65/0.75), so keep <=0.45 retains ~40%, trim
+# (0.45, 0.70] rewrites ~45%, drop >0.70 removes ~15% — all three
+# branches non-vacuous by construction, and enforced in-run by the
+# builder's branch-count check.
+_V5_SPAN_TRIM_BAND = (0.45, 0.70)
 
-def _curated_corpus_v3_sql(
-    near_threshold: float = 0.1,
-    min_overlap: int = 5,
-    budget: int = 512,
-    quality_min: float = 0.6,
-    gopher_min_tokens: int = 20,
-    span_gate_frac: float | None = None,
-    span_trim_band: tuple[float, float] | None = None,
-) -> str:
+
+def _curated_corpus_v5_sql() -> str:
     scores, case_sql = _lang_id_parts()
     words_lower = _WORDS_SQL.replace("trim(text)", "trim(lower(text))")
     quality_sql = (
@@ -331,46 +251,19 @@ def _curated_corpus_v3_sql(
         " + 0.3 * alpha_ratio"
         " + 0.3 * least(1.0, (sw / greatest(CAST(len(words) AS DOUBLE), 1.0)) * 5.0), 4)"
     )
-    if span_gate_frac is not None and span_trim_band is not None:
-        raise ValueError("span_gate_frac and span_trim_band are exclusive")
-    if span_trim_band is not None:
-        # v5's trim/drop/keep gate: span-TRIM over the blocklist
-        # survivors; rmf = fraction of tokens the winner rule removes.
-        # rmf is exact int-over-int double division — bit-identical in
-        # Spark (try_divide) and DuckDB (nullif), so the band compares
-        # are engine-stable.
-        lo, hi = span_trim_band
-        rmf = (
-            "coalesce(CAST(n_tokens_removed AS DOUBLE)"
-            " / nullif(CAST(n_tokens_kept + n_tokens_removed AS DOUBLE), 0.0), 0.0)"
-        )
-        span_block = (
-            f", {_dup_span_trim_ctes('nb', out='dt', k=3, min_docs=2).lstrip()},"
-            " dtv AS (\n"
-            f"  SELECT doc_id, text AS trimmed, {rmf} AS rmf FROM dt\n"
-            "), nbs AS MATERIALIZED (\n"
-            "  SELECT nb.doc_id, nb.source,\n"
-            f"         CASE WHEN dtv.rmf > {lo} THEN dtv.trimmed ELSE nb.text END AS text\n"
-            "  FROM nb JOIN dtv ON nb.doc_id = dtv.doc_id\n"
-            f"  WHERE dtv.rmf <= {hi}\n)"
-        )
-        ld_src = "nbs"
-    elif span_gate_frac is not None:
-        # v4's duplicate-span drop gate: ds over the blocklist survivors,
-        # keep docs whose corpus-duplicated window fraction is bounded
-        span_block = (
-            f", {_dup_span_ctes('nb', out='ds', k=3, min_docs=2).lstrip()},"
-            " nbs AS MATERIALIZED (\n"
-            "  SELECT nb.doc_id, nb.source, nb.text FROM nb\n"
-            f"  JOIN ds ON nb.doc_id = ds.doc_id AND ds.dup_span_frac <= {span_gate_frac}\n)"
-        )
-        ld_src = "nbs"
-    else:
-        span_block = ""
-        ld_src = "nb"
+    # the trim/drop/keep gate: span-TRIM over the blocklist survivors;
+    # rmf = fraction of tokens the winner rule removes. rmf is exact
+    # int-over-int double division — bit-identical in Spark
+    # (try_divide) and DuckDB (nullif), so the band compares are
+    # engine-stable.
+    lo, hi = _V5_SPAN_TRIM_BAND
+    rmf = (
+        "coalesce(CAST(n_tokens_removed AS DOUBLE)"
+        " / nullif(CAST(n_tokens_kept + n_tokens_removed AS DOUBLE), 0.0), 0.0)"
+    )
     return f"""
 WITH RECURSIVE base AS (
-  SELECT doc_id, source, {_V3_TEXT_SQL} AS txt0 FROM documents
+  SELECT doc_id, source, {_V5_TEXT_SQL} AS txt0 FROM documents
 ), nrm AS (
   SELECT doc_id, source, {_normalize_expr_sql("txt0")} AS text FROM base
 ), bl_u AS (
@@ -382,7 +275,14 @@ WITH RECURSIVE base AS (
 ), nb AS MATERIALIZED (
   SELECT doc_id, source, text FROM nrm
   WHERE doc_id NOT IN (SELECT doc_id FROM bl_bad)
-){span_block}, {_line_dedup_ctes(ld_src, out="ld").lstrip()}, c4 AS (
+), {_dup_span_trim_ctes('nb', out='dt', k=3, min_docs=2).lstrip()}, dtv AS (
+  SELECT doc_id, text AS trimmed, {rmf} AS rmf FROM dt
+), nbs AS MATERIALIZED (
+  SELECT nb.doc_id, nb.source,
+         CASE WHEN dtv.rmf > {lo} THEN dtv.trimmed ELSE nb.text END AS text
+  FROM nb JOIN dtv ON nb.doc_id = dtv.doc_id
+  WHERE dtv.rmf <= {hi}
+), {_line_dedup_ctes("nbs", out="ld").lstrip()}, c4 AS (
   SELECT ld.doc_id, nb.source, ld.text AS txt,
          list_filter(list_transform(string_split(ld.text, chr(10)), x -> trim(x)),
                      x -> x <> '') AS lines,
@@ -398,47 +298,55 @@ WITH RECURSIVE base AS (
   FROM c4
   WHERE {_C4_KEEP_WHERE_SQL}
     AND ({case_sql}) = 'en'
-    AND {quality_sql} >= {quality_min}
-), {_curation_tail_sql("keptc4", near_threshold, min_overlap, budget,
-                       gopher_min_tokens=gopher_min_tokens)}"""
+    AND {quality_sql} >= 0.6
+), {_curation_tail_sql()}"""
 
 
-def _curated_corpus_dag(
-    spark: SparkSession,
-    sf_dir: str,
-    span_gate_frac: float | None = None,
-    span_trim_band: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Shared builder for curated_corpus_v3 (no span gate; benched),
-    curated_corpus_v4 (+ duplicate-span DROP gate; benched) and
-    curated_corpus_v5 (the registered gate, + the trim/drop/keep span
-    gate — Lee et al.'s actual remedy wired into the DAG):
+@register("curated_corpus_v5", None)  # SQL attached below (needs builder)
+def curated_corpus_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The TOTAL curation DAG: every shipped curation operator in ONE
+    hash-matched query, with duplicate_span_trim's output (Lee et al.
+    2021's actual remedy) flowing through line-dedup, quality, dedup,
+    packing and the final per-bucket stats:
 
       normalize_controls -> domain_blocklist_filter
-      [-> duplicate-span gate: v4 drops on window frac; v5 drops docs
-       with token-removal frac rmf > hi, REWRITES docs with
-       lo < rmf <= hi to their span-trimmed text (duplicate_span_trim),
-       keeps the rest verbatim] -> line_dedup
+      -> duplicate-span gate (drops docs with token-removal frac
+         rmf > hi, REWRITES docs with lo < rmf <= hi to their
+         span-trimmed text, keeps the rest verbatim) -> line_dedup
       -> C4 keep + lang_id=='en' + quality_score>=0.6 -> redact_pii
       -> benchmark decontamination drop -> exact-dedup winners
       -> near-dup cluster winners -> gopher_keep -> mixture_sample
       -> pack_chunks -> per-bucket chunk/row/token stats.
 
-    Scale shape (same discipline as v2): normalization/quality/PII are
-    projections; blocklist, span-gate, decontamination-hit,
-    dedup-winner, and gopher verdicts travel as ids-only semi/anti
-    joins (v5's trim verdict additionally carries the trimmed text for
-    the mid-band docs — a one-shot equi-join on doc_id, sized by the
-    trim band, not the corpus); line_dedup's winner table shuffles
-    (md5(line), id) scalars; the one payload-bearing exchange is the
-    8-way pack-bucket shuffle over the final curated corpus."""
-    from logpipe.traindata import textstats as ts
-    from logpipe.traindata.dedup import (
-        duplicate_span_stats,
-        duplicate_span_trim,
-        line_dedup,
-    )
+    Scale shape: normalization/quality/PII are projections; blocklist,
+    decontamination-hit, dedup-winner, and gopher verdicts travel as
+    ids-only semi/anti joins (the trim verdict additionally carries
+    the trimmed text for the mid-band docs — a one-shot equi-join on
+    doc_id, sized by the trim band, not the corpus); line_dedup's
+    winner table shuffles (md5(line), id) scalars; the one
+    payload-bearing exchange is the 8-way pack-bucket shuffle over the
+    final curated corpus.
 
+    Eager: the span gate and the tail's branch-point cuts run Spark
+    jobs while the frame is built. Refuses persist materialize mode
+    before any job runs."""
+    from logpipe.materialize import materialize, materialize_mode, release
+    from logpipe.traindata import textstats as ts
+    from logpipe.traindata.dedup import duplicate_span_trim, line_dedup
+
+    # measured, not theoretical: persist keeps the gate's full logical
+    # tree inside InMemoryRelation, and merely BUILDING the cache
+    # (CachedRDDBuilder.cachedName stringifies the plan) OOMs the
+    # driver heap on this composed DAG even at sf0.001 — fail with the
+    # reason instead
+    if materialize_mode(spark) == "persist":
+        raise ValueError(
+            "curated corpus span gates need a checkpoint materialize "
+            "mode (local/reliable): persist does not truncate the "
+            "logical plan and the composed DAG OOMs the driver "
+            "stringifying it (set spark.logpipe.materialize.mode)"
+        )
+    lo, hi = _V5_SPAN_TRIM_BAND
     txt0 = F.concat(
         F.when(F.col("doc_id") % 17 == 0, F.lit("lorem ipsum dolor sit. "))
         .otherwise(F.lit("")),
@@ -454,201 +362,88 @@ def _curated_corpus_dag(
     nrm = base.select(
         "doc_id", "source", ts.normalize_controls(F.col("txt0")).alias("text")
     )
-    nb = ts.domain_blocklist_filter(nrm, list(_BLOCKLIST))
-    if span_gate_frac is not None and span_trim_band is not None:
-        raise ValueError("span_gate_frac and span_trim_band are exclusive")
-    if span_gate_frac is not None or span_trim_band is not None:
-        from logpipe.materialize import materialize_mode
-
-        # measured, not theoretical: persist keeps the gate's full
-        # logical tree inside InMemoryRelation, and merely BUILDING the
-        # cache (CachedRDDBuilder.cachedName stringifies the plan)
-        # OOMs the driver heap on this composed DAG even at sf0.001 —
-        # fail with the reason instead
-        if materialize_mode(spark) == "persist":
-            raise ValueError(
-                "curated corpus span gates need a checkpoint materialize "
-                "mode (local/reliable): persist does not truncate the "
-                "logical plan and the composed DAG OOMs the driver "
-                "stringifying it (set spark.logpipe.materialize.mode)"
+    # nb is consumed twice (the span pipeline + the verdict rejoin):
+    # materialize it so the normalize/blocklist head runs once, then
+    # release it as soon as the gated frame lands
+    nb = materialize(ts.domain_blocklist_filter(nrm, list(_BLOCKLIST)))
+    span_held: list[DataFrame] = []
+    trimmed = None
+    try:
+        trimmed = materialize(
+            duplicate_span_trim(
+                nb.select("doc_id", "text"), k=3, min_docs=2,
+                _materialized=span_held,
             )
-    if span_trim_band is not None:
-        from logpipe.materialize import materialize, release
-
-        lo, hi = span_trim_band
-        # nb is consumed twice (the span pipeline + the verdict
-        # rejoin): materialize it so the normalize/blocklist head runs
-        # once, then release it as soon as the gated frame lands
-        nb = materialize(nb)
-        span_held: list[DataFrame] = []
-        trimmed = None
-        try:
-            trimmed = materialize(
-                duplicate_span_trim(
-                    nb.select("doc_id", "text"), k=3, min_docs=2,
-                    _materialized=span_held,
-                )
+        )
+        # trim's internal per-(window, doc) checkpoint is dead once the
+        # trimmed table is materialized
+        release(*span_held)
+        span_held = []
+        tot = (F.col("n_tokens_kept") + F.col("n_tokens_removed")).cast("double")
+        # try_divide: ANSI mode throws on double x/0.0; NULL -> 0.0
+        # matches the oracle's nullif/coalesce exactly (int-over-int
+        # double division is bit-identical across engines)
+        rmf = F.coalesce(
+            F.try_divide(F.col("n_tokens_removed").cast("double"), tot),
+            F.lit(0.0),
+        )
+        verdicts = trimmed.select(
+            "doc_id", F.col("text").alias("_trimmed"), rmf.alias("_rmf")
+        )
+        # branch non-vacuity IS part of the gate's evidence (round-5
+        # verdict task 7): raise, don't assert (survives python -O).
+        # One cheap aggregate over the materialized scalar table.
+        branch = F.when(F.col("_rmf") > hi, "drop").when(
+            F.col("_rmf") > lo, "trim"
+        ).otherwise("keep")
+        counts = {
+            r["branch"]: r["count"]
+            for r in verdicts.select(branch.alias("branch"))
+            .groupBy("branch")
+            .count()
+            .collect()
+        }
+        if not all(counts.get(b) for b in ("keep", "trim", "drop")):
+            raise AssertionError(f"v5 span gate vacuous: branch counts {counts}")
+        gated = (
+            nb.join(verdicts, "doc_id")
+            .filter(F.col("_rmf") <= hi)
+            .select(
+                "doc_id",
+                "source",
+                F.when(F.col("_rmf") > lo, F.col("_trimmed"))
+                .otherwise(F.col("text"))
+                .alias("text"),
             )
-            # trim's internal per-(window, doc) checkpoint is dead once
-            # the trimmed table is materialized
-            release(*span_held)
-            span_held = []
-            tot = (F.col("n_tokens_kept") + F.col("n_tokens_removed")).cast(
-                "double"
-            )
-            # try_divide: ANSI mode throws on double x/0.0; NULL -> 0.0
-            # matches the oracle's nullif/coalesce exactly (int-over-int
-            # double division is bit-identical across engines)
-            rmf = F.coalesce(
-                F.try_divide(F.col("n_tokens_removed").cast("double"), tot),
-                F.lit(0.0),
-            )
-            verdicts = trimmed.select(
-                "doc_id", F.col("text").alias("_trimmed"), rmf.alias("_rmf")
-            )
-            # branch non-vacuity IS part of the gate's evidence (round-5
-            # verdict task 7): raise, don't assert (survives python -O).
-            # One cheap aggregate over the materialized scalar table.
-            branch = F.when(F.col("_rmf") > hi, "drop").when(
-                F.col("_rmf") > lo, "trim"
-            ).otherwise("keep")
-            counts = {
-                r["branch"]: r["count"]
-                for r in verdicts.select(branch.alias("branch"))
-                .groupBy("branch")
-                .count()
-                .collect()
-            }
-            if not all(counts.get(b) for b in ("keep", "trim", "drop")):
-                raise AssertionError(
-                    f"v5 span gate vacuous: branch counts {counts}"
-                )
-            gated = (
-                nb.join(verdicts, "doc_id")
-                .filter(F.col("_rmf") <= hi)
-                .select(
-                    "doc_id",
-                    "source",
-                    F.when(F.col("_rmf") > lo, F.col("_trimmed"))
-                    .otherwise(F.col("text"))
-                    .alias("text"),
-                )
-            )
-            # the lineage cut every downstream stage compiles against —
-            # same plan-size control as v4's gate (ExistingRDD leaf,
-            # zero FileScans downstream, pinned in tests)
-            gated = materialize(gated)
-        except BaseException:
-            # error path (round-6 ADVICE): anything raising between the
-            # eager materialize calls — the non-vacuity check included —
-            # must not pin nb/trimmed blocks for the rest of the session
-            # (nor, in reliable mode, leave their checkpoint files
-            # behind). release() ignores frames not yet materialized.
-            held = [nb, *span_held]
-            if trimmed is not None:
-                held.append(trimmed)
-            release(*held)
-            raise
-        release(nb, trimmed)
-        nb = gated
-    if span_gate_frac is not None:
-        from logpipe.materialize import materialize, release
-
-        stats_held: list[DataFrame] = []
-        try:
-            keep_ids = (
-                duplicate_span_stats(
-                    nb.select("doc_id", "text"), k=3, min_docs=2,
-                    _materialized=stats_held,
-                )
-                .filter(F.col("dup_span_frac") <= span_gate_frac)
-                .select("doc_id")
-            )
-            # materialize: cut the lineage at the gate. Without it the
-            # span subtree (which consumes nb twice more) rides INSIDE
-            # nb's lineage, and every downstream consumer of nb
-            # (line-dedup's three readers, c4, the tail) re-expands it
-            # — measured 222s wall / 24s plan-compile at sf0.1 vs v3's
-            # 85s/5.6s; with the cut the downstream plan is v3-shaped.
-            # Same trade the clustering iterations already make; the
-            # cut point is mode-injectable (logpipe.materialize) — a
-            # cluster run sets reliable mode and this dataset-sized
-            # intermediate lands in the checkpoint dir instead of
-            # executor-local blocks.
-            nb = materialize(nb.join(keep_ids, "doc_id", "left_semi"))
-        except BaseException:
-            # error path: stats' eager checkpoint must not stay pinned
-            # (nor leak files in reliable mode) if the gate's own
-            # materialize fails — same discipline as the v5 trim gate
-            release(*stats_held)
-            raise
-        # stats' internal per-(window, doc) checkpoint is dead once the
-        # gated frame lands (same pattern as the v5 trim gate)
-        release(*stats_held)
-    ld = line_dedup(nb.select("doc_id", "text"))
-    ldd = ld.join(nb.select("doc_id", "source"), "doc_id")
+        )
+        # the lineage cut every downstream stage compiles against
+        # (ExistingRDD leaf, zero FileScans downstream, pinned in tests)
+        gated = materialize(gated)
+    except BaseException:
+        # error path (round-6 ADVICE): anything raising between the
+        # eager materialize calls — the non-vacuity check included —
+        # must not pin nb/trimmed blocks for the rest of the session
+        # (nor, in reliable mode, leave their checkpoint files behind).
+        # release() ignores frames not yet materialized.
+        held = [nb, *span_held]
+        if trimmed is not None:
+            held.append(trimmed)
+        release(*held)
+        raise
+    release(nb, trimmed)
+    ld = line_dedup(gated.select("doc_id", "text"))
+    ldd = ld.join(gated.select("doc_id", "source"), "doc_id")
     kept = ldd.filter(
         ts.c4_keep(F.col("text"))
         & (ts.lang_id(F.col("text")) == "en")
         & (ts.quality_score(F.col("text")) >= 0.6)
     ).select("doc_id", "source", ts.redact_pii(F.col("text")).alias("text"))
-    return _curation_tail(kept, gopher_min_tokens=20)
-
-
-def curated_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-4 TOTAL curation DAG. UNREGISTERED since round 5: v4
-    strictly subsumes it (identical stages + the duplicate-span gate),
-    the same subsumption rule that folded v2. Kept as a bench entry for
-    round-over-round comparability; _curated_corpus_v3_sql() remains
-    for local crosschecks."""
-    return _curated_corpus_dag(spark, sf_dir)
-
-
-# v4's span-gate threshold: measured on the sf0.01 construction the
-# dup_span_frac population spans 0.24-0.92 with median ~0.43, so 0.45
-# drops ~40% of blocklist survivors — both branches non-vacuous, and
-# the gate's verdict flows through every downstream stage of the hash-
-# matched per-bucket stats.
-_V4_SPAN_GATE_FRAC = 0.45
-
-
-def curated_corpus_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TOTAL curation DAG, round-5 edition: v3's eleven stages plus
-    the duplicate-span DROP gate. UNREGISTERED since round 6: v5
-    strictly subsumes it (same stages, and the binary drop gate becomes
-    the trim/drop/keep band with the trim branch actually rewriting
-    text) — the same subsumption rule that retired v2 and v3. Kept as a
-    bench entry for round-over-round comparability;
-    _curated_corpus_v3_sql(span_gate_frac=...) remains for local
-    crosschecks."""
-    return _curated_corpus_dag(spark, sf_dir, span_gate_frac=_V4_SPAN_GATE_FRAC)
-
-
-# v5's band over rmf (= fraction of a doc's tokens removed by the
-# span-dedup winner rule): measured on the construction at sf0.01 AND
-# sf0.001 the rmf population is stable (quantiles 5/25/50/75/90:
-# ~0.15/0.35/0.52/0.65/0.75), so keep <=0.45 retains ~40%, trim
-# (0.45, 0.70] rewrites ~45%, drop >0.70 removes ~15% — all three
-# branches non-vacuous by construction, and enforced in-run by the
-# builder's branch-count check.
-_V5_SPAN_TRIM_BAND = (0.45, 0.70)
-
-
-@register("curated_corpus_v5", None)  # SQL attached below (needs builder)
-def curated_corpus_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TOTAL curation DAG, round-6 edition: every shipped curation
-    operator in ONE hash-matched query — v4's twelve stages with the
-    span drop gate upgraded to the trim/drop/keep band, so
-    duplicate_span_trim's output (Lee et al. 2021's actual remedy) now
-    flows through line-dedup, quality, dedup, packing and the final
-    per-bucket stats. See _curated_corpus_dag for stages, the 100TB
-    shape, and the in-run branch non-vacuity check."""
-    return _curated_corpus_dag(spark, sf_dir, span_trim_band=_V5_SPAN_TRIM_BAND)
+    return _curation_tail(kept)
 
 
 _REGISTRY["curated_corpus_v5"] = (
     _REGISTRY["curated_corpus_v5"][0],
-    _curated_corpus_v3_sql(span_trim_band=_V5_SPAN_TRIM_BAND),
+    _curated_corpus_v5_sql(),
 )
 
 

@@ -73,35 +73,6 @@ def flagship_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# K8S-Logging.Exclude (conf/ds/fluent-bit.conf:55): annotated pods
-# (uid%25==0 in the dim) opt out of collection entirely — the oracle is
-# the flagship with the exclusion predicate applied at the source
-_K8S_EXCLUDE_SQL = _FLAGSHIP_SQL.replace(
-    "WHERE props IS NOT NULL", "WHERE user_id % 25 <> 0 AND props IS NOT NULL"
-)
-
-
-def k8s_exclude_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship with honor_k8s_exclude=True: rows of pods annotated
-    fluentbit.io/exclude are dropped after the enrich join.
-
-    UNREGISTERED since round 6 — its registry slot was spent on
-    dup_span_trim (round-5 verdict task 3); the exclusion semantics are
-    now gated as an in-run parity assert inside
-    flagship_rules_route_counts (join-based exclusion vs an independent
-    source-predicate replay, the established fold pattern), and
-    _K8S_EXCLUDE_SQL remains for local crosschecks."""
-    ev = load_events(spark, sf_dir)
-    out = run_pipeline(
-        events_as_transcripts(ev), events_k8s_meta(ev), events_tool_meta(ev),
-        honor_k8s_exclude=True,
-    )
-    return out.groupBy("sink").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.length("content")).alias("content_bytes"),
-    )
-
-
 # Config-driven rewrite_tag engine (operators/rewrite.py): the flagship
 # router re-DECLARED as the reference's conf text (fluent-bit.conf:181-193)
 # and run through the generic cascade — must hit the SAME oracle as the
@@ -164,8 +135,7 @@ def flagship_rules_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pods dropped after the enrich join, honor_k8s_exclude=True) must
     # equal an INDEPENDENT source-predicate replay (the dim's
     # annotation rule, uid%25==0, applied to the transcripts before the
-    # ordinary pipeline) — the same two-implementation property the
-    # retired _K8S_EXCLUDE_SQL oracle checked cross-engine.
+    # ordinary pipeline).
     excluded = rows(_per_sink_agg(run_pipeline(
         events_as_transcripts(ev), events_k8s_meta(ev), events_tool_meta(ev),
         honor_k8s_exclude=True,

@@ -31,9 +31,8 @@ _WORDS_SQL = (
 def _pii_suffix_sql(lead: str) -> str:
     """The deterministic PII seed (email + IPv4 + long digit run) with a
     caller-chosen lead-in expression — ONE definition for the standalone
-    PII gate, curated_corpus_v2, and curated_corpus_v3 (review finding:
-    near-identical copies could drift and silently make a stage
-    vacuous)."""
+    PII gate and curated_corpus_v5 (review finding: near-identical
+    copies could drift and silently make a stage vacuous)."""
     return (
         lead + " || CAST(doc_id AS VARCHAR)"
         " || '@mail' || CAST(doc_id % 5 AS VARCHAR) || '.example.com ip 10.'"
@@ -148,7 +147,7 @@ def _line_dedup_ctes(src: str, out: str = "ld") -> str:
     """CTE chain replaying dedup.line_dedup over ``src`` (doc_id, text
     [, passthrough cols are NOT carried — re-join on doc_id]); emits
     ``{out}`` = (doc_id, text, n_lines_kept). ONE definition shared by
-    the standalone gate and curated_corpus_v3 so the semantics cannot
+    the standalone gate and curated_corpus_v5 so the semantics cannot
     drift."""
     return f"""
 {out}_l AS (
@@ -203,8 +202,7 @@ def _dup_span_ctes(src: str, out: str = "ds", k: int = 3, min_docs: int = 2) -> 
     (doc_id, text); emits ``{out}`` = (doc_id, n_spans, n_dup_spans,
     dup_span_frac). POSITIONAL k-gram windows (NOT deduped — every
     position counts), shared table on md5(window) with a distinct-doc
-    threshold, per-position verdict join. ONE definition shared by the
-    standalone gate and curated_corpus_v4's span gate."""
+    threshold, per-position verdict join."""
     terms = " || ' ' || ".join(
         "words[i]" if j == 0 else f"words[i+{j}]" for j in range(k)
     )
@@ -253,8 +251,8 @@ def _dup_span_trim_ctes(src: str, out: str = "dt", k: int = 3, min_docs: int = 2
     )
     series = f"generate_series(1, len(words)-{k - 1})"
     # dt_w and dt_pg are each referenced twice; DuckDB inlines
-    # non-recursive CTEs per reference (the round-4 finding that made
-    # the un-hinted v3 oracle re-run its closure), so both are
+    # non-recursive CTEs per reference (un-hinted, the composed
+    # curation oracle re-ran its closure per consumer), so both are
     # MATERIALIZED — essential when this chain sits inside the composed
     # v5 oracle.
     return f"""
@@ -305,10 +303,10 @@ SELECT doc_id, text, n_tokens_kept, n_tokens_removed FROM dt
 def dup_span_trim_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring span dedup — Lee et al. 2021's actual remedy
     (round-5 verdict missing #1: the stats operator measured the signal
-    and v4 dropped docs on it, but nothing REMOVED the duplicated spans
+    and the curation DAG dropped docs on it, but nothing REMOVED the duplicated spans
     and reassembled). Every reassembled text + kept/removed count is
     value-hashed against the DuckDB positional replay. The slot came
-    from folding k8s_exclude_route_counts into
+    from folding the K8S-Logging.Exclude gate into
     flagship_rules_route_counts as an in-run parity assert (the
     established fold pattern)."""
     from logpipe.traindata.dedup import duplicate_span_trim
@@ -418,7 +416,7 @@ def _gopher_ctes(src: str, out: str = "gk", min_tokens: int = 50) -> str:
     """CTE chain replaying textstats.gopher_signals/gopher_keep over
     ``src`` (doc_id, text); emits ``{out}`` = (doc_id, n_tokens,
     alpha_ratio, dup_bigram_frac, top_token_frac, keep). Shared by the
-    standalone gate and curated_corpus_v3."""
+    standalone gate and curated_corpus_v5."""
     return f"""
 {out}_w AS (
   SELECT doc_id, {_WORDS_SQL} AS words,
@@ -515,7 +513,7 @@ _NORM_TEXT_SQL = (
 
 def _normalize_expr_sql(col: str) -> str:
     """SQL replay of textstats.NORMALIZE_RULES + trim over ``col`` —
-    one definition for the standalone gate and curated_corpus_v3."""
+    one definition for the standalone gate and curated_corpus_v5."""
     return (
         "trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace("
         + col + ",\n"
@@ -1037,7 +1035,7 @@ _REGISTRY["minhash_lsh_dups"] = (_REGISTRY["minhash_lsh_dups"][0], _minhash_sql(
 def _closure_ctes(pairs_cte: str = "mh", seed_cte: str = "documents") -> str:
     """The connected-components closure block shared by every clustering
     oracle (near_dup_clusters / near_dup_survivors / the
-    curated_corpus_v2/_v3 tail — ONE definition so a fix cannot drift
+    curated_corpus_v5 tail — ONE definition so a fix cannot drift
     between them): symmetrized
     edges, recursive reachability (UNION, not UNION ALL, dedupes
     (node, label) pairs so the recursion terminates at the transitive
@@ -1137,24 +1135,6 @@ _REGISTRY["near_dup_survivors"] = (
     _REGISTRY["near_dup_survivors"][0],
     _near_dup_survivors_sql(),
 )
-
-
-# (curated_corpus v1 — lang filter -> quality gate -> dedup winners ->
-# per-source stats — was folded into curated_corpus_v3 below, which
-# runs those stages plus every round-4 curation operator; the 50-row
-# driver window forces one registry slot per composition tier.)
-
-
-# --- curated_corpus_v2: the FULL curation DAG -----------------------------
-# C4 line-quality keep -> PII redaction -> benchmark decontamination drop
-# -> exact dedup -> near-dup cluster winners -> mixture re-weighting ->
-# sequence packing, in ONE gated query (round-3 verdict task #2: "the
-# query a 100 TB pipeline actually ships"). Input text is the same
-# deterministic construction the individual C4/PII gates use (the raw
-# word-soup corpus has no newlines or PII, so both rules would be
-# vacuous on it).
-
-_PII_SUFFIX_SQL = _pii_suffix_sql("' contact user'")
 
 
 def _pii_redact_sql(col: str) -> str:

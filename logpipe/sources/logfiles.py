@@ -93,7 +93,7 @@ def _lines(
     paths = _resolve_paths(spark, path, exclude_path)
     if not paths:
         return spark.createDataFrame([], "file string, line_no int, line string")
-    raw = spark.read.text(*paths, wholetext=True).select(
+    raw = spark.read.text(paths, wholetext=True).select(
         F.input_file_name().alias("file"), F.col("value")
     )
     out = raw.select(

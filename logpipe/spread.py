@@ -14,7 +14,7 @@ caller flag (the round-5/6 "derive-don't-default" rule).
 
 This module is the shared home of that rule for the OTHER scan-stage
 compute chains (flagship parse chain, erda grok, textstats profile,
-line dedup — round 11); logpipe.traindata.dedup delegates here so the
+line dedup — round 11); logpipe.traindata.dedup calls it directly so the
 rule cannot fork (its `spread_decision` surfaces the same decision as
 run metadata in the bench artifact).
 

@@ -554,7 +554,7 @@ def _derive_hub_skew(spark, n_edges: int, e: DataFrame | None = None) -> bool:
        qualify — False. (The round-7 shape bought skew safety
        unconditionally; its fixed per-round cost was that verdict's
        one perf watch item — same derive-don't-default treatment as
-       ``_derive_spread``.)
+       ``logpipe.spread.derive_spread``.)
     2. HOT-KEY test, only when (1) clears and the caller hands the
        round's CHECKPOINTED edge set: the hottest partition's rows
        are estimated as the combined symmetric degree of the top
@@ -960,7 +960,9 @@ def simhash_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     shuffle key is doc_id and partial aggregation collapses the token
     fan-out map-side.
 
-    Docs with no tokens get simhash 0.
+    Docs with no tokens get simhash 0. ``doc_id`` must be unique: the
+    result is one row per distinct ``doc_id`` (the votes aggregate
+    groups on it), so repeated ids collapse into one signature.
 
     Round-11 shape (guide §2.3 "project before the exchange" applied to
     the PROJECTION itself; measured 2.98s -> 0.60s at sf0.1):
@@ -1144,27 +1146,6 @@ def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _shuffle_partitions(df: DataFrame) -> int:
-    from logpipe.spread import shuffle_partitions
-
-    return shuffle_partitions(df)
-
-
-def _derive_spread(df: DataFrame, n_part: int) -> bool:
-    """Spread (round-robin repartition before per-row heavy compute)
-    only when the input arrives in fewer splits than the shuffle
-    parallelism — the single-parquet-file bench reality. At 100TB the
-    scan is naturally split, this derives False, and the operator moves
-    zero payload bytes with no caller flag (round-5 verdict: the manual
-    spread=True default was a scale knob a cluster caller had to
-    remember to turn OFF). Since round 11 the rule lives in
-    logpipe.spread (shared with the flagship/textstats chains); this
-    wrapper keeps the span family's pinned entry points stable."""
-    from logpipe.spread import derive_spread
-
-    return derive_spread(df, n_part)
-
-
 def spread_decision(docs: DataFrame) -> dict:
     """The derived-spread decision for this input, surfaced as run
     metadata (round-6 verdict task 8: a cluster operator should see
@@ -1172,13 +1153,15 @@ def spread_decision(docs: DataFrame) -> dict:
     scans vs the round-robin spread on few-split inputs — without
     reading PLANS.md). Keys: input_splits, shuffle_partitions, spread.
     Compiles the scan's physical plan; runs no job."""
-    n_part = _shuffle_partitions(docs)
+    from logpipe.spread import derive_spread, shuffle_partitions
+
+    n_part = shuffle_partitions(docs)
     return {
         "input_splits": docs.rdd.getNumPartitions(),
         "shuffle_partitions": n_part,
-        # the rule itself lives in ONE place (_derive_spread) so this
+        # the rule itself lives in ONE place (logpipe.spread) so this
         # metadata cannot desynchronize from the plan shape compiled
-        "spread": _derive_spread(docs, n_part),
+        "spread": derive_spread(docs, n_part),
     }
 
 
@@ -1195,12 +1178,9 @@ def _span_frame(
     purely for parallelism on few-split inputs). One definition so the
     stats/removals tables cannot diverge on tokenization, the window
     guard, or the spread rule (round-7 review)."""
-    n_part = _shuffle_partitions(docs)
-    d = docs.select("doc_id", text_col)
-    if spread is None:
-        spread = _derive_spread(d, n_part)
-    if spread:
-        d = d.repartition(n_part)
+    from logpipe.spread import spread_for_compute
+
+    d = spread_for_compute(docs.select("doc_id", text_col), spread)
     d = d.withColumn("_toks", tokens(F.col(text_col)))
     return d.select(
         "doc_id",
@@ -1297,8 +1277,8 @@ def duplicate_span_stats(
       ceiling. This is exactly the shape duplicate_span_removals/trim
       run, so the statistic and the remedy share one plan family.
       ``_materialized`` passes both internal checkpoints up for
-      callers that release them after their own cut lands (the v4
-      gate); when NOT passed, the checkpoints attach to the returned
+      callers that release them after their own cut lands; when NOT
+      passed, the checkpoints attach to the returned
       frame — ``release(result)`` frees them (round-7 ADVICE: the
       eager default must not leak blocks to callers of the old lazy
       API).
@@ -1525,7 +1505,7 @@ def duplicate_span_trim(
     zero-payload-exchange plan + identical results over a corpus
     written through the PRODUCTION path — tableio.write_table's
     bucket spec, exposed as cli --bucket-out — and
-    scripts/bucketed_rejoin_bench.py commits the measured pair), the
+    BENCH/r7_bucketed_rejoin.json holds the measured pair), the
     same co-location answer as every verdict rejoin in this package
     (line_dedup demonstrates it under a COMPOUND join key, see its
     docstring).

@@ -92,11 +92,11 @@ QUERIES = [
     ),
     (
         "curated_corpus_v5",
-        "the TOTAL curation DAG (v4's stages with the span gate "
-        "upgraded to trim/drop/keep; v2/v3/v4 snapshots retired as "
-        "subsumed): downstream compiles against the materialized gate "
-        "leaf (ExistingRDD, zero FileScans — the v4 lineage-cut pin "
-        "carried over); every later stage verdict travels as an "
+        "the TOTAL curation DAG (every curation operator, with the "
+        "trim/drop/keep span gate): downstream compiles against the "
+        "materialized gate leaf (ExistingRDD, zero FileScans — pinned "
+        "by test_curated_corpus_v5_plan_lineage_cut); every later "
+        "stage verdict travels as an "
         "ids-only semi/anti join; line-dedup winner table on md5(line) "
         "scalars; the one payload-bearing exchange is the final 8-way "
         "pack-bucket shuffle.",

@@ -6,21 +6,18 @@ this repo at their /var/log/containers files gets routed LogEvents.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import functions as F
+from test_logfiles import reference_fixture
 
 from logpipe.operators.stitch import stitch_multiline
 from logpipe.plans.pipeline import run_pipeline, sink_counts
 from logpipe.sinks import write_sinks
 from logpipe.sources.logfiles import read_docker_logs
 
-FIXTURE = next(str(p) for p in Path("/root/reference/testdata/k8s").glob("admin-*.log"))
-
 
 def test_reference_fixture_to_sinks(spark, tmp_path):
     # S1 tail + P3 docker parse
-    raw = read_docker_logs(spark, FIXTURE)
+    raw = read_docker_logs(spark, reference_fixture("admin-*.log"))
 
     # F3 docker-mode multiline join
     stitched = stitch_multiline(raw.drop("file", "docker_id"))

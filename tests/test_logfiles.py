@@ -8,6 +8,7 @@ import json
 import re
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from logpipe.operators.parse import FIRSTLINE_RE
@@ -15,15 +16,24 @@ from logpipe.operators.stitch import stitch_multiline
 from logpipe.sources.logfiles import read_cri_logs, read_docker_logs
 
 K8S = Path("/root/reference/testdata/k8s")
-DOCKER_FIXTURE = next(str(p) for p in K8S.glob("admin-*.log"))
-CRI_FIXTURE = str(K8S / "cri.log")
+
+
+def reference_fixture(pattern: str) -> str:
+    """Path of the first reference fixture matching ``pattern``, resolved
+    when a test asks for it; skips that test when the fixtures are not
+    present (the reference-free tests in this module still run)."""
+    found = next((str(p) for p in K8S.glob(pattern)), None)
+    if found is None:
+        pytest.skip("reference fixtures not present")
+    return found
 
 
 def test_docker_fixture_parses(spark):
-    df = read_docker_logs(spark, DOCKER_FIXTURE).orderBy("turn_idx")
+    docker_fixture = reference_fixture("admin-*.log")
+    df = read_docker_logs(spark, docker_fixture).orderBy("turn_idx")
     rows = df.collect()
 
-    raw = [json.loads(l) for l in Path(DOCKER_FIXTURE).read_text().splitlines() if l]
+    raw = [json.loads(l) for l in Path(docker_fixture).read_text().splitlines() if l]
     assert len(rows) == len(raw)
     for got, exp in zip(rows, raw):
         assert got["text"] == exp["log"].rstrip("\n")
@@ -35,10 +45,11 @@ def test_docker_fixture_parses(spark):
 
 
 def test_cri_fixture_parses(spark):
-    df = read_cri_logs(spark, CRI_FIXTURE).orderBy("turn_idx")
+    cri_fixture = reference_fixture("cri.log")
+    df = read_cri_logs(spark, cri_fixture).orderBy("turn_idx")
     rows = df.collect()
 
-    raw = [l for l in Path(CRI_FIXTURE).read_text().split("\n") if l]
+    raw = [l for l in Path(cri_fixture).read_text().split("\n") if l]
     assert len(rows) == len(raw)
     pat = re.compile(r"^([^ ]+) (stdout|stderr) ([^ ]*) (.*)$")
     for got, exp in zip(rows, raw):
@@ -65,8 +76,8 @@ def test_multiline_stitch_on_reference_fixtures(spark):
     """The java stack trace in both fixtures stitches exactly as the
     reference's multiline filter would (firstline = datetime prefix)."""
     for reader, fixture in [
-        (read_docker_logs, DOCKER_FIXTURE),
-        (read_cri_logs, CRI_FIXTURE),
+        (read_docker_logs, reference_fixture("admin-*.log")),
+        (read_cri_logs, reference_fixture("cri.log")),
     ]:
         df = reader(spark, fixture)
         stitched = stitch_multiline(df).orderBy("turn_idx").collect()
@@ -86,22 +97,24 @@ def test_exclude_path_prunes_at_listing(spark, tmp_path):
     entrypoint.sh:19-21): excluded files are dropped from the listing —
     the collector never ingests its own logs."""
     (tmp_path / "app.log").write_text(_DOCKER_LINE % "hello" + "\n")
+    (tmp_path / "web.log").write_text(_DOCKER_LINE % "world" + "\n")
     (tmp_path / "fluent-bit-abc.log").write_text(_DOCKER_LINE % "self" + "\n")
     glob = str(tmp_path / "*.log")
 
+    # two kept files: the pruned listing reaches the reader as a list
     df = read_docker_logs(spark, glob, exclude_path=("*fluent-bit*.log",))
     files = [r["file"] for r in df.select("file").distinct().collect()]
-    assert len(files) == 1 and "fluent-bit" not in files[0]
-    assert df.count() == 1 and df.first()["text"] == "hello"
-    # without exclusion both files are read
-    assert read_docker_logs(spark, glob).select("file").distinct().count() == 2
+    assert len(files) == 2 and not any("fluent-bit" in f for f in files)
+    assert sorted(r["text"] for r in df.collect()) == ["hello", "world"]
+    # without exclusion every file is read
+    assert read_docker_logs(spark, glob).select("file").distinct().count() == 3
     # everything excluded -> empty frame, not an error
     assert read_docker_logs(spark, glob, exclude_path=("*.log",)).count() == 0
     # DIRECTORY input: exclusion must test the files inside, not the
     # directory path itself (the natural call shape for a tail path)
     ddf = read_docker_logs(spark, str(tmp_path), exclude_path=("*fluent-bit*.log",))
     dfiles = [r["file"] for r in ddf.select("file").distinct().collect()]
-    assert len(dfiles) == 1 and "fluent-bit" not in dfiles[0]
+    assert len(dfiles) == 2 and not any("fluent-bit" in f for f in dfiles)
 
 
 def test_line_splitters_never_emit_trailing_newline(spark, tmp_path):

@@ -241,17 +241,22 @@ def test_curated_corpus_v5_reliable_mode(spark):
 def test_curated_corpus_span_gates_reject_persist(spark):
     """persist does not truncate the logical plan, and on the composed
     span-gated DAG merely BUILDING the cache OOMs the driver heap
-    (CachedRDDBuilder stringifies the full tree) — the builders fail
-    fast with the reason instead of OOMing. Raises BEFORE any job."""
-    from logpipe.plans.driver_queries import curated_corpus_v4, curated_corpus_v5
+    (CachedRDDBuilder stringifies the full tree) — the builder fails
+    fast with the reason instead of OOMing. Raises BEFORE any job
+    (job-count probe: the statusTracker pattern of test_manifest.py)."""
+    from logpipe.plans.driver_queries import curated_corpus_v5
 
+    sc = spark.sparkContext
+    group = "curated-persist-refusal"
     spark.conf.set(MODE_CONF, "persist")
+    sc.setJobGroup(group, "persist refusal job count probe")
     try:
-        for builder in (curated_corpus_v4, curated_corpus_v5):
-            with pytest.raises(ValueError, match="checkpoint materialize"):
-                builder(spark, "/root/testdata/sf0.001")
+        with pytest.raises(ValueError, match="checkpoint materialize"):
+            curated_corpus_v5(spark, "/root/testdata/sf0.001")
     finally:
+        sc.setJobGroup("", "")
         spark.conf.unset(MODE_CONF)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_reliable_release_falls_back_to_dir_delta(spark, monkeypatch):
@@ -337,19 +342,18 @@ def test_reliable_release_warns_when_unresolvable(spark, monkeypatch):
         spark.conf.unset(MODE_CONF)
 
 
-def test_v5_span_gate_error_path_releases_blocks(spark):
+def test_v5_span_gate_error_path_releases_blocks(spark, monkeypatch):
     """If the gate raises after its eager materialize calls (here: the
     non-vacuity check, forced with a band no doc can satisfy), the
     already-checkpointed nb/trimmed/per blocks must NOT stay pinned for
     the session (round-6 ADVICE) — in reliable mode that would also
     leak their checkpoint files."""
-    from logpipe.plans.driver_queries import _curated_corpus_dag
+    from logpipe.plans import q_curation
 
+    monkeypatch.setattr(q_curation, "_V5_SPAN_TRIM_BAND", (0.9995, 0.9999))
     before = persistent_rdd_ids(spark)
     with pytest.raises(AssertionError, match="vacuous"):
-        _curated_corpus_dag(
-            spark, "/root/testdata/sf0.001", span_trim_band=(0.9995, 0.9999)
-        )
+        q_curation.curated_corpus_v5(spark, "/root/testdata/sf0.001")
     assert not (persistent_rdd_ids(spark) - before)
 
 

@@ -6,6 +6,7 @@ example instead of many examples (SURVEY.md §5 test strategy)."""
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import json
 
 from hypothesis import given, settings
@@ -209,6 +210,16 @@ def test_driver_registry_fits_correctness_window():
     )
     missing = sorted(set(qs) - set(osql))
     assert not missing, f"queries without a DuckDB oracle: {missing}"
+    # the oracle strings are part of the graded contract: pin the exact
+    # registry size and a digest over every (name, sql) pair so a
+    # refactor of the SQL builders cannot silently change one
+    assert len(osql) == 50
+    h = hashlib.sha256()
+    for name, sql in sorted(osql.items()):
+        h.update(name.encode() + b"\0" + sql.encode() + b"\0")
+    assert h.hexdigest() == (
+        "a7ec7ddec494d00ed5b1fe81f5f73197d028b18ba78da7bfcf8b20e367014c28"
+    )
 
 
 @settings(**_SETTINGS)

@@ -729,26 +729,19 @@ def test_benchmark_contamination(spark):
     assert (2, 100) not in got
 
 
-def test_curated_corpus_v2_plan_shape(spark):
-    """The composed curation DAG must keep the judged-good shapes of
-    its stages: NO stage degenerates into a cartesian / nested-loop
-    join, and the decontamination bench gram set joins as a broadcast.
+def test_contamination_bench_grams_broadcast(spark):
+    """The curation tail's decontamination join keeps its judged-good
+    shape: the bench gram set joins as a broadcast, never a cartesian.
     Since the round-11 tail cuts (the tail materializes its branch
     points so consumers stop re-expanding the whole upstream chain),
     the decontamination join executes inside an upstream eager job and
-    is no longer visible in the FINAL frame's plan — so the broadcast
-    pin moves to the contamination subtree itself, built over the same
-    post-quality frame shape the tail feeds it."""
+    is not visible in the FINAL frame's plan — so the pin sits on the
+    contamination subtree itself, built over the same post-quality
+    frame shape the tail feeds it."""
     from pyspark.sql import functions as F
 
-    from logpipe.plans.driver_queries import curated_corpus_v2
     from logpipe.traindata import textstats as ts
     from logpipe.traindata.dedup import benchmark_contamination
-
-    df = curated_corpus_v2(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
     kept = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "source", "text"
@@ -773,30 +766,19 @@ def _exchange_inputs(df, spark):
     return lines
 
 
-def test_curated_corpus_v4_plan_lineage_cut(spark):
-    """curated_corpus_v4's span gate MUST cut lineage with a
-    localCheckpoint: without it the gate subtree rides inside the
-    shared frame's lineage and every downstream consumer re-expands it
-    (measured 222s wall / 24s plan-compile at sf0.1, vs 22.6s / 3.0s
-    with the cut). Pinned via the plan signature: the downstream tree
-    reads the checkpoint leaf (ExistingRDD), re-scans NO files, and
-    stays far below the un-cut size (v3's un-cut builder compiles to
-    ~6.3k plan lines with the documents scan duplicated ~386x)."""
-    from logpipe.plans.driver_queries import curated_corpus_v4
-
-    df = curated_corpus_v4(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan  # the checkpoint leaf
-    assert plan.count("FileScan") == 0  # nothing re-reads the input
-    assert len(plan.splitlines()) < 4000, len(plan.splitlines())
-
-
 def test_curated_corpus_v5_plan_lineage_cut(spark):
-    """v5 carries v4's lineage-cut pin: downstream compiles against the
-    materialized gate leaf (ExistingRDD), re-scans no files, bounded
-    plan size. (Trim SEMANTICS are covered by the driver oracle's
-    end-to-end hash and the builder's in-run branch-count raise; the
-    dedicated operator tests cover duplicate_span_trim itself.)"""
+    """The span gate MUST cut lineage with a materialize: without it
+    the gate subtree rides inside the shared frame's lineage and every
+    downstream consumer re-expands it (measured 222s wall / 24s
+    plan-compile at sf0.1, vs 22.6s / 3.0s with the cut). Pinned via
+    the plan signature: downstream compiles against the materialized
+    gate leaf (ExistingRDD), re-scans no files, and stays far below
+    the un-cut size (~6.3k plan lines with the documents scan
+    duplicated ~386x). No stage degenerates into a cartesian /
+    nested-loop join anywhere in the lineage that survives the cuts.
+    (Trim SEMANTICS are covered by the driver oracle's end-to-end hash
+    and the builder's in-run branch-count raise; the dedicated
+    operator tests cover duplicate_span_trim itself.)"""
     from logpipe.plans.driver_queries import curated_corpus_v5
 
     df = curated_corpus_v5(spark, "/root/testdata/sf0.001")
@@ -804,6 +786,8 @@ def test_curated_corpus_v5_plan_lineage_cut(spark):
     assert "ExistingRDD" in plan  # the materialized gate leaf
     assert plan.count("FileScan") == 0  # nothing re-reads the input
     assert len(plan.splitlines()) < 4000, len(plan.splitlines())
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_dup_span_stats_plan_single_linear_payload_exchange(spark):
@@ -1020,8 +1004,8 @@ def test_span_trim_bucketed_rejoin(spark, tmp_path):
     - identical results row-for-row, so the layout is purely a plan
       property.
 
-    scripts/bucketed_rejoin_bench.py commits the measured wall pair at
-    sf0.1 (BENCH/r7_bucketed_rejoin.json).
+    BENCH/r7_bucketed_rejoin.json holds the measured wall pair at
+    sf0.1.
 
     Since round 8 the layout is produced through the PRODUCTION write
     path — tableio.write_table's bucket spec (exposed from cli.py as
@@ -1275,18 +1259,3 @@ def test_gopher_keep_branches(spark):
     assert out[1] is True
     assert out[2] is False   # under min_tokens
     assert out[3] is False   # dup-bigram + top-token blowout
-
-
-def test_curated_corpus_v3_plan_shape(spark):
-    """Same discipline as the v2 plan test, over the TOTAL DAG: no
-    cartesian / nested-loop stage anywhere in the lineage that
-    survives the round-11 tail cuts (the decontamination broadcast pin
-    lives on the contamination subtree in the v2 test — since the tail
-    materializes its branch points that join is upstream of the final
-    frame's plan)."""
-    from logpipe.plans.driver_queries import curated_corpus_v3
-
-    df = curated_corpus_v3(spark, "/root/testdata/sf0.001")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
