@@ -592,12 +592,12 @@ def _bench_queries(spark, driver_queries) -> dict:
 
 def _span_spread_decision(spark, sf_dir) -> dict:
     """The derived-spread metadata for BOTH span-family sweep inputs
-    (see logpipe.traindata.dedup.spread_decision): the 1x documents
+    (see logpipe.spread.spread_decision): the 1x documents
     scan and the 10x union, which arrives in ~10x the splits and can
     legitimately derive the OTHER shape — recording only the 1x
     decision would mislabel half the family's entries (round-7
     review)."""
-    from logpipe.traindata.dedup import spread_decision
+    from logpipe.spread import spread_decision
 
     return {
         "documents": spread_decision(

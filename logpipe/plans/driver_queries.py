@@ -40,7 +40,11 @@ execute Spark jobs, and may raise, when the registry callable is
 invoked. Registry consumers that only want a PLAN must use the lazy
 helper instead where one exists (`flagship_rules_frame`), or release
 the eager entries' checkpoint blocks by rdd-id delta after reading the
-plan — the pattern dump_plans.py follows.
+plan — the pattern dump_plans.py follows. The similarity builders that
+cut lineage before a self-join or an iterative loop (minhash, simhash,
+cosine LSH, near-dup clustering) and `ann_ivf_topk` (collects its
+centroids) also run jobs when built; every other entry builds with
+zero jobs (tests/test_registry.py lists both sets and checks them).
 """
 
 from __future__ import annotations

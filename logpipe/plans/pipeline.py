@@ -45,7 +45,6 @@ def run_pipeline(
     k8s_meta: DataFrame,
     tool_meta: DataFrame,
     cluster_name: str = DEFAULT_CLUSTER,
-    use_pandas_grok: bool = False,
     passthrough: tuple[str, ...] = (),
     honor_k8s_exclude: bool = False,
     broadcast_dims: bool = True,
@@ -68,19 +67,17 @@ def run_pipeline(
     (df in, df + `sink` out) — e.g. the config-driven
     operators.rewrite.route_with_rules engine. Default: the typed
     two-rule route().
-    ``spread``: derived round-robin parallelism spread (logpipe.spread,
-    round 11): the whole pre-route chain is narrow by design, so over a
-    few-split input (the single-row-group bench parquet) every parse
-    regex, enrich projection and map build otherwise executes in ONE
-    task. Naturally-split production scans derive False and the chain
-    stays exchange-free, preserving the 100TB shape the plan pins
-    assert (the only exchange a spread ever adds is
-    RoundRobinPartitioning — parallelism, not a keyed shuffle).
-    Bucketed-scan caveat: the derivation reads ``.rdd``, which compiles
-    with bucketing disabled and under-reports a bucketed scan's splits,
-    so it can add a spurious round-robin exchange that breaks a
-    storage-partitioned layout downstream. Layout-sensitive callers
-    (bucketed transcripts) pass ``spread=False``.
+    ``spread``: round-robin parallelism spread (logpipe.spread): the
+    whole pre-route chain is narrow by design, so over a few-split
+    input (the single-row-group bench parquet) every parse regex,
+    enrich projection and map build otherwise executes in ONE task.
+    None derives it; naturally-split scans and inputs that already
+    passed an exchange (the docker/CRI rejoin) derive False, so the
+    chain adds no exchange and the 100TB plan pins hold (the only exchange a spread ever adds is
+    RoundRobinPartitioning — parallelism, not a keyed shuffle). This
+    is the one explicit override of the rule: ``flagship_route_counts``
+    pins False because its 3-row aggregate pays more for the extra
+    exchange than it gains from the wider scan stage.
     """
     from logpipe.spread import spread_for_compute
 
@@ -94,16 +91,10 @@ def run_pipeline(
     df = df.withColumn("content", parse.truncate_log(F.col("text"))).drop("text")
 
     # P1 erda-info grok (conf/ds/fluent-bit.conf:61-67, Preserve_Key True)
-    if use_pandas_grok:
-        ext = parse.erda_info_pandas()(F.col("content"))
-        df = df.withColumn("_g", ext).withColumn(
-            "level", F.col("_g.level")
-        ).withColumn("request_id", F.col("_g.request_id")).drop("_g")
-    else:
-        g = parse.erda_info_struct(F.col("content"))
-        df = df.withColumn("_g", g).withColumn("level", F.col("_g.level")).withColumn(
-            "request_id", F.col("_g.request_id")
-        ).drop("_g")
+    g = parse.erda_info_struct(F.col("content"))
+    df = df.withColumn("_g", g).withColumn("level", F.col("_g.level")).withColumn(
+        "request_id", F.col("_g.request_id")
+    ).drop("_g")
 
     # F2 kubernetes enrich + F4 tool (Lua) enrich — broadcast left joins
     df = enrich_k8s(df, k8s_meta, use_broadcast=broadcast_dims)

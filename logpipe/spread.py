@@ -12,16 +12,22 @@ fewer splits than the shuffle parallelism. A naturally-split 100TB
 scan derives False and the operator moves zero payload bytes with no
 caller flag (the round-5/6 "derive-don't-default" rule).
 
-This module is the shared home of that rule for the OTHER scan-stage
-compute chains (flagship parse chain, erda grok, textstats profile,
-line dedup — round 11); logpipe.traindata.dedup calls it directly so the
-rule cannot fork (its `spread_decision` surfaces the same decision as
-run metadata in the bench artifact).
+The rule, in one place, read from the frame's own ``executedPlan()``:
+a frame whose plan already contains an exchange (an ``AdaptiveSparkPlan``
+root; ``logpipe.session`` always enables AQE) never spreads, because its
+partition count is the exchange's and AQE only coalesces it when the
+data is small; any other frame spreads iff ``execute()`` — which builds
+the scan RDD without running it — has fewer partitions than
+``spark.sql.shuffle.partitions``. Deriving it runs no Spark job on any
+input (``df.rdd`` would run an adaptive plan's shuffle stages to learn
+a coalesced count).
 
-``df.rdd.getNumPartitions()`` compiles the physical plan but runs no
-job. Round-robin repartition pays the sort-before-repartition safety
-sort (SPARK-23207) — part of the measured trade, and retry-
-deterministic, unlike any rand()-derived key.
+Call sites: ``run_pipeline`` (pinned off by ``flagship_route_counts``),
+the erda grok gate, the textstats profile and the span family's head
+(``dedup._span_frame``); ``spread_decision`` surfaces the decision as
+bench run metadata. Round-robin repartition pays the
+sort-before-repartition safety sort (SPARK-23207) — part of the
+measured trade, and retry-deterministic, unlike any rand()-derived key.
 """
 
 from __future__ import annotations
@@ -33,13 +39,31 @@ def shuffle_partitions(df: DataFrame) -> int:
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
 
-def derive_spread(df: DataFrame, n_part: int | None = None) -> bool:
-    """True iff ``df`` arrives in fewer splits than the session's
-    shuffle parallelism (the single-file bench reality; False on any
-    naturally-split production scan)."""
-    if n_part is None:
-        n_part = shuffle_partitions(df)
-    return df.rdd.getNumPartitions() < n_part
+def spread_decision(df: DataFrame) -> dict:
+    """The derived-spread decision for ``df`` with its inputs, surfaced
+    as run metadata (an operator sees which plan shape a run took
+    without reading PLANS.md). Keys: input_splits (None when the plan
+    already contains an exchange, whose partition count is only known
+    once it runs), shuffle_partitions, spread. Runs no job."""
+    plan = df._jdf.queryExecution().executedPlan()
+    splits = (
+        None if plan.nodeName() == "AdaptiveSparkPlan"
+        else plan.execute().getNumPartitions()
+    )
+    n_part = shuffle_partitions(df)
+    return {
+        "input_splits": splits,
+        "shuffle_partitions": n_part,
+        "spread": splits is not None and splits < n_part,
+    }
+
+
+def derive_spread(df: DataFrame) -> bool:
+    """True iff ``df`` is a narrow plan with fewer splits than the
+    session's shuffle parallelism (the single-file bench reality;
+    False on any naturally-split production scan and on any frame that
+    already passed an exchange)."""
+    return spread_decision(df)["spread"]
 
 
 def spread_for_compute(df: DataFrame, spread: bool | None = None) -> DataFrame:
@@ -47,12 +71,11 @@ def spread_for_compute(df: DataFrame, spread: bool | None = None) -> DataFrame:
     derived (or explicitly passed) spread decision says the downstream
     per-row compute would otherwise run in fewer tasks than cores.
 
-    Streaming frames pass through untouched: ``.rdd`` cannot compile on
-    a streaming source, and micro-batch parallelism is the source's
-    (maxFilesPerTrigger et al.), not a scan-split artifact."""
+    Streaming frames pass through untouched: a streaming plan cannot
+    execute outside a query, and micro-batch parallelism is the
+    source's (maxFilesPerTrigger et al.), not a scan-split artifact."""
     if df.isStreaming:
         return df
-    n_part = shuffle_partitions(df)
     if spread is None:
-        spread = derive_spread(df, n_part)
-    return df.repartition(n_part) if spread else df
+        spread = derive_spread(df)
+    return df.repartition(shuffle_partitions(df)) if spread else df

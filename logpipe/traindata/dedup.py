@@ -1146,31 +1146,7 @@ def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def spread_decision(docs: DataFrame) -> dict:
-    """The derived-spread decision for this input, surfaced as run
-    metadata (round-6 verdict task 8: a cluster operator should see
-    which plan shape a run took — zero-payload on naturally-split
-    scans vs the round-robin spread on few-split inputs — without
-    reading PLANS.md). Keys: input_splits, shuffle_partitions, spread.
-    Compiles the scan's physical plan; runs no job."""
-    from logpipe.spread import derive_spread, shuffle_partitions
-
-    n_part = shuffle_partitions(docs)
-    return {
-        "input_splits": docs.rdd.getNumPartitions(),
-        "shuffle_partitions": n_part,
-        # the rule itself lives in ONE place (logpipe.spread) so this
-        # metadata cannot desynchronize from the plan shape compiled
-        "spread": derive_spread(docs, n_part),
-    }
-
-
-def _span_frame(
-    docs: DataFrame,
-    k: int,
-    text_col: str = "text",
-    spread: bool | None = None,
-) -> DataFrame:
+def _span_frame(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
     """The shared head of the span family: (doc_id, _spans) — tokens,
     POSITIONAL k-gram windows (NOT distinct: every position counts;
     < k-token docs get an empty array), with the derived spread
@@ -1180,7 +1156,7 @@ def _span_frame(
     guard, or the spread rule (round-7 review)."""
     from logpipe.spread import spread_for_compute
 
-    d = spread_for_compute(docs.select("doc_id", text_col), spread)
+    d = spread_for_compute(docs.select("doc_id", text_col))
     d = d.withColumn("_toks", tokens(F.col(text_col)))
     return d.select(
         "doc_id",
@@ -1190,12 +1166,7 @@ def _span_frame(
     )
 
 
-def _span_hash_frame(
-    docs: DataFrame,
-    k: int,
-    text_col: str = "text",
-    spread: bool | None = None,
-) -> DataFrame:
+def _span_hash_frame(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
     """(doc_id, _shs) — the span windows of _span_frame hashed IN THE
     ARRAY to 16-byte ``unhex(md5(window))`` binaries before the
     explode. Same md5 bits as the previous post-explode ``md5(span)``
@@ -1206,19 +1177,14 @@ def _span_hash_frame(
     "shuffle fewer bytes": count table 1.80s -> 1.07s, position table
     1.56s -> 1.10s at sf0.1). The window text itself never leaves the
     map side anywhere in the span family."""
-    spans = _span_frame(docs, k, text_col=text_col, spread=spread)
+    spans = _span_frame(docs, k, text_col=text_col)
     return spans.select(
         "doc_id",
         F.transform("_spans", lambda s: F.unhex(F.md5(s))).alias("_shs"),
     )
 
 
-def _span_count_table(
-    docs: DataFrame,
-    k: int,
-    text_col: str = "text",
-    spread: bool | None = None,
-) -> DataFrame:
+def _span_count_table(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
     """LAZY per-(window, doc) count table: (sh=unhex(md5(window)),
     doc_id, cnt=occurrences of that window in that doc). ONE LINEAR
     CHAIN, one explode pass over _span_hash_frame, groupBy (sh, doc)
@@ -1226,7 +1192,7 @@ def _span_count_table(
     hash, id, count) scalars. Exposed for plan pinning;
     duplicate_span_stats' default shape materializes it before the
     multiplicity branch."""
-    hashed = _span_hash_frame(docs, k, text_col=text_col, spread=spread)
+    hashed = _span_hash_frame(docs, k, text_col=text_col)
     keyed = hashed.select("doc_id", F.explode("_shs").alias("sh"))
     return keyed.groupBy("sh", "doc_id").agg(F.count(F.lit(1)).alias("cnt"))
 
@@ -1236,7 +1202,6 @@ def duplicate_span_stats(
     k: int = 3,
     min_docs: int = 2,
     text_col: str = "text",
-    spread: bool | None = None,
     shape: str = "join",
     _materialized: list[DataFrame] | None = None,
 ) -> DataFrame:
@@ -1296,15 +1261,14 @@ def duplicate_span_stats(
     ceiling above); round 7 makes the materialized join-back the
     default and keeps the window as the documented opt-in.
 
-    ``spread`` round-robins the (doc_id, text) projection across
+    The span head round-robins the (doc_id, text) projection across
     shuffle-partitions cores before the explode — the chain's only
     payload-bearing exchange, there purely for parallelism when the
-    input arrives in fewer splits than cores. The default (None)
-    DERIVES it: spread only if the input's split count is below the
-    shuffle parallelism — a naturally-split 100TB scan compiles to the
-    zero-payload plan with no caller flag. Explicit True/False
-    overrides. tests/test_traindata.py pins all three properties
-    (exactly-one / zero / derived-adds-none payload exchanges).
+    input arrives in fewer splits than cores. The decision is DERIVED
+    (logpipe.spread): a naturally-split 100TB scan, or an input that
+    already passed an exchange, compiles to the zero-payload plan.
+    tests/test_traindata.py pins both shapes (exactly-one / zero /
+    derived-adds-none payload exchanges).
     """
     if k < 1:
         raise ValueError(f"duplicate_span_stats: k must be >= 1, got {k}")
@@ -1312,7 +1276,7 @@ def duplicate_span_stats(
         raise ValueError(
             f"duplicate_span_stats: shape must be 'join' or 'window', got {shape!r}"
         )
-    per_sh_doc = _span_count_table(docs, k, text_col=text_col, spread=spread)
+    per_sh_doc = _span_count_table(docs, k, text_col=text_col)
     own: list[DataFrame] = []  # checkpoints the RESULT owns if no caller list
     if shape == "join":
         # each checkpoint lands in _materialized IMMEDIATELY: if the
@@ -1359,19 +1323,14 @@ def duplicate_span_stats(
     return attach_release(out, *own)
 
 
-def _span_position_table(
-    docs: DataFrame,
-    k: int,
-    text_col: str = "text",
-    spread: bool | None = None,
-) -> DataFrame:
+def _span_position_table(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
     """LAZY per-(window, doc) position table: (sh=unhex(md5(window)),
     doc_id, poss=[1-based window positions]). One linear chain — one
     posexplode pass over _span_hash_frame, groupBy (sh, doc) — every
     hash exchange carries (16-byte hash, id, int-list) scalars.
     Exposed for plan pinning; duplicate_span_removals materializes it
     before branching."""
-    hashed = _span_hash_frame(docs, k, text_col=text_col, spread=spread)
+    hashed = _span_hash_frame(docs, k, text_col=text_col)
     keyed = hashed.select(
         "doc_id", F.posexplode("_shs").alias("wpos0", "sh")
     ).select(
@@ -1389,7 +1348,6 @@ def duplicate_span_removals(
     k: int = 3,
     min_docs: int = 2,
     text_col: str = "text",
-    spread: bool | None = None,
     _materialized: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Per-doc REMOVED token positions under exact-substring span dedup
@@ -1435,9 +1393,7 @@ def duplicate_span_removals(
     # list the RESULT owns them (release(result) frees — round-7 ADVICE)
     own: list[DataFrame] = []
     sink = own if _materialized is None else _materialized
-    per = materialize(
-        _span_position_table(docs, k, text_col=text_col, spread=spread)
-    )
+    per = materialize(_span_position_table(docs, k, text_col=text_col))
     sink.append(per)
     shs = materialize(
         per.groupBy("sh").agg(
@@ -1469,7 +1425,6 @@ def duplicate_span_trim(
     k: int = 3,
     min_docs: int = 2,
     text_col: str = "text",
-    spread: bool | None = None,
     _materialized: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact-substring span dedup (Lee et al. 2021's actual remedy —
@@ -1511,15 +1466,14 @@ def duplicate_span_trim(
     docstring).
     """
     rm = duplicate_span_removals(
-        docs, k=k, min_docs=min_docs, text_col=text_col, spread=spread,
-        _materialized=_materialized,
+        docs, k=k, min_docs=min_docs, text_col=text_col, _materialized=_materialized
     )
     # Round-11 measurement, deliberately left as-is: spreading the
     # rejoin's base side (it re-tokenizes the corpus and runs the trim
     # mask) reads 9.0s -> 7.8s on the 10x slope — but the base side
     # lives in the FINAL plan, and the derived-spread rule misfires on
-    # a doc_id-bucketed corpus (the standalone .rdd compile disables
-    # the unnecessary bucketed scan and under-reports splits), so the
+    # a doc_id-bucketed corpus (the bare scan's own plan drops the
+    # unnecessary bucketed scan and reports file splits), so the
     # spread's round-robin exchange would destroy exactly the
     # storage-partitioned zero-payload rejoin the layout
     # demonstration pins (test_span_trim_bucketed_rejoin). The span

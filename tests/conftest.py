@@ -37,6 +37,21 @@ def skew_probe_confs(spark):
                 spark.conf.set(k, v)
 
 
+def count_jobs(spark, fn, group: str):
+    """(fn(), the number of Spark jobs fn ran) — the statusTracker
+    job-group probe. The listener bus is drained first: the status
+    store learns of jobs asynchronously, so an undrained read can miss
+    the last one."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="logpipe-tests", master="local[4]", shuffle_partitions=8)

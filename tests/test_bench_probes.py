@@ -236,7 +236,7 @@ def test_span_spread_decision_metadata(spark):
     of the derivation and agree with it — True on the single-file
     bench input, False once the input arrives in >= shuffle-partition
     splits (the 100TB scan stand-in)."""
-    from logpipe.traindata.dedup import spread_decision
+    from logpipe.spread import spread_decision
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     d = spread_decision(docs)

@@ -82,20 +82,14 @@ def test_wave_job_count_independent_of_buckets(
     (the per-bucket-rescan formulation ran 3 jobs x n_buckets; at 100TB
     with 256 buckets that is 256 full input scans). One wave = one
     input aggregation + one write + one output-metrics scan."""
-    sc = spark.sparkContext
+    from conftest import count_jobs
 
     def jobs_for(n_buckets: int) -> int:
-        group = f"manifest-wave-{n_buckets}"
-        sc.setJobGroup(group, "wave job count probe")
-        try:
-            run_resumable(
-                spark, transcripts, k8s_meta, tool_meta,
-                str(tmp_path / f"out{n_buckets}"), str(tmp_path / f"m{n_buckets}"),
-                n_buckets=n_buckets,
-            )
-        finally:
-            sc.setJobGroup("", "")
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return count_jobs(spark, lambda: run_resumable(
+            spark, transcripts, k8s_meta, tool_meta,
+            str(tmp_path / f"out{n_buckets}"), str(tmp_path / f"m{n_buckets}"),
+            n_buckets=n_buckets,
+        ), f"manifest-wave-{n_buckets}")[1]
 
     j4, j16 = jobs_for(4), jobs_for(16)
     assert j16 <= j4 + 1  # constant, not proportional to bucket count
@@ -221,3 +215,49 @@ def test_manifest_carries_file_lineage(
     t = m.totals()
     for sink, agg in t["sinks"].items():
         assert agg["n_files"] >= 4 and agg["file_bytes"] > 0
+
+
+def test_exchange_input_lands_unspread(
+    spark, transcripts, k8s_meta, tool_meta, tmp_path
+):
+    """A wave over an input that already passed an exchange (the
+    DaemonSet rejoin's shape) keeps the input's partitioning. Deciding
+    the spread costs no job — on the exchanged input as on a narrow
+    one, the derived wave runs exactly the jobs of a wave with the
+    decision pinned to its answer — the write plan has no
+    RoundRobinPartitioning, and each (bucket, sink) lands at most one
+    file per input partition."""
+    from conftest import count_jobs
+
+    inp = str(tmp_path / "in")
+    transcripts.repartition(2).write.parquet(inp)
+    k8s_meta.count()  # build the dims' caches outside the job probes
+    tool_meta.count()
+    outs: list = []
+
+    def wave(name, df, **pin):
+        def pipeline(*args, **kwargs):
+            outs.append(run_pipeline(*args, **kwargs, **pin))
+            return outs[-1]
+
+        m, jobs = count_jobs(spark, lambda: run_resumable(
+            spark, df, k8s_meta, tool_meta, str(tmp_path / f"out-{name}"),
+            str(tmp_path / f"m-{name}"), n_buckets=4, pipeline_fn=pipeline,
+        ), f"manifest-spread-{name}")
+        return m, jobs, outs[-1]._jdf.queryExecution().executedPlan().toString()
+
+    # narrow scan, 2 splits < shuffle parallelism: derives the spread
+    _, j_narrow, plan = wave("narrow", spark.read.parquet(inp))
+    assert "RoundRobinPartitioning" in plan
+    _, j_narrow_pin, _ = wave("narrow-pin", spark.read.parquet(inp), spread=True)
+    assert j_narrow == j_narrow_pin
+
+    def exchanged():
+        return spark.read.parquet(inp).repartition(2, "conv_id")
+
+    m, j_exchange, plan = wave("exchange", exchanged())
+    _, j_exchange_pin, _ = wave("exchange-pin", exchanged(), spread=False)
+    assert j_exchange == j_exchange_pin
+    assert "RoundRobinPartitioning" not in plan
+    files = [s["n_files"] for e in m.entries() for s in e["sinks"].values()]
+    assert files and max(files) <= 2, files

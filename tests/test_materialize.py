@@ -243,20 +243,20 @@ def test_curated_corpus_span_gates_reject_persist(spark):
     span-gated DAG merely BUILDING the cache OOMs the driver heap
     (CachedRDDBuilder stringifies the full tree) — the builder fails
     fast with the reason instead of OOMing. Raises BEFORE any job
-    (job-count probe: the statusTracker pattern of test_manifest.py)."""
+    (job-count probe: conftest.count_jobs)."""
+    from conftest import count_jobs
     from logpipe.plans.driver_queries import curated_corpus_v5
 
-    sc = spark.sparkContext
-    group = "curated-persist-refusal"
-    spark.conf.set(MODE_CONF, "persist")
-    sc.setJobGroup(group, "persist refusal job count probe")
-    try:
+    def refused():
         with pytest.raises(ValueError, match="checkpoint materialize"):
             curated_corpus_v5(spark, "/root/testdata/sf0.001")
+
+    spark.conf.set(MODE_CONF, "persist")
+    try:
+        _, jobs = count_jobs(spark, refused, "curated-persist-refusal")
     finally:
-        sc.setJobGroup("", "")
         spark.conf.unset(MODE_CONF)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert jobs == 0
 
 
 def test_reliable_release_falls_back_to_dir_delta(spark, monkeypatch):

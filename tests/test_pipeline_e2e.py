@@ -62,14 +62,23 @@ def test_sink_counts(spark, transcripts, k8s_meta, tool_meta):
     assert set(got) == {"container", "job", "export"}
 
 
-def test_pandas_grok_parity(spark, transcripts, k8s_meta, tool_meta):
-    """Arrow-vectorized grok produces identical output to the built-in."""
-    a = run_pipeline(transcripts, k8s_meta, tool_meta, use_pandas_grok=False)
-    b = run_pipeline(transcripts, k8s_meta, tool_meta, use_pandas_grok=True)
-    key = lambda d: (d["content"], d["sink"], d["id"], d["timestamp"])
-    ra = sorted((r.asDict(recursive=True) for r in a.collect()), key=key)
-    rb = sorted((r.asDict(recursive=True) for r in b.collect()), key=key)
-    assert ra == rb
+def test_pandas_grok_parity(spark, transcripts):
+    """The Arrow-vectorized grok UDF (the erda_info_vectorized gate's
+    parser) extracts exactly what the pipeline's built-in struct grok
+    does, row for row, on the text the pipeline feeds it."""
+    from pyspark.sql import functions as F
+
+    from logpipe.operators import parse
+
+    content = transcripts.filter(F.length("text") > 0).select(
+        parse.truncate_log(F.col("text")).alias("c")
+    )
+    rows = content.select(
+        parse.erda_info_struct(F.col("c")).alias("a"),
+        parse.erda_info_pandas()(F.col("c")).alias("b"),
+    ).collect()
+    assert rows and all(r["a"].asDict() == r["b"].asDict() for r in rows)
+    assert any(r["a"]["level"] for r in rows)  # the grok matched something
 
 
 def test_k8s_exclude_annotation(spark, transcripts, k8s_meta, tool_meta):

@@ -791,11 +791,11 @@ def test_curated_corpus_v5_plan_lineage_cut(spark):
 
 
 def test_dup_span_stats_plan_single_linear_payload_exchange(spark):
-    """The span-count chain is ONE linear pass: with spread=True its
+    """The span-count chain is ONE linear pass: on a few-split input its
     only payload-bearing exchange is the round-robin scan-spread (there
-    purely for parallelism on few-split inputs); every hash exchange
-    carries (md5, doc_id, count) scalars. With spread=False the text
-    moves ZERO bytes across the wire. Pins the round-5 redesign — the
+    purely for parallelism); every hash exchange carries (md5, doc_id,
+    count) scalars. On a many-split input the text moves ZERO bytes
+    across the wire. Pins the round-5 redesign — the
     earlier branching DAG (shared-table groupBy + verdict semi-join)
     made Catalyst duplicate the scan subtree per consumer: three text
     scans, and with the old upfront repartition(doc_id), three
@@ -812,6 +812,7 @@ def test_dup_span_stats_plan_single_linear_payload_exchange(spark):
     downstream), and the window OPT-IN pins zero materialization with
     the spread as its single payload exchange.
     """
+    from logpipe.materialize import materialize, release
     from logpipe.traindata.dedup import _span_count_table, duplicate_span_stats
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
@@ -828,12 +829,19 @@ def test_dup_span_stats_plan_single_linear_payload_exchange(spark):
     assert "REPARTITION_BY_NUM" in plan  # the one payload move is the spread
     assert "partial_count" in plan  # scalar aggs combine map-side
 
-    sub0 = _span_count_table(docs, 3, spread=False)
-    payload0 = [
-        ln for ln in _exchange_inputs(sub0, spark)
-        if "text#" in ln or "span#" in ln or "_toks#" in ln
-    ]
-    assert payload0 == [], payload0
+    # a materialized many-split copy (the 100TB scan stand-in, with no
+    # exchange in its own plan) derives no spread: the text moves ZERO
+    # bytes across the wire
+    docs32 = materialize(docs.repartition(32))
+    try:
+        sub0 = _span_count_table(docs32, 3)
+        payload0 = [
+            ln for ln in _exchange_inputs(sub0, spark)
+            if "text#" in ln or "span#" in ln or "_toks#" in ln
+        ]
+        assert payload0 == [], payload0
+    finally:
+        release(docs32)
 
     # derived default on a many-split input (the 100TB scan stand-in):
     # the chain must add NO payload exchange of its own — the only
@@ -959,6 +967,7 @@ def test_span_trim_plan_materialized_branch_point(spark):
     spread) and the FINAL trim plan reads the checkpoint leaf — exactly
     one FileScan (the reassembly's own text scan) and zero payload
     HASH exchanges."""
+    from logpipe.materialize import materialize, release
     from logpipe.traindata.dedup import (
         _span_position_table,
         duplicate_span_trim,
@@ -972,12 +981,16 @@ def test_span_trim_plan_materialized_branch_point(spark):
         if "text#" in ln or "span#" in ln or "_toks#" in ln
     ]
     assert len(payload) == 1, payload
-    sub0 = _span_position_table(docs, 3, spread=False)
-    payload0 = [
-        ln for ln in _exchange_inputs(sub0, spark)
-        if "text#" in ln or "span#" in ln or "_toks#" in ln
-    ]
-    assert payload0 == [], payload0
+    docs32 = materialize(docs.repartition(32))  # many splits: no spread
+    try:
+        sub0 = _span_position_table(docs32, 3)
+        payload0 = [
+            ln for ln in _exchange_inputs(sub0, spark)
+            if "text#" in ln or "span#" in ln or "_toks#" in ln
+        ]
+        assert payload0 == [], payload0
+    finally:
+        release(docs32)
 
     df = duplicate_span_trim(docs, k=3, min_docs=2)
     plan = df._jdf.queryExecution().executedPlan().toString()
