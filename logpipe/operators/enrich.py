@@ -1,4 +1,4 @@
-"""Enrichment — lookup joins + static fields (SURVEY.md §2.3 F2/F4/F5).
+"""Enrichment — lookup joins (SURVEY.md §2.3 F2/F4).
 
 Both reference enrichers are per-record lookups against small, slowly
 changing dimensions:
@@ -56,8 +56,3 @@ def enrich_tool(df: DataFrame, tool_meta: DataFrame, use_broadcast: bool = True)
         F.when(F.col("cpuset").isNotNull(), container_id_from_cpuset(F.col("cpuset"))),
     )
 
-
-def add_static_fields(df: DataFrame, fields: dict[str, str]) -> DataFrame:
-    """F5 record_modifier: add N static env-derived fields
-    (conf/eci/fluent-bit.conf:77-99) — plain literal projections."""
-    return df.select("*", *[F.lit(v).alias(k) for k, v in fields.items()])

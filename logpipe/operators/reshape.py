@@ -3,7 +3,8 @@
 fluent-bit mutates a dynamic msgpack map; here the record is a fixed
 StructType row and the dynamic prefix-keyed part (__tags_*, labels)
 becomes two MapType columns built at the end (F11 'nest'). The modify
-family maps to pure projections:
+family maps to column expressions, written in place in the select of
+plans.pipeline.log_event_tail (and the heads that feed it):
 
   add (only if absent)  -> coalesce(col, lit(v))        (F6)
   set (overwrite)       -> lit(v)                       (F6)
@@ -14,40 +15,17 @@ family maps to pure projections:
   nest lift             -> select('k8s.*') / map_concat (F10)
   nest nest             -> map construction             (F11)
 
-All of this stays inside one whole-stage-codegen span — Catalyst
-collapses the chained projections into a single physical Project.
+All of this stays inside one whole-stage-codegen span. This module
+keeps the map-side helpers: the presence test, the nest map builder,
+the dice_* compat pairs and the dynamic plan's lift/nest/remove.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from logpipe.schema import DICE_COMPAT_KEYS
-
-
-def modify_add(df: DataFrame, key: str, value: Column) -> DataFrame:
-    """F6 `modify add`: set only when absent/null."""
-    if key in df.columns:
-        return df.withColumn(key, F.coalesce(F.col(key), value))
-    return df.withColumn(key, value)
-
-
-def modify_set(df: DataFrame, key: str, value: Column) -> DataFrame:
-    """F6 `modify set`: overwrite unconditionally."""
-    return df.withColumn(key, value)
-
-
-def modify_copy(df: DataFrame, src: str, dst: str) -> DataFrame:
-    """F8 `modify copy`: copy src->dst only if dst absent."""
-    if dst in df.columns:
-        return df.withColumn(dst, F.coalesce(F.col(dst), F.col(src)))
-    return df.withColumn(dst, F.col(src))
-
-
-def modify_hard_copy(df: DataFrame, src: str, dst: str) -> DataFrame:
-    """F8 `modify hard_copy`: overwrite dst with src."""
-    return df.withColumn(dst, F.col(src))
 
 
 def nonempty(c: Column) -> Column:

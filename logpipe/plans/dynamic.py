@@ -35,20 +35,10 @@ from logpipe.operators.reshape import (
     build_map,
     lift_prefixed,
     nest_wildcard,
-    nonempty,
     remove_wildcard,
 )
 from logpipe.operators.route import route
 from logpipe.plans.pipeline import DEFAULT_CLUSTER
-
-
-def _map_set(m: Column, key: str, value: Column) -> Column:
-    """modify `set` on a map record: overwrite key (F6)."""
-    return F.map_concat(remove_key(m, key), build_map({key: value}))
-
-
-def remove_key(m: Column, key: str) -> Column:
-    return F.map_filter(m, lambda k, _: k != F.lit(key))
 
 
 def rename_key(m: Column, old: str, new: str) -> Column:

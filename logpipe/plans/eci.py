@@ -8,9 +8,10 @@ The per-pod variant differs from the DS flagship in its head stages:
   -> parser log-id ON THE PATH              (P7: container name <- path)
   -> Lua add_cpuset file lookup             (F4: tool_meta broadcast join)
   -> parser cpuset                          (P8: container id <- cgroup path)
-  -> parser erda-info                       (P1)
+  -> parser erda-info                       (P1, first step of the tail)
   -> record_modifier static env tags        (F5)
-  -> same compat / nest / route / output    (as §3.1)
+  -> same compat / nest / route / output    (as §3.1: log_event_tail,
+                                             shared with plans/pipeline.py)
 
 Input here is the transcripts shape where `tool` plays the container
 name (FIXTURES.md §1); log_path is synthesized from it exactly as the
@@ -23,11 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logpipe.operators import parse
-from logpipe.operators.enrich import add_static_fields
-from logpipe.operators.project import project_log_event
-from logpipe.operators.reshape import build_map
-from logpipe.operators.route import route
 from logpipe.operators.stitch import stitch_multiline, stitch_multiline_java
+from logpipe.plans.pipeline import log_event_tail
 
 ECI_STATIC_FIELDS = {
     # record_modifier block (conf/eci/fluent-bit.conf:77-99): static
@@ -49,7 +47,6 @@ ECI_STATIC_FIELDS = {
 def run_eci_pipeline(
     transcripts: DataFrame,
     tool_meta: DataFrame,
-    static_fields: dict[str, str] = ECI_STATIC_FIELDS,
     collector: str | None = None,
     stitch: bool = True,
     stitch_grammar: str = "datetime",
@@ -102,45 +99,21 @@ def run_eci_pipeline(
         F.broadcast(tool_meta.withColumnRenamed("tool", "pri_id")), "pri_id", "left"
     )
 
-    # P8 cpuset -> container id
-    df = df.withColumn(
-        "container_id",
-        F.when(F.col("cpuset").isNotNull(), parse.container_id_from_cpuset(F.col("cpuset"))),
+    # P8 cpuset -> container id; F5 record_modifier static fields as
+    # literal tags, then their dice_* copies in the same order
+    container_id = F.when(
+        F.col("cpuset").isNotNull(), parse.container_id_from_cpuset(F.col("cpuset"))
     )
-
-    # P1 erda-info (single-pass variant)
-    df = (
-        df.withColumn("_g", parse.erda_info_struct(F.col("text")))
-        .withColumn("level", F.col("_g.level"))
-        .withColumn("request_id", F.col("_g.request_id"))
-        .drop("_g")
+    static = {k: F.lit(v) for k, v in ECI_STATIC_FIELDS.items()}
+    return log_event_tail(
+        df,
+        content=F.col("text"),
+        container_id=container_id,
+        tags={
+            "container_id": container_id,
+            **static,
+            **{f"dice_{k}": v for k, v in static.items()},
+        },
+        collector=F.lit(collector).cast("string"),
+        define_tag=F.lit(None).cast("string"),
     )
-
-    # F5 record_modifier static fields
-    df = add_static_fields(df, static_fields)
-
-    # compat + nest (same block as §3.1)
-    df = df.withColumn("content", F.col("text")).withColumn(
-        "id", F.coalesce(F.col("container_id"), F.lit(""))
-    )
-    tag_pairs = {
-        "level": F.col("level"),
-        "request_id": F.col("request_id"),
-        "container_id": F.col("container_id"),
-        **{k: F.col(k) for k in static_fields},
-    }
-    tag_pairs.update({f"dice_{k}": F.col(k) for k in static_fields})
-    df = df.withColumn("tags", build_map(tag_pairs))
-    df = df.withColumn(
-        "labels",
-        build_map({"monitor_log_collector": F.lit(collector)}),
-    )
-    df = df.withColumn(
-        "stream",
-        F.when(F.col("role").isin("tool", "system"), "stderr").otherwise("stdout"),
-    )
-    df = df.withColumn("monitor_log_collector", F.lit(collector)).withColumn(
-        "define_tag", F.lit(None).cast("string")
-    )
-    df = route(df)
-    return project_log_event(df)

@@ -1,16 +1,21 @@
 """The flagship DAG — DaemonSet container-log path (SURVEY.md §3.1).
 
 Re-expresses conf/ds/fluent-bit.conf's declared filter chain as one
-declarative DataFrame plan:
+declarative DataFrame plan. The head is the DaemonSet's own:
 
-  scan -> skip empty (S1 Skip_Empty_Lines)
+  scan -> spread (logpipe.spread, few-split inputs only)
+       -> skip empty (S1 Skip_Empty_Lines)
        -> truncate 50KB (P2)
-       -> erda-info grok (P1: level, request_id)
        -> k8s enrich (F2, broadcast left join on conv_id)
+       -> K8S-Logging.Exclude filter (opt-in)
        -> tool enrich (F4+P8, broadcast left join on tool)
-       -> static fields (F5: cluster_name)
-       -> compat reshape (F6-F9 renames/copies/removes)
+
+then ``log_event_tail``, the tail the ECI plan (plans/eci.py) shares:
+
+       -> erda-info grok (P1: level, request_id)
+       -> compat: id copy, static cluster tag, dice_* copies (F5-F9)
        -> nest tags/labels maps (F10/F11)
+       -> role -> stream
        -> route (F12/F13: container | job | export with keep=true dup)
        -> LogEvent projection (O4)
 
@@ -28,16 +33,23 @@ Design choices documented for parity:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logpipe.operators import parse
 from logpipe.operators.enrich import enrich_k8s, enrich_tool
 from logpipe.operators.project import project_log_event
-from logpipe.operators.reshape import build_map, dice_compat_pairs, nonempty
+from logpipe.operators.reshape import build_map, dice_compat_pairs
 from logpipe.operators.route import route
 
 DEFAULT_CLUSTER = "erda-cluster"
+
+# the k8s platform tags, in the order the DS tags map emits them
+PLATFORM_KEYS = [
+    "org_id", "org_name", "project_id", "project_name", "application_id",
+    "application_name", "service_name", "runtime_id", "runtime_name",
+    "workspace",
+]
 
 
 def run_pipeline(
@@ -90,73 +102,89 @@ def run_pipeline(
     # downstream work (same placement as conf/ds/fluent-bit.conf:23-29)
     df = df.withColumn("content", parse.truncate_log(F.col("text"))).drop("text")
 
-    # P1 erda-info grok (conf/ds/fluent-bit.conf:61-67, Preserve_Key True)
-    g = parse.erda_info_struct(F.col("content"))
-    df = df.withColumn("_g", g).withColumn("level", F.col("_g.level")).withColumn(
-        "request_id", F.col("_g.request_id")
-    ).drop("_g")
-
     # F2 kubernetes enrich + F4 tool (Lua) enrich — broadcast left joins
     df = enrich_k8s(df, k8s_meta, use_broadcast=broadcast_dims)
     if honor_k8s_exclude and "k8s_exclude" in df.columns:
         df = df.filter(~F.coalesce(F.col("k8s_exclude"), F.lit(False)))
     df = enrich_tool(df, tool_meta, use_broadcast=broadcast_dims)
 
-    # F6-F9 compat block (conf/ds/fluent-bit.conf:132-161):
-    # rename namespace_name->pod_namespace, docker_id->container_id,
-    # copy container_id -> id (falling back to the ECI cpuset id),
-    # remove container_hash/container_image (simply never projected).
+    # F6-F9 compat block (conf/ds/fluent-bit.conf:132-161): rename
+    # namespace_name->pod_namespace, docker_id->container_id (falling
+    # back to the ECI cpuset id); container_hash/container_image are
+    # simply never projected. F5 adds the static cluster tag
+    # (conf/ds/fluent-bit.conf:127-130); F8 the dice_* copies (148-161).
     container_id = F.coalesce(F.col("docker_id"), F.col("tool_container_id"))
-    df = df.withColumn("container_id", container_id).withColumn(
-        "id", F.coalesce(F.col("container_id"), F.lit(""))
-    )
-
-    # F5/F6 static cluster tag (conf/ds/fluent-bit.conf:127-130)
-    df = df.withColumn("cluster_name", F.lit(cluster_name))
-
-    # F10/F11 nest: labels <- __tags_monitor_log_*, tags <- __tags_*
-    # (conf/ds/fluent-bit.conf:163-178). Empty extractions ('') are
-    # absent keys — build_map drops them (fluent-bit no-match parity).
-    platform_cols = {
-        k: F.col(k)
-        for k in [
-            "org_id", "org_name", "project_id", "project_name",
-            "application_id", "application_name", "service_name",
-            "runtime_id", "runtime_name", "workspace",
-        ]
-    }
-    tag_pairs: dict = {
-        "level": F.col("level"),
-        "request_id": F.col("request_id"),
-        "cluster_name": F.col("cluster_name"),
+    cluster = F.lit(cluster_name)
+    platform = {k: F.col(k) for k in PLATFORM_KEYS}
+    tags = {
+        "cluster_name": cluster,
         "pod_name": F.col("pod_name"),
         "pod_namespace": F.col("namespace_name"),
-        "container_id": F.col("container_id"),
-        **platform_cols,
+        "container_id": container_id,
+        **platform,
+        **dice_compat_pairs({**platform, "cluster_name": cluster}),
     }
-    # F8 dice_* compat copies (conf/ds/fluent-bit.conf:148-161)
-    tag_pairs.update(
-        dice_compat_pairs({**platform_cols, "cluster_name": F.col("cluster_name")})
-    )
-    df = df.withColumn("tags", build_map(tag_pairs))
-    df = df.withColumn(
-        "labels",
-        build_map({"monitor_log_collector": F.col("monitor_log_collector")}),
-    )
-
-    # role -> stream (stdout/stderr dichotomy)
-    df = df.withColumn(
-        "stream",
-        F.when(F.col("role").isin("tool", "system"), F.lit("stderr")).otherwise(
-            F.lit("stdout")
-        ),
+    return log_event_tail(
+        df,
+        content=F.col("content"),
+        container_id=container_id,
+        tags=tags,
+        collector=F.col("monitor_log_collector"),
+        define_tag=F.col("define_tag"),
+        router=router_fn or route,
+        passthrough=passthrough,
     )
 
-    # F12/F13 routing (export keep=true duplication; job keep=false)
-    df = (router_fn or route)(df)
 
-    # O4 LogEvent projection; __pri_* (define_tag et al) die here (F9)
-    return project_log_event(df, passthrough=passthrough)
+def log_event_tail(
+    df: DataFrame,
+    content: Column,
+    container_id: Column,
+    tags: dict[str, Column],
+    collector: Column,
+    define_tag: Column,
+    router=route,
+    passthrough: tuple[str, ...] = (),
+) -> DataFrame:
+    """The tail both plans share (SURVEY.md §3.1, §3.3 "same compat /
+    nest / route / output"): erda-info grok -> id copy -> tags/labels
+    nest -> role->stream -> route -> LogEvent projection.
+
+    ``content``, ``container_id``, ``collector`` and ``define_tag`` are
+    expressions over ``df``; ``tags`` is the plan's ordered tag pairs,
+    appended after ``level`` and ``request_id`` (map entry order is the
+    dict's — landed parquet maps and ``to_json(tags)`` keep it).
+    ``router`` has route()'s contract (df in, df + ``sink`` out) and
+    sees every other column of ``df`` (route_with_rules reads conv_id).
+    Two selects, no withColumn chain: the first projects the grok
+    struct once, the second reads it by field.
+    """
+    # P1 erda-info grok (conf/ds/fluent-bit.conf:61-67, Preserve_Key True)
+    df = df.select("*", parse.erda_info_struct(content).alias("_g"))
+    tag_pairs = {"level": F.col("_g.level"), "request_id": F.col("_g.request_id"), **tags}
+    # the columns projected below replace same-named head columns
+    out = ("_g", "content", "id", "tags", "labels", "stream",
+           "monitor_log_collector", "define_tag")
+    keep = [c for c in df.columns if c not in out]
+    df = df.select(
+        *keep,
+        content.alias("content"),
+        # id copy: container id, else '' (outerda.go:78-82)
+        F.coalesce(container_id, F.lit("")).alias("id"),
+        # F10/F11 nest: tags <- __tags_*, labels <- __tags_monitor_log_*
+        # (conf/ds/fluent-bit.conf:163-178); build_map drops '' values
+        build_map(tag_pairs).alias("tags"),
+        build_map({"monitor_log_collector": collector}).alias("labels"),
+        # role -> stream (the stdout/stderr dichotomy)
+        F.when(F.col("role").isin("tool", "system"), F.lit("stderr"))
+        .otherwise(F.lit("stdout"))
+        .alias("stream"),
+        collector.alias("monitor_log_collector"),
+        define_tag.alias("define_tag"),
+    )
+    # F12/F13 routing (export keep=true duplication; job keep=false);
+    # O4 LogEvent projection — __pri_* (define_tag et al) die here (F9)
+    return project_log_event(router(df), passthrough=passthrough)
 
 
 def sink_counts(log_events: DataFrame) -> DataFrame:

@@ -16,10 +16,11 @@ The rule, in one place, read from the frame's own ``executedPlan()``:
 a frame whose plan already contains an exchange (an ``AdaptiveSparkPlan``
 root; ``logpipe.session`` always enables AQE) never spreads, because its
 partition count is the exchange's and AQE only coalesces it when the
-data is small; any other frame spreads iff ``execute()`` — which builds
-the scan RDD without running it — has fewer partitions than
-``spark.sql.shuffle.partitions``. Deriving it runs no Spark job on any
-input (``df.rdd`` would run an adaptive plan's shuffle stages to learn
+data is small; nor does a frame that scans a bucketed table, whose
+layout a spread would break; any other frame spreads iff ``execute()``
+— which builds the scan RDD without running it — has fewer partitions
+than ``spark.sql.shuffle.partitions``. Deriving it runs no Spark job on
+any input (``df.rdd`` would run an adaptive plan's shuffle stages to learn
 a coalesced count).
 
 Call sites: ``run_pipeline`` (pinned off by ``flagship_route_counts``),
@@ -54,15 +55,28 @@ def spread_decision(df: DataFrame) -> dict:
     return {
         "input_splits": splits,
         "shuffle_partitions": n_part,
-        "spread": splits is not None and splits < n_part,
+        "spread": splits is not None and splits < n_part and not _scans_bucketed(plan),
     }
+
+
+def _scans_bucketed(plan) -> bool:
+    """True iff a file-scan leaf of ``plan`` reads a bucketed relation.
+    Its plan may drop the bucketed read (no consumer needs the layout)
+    and report file splits, but a spread would still break the layout
+    for a storage-partitioned join built on the same frame."""
+    leaves = plan.collectLeaves()
+    return any(
+        leaf.getClass().getSimpleName() == "FileSourceScanExec"
+        and leaf.relation().bucketSpec().isDefined()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+    )
 
 
 def derive_spread(df: DataFrame) -> bool:
     """True iff ``df`` is a narrow plan with fewer splits than the
     session's shuffle parallelism (the single-file bench reality;
-    False on any naturally-split production scan and on any frame that
-    already passed an exchange)."""
+    False on any naturally-split production scan, on any bucketed scan
+    and on any frame that already passed an exchange)."""
     return spread_decision(df)["spread"]
 
 

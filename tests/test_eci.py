@@ -42,6 +42,35 @@ def test_eci_pipeline(spark, transcripts, tool_meta):
     assert n_all == transcripts.filter("text is not null and text <> ''").count()
 
 
+def test_eci_rows_equal_reference(spark, transcripts, tool_meta):
+    """Field by field, unstitched: every ECI row equals the pure-Python
+    reference chain fed the record_modifier static fields as each pod's
+    platform meta and the collector as its label."""
+    from logpipe import pyref
+    from logpipe.plans.eci import ECI_STATIC_FIELDS
+
+    def key(d):
+        return (d["content"], d["sink"], d["id"], d["timestamp"],
+                d["stream"], sorted(d["tags"].items()))
+
+    tools = {r["tool"]: r["cpuset"] for r in tool_meta.collect()}
+    src = [r.asDict() for r in transcripts.collect()]
+    for collector in (None, "collector-9"):
+        meta = {k: v for k, v in ECI_STATIC_FIELDS.items() if k != "cluster_name"}
+        meta["monitor_log_collector"] = collector
+        k8s = {row["conv_id"]: meta for row in src}
+        exp = sorted(
+            (ev for row in src
+             for ev in pyref.process_row(row, k8s, tools, cluster_name="erda-eci")),
+            key=key,
+        )
+        out = run_eci_pipeline(transcripts, tool_meta, collector=collector, stitch=False)
+        got = sorted((r.asDict(recursive=True) for r in out.collect()), key=key)
+        assert len(got) == len(exp) > 0, collector
+        for g, e in zip(got, exp):
+            assert g == e, f"mismatch:\nspark={g}\npyref={e}"
+
+
 def test_eci_with_collector_duplicates_to_export(spark, transcripts, tool_meta):
     out = run_eci_pipeline(transcripts, tool_meta, collector="collector-9", stitch=False)
     counts = {r["sink"]: r["count"] for r in out.groupBy("sink").count().collect()}

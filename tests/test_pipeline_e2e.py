@@ -9,6 +9,8 @@ Checks (SURVEY.md §5 'Our strategy'):
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from logpipe import pyref
 from logpipe.plans.pipeline import run_pipeline, sink_counts
 
@@ -33,8 +35,12 @@ def test_e2e_equality(spark, transcripts, k8s_meta, tool_meta):
         "tags", "labels", "sink",
     ]
 
+    # map_keys keeps the stored entry order; collect()'s dicts do not
     got = sorted(
-        (r.asDict(recursive=True) for r in out.collect()),
+        (
+            r.asDict(recursive=True)
+            for r in out.select("*", F.map_keys("tags").alias("tag_keys")).collect()
+        ),
         key=lambda d: (d["content"], d["sink"], d["id"], d["timestamp"]),
     )
     exp = sorted(
@@ -46,6 +52,8 @@ def test_e2e_equality(spark, transcripts, k8s_meta, tool_meta):
     )
     assert len(got) == len(exp)
     for g, e in zip(got, exp):
+        # dict equality ignores entry order; pin pyref's tag order too
+        assert g.pop("tag_keys") == list(e["tags"])
         assert g == e, f"mismatch:\nspark={g}\npyref={e}"
 
 
@@ -66,8 +74,6 @@ def test_pandas_grok_parity(spark, transcripts):
     """The Arrow-vectorized grok UDF (the erda_info_vectorized gate's
     parser) extracts exactly what the pipeline's built-in struct grok
     does, row for row, on the text the pipeline feeds it."""
-    from pyspark.sql import functions as F
-
     from logpipe.operators import parse
 
     content = transcripts.filter(F.length("text") > 0).select(
@@ -86,8 +92,6 @@ def test_k8s_exclude_annotation(spark, transcripts, k8s_meta, tool_meta):
     honor_k8s_exclude=True, every row of an annotated pod is dropped —
     and exactly those rows (the diff equals a pipeline run over the
     excluded convs alone)."""
-    from pyspark.sql import functions as F
-
     excluded = [
         r["conv_id"] for r in k8s_meta.filter("k8s_exclude").select("conv_id").collect()
     ]

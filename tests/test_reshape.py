@@ -1,4 +1,4 @@
-"""Unit tests: modify/nest/lift map helpers (F6-F11) + Size accounting
+"""Unit tests: nest/lift/remove map helpers (F9-F11) + Size accounting
 (O5) + plan-quality guards (pushdown, codegen)."""
 
 from __future__ import annotations
@@ -7,24 +7,6 @@ from pyspark.sql import functions as F
 
 from logpipe.operators import reshape as R
 from logpipe.operators.project import event_size
-
-
-def test_modify_family(spark):
-    df = spark.createDataFrame(
-        [("a", None), (None, "b")], "x string, y string"
-    )
-    got = R.modify_add(df, "x", F.lit("dx"))  # add: only if absent
-    assert [r["x"] for r in got.orderBy("y").collect()] == ["a", "dx"]
-    got = R.modify_set(df, "x", F.lit("sx"))  # set: overwrite
-    assert {r["x"] for r in got.collect()} == {"sx"}
-    got = R.modify_copy(df, "x", "y")  # copy: only if dst absent
-    assert sorted(((r["x"], r["y"]) for r in got.collect()), key=str) == sorted(
-        [(None, "b"), ("a", "a")], key=str
-    )
-    got = R.modify_hard_copy(df, "x", "y")  # hard_copy: overwrite dst
-    assert sorted(((r["x"], r["y"]) for r in got.collect()), key=str) == sorted(
-        [(None, None), ("a", "a")], key=str
-    )
 
 
 def test_map_nest_lift_remove(spark):

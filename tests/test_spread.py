@@ -6,7 +6,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from conftest import count_jobs
-from logpipe.spread import derive_spread, shuffle_partitions, spread_for_compute
+from logpipe.spread import (
+    derive_spread,
+    shuffle_partitions,
+    spread_decision,
+    spread_for_compute,
+)
 
 SF = "/root/testdata/sf0.01"
 
@@ -64,6 +69,31 @@ def test_derived_spread_matches_split_rule_at_call_sites(spark):
         assert not got["materialized_many"]
     finally:
         release(*held)
+
+
+def test_bucketed_scan_never_spreads_and_runs_no_job(spark, transcripts, tmp_path):
+    """A bare scan of a bucketed table plans no bucketed read (nothing
+    downstream needs the layout), so its own plan reports file splits —
+    fewer than the shuffle parallelism here. The rule must still not
+    spread it: a round-robin exchange would break the bucket layout for
+    any storage-partitioned join built on the same frame. The leaf walk
+    runs no job."""
+    from logpipe.tableio import write_table
+
+    spark.sql("DROP TABLE IF EXISTS spread_bucketed_t")
+    try:
+        write_table(
+            transcripts,
+            str(tmp_path / "bucketed"),
+            bucket_by=(8, "conv_id"),
+            table_name="spread_bucketed_t",
+        )
+        b = spark.table("spread_bucketed_t")
+        got, jobs = count_jobs(spark, lambda: spread_decision(b), "spread-bucketed")
+        assert got["input_splits"] < got["shuffle_partitions"], got
+        assert (got["spread"], jobs) == (False, 0)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS spread_bucketed_t")
 
 
 def test_streaming_frame_passes_through(spark, transcripts, tmp_path):
