@@ -9,12 +9,14 @@ expressions.
 - host_join_path: URL join matching remote.go:164-166 exactly:
   strings.Trim both ends of BOTH host and path, join with one slash
   (table cases from remote_test.go:65-91).
-- rfc3339_to_unix_nanos: record-time parsing, RFC3339Nano -> epoch
-  nanos (helps.go:52-63, outerda.go:113). Accepts 'Z' and numeric
-  ±HH:MM offsets; unparseable inputs yield NULL (try_to_timestamp)
-  rather than killing the job under ANSI mode. Spark timestamps hold
-  micros, so nanos beyond micro precision truncate (documented
-  deviation: the reference keeps full nanos).
+- rfc3339_timestamp / rfc3339_to_unix_nanos: record-time parsing,
+  RFC3339Nano -> timestamp / epoch nanos (helps.go:52-63,
+  outerda.go:113; also the docker and CRI tail readers). Accepts 'Z'
+  and numeric ±HH:MM offsets, with or without a fraction; unparseable
+  inputs yield NULL (try_to_timestamp) rather than killing the job
+  under ANSI mode. Spark timestamps hold micros, so nanos beyond micro
+  precision truncate (documented deviation: the reference keeps full
+  nanos).
 """
 
 from __future__ import annotations
@@ -33,9 +35,15 @@ def host_join_path(host: Column, path: Column) -> Column:
     return F.concat(trim(host), F.lit("/"), trim(path))
 
 
-def rfc3339_to_unix_nanos(s: Column) -> Column:
-    ts = F.try_to_timestamp(
+def rfc3339_timestamp(s: Column) -> Column:
+    """RFC3339Nano string -> timestamp, nanos truncated to micros. The
+    fraction is optional: docker json-file and CRI drop it when the
+    nanoseconds are 0. Unparseable input yields NULL."""
+    return F.try_to_timestamp(
         F.regexp_replace(s, r"(\.\d{6})\d*", "$1"),
         F.lit("yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]XXX"),
     )
-    return F.unix_micros(ts) * F.lit(1000)
+
+
+def rfc3339_to_unix_nanos(s: Column) -> Column:
+    return F.unix_micros(rfc3339_timestamp(s)) * F.lit(1000)

@@ -88,7 +88,8 @@ class Manifest:
         """Aggregate lineage: per-sink rows/bytes across completed units."""
         sinks: dict[str, dict[str, int]] = {}
         rows_in = 0
-        for e in self.entries():
+        entries = self.entries()
+        for e in entries:
             rows_in += e.get("rows_in", 0)
             for s, m in e.get("sinks", {}).items():
                 agg = sinks.setdefault(
@@ -98,7 +99,7 @@ class Manifest:
                 agg["content_bytes"] += m.get("content_bytes", 0)
                 agg["n_files"] += m.get("n_files", 0)
                 agg["file_bytes"] += m.get("file_bytes", 0)
-        return {"rows_in": rows_in, "sinks": sinks, "units": len(self.entries())}
+        return {"rows_in": rows_in, "sinks": sinks, "units": len(entries)}
 
 
 def bucket_of(col, n_buckets: int):

@@ -148,11 +148,6 @@ def erda_info_pandas():
     return make_erda_info_udf(ERDA_INFO_RE)
 
 
-def is_firstline(text: Column) -> Column:
-    """P4/P6: True when the line starts a new (multiline) record."""
-    return text.rlike(FIRSTLINE_RE)
-
-
 def parse_cri(line: Column) -> Column:
     """P5: CRI line -> struct(time, stream, logtag, log)."""
     return F.struct(
@@ -161,19 +156,6 @@ def parse_cri(line: Column) -> Column:
         F.regexp_extract(line, _java(CRI_RE), 3).alias("logtag"),
         F.regexp_extract(line, _java(CRI_RE), 4).alias("log"),
     )
-
-
-def parse_docker_json(line: Column) -> Column:
-    """P3: docker json log line -> struct(log, stream, time).
-
-    (conf/ds/parsers.conf:12-16; Time_Key time, %Y-%m-%dT%H:%M:%S.%LZ)
-    """
-    return F.from_json(line, "log string, stream string, time string")
-
-
-def docker_time(time_str: Column) -> Column:
-    """P3 time key -> timestamp (RFC3339 millis, Z suffix)."""
-    return F.to_timestamp(time_str, "yyyy-MM-dd'T'HH:mm:ss.SSSX")
 
 
 def log_id_from_path(path: Column) -> Column:

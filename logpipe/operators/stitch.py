@@ -1,34 +1,32 @@
-"""F3 multiline stitch — stack-trace sessionization (SURVEY.md §2.3).
+"""Run collapse — F3 multiline stitch, fragment rejoin, gap sessions
+(SURVEY.md §2.1 S1/S2, §2.3 F3).
 
-Reference: the `multiline` filter (conf/eci/fluent-bit.conf:41-45) joins
-continuation lines into the preceding firstline record: a line matching
-the firstline parser starts a group, everything else appends. fluent-bit
-does this stateful-sequentially per tail-file; the Spark-first shape is
-group assignment via a running sum over (conv_id, turn_idx) order, then
-one aggregation:
+The reference joins consecutive records into one in two places: the
+`multiline` filter glues continuation lines onto the preceding
+firstline record (conf/eci/fluent-bit.conf:41-45), and the tail's
+Docker_Mode / CRI partial handling glues the fragments of one
+over-long line back together (docker-runtime.conf:17-19). fluent-bit
+does both stateful-sequentially per tail-file; the Spark-first shape
+is one run rule — a running count of group starts in (key, order)
+order — then one aggregation per run:
 
-  is_first = text rlike FIRSTLINE_RE
-  grp      = sum(is_first) over (partition by conv_id order by turn_idx)
-  group by (conv_id, grp) -> concat_ws('\\n', lines in turn order)
+  grp = sum(is_start) over (partition by key order by order)   run_index
+  group by (key, grp) -> concat_ws(sep, lines in order)        collapse_runs
 
-Leading continuation lines (no firstline yet, grp=0) form their own
-group — same as fluent-bit flushing orphan continuations.
+Every run-grouping stage calls these two: stitch_multiline (firstline
+or java grammar, sep '\\n'), sources.logfiles.fragment_join (sep ''),
+the java_multiline_stitch gate, and sessionize_by_gap (run_index only).
+Leading rows before the first start (grp=0) form their own run — same
+as fluent-bit flushing orphan continuations.
 
-Scale notes:
-- the window + groupBy both shuffle on conv_id; with a hot conv this
-  skews. The stitch itself cannot be salted across turn boundaries
-  (group assignment must see consecutive turns), but AQE skew-join /
-  skewed-shuffle splitting handles the aggregation side, and group
-  CONTENT is bounded (a stack trace is tens of lines), so only the
-  window scan is conv-serial — O(hot conv) not O(everything).
-- an `applyInPandas` variant (exact sequential semantics, Arrow
-  batches) is provided for parity testing and for grammars where the
-  group rule isn't expressible as a running sum.
+An `applyInPandas` variant (exact sequential semantics, Arrow batches)
+is kept for parity testing and for grammars where the group rule isn't
+expressible as a running sum.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -40,23 +38,37 @@ STITCHED_SCHEMA = (
 )
 
 
-def stitch_multiline(
+def run_index(
+    is_start: Column, key: str = "conv_id", order: str = "turn_idx"
+) -> Column:
+    """Running count of group starts over (key, order): the run number
+    of each row. Rows before the first start are run 0."""
+    w = (
+        Window.partitionBy(key)
+        .orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return F.sum(is_start.cast("int")).over(w)
+
+
+def collapse_runs(
     df: DataFrame,
-    firstline_re: str = FIRSTLINE_RE,
-    text_col: str = "text",
-    is_start=None,
+    is_start: Column,
+    sep: str,
+    key: str = "conv_id",
+    order: str = "turn_idx",
+    text: str = "text",
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Window-function stitcher: one row per stitched group.
+    """One row per run: (key, grp, order, text, *carry, n_lines).
 
-    Output keeps the firstline's (turn_idx, role, tool, ts) — the
-    reference record is the firstline record with `log` extended.
-    ``is_start``: optional boolean Column overriding the group-start
-    rule (default: text matches ``firstline_re``) — e.g. the java
-    grammar's NOT-a-continuation rule (java_group_start).
+    ``text`` is the run's lines joined with ``sep`` in ``order``; every
+    other column comes from the run's first row (the reference record
+    is the first record with `log` extended).
 
-    Scale note: the window and the group-by both cluster on conv_id,
-    so the operator's ONE full-payload shuffle is elided entirely by
-    storing the transcripts bucketed on conv_id (tableio.write_table
+    Scale note: the window and the group-by both cluster on ``key``,
+    so the operator moves ONE full-payload shuffle, and storing the
+    input bucketed on ``key`` elides it entirely (tableio.write_table
     bucket spec / cli --bucket-out's default column) — zero exchanges,
     no session conf needed, rows identical (pinned:
     tests/test_stitch.py::test_stitch_bucketed_transcripts_no_exchange;
@@ -68,53 +80,64 @@ def stitch_multiline(
     buckets out SORTED in this window's own order (sort_by=(conv_id,
     turn_idx), single_file_buckets=True) additionally elides the
     window SORT under tableio.SORTED_SCAN_CONFS
-    (test_sorted_bucket_elides_window_sort).
+    (test_sorted_bucket_elides_window_sort). With a hot key the stage
+    skews: the run rule cannot be salted across row boundaries (it
+    must see consecutive rows), but AQE skewed-shuffle splitting
+    handles the aggregation side and run CONTENT is bounded (a stack
+    trace is tens of lines), so only the window scan is key-serial —
+    O(hot key) not O(everything).
     """
-    if is_start is None:
-        is_start = F.col(text_col).rlike(firstline_re)
-    is_first = is_start.cast("int")
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    marked = df.withColumn("grp", F.sum(is_first).over(w))
-    ordered = F.array_sort(
-        F.collect_list(F.struct("turn_idx", text_col, "role", "tool", "ts"))
-    )
+    lines = F.array_sort(F.collect_list(F.struct(order, text, *carry)))
+    first = F.element_at("_lines", 1)
     return (
-        marked.groupBy("conv_id", "grp")
-        .agg(ordered.alias("_lines"))
+        df.withColumn("grp", run_index(is_start, key, order))
+        .groupBy(key, "grp")
+        .agg(lines.alias("_lines"))
         .select(
-            "conv_id",
+            key,
             "grp",
-            F.element_at("_lines", 1)["turn_idx"].alias("turn_idx"),
-            F.element_at("_lines", 1)["role"].alias("role"),
-            F.concat_ws("\n", F.transform("_lines", lambda x: x[text_col])).alias("text"),
-            F.element_at("_lines", 1)["tool"].alias("tool"),
-            F.element_at("_lines", 1)["ts"].alias("ts"),
+            first[order].alias(order),
+            F.concat_ws(sep, F.transform("_lines", lambda x: x[text])).alias(text),
+            *[first[c].alias(c) for c in carry],
             F.size("_lines").alias("n_lines"),
         )
     )
 
 
-def java_group_start(text_col: str = "text") -> F.Column:
+def stitch_multiline(
+    df: DataFrame,
+    firstline_re: str = FIRSTLINE_RE,
+    text_col: str = "text",
+    is_start=None,
+) -> DataFrame:
+    """F3 stitcher: one STITCHED_SCHEMA row per group (collapse_runs
+    with '\\n', keeping the firstline's turn_idx, role, tool and ts).
+
+    ``is_start``: optional boolean Column overriding the group-start
+    rule (default: text matches ``firstline_re``) — e.g. the java
+    grammar's NOT-a-continuation rule, ``is_start=java_group_start()``.
+    """
+    if is_start is None:
+        is_start = F.col(text_col).rlike(firstline_re)
+    runs = collapse_runs(df, is_start, "\n", text=text_col, carry=("role", "tool", "ts"))
+    return runs.select(
+        "conv_id", "grp", "turn_idx", "role",
+        F.col(text_col).alias("text"), "tool", "ts", "n_lines",
+    )
+
+
+def java_group_start(text_col: str = "text") -> Column:
     """Group-start rule of fluent-bit's built-in `java` multiline
     parser (conf/eci/fluent-bit.conf:45, flb_ml_parser_java.c): a line
     starts a group iff it is NOT a stack-trace continuation form
     (frame / Caused by / Suppressed / '... N more' / nested exception).
-    Null text is a start (it can't continue anything)."""
+    `at ...` / `Caused by:` lines thus glue to the preceding record
+    even when the trace's first line carries no datetime — the case
+    the datetime-firstline grammar mis-splits. Null text is a start
+    (it can't continue anything)."""
     from logpipe.operators.parse import JAVA_CONT_RE
 
     return ~F.coalesce(F.col(text_col).rlike(JAVA_CONT_RE), F.lit(False))
-
-
-def stitch_multiline_java(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """F3 with the java grammar: `at ...` / `Caused by:` lines glue to
-    the preceding record even when the trace's first line carries no
-    datetime — the case the datetime-firstline grammar mis-splits.
-    Same single-shuffle window shape as stitch_multiline."""
-    return stitch_multiline(df, text_col=text_col, is_start=java_group_start(text_col))
 
 
 def sessionize_by_gap(
@@ -128,20 +151,16 @@ def sessionize_by_gap(
     the previous turn exceeds ``gap_sec`` (the time-based complement of
     the marker-based stitcher; the reference's flush timers —
     Docker_Mode_Flush / Multiline_Flush — are the same idea applied to
-    record closure). Adds a per-key ``session_id`` (1-based) via the
-    stitcher's running-sum window shape: one shuffle on `key`.
+    record closure). Adds a per-key ``session_id`` (1-based): the
+    run_index of the gap rule, one shuffle on `key`.
     """
-    w = Window.partitionBy(key).orderBy(order_col)
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     # compare in MICROS: a seconds cast truncates and moves session
     # boundaries by up to 1s (TIMESTAMP_NTZ goes via a timestamp cast —
     # identity under the UTC session TZ, same as project_log_event)
     epoch = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    prev = F.lag(epoch).over(w)
-    is_start = F.when(
-        prev.isNull() | (epoch - prev > gap_sec * 1_000_000), 1
-    ).otherwise(0)
-    return df.withColumn("session_id", F.sum(is_start).over(wrun))
+    prev = F.lag(epoch).over(Window.partitionBy(key).orderBy(order_col))
+    is_start = prev.isNull() | (epoch - prev > gap_sec * 1_000_000)
+    return df.withColumn("session_id", run_index(is_start, key, order_col))
 
 
 def session_stats(

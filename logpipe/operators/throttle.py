@@ -23,8 +23,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-DEFAULT_RATE = 1000  # records/sec/instance (entrypoint.sh:42-44)
-
 
 def throttle_drop(
     df: DataFrame,

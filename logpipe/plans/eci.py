@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logpipe.operators import parse
-from logpipe.operators.stitch import stitch_multiline, stitch_multiline_java
+from logpipe.operators.stitch import java_group_start, stitch_multiline
 from logpipe.plans.pipeline import log_event_tail
 
 ECI_STATIC_FIELDS = {
@@ -57,7 +57,7 @@ def run_eci_pipeline(
     fluent-bit's built-in java multiline parser, the grammar the
     reference's ECI conf actually declares (conf/eci/fluent-bit.conf:45);
     they agree on traces whose first line carries a datetime and
-    diverge on datetime-less markers (see stitch.stitch_multiline_java).
+    diverge on datetime-less markers (see stitch.java_group_start).
     """
     df = transcripts.filter(F.col("text").isNotNull() & (F.length("text") > 0))
 
@@ -67,7 +67,7 @@ def run_eci_pipeline(
     # F3 multiline stitch (java traces; conf/eci/fluent-bit.conf:41-45)
     if stitch:
         if stitch_grammar == "java":
-            df = stitch_multiline_java(df)
+            df = stitch_multiline(df, is_start=java_group_start())
         elif stitch_grammar == "datetime":
             df = stitch_multiline(df)
         else:

@@ -720,7 +720,7 @@ FROM marked GROUP BY user_id, grp
 
 @register("java_multiline_stitch", _JAVA_STITCH_SQL)
 def java_multiline_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from logpipe.operators.stitch import java_group_start
+    from logpipe.operators.stitch import collapse_runs, java_group_start
 
     ev = load_events(spark, sf_dir)
     m = F.col("event_id") % 5
@@ -738,22 +738,16 @@ def java_multiline_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("\t... "), (F.col("event_id") % 7).cast("string"), F.lit(" more")))
     )
     lines = ev.select("user_id", "event_id", line.alias("line"))
-    w = Window.partitionBy("user_id").orderBy("event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    runs = collapse_runs(
+        lines, java_group_start("line"), "\n",
+        key="user_id", order="event_id", text="line",
     )
-    marked = lines.withColumn(
-        "grp", F.sum(java_group_start("line").cast("int")).over(w).cast("long")
-    )
-    return marked.groupBy("user_id", "grp").agg(
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("event_id", "line"))),
-                lambda x: x["line"],
-            ),
-        ).alias("stitched"),
-        F.min("event_id").alias("first_event"),
-        F.count(F.lit(1)).alias("n_lines"),
+    return runs.select(
+        "user_id",
+        F.col("grp").cast("long").alias("grp"),
+        F.col("line").alias("stitched"),
+        F.col("event_id").alias("first_event"),
+        F.col("n_lines").cast("long").alias("n_lines"),
     )
 
 

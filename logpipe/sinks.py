@@ -100,6 +100,15 @@ HTTP_SINKS: dict[str, tuple[str, int]] = {
     "job": ("/collect/logs/job", 100),
 }
 
+#: GzipLevel 3 (out_erda main.go:32), used for every wire payload.
+GZIP_LEVEL = 3
+#: content-hash buckets per sink/collector in the payload builders: a
+#: hot sink or collector is split over this many tasks.
+PAYLOAD_BUCKETS = 8
+#: the label whose value is an export chunk's URL (URLFromLogLabel,
+#: out_erda/sender.go:74-77).
+URL_LABEL = "monitor_log_collector"
+
 
 def _event_dicts(chunk) -> list[dict]:
     """LogEvent rows -> JSON-ready dicts, field order = the collector's
@@ -144,13 +153,7 @@ def _chunk_bodies(pdf, chunk_rows: int, gzip_level: int):
         yield start, chunk, buf.getvalue()
 
 
-def build_http_payloads(
-    log_events: DataFrame,
-    sinks: dict[str, tuple[str, int]] | None = None,
-    chunk_rows: int = 1000,
-    gzip_level: int = 3,
-    n_buckets: int = 8,
-) -> DataFrame:
+def build_http_payloads(log_events: DataFrame, chunk_rows: int = 1000) -> DataFrame:
     """O1/O2 wire payloads — the http outputs
     (conf/ds/fluent-bit.conf:207-237): per sink, chunked JSON-array
     bodies (`format json`; `json_date_key false` means NO injected date
@@ -162,17 +165,15 @@ def build_http_payloads(
 
     Same scale shape as build_export_payloads: one shuffle on
     (sink, content-hash bucket), per-task memory bounded by
-    |sink| / n_buckets, bytes deterministic across retries.
+    |sink| / PAYLOAD_BUCKETS, bytes deterministic across retries.
     """
     import pandas as pd
-
-    sinks = HTTP_SINKS if sinks is None else sinks
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
         sink = pdf.iloc[0]["sink"]
-        uri, retry_limit = sinks[sink]
-        for start, chunk, body in _chunk_bodies(pdf, chunk_rows, gzip_level):
+        uri, retry_limit = HTTP_SINKS[sink]
+        for start, chunk, body in _chunk_bodies(pdf, chunk_rows, GZIP_LEVEL):
             out.append(
                 {
                     "sink": sink,
@@ -188,22 +189,16 @@ def build_http_payloads(
             )
         return pd.DataFrame(out)
 
-    tagged = log_events.filter(F.col("sink").isin(list(sinks))).withColumn(
+    tagged = log_events.filter(F.col("sink").isin(list(HTTP_SINKS))).withColumn(
         "bucket",
-        F.pmod(F.xxhash64("id", "content"), F.lit(n_buckets)).cast("int"),
+        F.pmod(F.xxhash64("id", "content"), F.lit(PAYLOAD_BUCKETS)).cast("int"),
     )
     return tagged.groupBy("sink", "bucket").applyInPandas(
         build, schema=HTTP_PAYLOAD_SCHEMA
     )
 
 
-def build_export_payloads(
-    log_events: DataFrame,
-    chunk_rows: int = 1000,
-    gzip_level: int = 3,
-    url_label: str = "monitor_log_collector",
-    n_buckets: int = 8,
-) -> DataFrame:
+def build_export_payloads(log_events: DataFrame, chunk_rows: int = 1000) -> DataFrame:
     """O3 wire payloads (out_erda/sender.go:13-24,66-82,
     remote.go:116-141): chunk export rows per collector, serialize each
     chunk as the JSON array of LogEvents — field order = the Go struct
@@ -220,27 +215,28 @@ def build_export_payloads(
     roundtrip equality, header values, and run-to-run determinism.
 
     Scale shape: one shuffle on (collector, bucket) where bucket is a
-    content-hash mod n_buckets — a hot collector is split across
-    n_buckets tasks instead of materializing as ONE pandas frame in one
-    task, so per-task memory is bounded by |collector| / n_buckets. A
-    chunk is identified by (collector, bucket, chunk_idx); every chunk
-    still carries exactly one collector (the fluent-bit invariant) and
-    bytes stay deterministic (the bucket hash is content-derived, not
-    rand()). Size n_buckets ~ ceil(hottest-collector-bytes /
-    executor-task-budget) at the target scale.
+    content-hash mod PAYLOAD_BUCKETS — a hot collector is split across
+    PAYLOAD_BUCKETS tasks instead of materializing as ONE pandas frame
+    in one task, so per-task memory is bounded by |collector| /
+    PAYLOAD_BUCKETS. A chunk is identified by (collector, bucket,
+    chunk_idx); every chunk still carries exactly one collector (the
+    fluent-bit invariant) and bytes stay deterministic (the bucket hash
+    is content-derived, not rand()). Size PAYLOAD_BUCKETS ~
+    ceil(hottest-collector-bytes / executor-task-budget) at the target
+    scale.
     """
     import pandas as pd
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
-        for start, chunk, body in _chunk_bodies(pdf, chunk_rows, gzip_level):
+        for start, chunk, body in _chunk_bodies(pdf, chunk_rows, GZIP_LEVEL):
             first_labels = chunk.iloc[0]["labels"] or {}
             out.append(
                 {
                     "collector": chunk.iloc[0]["collector"],
                     "bucket": int(chunk.iloc[0]["bucket"]),
                     "chunk_idx": start // chunk_rows,
-                    "url": first_labels.get(url_label, ""),
+                    "url": first_labels.get(URL_LABEL, ""),
                     "content_type": "application/json; charset=UTF-8",
                     "content_encoding": "gzip",
                     "n_events": len(chunk),
@@ -253,11 +249,11 @@ def build_export_payloads(
         log_events.filter(F.col("sink") == "export")
         .withColumn(
             "collector",
-            F.coalesce(F.col("labels")[url_label], F.lit("unknown")),
+            F.coalesce(F.col("labels")[URL_LABEL], F.lit("unknown")),
         )
         .withColumn(
             "bucket",
-            F.pmod(F.xxhash64("id", "content"), F.lit(n_buckets)).cast("int"),
+            F.pmod(F.xxhash64("id", "content"), F.lit(PAYLOAD_BUCKETS)).cast("int"),
         )
     )
     return export.groupBy("collector", "bucket").applyInPandas(

@@ -32,7 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from logpipe.functions import rfc3339_timestamp
 from logpipe.operators.parse import CRI_RE, _java
+from logpipe.operators.stitch import collapse_runs
 
 KUBE_FILENAME_RE = r"([a-z0-9\-.]+)_([a-z0-9\-.]+)_(.+)-([a-f0-9]{64})\.log$"
 
@@ -133,7 +135,8 @@ def read_docker_logs(
     text = the `log` payload with its trailing newline stripped (the
     stitcher re-joins lines with '\\n', reproducing the concatenated
     docker-mode record); role = `stream`; ts = the record `time`
-    (RFC3339 nanos; Spark timestamps keep micros).
+    (RFC3339 nanos; Spark timestamps keep micros). A record whose time
+    does not parse is kept with a NULL ts, as fluent-bit keeps it.
 
     ``exclude_path``/``skip_long_lines``: see _resolve_paths/_lines
     (Exclude_Path + Skip_Long_Lines, docker-runtime.conf:4,9). Pass
@@ -152,11 +155,7 @@ def read_docker_logs(
         F.col("j.stream").alias("role"),
         F.regexp_replace(F.col("j.log"), r"\n$", "").alias("text"),
         ident["container_name"].alias("tool"),
-        F.to_timestamp(
-            # truncate RFC3339 nanos to micros for TimestampType
-            F.regexp_replace(F.col("j.time"), r"(\.\d{6})\d*", "$1"),
-            "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX",
-        ).alias("ts"),
+        rfc3339_timestamp(F.col("j.time")).alias("ts"),
         F.col("file"),
         ident["docker_id"].alias("docker_id"),
         # Docker_Mode continuation marker: docker splits >16KB app lines
@@ -178,34 +177,19 @@ def fragment_join(
     Fragments concatenate with NO separator (they are pieces of one
     line, unlike the multiline filter which joins distinct lines with
     '\\n'; fragment rejoin runs FIRST, then the firstline stitcher).
-    Group assignment is the same running-sum-over-window shape as
-    stitch_multiline: a record starts a group iff its predecessor was
-    not partial. Output keeps the first fragment's identity columns;
-    a trailing unterminated fragment is flushed as-is (the tail's
-    Docker_Mode_Flush timeout analog).
+    operators.stitch.collapse_runs folds the runs: a record starts a
+    run iff its predecessor was not partial. Output keeps the first
+    fragment's identity columns; a trailing unterminated fragment is
+    flushed as-is (the tail's Docker_Mode_Flush timeout analog).
 
     Used for Docker_Mode On (docker-runtime.conf:17-19: `log` without
     a trailing newline continues) and CRI logtag P/F (cri partial
     records continue until the next F record).
     """
-    w = Window.partitionBy("conv_id").orderBy(order_col)
-    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    is_start = (~F.coalesce(F.lag(partial_col, 1).over(w), F.lit(False))).cast("int")
-    marked = df.withColumn("_grp", F.sum(is_start).over(wrun))
-    ordered = F.array_sort(
-        F.collect_list(F.struct(order_col, "text", *carry))
-    )
-    first = F.element_at("_lines", 1)
-    return (
-        marked.groupBy("conv_id", "_grp")
-        .agg(ordered.alias("_lines"))
-        .select(
-            "conv_id",
-            first[order_col].alias(order_col),
-            F.concat_ws("", F.transform("_lines", lambda x: x["text"])).alias("text"),
-            *[first[c].alias(c) for c in carry],
-        )
-    )
+    prev = F.lag(partial_col).over(Window.partitionBy("conv_id").orderBy(order_col))
+    is_start = ~F.coalesce(prev, F.lit(False))
+    runs = collapse_runs(df, is_start, "", order=order_col, carry=carry)
+    return runs.drop("grp", "n_lines")
 
 
 def docker_mode_join(df: DataFrame, order_col: str = "turn_idx") -> DataFrame:
@@ -237,7 +221,6 @@ def read_cri_logs(
     (Exclude_Path / Skip_Long_Lines as in read_docker_logs;
     cri-runtime.conf:4,9)."""
     lines = _lines(spark, path, exclude_path, skip_long_lines)
-    t = F.regexp_extract("line", _java(CRI_RE), 1)
     return lines.select(
         (
             F.element_at(F.split("file", "/"), -1)
@@ -248,10 +231,7 @@ def read_cri_logs(
         F.regexp_extract("line", _java(CRI_RE), 2).alias("role"),
         F.regexp_extract("line", _java(CRI_RE), 4).alias("text"),
         F.lit(None).cast("string").alias("tool"),
-        F.to_timestamp(
-            F.regexp_replace(t, r"(\.\d{6})\d*", "$1"),
-            "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
-        ).alias("ts"),
+        rfc3339_timestamp(F.regexp_extract("line", _java(CRI_RE), 1)).alias("ts"),
         F.col("file"),
         F.regexp_extract("line", _java(CRI_RE), 3).alias("logtag"),
     )

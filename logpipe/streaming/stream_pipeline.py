@@ -176,7 +176,8 @@ def streaming_stitch(
     ``continuation_re``: alternative grammar — a line STARTS a group
     iff it does NOT match this regex (fluent-bit's built-in `java`
     multiline parser shape; pass parse.JAVA_CONT_RE for parity with
-    the batch stitch_multiline_java). When set, firstline_re is ignored.
+    the batch stitch_multiline(is_start=java_group_start())). When
+    set, firstline_re is ignored.
 
     Within a micro-batch, rows are ordered by turn_idx; ACROSS batches
     state carries the open group. (Late/out-of-order turns are the

@@ -109,11 +109,12 @@ def test_eci_stitch_path(spark, transcripts, tool_meta):
 def test_eci_java_grammar_option(spark, transcripts, tool_meta):
     """stitch_grammar='java' routes the ECI plan through the java
     multiline grammar (the grammar conf/eci/fluent-bit.conf:45 actually
-    declares); equals composing stitch_multiline_java manually."""
+    declares); equals composing stitch_multiline with java_group_start
+    manually."""
     import pytest
     from pyspark.sql import functions as F
 
-    from logpipe.operators.stitch import stitch_multiline_java
+    from logpipe.operators.stitch import java_group_start, stitch_multiline
     from logpipe.operators.parse import truncate_log
     from logpipe.plans.eci import run_eci_pipeline
 
@@ -121,7 +122,7 @@ def test_eci_java_grammar_option(spark, transcripts, tool_meta):
     pre = transcripts.filter(
         F.col("text").isNotNull() & (F.length("text") > 0)
     ).withColumn("text", truncate_log(F.col("text")))
-    groups = stitch_multiline_java(pre)
+    groups = stitch_multiline(pre, is_start=java_group_start())
     # collector=None -> no export copies, define_tag null -> all rows
     # land exactly one sink, so routed rows == java-stitched groups
     assert got.count() == groups.count()

@@ -1,6 +1,9 @@
 """Log-file sources vs. the reference's own fixtures
 (/root/reference/testdata/k8s — read-only; used as INPUT, the expected
-values below are computed independently in Python)."""
+values below are computed independently in Python). Without them the
+tests read the in-repo fixtures of the same shape (tests/fixtures/k8s:
+a kubelet-named docker-JSON file of 8 lines and a CRI file of 7 lines
+holding one java stack trace, RFC3339Nano times)."""
 
 from __future__ import annotations
 
@@ -16,16 +19,21 @@ from logpipe.operators.stitch import stitch_multiline
 from logpipe.sources.logfiles import read_cri_logs, read_docker_logs
 
 K8S = Path("/root/reference/testdata/k8s")
+IN_REPO_K8S = Path(__file__).parent / "fixtures" / "k8s"
 
 
 def reference_fixture(pattern: str) -> str:
-    """Path of the first reference fixture matching ``pattern``, resolved
-    when a test asks for it; skips that test when the fixtures are not
-    present (the reference-free tests in this module still run)."""
-    found = next((str(p) for p in K8S.glob(pattern)), None)
-    if found is None:
+    """Path of the first reference fixture matching ``pattern``, falling
+    back to the in-repo fixture when the reference is not present."""
+    return next(
+        str(p) for d in (K8S, IN_REPO_K8S) for p in sorted(d.glob(pattern))
+    )
+
+
+def reference_only() -> None:
+    """Skip a test that compares against the reference's literal values."""
+    if not K8S.is_dir():
         pytest.skip("reference fixtures not present")
-    return found
 
 
 def test_docker_fixture_parses(spark):
@@ -40,6 +48,15 @@ def test_docker_fixture_parses(spark):
         assert got["role"] == exp["stream"]
         assert got["ts"] is not None
     # identity parsed from the tag-encoded filename
+    # (<pod>_<namespace>_<container>-<64hex>.log)
+    stem, docker_id = Path(docker_fixture).stem.rsplit("-", 1)
+    assert len(docker_id) == 64
+    assert {(r["conv_id"], r["docker_id"]) for r in rows} == {(stem, docker_id)}
+
+
+def test_reference_fixture_identity(spark):
+    reference_only()
+    rows = read_docker_logs(spark, reference_fixture("admin-*.log")).collect()
     assert rows[0]["conv_id"] == "admin-3feb156fc4-f964fff57-rqv8q_project-387-dev_admin"
     assert rows[0]["docker_id"].endswith("963c") and len(rows[0]["docker_id"]) == 64
 
@@ -235,6 +252,29 @@ def test_cri_mode_join_rejoins_partial_records(spark, tmp_path):
         (1, "frag-one frag-two frag-end"),
     ]
     assert joined[1]["ts"].second == 1  # first fragment's timestamp
+
+
+def test_whole_second_and_bad_times_keep_the_record(spark, tmp_path):
+    """RFC3339Nano drops the fraction when the nanoseconds are 0, so a
+    whole-second time is valid runtime output and must parse; a time
+    that does not parse leaves ts NULL and the record is kept, as in
+    fluent-bit. Neither may abort the read under ANSI mode."""
+    d = tmp_path / "docker.log"
+    d.write_text(
+        '{"log": "whole\\n", "stream": "stdout", "time": "2024-01-01T00:00:00Z"}\n'
+        '{"log": "bad\\n", "stream": "stdout", "time": "yesterday"}\n'
+    )
+    c = tmp_path / "cri.log"
+    c.write_text(
+        "2024-01-01T00:00:00+00:00 stdout F whole\n"
+        "yesterday stdout F bad\n"
+    )
+    for df in (read_docker_logs(spark, str(d)), read_cri_logs(spark, str(c))):
+        got = {
+            r["text"]: r["us"]
+            for r in df.select("text", F.unix_micros("ts").alias("us")).collect()
+        }
+        assert got == {"whole": 1704067200 * 10**6, "bad": None}
 
 
 def test_ignore_older(spark, transcripts):

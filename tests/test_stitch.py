@@ -87,7 +87,7 @@ def test_java_grammar_stitches_datetime_less_trace(spark):
     datetime ('Exception in thread ...') must still anchor its frames
     and Caused-by chain — the datetime-firstline grammar mis-splits
     this (every frame line becomes its own group)."""
-    from logpipe.operators.stitch import stitch_multiline, stitch_multiline_java
+    from logpipe.operators.stitch import java_group_start, stitch_multiline
 
     rows = [
         ("c1", 1, "user", "2024-01-02 03:04:05 INFO boot", None, None),
@@ -103,7 +103,10 @@ def test_java_grammar_stitches_datetime_less_trace(spark):
               "tool string, ts timestamp")
     df = spark.createDataFrame(rows, schema)
 
-    j = {r["turn_idx"]: r for r in stitch_multiline_java(df).collect()}
+    j = {
+        r["turn_idx"]: r
+        for r in stitch_multiline(df, is_start=java_group_start()).collect()
+    }
     # three groups: boot line, the whole trace (5 lines), recovered line
     assert sorted(j) == [1, 2, 7]
     assert j[2]["n_lines"] == 5

@@ -341,7 +341,7 @@ def test_rule_engine_streams_too(spark, transcripts, k8s_meta, tool_meta, tmp_pa
 def test_streaming_stitch_java_grammar(spark, tmp_path):
     """continuation_re mode: a datetime-less exception header anchors
     its own group and its frames/Caused-by glue to it across the
-    micro-batch boundary — same grammar as stitch_multiline_java."""
+    micro-batch boundary — same grammar as the batch java_group_start."""
     from logpipe.operators.parse import JAVA_CONT_RE
     from logpipe.streaming.stream_pipeline import streaming_stitch
 
