@@ -122,11 +122,6 @@ def main(argv: list[str] | None = None) -> None:
     # flag falls back to its LOGPIPE_* env var, then to the reference
     # default (see logpipe/config.py for the mapping table)
     p.add_argument(
-        "--plan", choices=["ds", "dynamic"], default=None,
-        help="ds = typed flagship; dynamic = map-record pipeline "
-             "(env LOGPIPE_PLAN)",
-    )
-    p.add_argument(
         "--throttle-rate", type=int, default=None,
         help="F1 rate, records per (conv, second) "
              "(env LOGPIPE_THROTTLE_RATE, default 1000)",
@@ -179,7 +174,6 @@ def main(argv: list[str] | None = None) -> None:
     from logpipe.session import get_spark
 
     cfg = C.from_env(
-        plan=args.plan,
         throttle_rate=args.throttle_rate,
         throttle_retain=(
             None if args.throttle_retain is None else args.throttle_retain == "true"
@@ -188,10 +182,7 @@ def main(argv: list[str] | None = None) -> None:
         cluster_name=args.cluster_name,
     )
 
-    if cfg.plan == "dynamic":
-        from logpipe.plans.dynamic import run_dynamic_pipeline as base_fn
-    else:
-        from logpipe.plans.pipeline import run_pipeline as base_fn
+    from logpipe.plans.pipeline import run_pipeline
 
     def pipeline_fn(transcripts, k8s, tools, **kw):
         df = transcripts
@@ -201,10 +192,9 @@ def main(argv: list[str] | None = None) -> None:
             from logpipe.operators.throttle import throttle_drop
 
             df = throttle_drop(df, rate=cfg.throttle_rate, bucket=cfg.throttle_bucket)
-        # both plans accept cluster_name (DICE_CLUSTER_NAME applies
-        # regardless of which conf is selected — entrypoint.sh templating)
+        # DICE_CLUSTER_NAME templating (entrypoint.sh)
         kw.setdefault("cluster_name", cfg.cluster_name)
-        return base_fn(df, k8s, tools, **kw)
+        return run_pipeline(df, k8s, tools, **kw)
 
     spark = get_spark(
         app_name="logpipe-cli", master=args.master, extra_conf=extra_conf or None
@@ -328,7 +318,7 @@ def main(argv: list[str] | None = None) -> None:
         x is not None
         for x in (args.throttle_rate, args.throttle_retain, args.throttle_bucket)
     ) or any(
-        k in _os.environ
+        _os.environ.get(k, "").strip()  # empty = unset, as in config.from_env
         for k in (
             "LOGPIPE_THROTTLE_RATE",
             "LOGPIPE_THROTTLE_RETAIN",

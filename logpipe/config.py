@@ -6,7 +6,8 @@ cluster identity — so operators tune the pipeline without editing
 conf. The Spark job exposes the same knobs: every `LOGPIPE_*` env var
 below mirrors one `FLUENTBIT_*` / deploy var, with the reference's
 defaults, and the CLI flags override env (flag > env > default —
-the same precedence the entrypoint's `if [ -z ... ]` blocks encode).
+the same precedence the entrypoint's `if [ -z ... ]` blocks encode,
+so an empty or whitespace-only variable counts as unset).
 
 | env var                  | reference var / default              |
 |--------------------------|--------------------------------------|
@@ -16,7 +17,6 @@ the same precedence the entrypoint's `if [ -z ... ]` blocks encode).
 |                          | (comma-separated globs; default      |
 |                          | DEFAULT_EXCLUDE_PATHS below)         |
 | LOGPIPE_CLUSTER_NAME     | DICE_CLUSTER_NAME ('erda-cluster')   |
-| LOGPIPE_PLAN             | CONFIG_FILE select (ds)              |
 | LOGPIPE_THROTTLE_BUCKET  | throttle Interval/Window             |
 |                          | (conf/ds/fluent-bit.conf:18-19; 'second') |
 """
@@ -54,15 +54,12 @@ class PipelineConfig:
     throttle_bucket: str = "second"    # conf/ds/fluent-bit.conf:18-19
     exclude_path: tuple[str, ...] = DEFAULT_EXCLUDE_PATHS  # entrypoint.sh:19-21
     cluster_name: str = "erda-cluster"
-    plan: str = "ds"                   # ds | dynamic (CONFIG_FILE select)
 
     def __post_init__(self):
         if self.throttle_rate < 1:
             raise ValueError(
                 f"throttle_rate must be >= 1, got {self.throttle_rate}"
             )
-        if self.plan not in ("ds", "dynamic"):
-            raise ValueError(f"plan must be ds|dynamic, got {self.plan!r}")
         if self.throttle_bucket not in ("second", "minute", "hour", "day"):
             raise ValueError(
                 f"throttle_bucket must be second|minute|hour|day, "
@@ -75,30 +72,39 @@ class PipelineConfig:
             )
 
 
+def _parse_int(v: str, name: str) -> int:
+    try:
+        return int(v)
+    except ValueError:
+        raise ValueError(f"{name}: expected an integer, got {v!r}") from None
+
+
+def _parse_globs(v: str, name: str) -> tuple[str, ...] | None:
+    # a list of blanks (" , ") names no glob: unset, not "exclude nothing"
+    return tuple(g.strip() for g in v.split(",") if g.strip()) or None
+
+
+_ENV_PARSERS = {
+    "throttle_rate": _parse_int,
+    "throttle_retain": _parse_bool,
+    "throttle_bucket": lambda v, name: v,
+    "exclude_path": _parse_globs,
+    "cluster_name": lambda v, name: v,
+}
+
+
 def from_env(env: dict | None = None, **overrides) -> PipelineConfig:
     """Resolve config: explicit overrides (CLI flags; None = unset)
-    beat env vars beat the reference's defaults."""
+    beat env vars (LOGPIPE_<FIELD>) beat the reference's defaults. An
+    empty or whitespace-only env var is unset, like the entrypoint's
+    `-z` test."""
     env = os.environ if env is None else env
-    base = PipelineConfig()
-    vals = {
-        "throttle_rate": int(env.get("LOGPIPE_THROTTLE_RATE", base.throttle_rate)),
-        "throttle_retain": (
-            _parse_bool(env["LOGPIPE_THROTTLE_RETAIN"], "LOGPIPE_THROTTLE_RETAIN")
-            if "LOGPIPE_THROTTLE_RETAIN" in env
-            else base.throttle_retain
-        ),
-        "throttle_bucket": env.get("LOGPIPE_THROTTLE_BUCKET", base.throttle_bucket),
-        "exclude_path": (
-            tuple(
-                g.strip()
-                for g in env["LOGPIPE_EXCLUDE_PATH"].split(",")
-                if g.strip()
-            )
-            if "LOGPIPE_EXCLUDE_PATH" in env
-            else base.exclude_path
-        ),
-        "cluster_name": env.get("LOGPIPE_CLUSTER_NAME", base.cluster_name),
-        "plan": env.get("LOGPIPE_PLAN", base.plan),
-    }
+    vals = {}
+    for field, parse in _ENV_PARSERS.items():
+        name = f"LOGPIPE_{field.upper()}"
+        raw = env.get(name, "")
+        value = parse(raw, name) if raw.strip() else None
+        if value is not None:
+            vals[field] = value
     vals.update({k: v for k, v in overrides.items() if v is not None})
     return PipelineConfig(**vals)

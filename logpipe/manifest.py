@@ -186,8 +186,8 @@ def run_resumable(
     ``max_buckets`` limits how many incomplete buckets to process this
     invocation (used by tests to simulate a mid-job crash).
     ``pipeline_fn``: alternative plan with run_pipeline's signature
-    (e.g. plans.dynamic.run_dynamic_pipeline); default = the typed
-    flagship.
+    (e.g. the CLI's wrapper that applies throttle-drop and the cluster
+    name); default = the typed flagship.
 
     Single-writer: an exclusive `_lease` file is taken for the wave;
     a concurrent invocation raises ConcurrentWaveError unless the

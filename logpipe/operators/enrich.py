@@ -16,14 +16,23 @@ changing dimensions:
 At 100TB these joins never shuffle the fact table: broadcast() pins the
 build side, and AQE would pick BHJ anyway under the threshold. Row
 count is invariant (left joins on unique dim keys — enforced by tests).
+
+Two more kubernetes-filter options act on a record map<string,string>
+rather than on the join: Merge_Log (``merge_log``) and
+K8S-Logging.Parser (``annotation_parse``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from logpipe.operators.parse import container_id_from_cpuset
+from logpipe.operators.parse import (
+    container_id_from_cpuset,
+    erda_info_struct,
+    parse_cri,
+)
+from logpipe.operators.reshape import build_map
 
 
 def enrich_k8s(df: DataFrame, k8s_meta: DataFrame, use_broadcast: bool = True) -> DataFrame:
@@ -39,6 +48,55 @@ def enrich_k8s(df: DataFrame, k8s_meta: DataFrame, use_broadcast: bool = True) -
     """
     dim = F.broadcast(k8s_meta) if use_broadcast else k8s_meta
     return df.join(dim, on="conv_id", how="left")
+
+
+def merge_log(rec: Column) -> Column:
+    """F2 Merge_Log On + Merge_Log_Key log_processed
+    (conf/ds/fluent-bit.conf:52-53): when the record's ``log`` body
+    parses as a JSON object, its keys merge into the record under
+    ``log_processed_<k>`` (the flattened form of fluent-bit nesting the
+    parsed map under Merge_Log_Key). A non-JSON / non-object body
+    leaves the record untouched (from_json yields NULL for both).
+
+    Scalar JSON values arrive stringified ("87" for 87) — same as
+    fluent-bit re-encoding msgpack scalars.
+    """
+    parsed = F.from_json(rec.getItem("log"), "map<string,string>")
+    lifted = F.transform_keys(
+        parsed, lambda k, _: F.concat(F.lit("log_processed_"), k)
+    )
+    return F.when(parsed.isNotNull(), F.map_concat(rec, lifted)).otherwise(rec)
+
+
+def annotation_parse(rec: Column, parser: Column) -> Column:
+    """F2 K8S-Logging.Parser (conf/ds/fluent-bit.conf:54): a pod can
+    name its own parser via the fluentbit.io/parser annotation; the
+    kubernetes filter applies it to the log body and merges the
+    extracted fields into the record (parsed_* here — the flattened
+    root-merge with Reserve_Data semantics). Unknown/absent annotation
+    leaves the record untouched; no-match extractions are empty and
+    build_map drops them (fluent-bit no-keys-on-no-match parity).
+
+    Registered parsers mirror conf/ds/parsers.conf: erda-info and cri.
+    """
+    log = rec.getItem("log")
+    erda = erda_info_struct(log)
+    cri = parse_cri(log)
+    m_erda = build_map(
+        {"parsed_level": erda["level"], "parsed_request_id": erda["request_id"]}
+    )
+    m_cri = build_map(
+        {
+            "parsed_stream": cri["stream"],
+            "parsed_logtag": cri["logtag"],
+            "parsed_log": cri["log"],
+        }
+    )
+    return (
+        F.when(parser == "erda-info", F.map_concat(rec, m_erda))
+        .when(parser == "cri", F.map_concat(rec, m_cri))
+        .otherwise(rec)
+    )
 
 
 def enrich_tool(df: DataFrame, tool_meta: DataFrame, use_broadcast: bool = True) -> DataFrame:

@@ -11,13 +11,13 @@ plans.pipeline.log_event_tail (and the heads that feed it):
   rename                -> alias in one select          (F7)
   copy (if absent)      -> coalesce(dst, src)           (F8)
   hard_copy             -> src                          (F8)
-  remove/remove_wildcard-> drop / map_filter            (F9)
-  nest lift             -> select('k8s.*') / map_concat (F10)
+  remove/remove_wildcard-> never projected              (F9)
+  nest lift             -> the k8s dim joins flat       (F10)
   nest nest             -> map construction             (F11)
 
 All of this stays inside one whole-stage-codegen span. This module
-keeps the map-side helpers: the presence test, the nest map builder,
-the dice_* compat pairs and the dynamic plan's lift/nest/remove.
+keeps the map-side helpers: the presence test, the nest map builder
+and the dice_* compat pairs.
 """
 
 from __future__ import annotations
@@ -59,25 +59,6 @@ def build_map(pairs: dict[str, Column]) -> Column:
             ).otherwise(empty)
         )
     return F.map_concat(*parts)
-
-
-def lift_prefixed(m: Column, prefix: str) -> Column:
-    """F10 `nest lift` with add_prefix: rewrite map keys with a prefix
-    (e.g. kubernetes -> k8s_*, conf/ds/fluent-bit.conf:69-75)."""
-    return F.transform_keys(m, lambda k, _: F.concat(F.lit(prefix), k))
-
-
-def nest_wildcard(m: Column, prefix: str) -> Column:
-    """F11 `nest` with remove_prefix: select keys by prefix into a new
-    map, stripping the prefix (conf/ds/fluent-bit.conf:163-178)."""
-    picked = F.map_filter(m, lambda k, _: k.startswith(prefix))
-    return F.transform_keys(picked, lambda k, _: F.substring(k, len(prefix) + 1, 1 << 20))
-
-
-def remove_wildcard(m: Column, prefix: str) -> Column:
-    """F9 `remove_wildcard` over a map column
-    (e.g. __pri_*, conf/ds/fluent-bit.conf:202-205)."""
-    return F.map_filter(m, lambda k, _: ~k.startswith(prefix))
 
 
 def dice_compat_pairs(cols: dict[str, Column]) -> dict[str, Column]:

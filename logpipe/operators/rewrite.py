@@ -197,9 +197,9 @@ def _final_tags_expr(
     columns (one per rule regex / stage glob) — the expression here is
     pure boolean algebra over them, so referencing a rule's condition
     several times (fire, first-match mask, consumed) never duplicates
-    the underlying accessor expression (which in the dynamic map plan
-    is an enormous tree; inlining it per reference blew the driver heap
-    at plan time)."""
+    the underlying accessor expression: Catalyst does not inline a
+    non-cheap expression that is referenced more than once, so each
+    accessor is evaluated once per row."""
     if depth < 0:  # _reentry_rounds bounds recursion; this is a backstop
         raise RuntimeError("rewrite_tag: re-emission recursion exceeded bound")
     alive: Column = F.lit(True)
@@ -261,10 +261,8 @@ def apply_rewrite_tags(
     Match test ONCE as a boolean column; the finals expression is
     boolean algebra over those. This matters beyond tidiness: Catalyst's
     CollapseProject declines to inline non-cheap expressions referenced
-    more than once, so upstream plans whose accessor columns are huge
-    expression trees (the dynamic map-record pipeline) are evaluated
-    once per row instead of once per reference — without the split, the
-    inlined tree grew multiplicatively and planning OOMed the driver.
+    more than once, so an accessor column is evaluated once per row
+    instead of once per reference.
     """
     rounds = _reentry_rounds(stages)  # also rejects cyclic configs
 
@@ -296,11 +294,9 @@ def apply_rewrite_tags(
         {k: F.col(v) for k, v in match_cols.items()},
     )
     # withColumn + explode + drop, NOT select(explode, *others): the
-    # select form asked the optimizer to rebuild every passthrough
-    # column inside the Generate's child projection, which on plans
-    # whose columns are deep expression trees (the dynamic map-record
-    # pipeline) exploded optimization memory; this shape is the same
-    # one operators.route uses and plans in constant space
+    # select form asks the optimizer to rebuild every passthrough
+    # column inside the Generate's child projection; this shape is the
+    # same one operators.route uses
     helper = list(cond_cols.values()) + list(match_cols.values())
     return (
         staged.withColumn("_rw_final_tag", F.explode(finals))

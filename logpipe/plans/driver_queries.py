@@ -28,7 +28,7 @@ Numeric-parity rules used throughout (Spark double math vs DuckDB):
 - hashes -> md5 only (bit-identical in Spark and DuckDB).
 
 EAGER GATES — construction is NOT side-effect free for every entry:
-`flagship_rules_route_counts` (runs four pipelines + parity asserts,
+`flagship_rules_route_counts` (runs three pipelines + parity asserts,
 returns collected rows), `streaming_route_counts` (runs a Structured
 Streaming query against a scratch dir), `curated_corpus_v5` (the
 span gate materializes eagerly and raises on vacuous branches), and

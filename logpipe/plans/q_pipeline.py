@@ -76,13 +76,7 @@ def flagship_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Config-driven rewrite_tag engine (operators/rewrite.py): the flagship
 # router re-DECLARED as the reference's conf text (fluent-bit.conf:181-193)
 # and run through the generic cascade — must hit the SAME oracle as the
-# hardcoded route(). The DYNAMIC-map pipeline's registry slot
-# (plans/dynamic.py — the reference's mutable-record data model) was
-# folded here in round 5 (it was the 4th gate on one oracle): its
-# aggregate is computed in the same run and asserted row-identical
-# before the rules aggregate is returned, the same fold pattern as the
-# hardcoded router / ECI identity path. pytest (test_dynamic.py) still
-# proves dynamic==typed row-for-row pre-aggregation.
+# hardcoded route().
 def _per_sink_agg(out: DataFrame) -> DataFrame:
     return out.groupBy("sink").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -92,9 +86,9 @@ def _per_sink_agg(out: DataFrame) -> DataFrame:
 
 def flagship_rules_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The rules-router flagship aggregate as a lazy frame — the plan
-    surface for PLANS.md (the registered gate below collects it for the
-    in-run dynamic-parity assert, so ITS returned frame is a local
-    relation with no pipeline plan left to inspect)."""
+    surface for PLANS.md (the registered gate below collects it before
+    its in-run K8S-Logging.Exclude assert, so ITS returned frame is a
+    local relation with no pipeline plan left to inspect)."""
     from logpipe.operators.rewrite import route_with_rules
 
     ev = load_events(spark, sf_dir)
@@ -108,8 +102,6 @@ def flagship_rules_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("flagship_rules_route_counts", _FLAGSHIP_SQL)
 def flagship_rules_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from logpipe.plans.dynamic import run_dynamic_pipeline
-
     def rows(agg: DataFrame) -> list:
         return sorted(
             (r["sink"], r["n_rows"], r["content_bytes"]) for r in agg.collect()
@@ -117,19 +109,6 @@ def flagship_rules_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_events(spark, sf_dir)
     rules = rows(flagship_rules_frame(spark, sf_dir))
-    dynamic = rows(
-        _per_sink_agg(
-            run_dynamic_pipeline(
-                events_as_transcripts(ev), events_k8s_meta(ev), events_tool_meta(ev)
-            )
-        )
-    )
-    # not a bare assert: this parity check IS the folded dynamic-plan
-    # gate and must survive python -O
-    if rules != dynamic:
-        raise AssertionError(
-            f"dynamic-map pipeline diverged from rules pipeline: {dynamic} != {rules}"
-        )
     # folded K8S-Logging.Exclude gate (round 6 — its registry slot went
     # to dup_span_trim): the pipeline's JOIN-based exclusion (annotated
     # pods dropped after the enrich join, honor_k8s_exclude=True) must
@@ -160,7 +139,7 @@ def flagship_rules_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k8s-exclude parity is vacuous: exclusion dropped no rows"
         )
     # return the already-collected rows so the driver's collect doesn't
-    # re-run the cascade a third time
+    # re-run the cascade
     return spark.createDataFrame(
         rules, "sink string, n_rows bigint, content_bytes bigint"
     )
@@ -305,8 +284,8 @@ def merge_log_processed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (conf/ds/fluent-bit.conf:52-53): JSON-object log bodies merge into
     the record as log_processed_* keys; non-JSON bodies (every 5th
     event here gets a 'plain ' prefix) leave the record untouched."""
+    from logpipe.operators.enrich import merge_log
     from logpipe.operators.reshape import build_map
-    from logpipe.plans.dynamic import merge_log
 
     ev = load_events(spark, sf_dir)
     line = F.when(F.col("event_id") % 5 != 0, F.col("props")).otherwise(
@@ -559,8 +538,8 @@ def k8s_parser_annotation(spark: SparkSession, sf_dir: str) -> DataFrame:
     annotation_parse; extracted keys merge as parsed_* map keys.
     Lines are built cri-shaped for cri-annotated pods, erda-shaped
     otherwise, so both parser branches extract real values."""
+    from logpipe.operators.enrich import annotation_parse
     from logpipe.operators.reshape import build_map
-    from logpipe.plans.dynamic import annotation_parse
 
     ev = load_events(spark, sf_dir)
     dim = events_k8s_meta(ev).select("conv_id", "k8s_parser")

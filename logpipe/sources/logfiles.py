@@ -213,20 +213,15 @@ def cri_mode_join(df: DataFrame, order_col: str = "turn_idx") -> DataFrame:
 def read_cri_logs(
     spark: SparkSession,
     path: str,
-    conv_from_file: bool = True,
     exclude_path: tuple[str, ...] = (),
     skip_long_lines: int | None = None,
 ) -> DataFrame:
     """CRI-runtime tail: `time stream logtag log` lines -> transcripts
     (Exclude_Path / Skip_Long_Lines as in read_docker_logs;
-    cri-runtime.conf:4,9)."""
+    cri-runtime.conf:4,9). conv_id is the file's base name."""
     lines = _lines(spark, path, exclude_path, skip_long_lines)
     return lines.select(
-        (
-            F.element_at(F.split("file", "/"), -1)
-            if conv_from_file
-            else F.lit("cri")
-        ).alias("conv_id"),
+        F.element_at(F.split("file", "/"), -1).alias("conv_id"),
         F.col("line_no").cast("int").alias("turn_idx"),
         F.regexp_extract("line", _java(CRI_RE), 2).alias("role"),
         F.regexp_extract("line", _java(CRI_RE), 4).alias("text"),

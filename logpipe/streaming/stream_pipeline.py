@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from logpipe import schema as S
+from logpipe.operators.throttle import pacing_options
 from logpipe.plans.pipeline import run_pipeline
 from logpipe.sinks import write_sinks
 
@@ -32,7 +33,7 @@ def read_transcript_stream(
 ) -> DataFrame:
     r = spark.readStream.schema(S.TRANSCRIPT)
     if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
+        r = r.options(**pacing_options(max_files_per_trigger))
     return r.parquet(path)
 
 
@@ -48,7 +49,7 @@ def start_stream_pipeline(
 ):
     """Run the flagship DAG incrementally; returns the StreamingQuery.
     ``pipeline_fn``: alternative stateless plan with run_pipeline's
-    signature (e.g. plans.dynamic.run_dynamic_pipeline)."""
+    signature (e.g. run_pipeline with a rules router bound)."""
     stream = read_transcript_stream(spark, input_path, max_files_per_trigger)
     routed = (pipeline_fn or run_pipeline)(stream, k8s_meta, tool_meta)
 

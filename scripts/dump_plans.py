@@ -152,9 +152,9 @@ QUERIES = [
         "nation/region stay explicit broadcasts.",
     ),
     (
-        # the registered gate collects in-run (dynamic-parity fold) and
-        # returns a local relation, so the pipeline plan is snapshotted
-        # from the lazy frame it collects
+        # the registered gate collects in-run (K8S-Logging.Exclude fold)
+        # and returns a local relation, so the pipeline plan is
+        # snapshotted from the lazy frame it collects
         "flagship_rules_frame",
         "the conf-declared rewrite_tag cascade must compile to the SAME "
         "plan shape as the hardcoded router: one scan, broadcast joins, "
@@ -162,7 +162,7 @@ QUERIES = [
         "formulation re-scans the input per re-injection round), no "
         "Exchange before the per-sink aggregate. (This is the lazy "
         "frame the registered flagship_rules_route_counts gate "
-        "collects for its in-run dynamic-parity assert.)",
+        "collects before its in-run K8S-Logging.Exclude assert.)",
     ),
     (
         "benchmark_contamination",

@@ -15,35 +15,48 @@ def test_defaults_match_entrypoint():
     assert c.throttle_retain is True        # entrypoint.sh:45-47
     assert c.exclude_path == DEFAULT_EXCLUDE_PATHS  # entrypoint.sh:19-21
     assert "/var/log/containers/*fluent-bit*.log" in c.exclude_path
-    assert c.plan == "ds"
     # comma-separated env list, like FLUENTBIT_INPUT_TAIL_EXCLUDE_PATH
     c2 = from_env(env={"LOGPIPE_EXCLUDE_PATH": "*a*.log, *b*.log"})
     assert c2.exclude_path == ("*a*.log", "*b*.log")
+    # the entrypoint's `[ -z ... ]` is true for an empty value too: an
+    # empty/blank variable falls back to the default, it does not turn
+    # Exclude_Path off or drop the cluster tag
+    for blank in ("", "  ", " , "):
+        c3 = from_env(env={"LOGPIPE_EXCLUDE_PATH": blank})
+        assert c3.exclude_path == DEFAULT_EXCLUDE_PATHS, blank
+    for blank in ("", "  "):
+        c4 = from_env(env={
+            "LOGPIPE_CLUSTER_NAME": blank,
+            "LOGPIPE_THROTTLE_RATE": blank,
+            "LOGPIPE_THROTTLE_RETAIN": blank,
+            "LOGPIPE_THROTTLE_BUCKET": blank,
+        })
+        assert c4 == c, blank
 
 
 def test_env_then_override_precedence():
     env = {
         "LOGPIPE_THROTTLE_RATE": "50",
         "LOGPIPE_THROTTLE_RETAIN": "false",
-        "LOGPIPE_PLAN": "dynamic",
         "LOGPIPE_CLUSTER_NAME": "edge-1",
     }
     c = from_env(env=env)
-    assert (c.throttle_rate, c.throttle_retain, c.plan, c.cluster_name) == (
-        50, False, "dynamic", "edge-1",
+    assert (c.throttle_rate, c.throttle_retain, c.cluster_name) == (
+        50, False, "edge-1",
     )
     # explicit (CLI) overrides beat env; None means "not given"
-    c2 = from_env(env=env, throttle_rate=7, plan=None)
-    assert (c2.throttle_rate, c2.plan) == (7, "dynamic")
+    c2 = from_env(env=env, throttle_rate=7, cluster_name=None)
+    assert (c2.throttle_rate, c2.cluster_name) == (7, "edge-1")
 
 
 def test_validation():
     with pytest.raises(ValueError, match="throttle_rate"):
         PipelineConfig(throttle_rate=0)
-    with pytest.raises(ValueError, match="plan"):
-        PipelineConfig(plan="nope")
     with pytest.raises(ValueError, match="boolean"):
         from_env(env={"LOGPIPE_THROTTLE_RETAIN": "maybe"})
+    # a non-integer rate names the variable, like the boolean parse
+    with pytest.raises(ValueError, match="LOGPIPE_THROTTLE_RATE"):
+        from_env(env={"LOGPIPE_THROTTLE_RATE": "abc"})
 
 
 def test_cli_throttle_drop_wiring(spark, tmp_path, monkeypatch):
@@ -281,11 +294,10 @@ def test_cli_sort_cols_and_conf_passthrough(spark, tmp_path, monkeypatch):
         spark.sql("DROP TABLE IF EXISTS cli_sorted_t")
 
 
-def test_cli_cluster_name_applies_to_dynamic_plan(spark, tmp_path, monkeypatch):
-    """--cluster-name must reach BOTH plans (the reference's
-    DICE_CLUSTER_NAME applies regardless of which conf is selected);
-    a prior version forwarded it only when plan=ds, so dynamic-plan
-    output silently carried the default tag."""
+def test_cli_cluster_name_reaches_output_tags(spark, tmp_path, monkeypatch):
+    """--cluster-name reaches every landed row's cluster_name tag (the
+    reference's DICE_CLUSTER_NAME templating), through the CLI's
+    pipeline_fn wrapper rather than the run_pipeline default."""
     from logpipe import cli
 
     monkeypatch.setattr("logpipe.session.get_spark", lambda **kw: spark)
@@ -296,7 +308,7 @@ def test_cli_cluster_name_applies_to_dynamic_plan(spark, tmp_path, monkeypatch):
 
     with redirect_stdout(io.StringIO()):
         cli.main(
-            ["--synth", "500", "--buckets", "1", "--plan", "dynamic",
+            ["--synth", "500", "--buckets", "1",
              "--cluster-name", "cli-test-cluster",
              "--out", str(tmp_path / "out"), "--manifest", str(tmp_path / "mf")]
         )

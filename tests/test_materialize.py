@@ -144,38 +144,31 @@ def test_result_release_hooks_free_internal_checkpoints(spark, docs):
         release(out)  # idempotent, including the chained hook
 
 
-def test_iterative_clustering_reliable_mode(spark, docs):
-    """The weakest helper path — reliable checkpoints inside an
-    ITERATIVE operator (per-round label tables, convergence counts,
-    release() deleting dead rounds' checkpoint files mid-query) — must
-    produce the identical clustering. This is the cluster-deployment
-    configuration the mode knob exists for."""
+@pytest.fixture(scope="module")
+def local_clusters(spark, docs):
     from logpipe.traindata.dedup import near_dup_clusters
 
-    local = _rows(near_dup_clusters(docs, n=2, k=32, bands=8, threshold=0.3))
-    spark.conf.set(MODE_CONF, "reliable")
-    try:
-        rel = _rows(near_dup_clusters(docs, n=2, k=32, bands=8, threshold=0.3))
-    finally:
-        spark.conf.unset(MODE_CONF)
-    assert rel == local
+    return _rows(near_dup_clusters(docs, n=2, k=32, bands=8, threshold=0.3))
 
 
-def test_iterative_clustering_persist_mode_lineage_cut(spark, docs):
-    """persist keeps the logical plan, so the per-round label tables
-    would double the plan every iteration; the loop sites pass
-    lineage_cut=True, which swaps in a local checkpoint there. The
-    clustering must be identical and the final plan a checkpoint leaf
-    (NOT an InMemoryRelation over an ever-growing tree)."""
+@pytest.mark.parametrize("mode", ["reliable", "persist"])
+def test_iterative_clustering_across_modes(spark, docs, local_clusters, mode):
+    """An ITERATIVE operator (per-round label tables, convergence
+    counts, release() of dead rounds mid-query) gives the identical
+    clustering in every mode. reliable is the cluster-deployment
+    configuration the mode knob exists for: its release() deletes dead
+    rounds' checkpoint files. persist keeps the logical plan, so the
+    per-round label tables would double the plan every iteration; the
+    loop sites pass lineage_cut=True, which swaps in a local checkpoint
+    there."""
     from logpipe.traindata.dedup import near_dup_clusters
 
-    local = _rows(near_dup_clusters(docs, n=2, k=32, bands=8, threshold=0.3))
-    spark.conf.set(MODE_CONF, "persist")
+    spark.conf.set(MODE_CONF, mode)
     try:
-        out = near_dup_clusters(docs, n=2, k=32, bands=8, threshold=0.3)
-        assert _rows(out) == local
+        got = _rows(near_dup_clusters(docs, n=2, k=32, bands=8, threshold=0.3))
     finally:
         spark.conf.unset(MODE_CONF)
+    assert got == local_clusters
 
 
 def test_reliable_release_deletes_checkpoint_files(spark):

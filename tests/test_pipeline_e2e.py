@@ -114,6 +114,34 @@ def test_k8s_exclude_annotation(spark, transcripts, k8s_meta, tool_meta):
     assert base.count() == run_pipeline(transcripts, k8s_meta, tool_meta).count()
 
 
+def test_merge_log_json_object(spark):
+    """F2 Merge_Log + Merge_Log_Key (conf/ds/fluent-bit.conf:52-53):
+    JSON-object bodies merge as log_processed_*; scalars stringify;
+    non-JSON and non-object JSON leave the record untouched."""
+    from logpipe.operators.enrich import merge_log
+    from logpipe.operators.reshape import build_map
+
+    df = spark.createDataFrame(
+        [
+            ("a", '{"k": "v", "n": 3}'),
+            ("b", "not json at all"),
+            ("c", "[1, 2]"),
+            ("d", "87"),
+        ],
+        "id string, log string",
+    )
+    rec = build_map({"log": F.col("log")})
+    m = {
+        r["id"]: r["rec"]
+        for r in df.select("id", merge_log(rec).alias("rec")).collect()
+    }
+    assert m["a"]["log_processed_k"] == "v"
+    assert m["a"]["log_processed_n"] == "3"
+    assert m["a"]["log"] == '{"k": "v", "n": 3}'  # Preserve the raw body
+    for rid in ("b", "c", "d"):
+        assert set(m[rid].keys()) == {"log"}
+
+
 def test_broadcast_guard_oversized_dim(spark, transcripts, k8s_meta, tool_meta):
     """broadcast_dims=False drops the hard hint so an oversized dim
     (300k rows here — past any sane autoBroadcastJoinThreshold at real

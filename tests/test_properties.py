@@ -168,7 +168,7 @@ def test_merge_log_matches_python_model(spark, bodies):
     a JSON object; scalars stringify like Spark's map<string,string>
     coercion (ints/bools/strings here)."""
     from logpipe.operators.reshape import build_map
-    from logpipe.plans.dynamic import merge_log
+    from logpipe.operators.enrich import merge_log
 
     lines = [
         json.dumps(b) if isinstance(b, (dict, list)) else b for b in bodies

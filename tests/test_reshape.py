@@ -1,5 +1,5 @@
-"""Unit tests: nest/lift/remove map helpers (F9-F11) + Size accounting
-(O5) + plan-quality guards (pushdown, codegen)."""
+"""Unit tests: the nest map builder (F11) + Size accounting (O5) +
+plan-quality guards (pushdown, codegen)."""
 
 from __future__ import annotations
 
@@ -10,24 +10,8 @@ from logpipe.operators.project import event_size
 
 
 def test_map_nest_lift_remove(spark):
-    df = spark.createDataFrame([(1,)], "i int").select(
-        F.create_map(
-            F.lit("__tags_a"), F.lit("1"),
-            F.lit("__tags_monitor_log_collector"), F.lit("c1"),
-            F.lit("__pri_secret"), F.lit("x"),
-            F.lit("other"), F.lit("o"),
-        ).alias("m")
-    )
-    # F11 nest: pick __tags_*, strip prefix
-    nested = df.select(R.nest_wildcard(F.col("m"), "__tags_").alias("t")).first()["t"]
-    assert nested == {"a": "1", "monitor_log_collector": "c1"}
-    # F9 remove_wildcard: drop __pri_*
-    cleaned = df.select(R.remove_wildcard(F.col("m"), "__pri_").alias("t")).first()["t"]
-    assert "__pri_secret" not in cleaned and len(cleaned) == 3
-    # F10 lift with prefix
-    lifted = df.select(R.lift_prefixed(F.col("m"), "k8s_").alias("t")).first()["t"]
-    assert set(lifted) == {"k8s___tags_a", "k8s___tags_monitor_log_collector", "k8s___pri_secret", "k8s_other"}
-    # build_map drops empty/absent values (fluent-bit no-match parity)
+    """F11 nest: build_map drops empty/absent values (fluent-bit
+    no-match parity)."""
     built = (
         spark.range(1)
         .select(R.build_map({"a": F.lit(""), "b": F.lit(None).cast("string"), "c": F.lit("v")}).alias("t"))

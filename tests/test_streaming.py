@@ -147,34 +147,6 @@ def test_streaming_stitch_multi_chunk_batch(spark, tmp_path):
     assert got.get(5) == "2024-01-01 00:00:05 ERROR later"
 
 
-def test_dynamic_plan_streams_too(spark, transcripts, k8s_meta, tool_meta, tmp_path):
-    """The map-record pipeline is stateless, so it runs unchanged on a
-    streaming frame — per-sink counts match its batch run."""
-    from logpipe.plans.dynamic import run_dynamic_pipeline
-
-    inp = str(tmp_path / "in")
-    src = transcripts.filter(F.col("turn_idx") <= 30)
-    src.repartition(2).write.parquet(inp)
-    q = start_stream_pipeline(
-        spark, inp, k8s_meta, tool_meta, str(tmp_path / "out"),
-        str(tmp_path / "ckpt"), max_files_per_trigger=1,
-        pipeline_fn=run_dynamic_pipeline,
-    )
-    q.awaitTermination(180)
-    got = {
-        r["sink"]: r["count"]
-        for r in spark.read.option("basePath", str(tmp_path / "out"))
-        .parquet(str(tmp_path / "out") + "/batch=*")
-        .groupBy("sink").count().collect()
-    }
-    exp = {
-        r["sink"]: r["count"]
-        for r in run_dynamic_pipeline(spark.read.parquet(inp), k8s_meta, tool_meta)
-        .groupBy("sink").count().collect()
-    }
-    assert got == exp
-
-
 def test_streaming_windowed_sink_counts(spark, transcripts, k8s_meta, tool_meta, tmp_path):
     """Watermarked windowed aggregation over the routed stream: window
     totals must equal the batch sink_counts on the same input, and
