@@ -36,20 +36,6 @@ recomputing. This module makes the strategy a deployment knob:
   ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set, which
   is GC-driven and off by default); the fabricated driver-temp
   default dir is additionally removed at interpreter exit.
-- ``persist``: ``persist(MEMORY_AND_DISK)`` + eager count. Keeps
-  lineage (recomputable after executor loss, no checkpoint write) but
-  does NOT truncate the logical plan — composed DAGs that need the
-  plan-size cut must not run in this mode: measured on
-  curated_corpus_v5's gate, merely BUILDING the cache OOMs the driver
-  heap (CachedRDDBuilder.cachedName stringifies the full tree) even
-  at sf0.001, so the curation gates reject persist with a ValueError.
-  It exists for callers that want recoverability without a checkpoint
-  dir and whose plans stay small. Call sites that NEED the plan cut —
-  iterative loops whose round-``i`` plan embeds round-``i-1``'s, so an
-  un-truncated plan doubles every round — pass ``lineage_cut=True``,
-  which swaps persist for a local checkpoint at that site (documented
-  fallback: those frames are per-round id/scalar tables, and the
-  alternative is exponential analyzer cost by ``max_iter`` 20).
 
 ``release()`` frees a materialized frame's storage once every consumer
 is done with it — the round-5 ADVICE finding: eager checkpoints pinned
@@ -67,11 +53,10 @@ import threading
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 MODE_CONF = "spark.logpipe.materialize.mode"
 CKPT_DIR_CONF = "spark.logpipe.materialize.checkpointDir"
-_MODES = ("local", "reliable", "persist")
+_MODES = ("local", "reliable")
 _RELEASE_ATTR = "_logpipe_release"
 
 # Sticky outcome of the reliable-mode checkpoint-path resolver: once
@@ -177,28 +162,12 @@ def _delete_checkpoint(spark: SparkSession, path: str | None) -> None:
     fs.delete(jpath, True)
 
 
-def materialize(
-    df: DataFrame, mode: str | None = None, *, lineage_cut: bool = False
-) -> DataFrame:
-    """Eagerly materialize ``df`` and truncate (or pin) its lineage,
-    per the session's configured strategy. Returns the materialized
-    frame; ``release()`` frees its storage when all consumers are done.
-
-    ``lineage_cut=True`` marks a site that REQUIRES plan truncation
-    (iterative loops — see the module docstring); in ``persist`` mode
-    such sites fall back to a local checkpoint, since persist keeps
-    the logical plan and the loop's plan would double every round.
-    """
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and truncate its lineage, per the
+    session's configured strategy. Returns the materialized frame;
+    ``release()`` frees its storage when all consumers are done."""
     spark = df.sparkSession
-    mode = (mode or materialize_mode(spark)).lower()
-    if mode == "persist" and lineage_cut:
-        mode = "local"
-    if mode == "persist":
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()  # eager, matching checkpoint semantics
-        setattr(out, _RELEASE_ATTR, out.unpersist)
-        return out
-    if mode == "reliable":
+    if materialize_mode(spark) == "reliable":
         _ensure_checkpoint_dir(spark)
         # stage through a local checkpoint so the plan is computed once;
         # both reliable-checkpoint jobs (count + save) read the staged
@@ -262,14 +231,12 @@ def materialize(
 
         setattr(out, _RELEASE_ATTR, _drop)
         return out
-    if mode == "local":
-        with _MATERIALIZE_LOCK:  # same delta-attribution window guard
-            before = persistent_rdd_ids(spark)
-            out = df.localCheckpoint()
-            new_ids = persistent_rdd_ids(spark) - before
-        setattr(out, _RELEASE_ATTR, lambda: release_rdd_ids(spark, new_ids))
-        return out
-    raise ValueError(f"materialize: mode must be one of {_MODES}, got {mode!r}")
+    with _MATERIALIZE_LOCK:  # same delta-attribution window guard
+        before = persistent_rdd_ids(spark)
+        out = df.localCheckpoint()
+        new_ids = persistent_rdd_ids(spark) - before
+    setattr(out, _RELEASE_ATTR, lambda: release_rdd_ids(spark, new_ids))
+    return out
 
 
 def attach_release(df: DataFrame, *deps: DataFrame) -> DataFrame:

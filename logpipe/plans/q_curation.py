@@ -328,24 +328,11 @@ def curated_corpus_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     final curated corpus.
 
     Eager: the span gate and the tail's branch-point cuts run Spark
-    jobs while the frame is built. Refuses persist materialize mode
-    before any job runs."""
-    from logpipe.materialize import materialize, materialize_mode, release
+    jobs while the frame is built."""
+    from logpipe.materialize import materialize, release
     from logpipe.traindata import textstats as ts
     from logpipe.traindata.dedup import duplicate_span_trim, line_dedup
 
-    # measured, not theoretical: persist keeps the gate's full logical
-    # tree inside InMemoryRelation, and merely BUILDING the cache
-    # (CachedRDDBuilder.cachedName stringifies the plan) OOMs the
-    # driver heap on this composed DAG even at sf0.001 — fail with the
-    # reason instead
-    if materialize_mode(spark) == "persist":
-        raise ValueError(
-            "curated corpus span gates need a checkpoint materialize "
-            "mode (local/reliable): persist does not truncate the "
-            "logical plan and the composed DAG OOMs the driver "
-            "stringifying it (set spark.logpipe.materialize.mode)"
-        )
     lo, hi = _V5_SPAN_TRIM_BAND
     txt0 = F.concat(
         F.when(F.col("doc_id") % 17 == 0, F.lit("lorem ipsum dolor sit. "))

@@ -130,8 +130,7 @@ QUERIES = [
         "exchange — the leading RoundRobinPartitioning spread "
         "(parallelism for few-split inputs; derived off on many-split "
         "scans), everything after the explode exchanging (md5, "
-        "doc_id, count) scalars. The window shape remains an opt-in "
-        "for boilerplate-free corpora. Pinned in "
+        "doc_id, count) scalars. Pinned in "
         "test_dup_span_stats_plan_single_linear_payload_exchange.",
     ),
     (

@@ -51,31 +51,6 @@ def test_minhash_identical_across_modes(spark, docs):
         spark.conf.unset(MODE_CONF)
 
 
-def test_persist_mode_identical_and_releasable(spark, docs):
-    from logpipe.traindata.dedup import minhash_lsh_pairs
-
-    local = _rows(minhash_lsh_pairs(docs, n=2, k=32, bands=8, threshold=0.5))
-    before = persistent_rdd_ids(spark)
-    held: list = []
-    df = minhash_lsh_pairs(
-        docs, n=2, k=32, bands=8, threshold=0.5, _materialized=held
-    )
-    # construction materializes the signature table eagerly — those are
-    # exactly the ids the _materialized handle lets the caller free
-    created = persistent_rdd_ids(spark) - before
-    assert created, "signature materialization must register blocks"
-    spark.conf.set(MODE_CONF, "persist")
-    try:
-        df2 = minhash_lsh_pairs(docs, n=2, k=32, bands=8, threshold=0.5)
-        assert _rows(df2) == local
-    finally:
-        spark.conf.unset(MODE_CONF)
-    assert _rows(df) == local
-    # the explicitly-held local-mode signature table releases its blocks
-    release(*held)
-    assert not (persistent_rdd_ids(spark) & created)
-
-
 def test_release_frees_local_checkpoint_blocks(spark):
     base = spark.range(1000).withColumn("x", F.col("id") * 2)
     before = persistent_rdd_ids(spark)
@@ -144,6 +119,31 @@ def test_result_release_hooks_free_internal_checkpoints(spark, docs):
         release(out)  # idempotent, including the chained hook
 
 
+@pytest.mark.parametrize("engine", ["propagation", "star"])
+def test_non_converging_clustering_releases_checkpoints(spark, engine):
+    """A clustering loop that exhausts its round budget raises — and
+    frees every checkpoint it pinned first (edges, the last labels or
+    edge set, the LSH pairs), instead of leaving them for the
+    session. One identical pair needs two rounds in either engine."""
+    from logpipe.traindata.dedup import near_dup_clusters, near_dup_clusters_star
+
+    tiny = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy dog"),
+            (3, "an entirely different sentence about other things"),
+        ],
+        "doc_id long, text string",
+    )
+    before = persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError):
+        if engine == "propagation":
+            near_dup_clusters(tiny, max_iter=1)
+        else:
+            near_dup_clusters_star(tiny, max_rounds=1)
+    assert not (persistent_rdd_ids(spark) - before)
+
+
 @pytest.fixture(scope="module")
 def local_clusters(spark, docs):
     from logpipe.traindata.dedup import near_dup_clusters
@@ -151,16 +151,13 @@ def local_clusters(spark, docs):
     return _rows(near_dup_clusters(docs, n=2, k=32, bands=8, threshold=0.3))
 
 
-@pytest.mark.parametrize("mode", ["reliable", "persist"])
+@pytest.mark.parametrize("mode", ["reliable"])
 def test_iterative_clustering_across_modes(spark, docs, local_clusters, mode):
     """An ITERATIVE operator (per-round label tables, convergence
     counts, release() of dead rounds mid-query) gives the identical
-    clustering in every mode. reliable is the cluster-deployment
+    clustering as in local mode. reliable is the cluster-deployment
     configuration the mode knob exists for: its release() deletes dead
-    rounds' checkpoint files. persist keeps the logical plan, so the
-    per-round label tables would double the plan every iteration; the
-    loop sites pass lineage_cut=True, which swaps in a local checkpoint
-    there."""
+    rounds' checkpoint files."""
     from logpipe.traindata.dedup import near_dup_clusters
 
     spark.conf.set(MODE_CONF, mode)
@@ -229,27 +226,6 @@ def test_curated_corpus_v5_reliable_mode(spark):
         assert _rows(df) == local
     finally:
         spark.conf.unset(MODE_CONF)
-
-
-def test_curated_corpus_span_gates_reject_persist(spark):
-    """persist does not truncate the logical plan, and on the composed
-    span-gated DAG merely BUILDING the cache OOMs the driver heap
-    (CachedRDDBuilder stringifies the full tree) — the builder fails
-    fast with the reason instead of OOMing. Raises BEFORE any job
-    (job-count probe: conftest.count_jobs)."""
-    from conftest import count_jobs
-    from logpipe.plans.driver_queries import curated_corpus_v5
-
-    def refused():
-        with pytest.raises(ValueError, match="checkpoint materialize"):
-            curated_corpus_v5(spark, "/root/testdata/sf0.001")
-
-    spark.conf.set(MODE_CONF, "persist")
-    try:
-        _, jobs = count_jobs(spark, refused, "curated-persist-refusal")
-    finally:
-        spark.conf.unset(MODE_CONF)
-    assert jobs == 0
 
 
 def test_reliable_release_falls_back_to_dir_delta(spark, monkeypatch):
@@ -380,11 +356,15 @@ def test_concurrent_materialize_attribution(spark):
 
 
 def test_invalid_mode_rejected(spark):
-    with pytest.raises(ValueError):
-        materialize(spark.range(3), mode="bogus")
-    spark.conf.set(MODE_CONF, "nope")
-    try:
-        with pytest.raises(ValueError):
-            materialize_mode(spark)
-    finally:
-        spark.conf.unset(MODE_CONF)
+    """Only the two checkpoint modes exist: any other value, persist
+    included (it kept the logical plan, so iterative loops and the
+    composed curation DAG could not run under it), raises."""
+    for bad in ("nope", "persist"):
+        spark.conf.set(MODE_CONF, bad)
+        try:
+            with pytest.raises(ValueError, match=bad):
+                materialize_mode(spark)
+            with pytest.raises(ValueError, match=bad):
+                materialize(spark.range(3))
+        finally:
+            spark.conf.unset(MODE_CONF)

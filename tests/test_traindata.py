@@ -379,161 +379,6 @@ def test_star_components_diameter_independent(spark):
         star_components(e2, max_rounds=0)
 
 
-def test_large_star_hub_join_skew_splittable(spark):
-    """The star algorithms' natural skew case is a HUB (one source doc
-    with 150k near-copies: every edge touches it). The large-star
-    neighbor join must be AQE-skew-splittable — which requires both
-    join children to be bare shuffle stages (round-7 measurement: the
-    per-node min aggregate feeding the join directly suppresses the
-    split), hence the materialized branch point + min table in
-    _large_star under hub mode. Pins `skew=true` in the executed plan
-    under lowered thresholds (conftest.skew_probe_confs), driving the
-    DataFrame's OWN QueryExecution (df.count() builds a new one,
-    leaving this plan unexecuted) — and pins that the round-8
-    derivation SELECTS hub mode for exactly this fixture."""
-    from logpipe.materialize import materialize, release
-    from logpipe.traindata.dedup import _derive_hub_skew, _large_star
-
-    from conftest import skew_probe_confs
-
-    held: list = []
-    e = None
-    try:
-        with skew_probe_confs(spark):
-            # hub 0 with 150k spokes. Spoke ids are xxhash64-derived
-            # (positive): skew detection reads COMPRESSED map-output
-            # sizes, and a contiguous 1..N id range LZ4-compresses
-            # below the detection threshold (measured: it never
-            # qualifies), while hashed ids — the realistic doc_id
-            # shape for minhash pair graphs — fire deterministically.
-            e = materialize(
-                spark.range(1, 150_001).select(
-                    F.lit(0).cast("long").alias("u"),
-                    F.shiftrightunsigned(F.xxhash64("id"), 1).alias("v"),
-                )
-            )
-            n_spokes = e.select("v").distinct().count()
-            # star_components would derive hub mode here: 150k edges x
-            # the 64B/row bound clears the lowered 16KB threshold
-            assert _derive_hub_skew(spark, 150_000)
-            out = _large_star(e, held, hub=True)
-            qe = out._jdf.queryExecution()
-            n = qe.toRdd().count()
-            # every spoke rewires to the hub's min: one (spoke, 0) row
-            assert n == n_spokes
-            plan = qe.executedPlan().toString()
-            assert "skew=true" in plan, "hub join did not skew-split"
-    finally:
-        release(*held)
-        if e is not None:
-            release(e)
-
-
-def test_star_hub_derivation_and_plan_shapes(spark):
-    """Round-8 derivation (round-7 verdict: the unconditional min-table
-    materialization was the one perf watch item): hub mode only when
-    the edge volume can clear the skew threshold at all.
-
-    - decision rule, two stages since round 9: total-bytes upper bound
-      vs the session threshold (a single partition can never exceed
-      the whole edge set; zero jobs), then — only past that bound and
-      given the checkpointed edge set — the heavy-key hot-partition
-      bound (round 10: sum of the top-k candidate degrees, so several
-      medium keys co-hashing count too), so large-but-UNIFORM graphs
-      skip the eager jobs (BENCH/r9_star_uniform.json); off when
-      skew-join rewriting is disabled;
-    - hub=False plan: the min aggregate feeds the join lazily — the
-      ``min(v)`` HashAggregate compiles INSIDE the round's plan (the
-      shape whose interposed aggregate child suppresses the skew
-      split, acceptable exactly because the split could never fire);
-    - hub=True plan: the min table is checkpointed out — no min
-      aggregate anywhere in the round's tree, the join children are
-      bare ExistingRDD shuffle stages;
-    - identical results either way (the shape is pure plan)."""
-    from logpipe.materialize import materialize, release
-    from logpipe.traindata.dedup import _derive_hub_skew, _large_star
-
-    from conftest import skew_probe_confs
-
-    # default session threshold is 256MB: 150k edges (9.6MB bound)
-    # derive False; 16M edges (1GB bound) derive True
-    assert not _derive_hub_skew(spark, 150_000)
-    assert _derive_hub_skew(spark, 16_000_000)
-    with skew_probe_confs(spark):  # 16KB threshold: 150k edges qualify
-        assert _derive_hub_skew(spark, 150_000)
-        assert not _derive_hub_skew(spark, 100)
-        # round-9 stage-2 refinement (BENCH/r9_star_uniform.json: a
-        # uniform graph past the global bound paid 1.27x for nothing):
-        # when the round's checkpointed edge set is handed over, hub
-        # mode needs a key whose degree reaches threshold/64B minus
-        # the symmetric view's uniform share. Claimed volume 800
-        # edges: stage 1 clears (800 x 64B = 51KB >= 16KB), the bar is
-        # 16KB/64B - ceil(1600/8) = 56 — a chain (max degree 2) stays
-        # under -> False; an 800-spoke hub -> True.
-        chain = materialize(spark.createDataFrame(
-            [(i, i + 1) for i in range(1, 40)], "u long, v long"))
-        hub_e = materialize(spark.range(1, 801).select(
-            F.lit(0).cast("long").alias("u"), F.col("id").alias("v")))
-        # round-10 (round-9 ADVICE): several MEDIUM keys can co-hash
-        # into one partition — 4 hubs of degree 20 each stay under the
-        # 56 bar individually (the old max-degree test derived False)
-        # but their top-k co-hash sum (80) clears it -> True
-        multi = materialize(spark.range(0, 80).select(
-            (F.col("id") % 4).alias("u"), (100 + F.col("id")).alias("v")))
-        try:
-            assert not _derive_hub_skew(spark, 800, chain)
-            assert _derive_hub_skew(spark, 800, hub_e)
-            assert _derive_hub_skew(spark, 800, multi)
-        finally:
-            release(chain, hub_e, multi)
-        # node ids are opaque to star_components — string ids must
-        # survive the hot-key test (round-9 review caught an int()
-        # cast); min_rows=1 hits the any-row-tips short-circuit
-        # (round-10 review: the candidacy floor must not flip a
-        # share-saturated regime to False); the 700-spoke string hub
-        # exercises the exact-fallback path (support 1/1400/8 =
-        # 8.9e-5 sits below freqItems' 1e-4 floor at min_rows=2)
-        from logpipe.traindata.dedup import _has_key_with_degree
-
-        se = materialize(spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("x", "y")], "u string, v string"))
-        fb = materialize(spark.range(1, 701).select(
-            F.lit("h").alias("u"), F.col("id").cast("string").alias("v")))
-        try:
-            assert _has_key_with_degree(se, 6, 2)      # "b": degree 2
-            assert not _has_key_with_degree(se, 6, 3)  # nothing reaches 3
-            assert _has_key_with_degree(se, 6, 1)      # short-circuit
-            assert _has_key_with_degree(fb, 1400, 2)   # exact fallback
-            assert not _has_key_with_degree(fb, 1400, 1401)  # > n_sym
-        finally:
-            release(se, fb)
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    try:
-        assert not _derive_hub_skew(spark, 16_000_000)
-    finally:
-        spark.conf.unset("spark.sql.adaptive.skewJoin.enabled")
-
-    e = materialize(
-        spark.createDataFrame(
-            [(5, 3), (3, 9), (20, 21), (21, 22)], "u long, v long"
-        )
-    )
-    rows = {}
-    try:
-        for hub in (False, True):
-            held: list = []
-            try:
-                out = _large_star(e, held, hub=hub)
-                plan = out._jdf.queryExecution().executedPlan().toString()
-                assert ("partial_min" in plan) == (not hub), plan
-                rows[hub] = sorted(tuple(r) for r in out.collect())
-            finally:
-                release(*held)
-        assert rows[False] == rows[True] and rows[False]
-    finally:
-        release(e)
-
-
 def test_minhash_band_join_skew_splittable(spark):
     """Round-7 verdict task 5 (the HashAggregate-suppression audit,
     applied to the banded LSH self-join): a HOT BUCKET — thousands of
@@ -804,13 +649,11 @@ def test_dup_span_stats_plan_single_linear_payload_exchange(spark):
     (sf0.01, not the cached sf0.001 fixture — see
     test_traindata_scan_prunes_columns.)
 
-    Round 7: the spread pins target the LAZY count table (the shared
-    subtree of both multiplicity shapes — same structure as the trim
-    pins on _span_position_table); the default JOIN shape additionally
-    pins the materialized branch point (ExistingRDD, no Window, one
-    FileScan for the docs-id restore, zero payload exchanges
-    downstream), and the window OPT-IN pins zero materialization with
-    the spread as its single payload exchange.
+    Round 7: the spread pins target the LAZY count table (same
+    structure as the trim pins on _span_position_table); the full
+    operator additionally pins the materialized branch point
+    (ExistingRDD, no Window, one FileScan for the docs-id restore, zero
+    payload exchanges downstream).
     """
     from logpipe.materialize import materialize, release
     from logpipe.traindata.dedup import _span_count_table, duplicate_span_stats
@@ -853,7 +696,7 @@ def test_dup_span_stats_plan_single_linear_payload_exchange(spark):
     ]
     assert len(payload32) == 1, payload32
 
-    # default JOIN shape: materialized branch point, no single-task
+    # the operator: materialized branch point, no single-task
     # window, one FileScan (the docs-id restore), scalars-only
     # exchanges downstream of the cut
     df = duplicate_span_stats(docs, k=3, min_docs=2)
@@ -867,22 +710,10 @@ def test_dup_span_stats_plan_single_linear_payload_exchange(spark):
     ]
     assert payload_j == [], payload_j
 
-    # window OPT-IN: zero materialization, the spread is its single
-    # payload exchange, multiplicity via the partition count
-    dfw = duplicate_span_stats(docs, k=3, min_docs=2, shape="window")
-    plan_w = dfw._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan_w
-    assert "Window" in plan_w
-    payload_w = [
-        ln for ln in _exchange_inputs(dfw, spark)
-        if "text#" in ln or "span#" in ln or "_toks#" in ln
-    ]
-    assert len(payload_w) == 1, payload_w
-
 
 def test_dup_span_stats_skewed_hash(spark):
     """The boilerplate-hash straggler class, as a fixture: ONE k-gram
-    present in half the corpus. The default join shape must (a) compute
+    present in half the corpus. The operator must (a) compute
     the same numbers a per-doc replay predicts, (b) compile with no
     Window over the hash (the round-6-documented one-task buffer),
     and (c) — pinned below in a second, larger fixture — actually get
@@ -892,7 +723,7 @@ def test_dup_span_stats_skewed_hash(spark):
     shuffle stages, so the earlier shape (groupBy(sh) feeding the join
     directly, a HashAggregate as the join child) never fired the split
     — the round-6 "AQE-skew-splittable" docstring claim was refuted by
-    measurement in round 7 and the shape fixed. Both shapes agree."""
+    measurement in round 7 and the shape fixed."""
     from logpipe.traindata.dedup import duplicate_span_stats
 
     rows = []
@@ -915,12 +746,6 @@ def test_dup_span_stats_skewed_hash(spark):
         i: (2, 1, 0.5) if i % 2 == 0 else (1, 0, 0.0) for i in range(200)
     }
     assert got == expect
-
-    got_w = {
-        r["doc_id"]: (r["n_spans"], r["n_dup_spans"], r["dup_span_frac"])
-        for r in duplicate_span_stats(docs, k=3, min_docs=2, shape="window").collect()
-    }
-    assert got_w == expect
 
     # (c) the split FIRES: a hot hash big enough to clear the (lowered)
     # skew thresholds must show `skew=true` on the multiplicity join in
