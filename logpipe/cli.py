@@ -7,14 +7,19 @@ Usage (cluster; see scripts/package.sh for the zip):
 Local: PYTHONPATH=. python -m logpipe.cli --synth 100000 ...
 
 With --synth N the input is generated deterministically (smoke/bench
-runs); otherwise the three parquet paths are read. The job is
+runs); otherwise the three input refs are read. One rule names every
+ref: 'table:NAME' is a catalog table, anything else a parquet path
+(logpipe.tableio). The job is
 bucket-resumable: re-running with the same --manifest skips completed
 buckets and prints the aggregated lineage.
 
-Relayout mode: --bucket-out OUT [--bucket-cols conv_id --bucket-n N
---bucket-table NAME] reads the input and writes it back BUCKETED
-(tableio.write_table bucket spec), then exits — the one-time storage
-layout that makes key-equal rejoins shuffle-free at scale.
+Relayout mode: --bucket-out OUT [--bucket-cols conv_id --bucket-n N]
+reads the input and writes it back BUCKETED (tableio.write_table
+bucket spec), then exits — the one-time storage layout that makes
+key-equal rejoins shuffle-free at scale. A path OUT needs
+--bucket-table NAME (the catalog entry that carries the spec; later
+runs read it as --transcripts table:NAME); a table:NAME OUT is an
+Iceberg table and takes no --bucket-table.
 """
 
 from __future__ import annotations
@@ -27,15 +32,19 @@ def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(prog="logpipe")
     p.add_argument(
         "--transcripts",
-        help="input ref: a parquet path, an Iceberg table identifier "
-             "when the session carries an Iceberg catalog, or a catalog "
-             "table name — 'table:NAME' forces the catalog reading; a "
-             "bare/dotted name that exists only in the catalog (e.g. a "
-             "--bucket-out relayout's table) resolves there too "
+        help="input ref: 'table:NAME' reads catalog table NAME (e.g. "
+             "a --bucket-out relayout's --bucket-table, or an Iceberg "
+             "table); any other ref is a parquet path "
              "(logpipe.tableio.read_table)",
     )
-    p.add_argument("--k8s-meta", help="k8s dim ref (path or Iceberg table)")
-    p.add_argument("--tool-meta", help="tool dim ref (path or Iceberg table)")
+    p.add_argument(
+        "--k8s-meta",
+        help="k8s dim ref: 'table:NAME' for a catalog table, else a parquet path",
+    )
+    p.add_argument(
+        "--tool-meta",
+        help="tool dim ref: 'table:NAME' for a catalog table, else a parquet path",
+    )
     p.add_argument(
         "--logs-dir",
         help="read docker-runtime JSON log files (S1 tail) as the input "
@@ -56,8 +65,9 @@ def main(argv: list[str] | None = None) -> None:
     # verdict rejoin; tests pin the zero-payload-exchange plan)
     p.add_argument(
         "--bucket-out", default=None,
-        help="write the input relaid out bucketed to this ref (path or "
-             "Iceberg table) and exit; no pipeline runs",
+        help="write the input relaid out bucketed to this ref and exit; "
+             "no pipeline runs. 'table:NAME' writes an Iceberg table, "
+             "any other ref is a path (needs --bucket-table)",
     )
     p.add_argument(
         "--bucket-cols", default="conv_id",
@@ -73,9 +83,9 @@ def main(argv: list[str] | None = None) -> None:
     )
     p.add_argument(
         "--bucket-table", default=None,
-        help="catalog name for the bucketed path write (default: "
-             "derived from the --bucket-out basename); bucketed reads "
-             "go through spark.table(<name>)",
+        help="catalog name for a path --bucket-out (required there, "
+             "rejected with a table:NAME --bucket-out); bucketed reads "
+             "go through --transcripts table:<name>",
     )
     p.add_argument(
         "--sort-cols", default=None,
@@ -162,6 +172,15 @@ def main(argv: list[str] | None = None) -> None:
             p.error("--bucket-cols must name at least one column")
         if sort_cols is not None and not sort_cols:
             p.error("--sort-cols must name at least one column when given")
+        from logpipe.tableio import TABLE_PREFIX
+
+        table_out = args.bucket_out.startswith(TABLE_PREFIX)
+        if table_out == (args.bucket_table is not None):
+            p.error(
+                "--bucket-table is required with a path --bucket-out (the "
+                "catalog entry that carries the bucket spec) and rejected "
+                "with a table:NAME one"
+            )
     elif sort_cols is not None or args.single_file_buckets:
         p.error("--sort-cols/--single-file-buckets only apply to --bucket-out")
     bad_conf = [c for c in args.conf if "=" not in c]
@@ -260,9 +279,8 @@ def main(argv: list[str] | None = None) -> None:
                 "--transcripts/--k8s-meta/--tool-meta required without "
                 "--synth/--logs-dir (--bucket-out needs only --transcripts)"
             )
-        # refs route through tableio: a path reads parquet (all
-        # committed runs), a catalog identifier reads the Iceberg
-        # table when the session carries the catalog
+        # refs route through tableio: table:NAME reads the catalog
+        # table, any other ref reads parquet
         from logpipe.tableio import read_table
 
         transcripts = read_table(spark, args.transcripts)

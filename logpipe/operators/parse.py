@@ -1,11 +1,12 @@
 """Parsers — the regex/grok layer (SURVEY.md §2.2, P1-P8).
 
 Every parser is a columnar expression (JVM-side, whole-stage codegen);
-the flagship erda-info grok also ships an Arrow-vectorized pandas-UDF
-variant (``erda_info_pandas``) for parity with the north-star's
-"vectorized pandas/Arrow UDFs, zero per-row Python" requirement — both
-produce identical results (tested), the built-in is the default because
-it stays inside codegen.
+the flagship erda-info grok has ONE built-in form, the single-pass
+``erda_info_struct``, plus an Arrow-vectorized pandas-UDF variant
+(``erda_info_pandas``) for parity with the north-star's "vectorized
+pandas/Arrow UDFs, zero per-row Python" requirement — both produce
+identical results (tested), the built-in is the default because it
+stays inside codegen.
 
 Reference regexes: conf/ds/parsers.conf (cited per function). Fluent-bit
 uses Onig/Ruby regex; translated here to Java (Spark) and Python (pandas)
@@ -111,16 +112,6 @@ def truncate_log(text: Column, max_chars: int = MAX_CONTENT_CHARS) -> Column:
     MORE bytes than a byte cap, never corrupts a character.
     """
     return F.substring(text, 1, max_chars)
-
-
-def erda_level(text: Column) -> Column:
-    """P1: extract log level ('' when absent)."""
-    return F.regexp_extract(text, _java(ERDA_INFO_RE), 1)
-
-
-def erda_request_id(text: Column) -> Column:
-    """P1: extract request id UUID ('' when absent)."""
-    return F.regexp_extract(text, _java(ERDA_INFO_RE), 4)
 
 
 def erda_info_struct(text: Column) -> Column:

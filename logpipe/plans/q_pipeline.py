@@ -455,7 +455,14 @@ def erda_info_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries, so the scalar layer rides the same rows instead of its
     own registry slot). Scalar assertions stay operator-direct:
     functions.basic_auth_header / host_join_path, pytest-gated in
-    tests/test_reshape.py as well."""
+    tests/test_reshape.py as well.
+
+    The grok runs through ``parse.erda_info_struct`` in
+    ``log_event_tail``'s shape: one select projects the struct, the
+    next reads ``.level``/``.request_id``. A NULL line would yield ''
+    where the oracle's regexp_extract yields NULL; the line is a
+    concat of event_type, user_id, event_id and props, none of which
+    holds a NULL at sf0.001/0.01/0.1, so the rows match the oracle."""
     from logpipe.functions import basic_auth_header, host_join_path
     from logpipe.spread import spread_for_compute
 
@@ -467,10 +474,14 @@ def erda_info_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "props",
         _erda_line_expr().alias("line"),
     )
-    return lines.select(
+    grok = lines.select(
+        "event_id", "user_id", "event_type", "props",
+        parse.erda_info_struct(F.col("line")).alias("_g"),
+    )
+    return grok.select(
         "event_id",
-        parse.erda_level(F.col("line")).alias("level"),
-        parse.erda_request_id(F.col("line")).alias("request_id"),
+        F.col("_g.level").alias("level"),
+        F.col("_g.request_id").alias("request_id"),
         basic_auth_header(
             F.concat(F.lit("user-"), F.col("user_id").cast("string")),
             F.md5(F.col("props")),

@@ -68,8 +68,8 @@ def write_sinks(
         ).otherwise(F.lit("-")),
     )
     salted = salted_repartition(with_collector, "sink", n_partitions, n_salts)
-    # tableio routes by ref shape: parquet dir here (every committed
-    # test), Iceberg snapshot commit when handed a catalog table ref
+    # tableio: a path ref writes a parquet dir (every committed test);
+    # a table:NAME ref would commit an Iceberg snapshot
     from logpipe.tableio import write_table
 
     write_table(salted, base_path, mode=mode, partition_by=("sink", "collector"))

@@ -84,13 +84,13 @@ def _lines(
     spark: SparkSession,
     path: str,
     exclude_path: tuple[str, ...] = (),
-    skip_long_lines: int | None = None,
 ) -> DataFrame:
     """(file, line_no, line) with exact in-file ordering.
 
-    ``skip_long_lines``: byte cap above which a line is dropped
-    (Skip_Long_Lines On, docker-runtime.conf:9) — distinct from P2
-    truncation, which caps records the tail DID accept.
+    A line over ``DEFAULT_MAX_LINE_BYTES`` is dropped (Skip_Long_Lines
+    On in both reference tails, docker-runtime.conf:8-9,
+    cri-runtime.conf:9) — distinct from P2 truncation, which caps
+    records the tail DID accept. The cap is read at call time.
     """
     paths = _resolve_paths(spark, path, exclude_path)
     if not paths:
@@ -98,13 +98,14 @@ def _lines(
     raw = spark.read.text(paths, wholetext=True).select(
         F.input_file_name().alias("file"), F.col("value")
     )
-    out = raw.select(
-        "file",
-        F.posexplode(F.split(F.col("value"), "\n")).alias("line_no", "line"),
-    ).filter(F.length("line") > 0)  # Skip_Empty_Lines (docker-runtime.conf:10)
-    if skip_long_lines is not None:
-        out = out.filter(F.octet_length("line") <= skip_long_lines)
-    return out
+    return (
+        raw.select(
+            "file",
+            F.posexplode(F.split(F.col("value"), "\n")).alias("line_no", "line"),
+        )
+        .filter(F.length("line") > 0)  # Skip_Empty_Lines (docker-runtime.conf:10)
+        .filter(F.octet_length("line") <= DEFAULT_MAX_LINE_BYTES)
+    )
 
 
 def parse_kube_filename(file_col) -> dict:
@@ -128,7 +129,6 @@ def read_docker_logs(
     spark: SparkSession,
     path: str,
     exclude_path: tuple[str, ...] = (),
-    skip_long_lines: int | None = None,
 ) -> DataFrame:
     """Docker-runtime tail: JSON lines -> transcripts shape.
 
@@ -138,11 +138,10 @@ def read_docker_logs(
     (RFC3339 nanos; Spark timestamps keep micros). A record whose time
     does not parse is kept with a NULL ts, as fluent-bit keeps it.
 
-    ``exclude_path``/``skip_long_lines``: see _resolve_paths/_lines
-    (Exclude_Path + Skip_Long_Lines, docker-runtime.conf:4,9). Pass
-    skip_long_lines=DEFAULT_MAX_LINE_BYTES for the reference's 10MB cap.
+    ``exclude_path``: see _resolve_paths; Skip_Long_Lines always
+    applies (_lines; docker-runtime.conf:4,9).
     """
-    lines = _lines(spark, path, exclude_path, skip_long_lines)
+    lines = _lines(spark, path, exclude_path)
     parsed = lines.withColumn(
         "j", F.from_json("line", "log string, stream string, time string")
     ).filter(F.col("j.log").isNotNull())
@@ -214,12 +213,11 @@ def read_cri_logs(
     spark: SparkSession,
     path: str,
     exclude_path: tuple[str, ...] = (),
-    skip_long_lines: int | None = None,
 ) -> DataFrame:
     """CRI-runtime tail: `time stream logtag log` lines -> transcripts
     (Exclude_Path / Skip_Long_Lines as in read_docker_logs;
     cri-runtime.conf:4,9). conv_id is the file's base name."""
-    lines = _lines(spark, path, exclude_path, skip_long_lines)
+    lines = _lines(spark, path, exclude_path)
     return lines.select(
         F.element_at(F.split("file", "/"), -1).alias("conv_id"),
         F.col("line_no").cast("int").alias("turn_idx"),

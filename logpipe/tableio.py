@@ -1,12 +1,12 @@
-"""Table-format adapter: Iceberg tables when the session carries an
-Iceberg catalog, parquet directories otherwise.
+"""Table-format adapter: catalog (Iceberg) tables for ``table:NAME``
+refs, parquet paths for every other ref.
 
 The target deployment runs the pipeline over Iceberg tables (SURVEY.md
 §2.1/§2.4 maps every source and sink onto them); this sandbox has no
 Iceberg runtime jars and no network to fetch them, so every committed
 test and benchmark exercises the parquet-directory branch. The Iceberg
-branch is the SAME call sites handed a table identifier instead of a
-path, gated on the catalog actually being loadable — not a stub: when
+branch is the SAME call sites handed a ``table:NAME`` ref instead of
+a path, gated on the catalog actually being loadable — not a stub: when
 ``iceberg_ready`` holds, reads go through the catalog and writes
 commit a snapshot. What Iceberg buys at cluster scale, and what the
 parquet branch substitutes in its absence:
@@ -19,13 +19,11 @@ parquet branch substitutes in its absence:
 - incremental snapshot reads -> file-source streaming
   (streaming/stream_pipeline.py).
 
-Ref classification is documented on ``is_table_ref``: separators/
-schemes/``.parquet`` are always paths, bare single-segment names are
-always relative paths (round-6 ADVICE: ``--transcripts mydata`` must
-keep reading a directory), and dotted names resolve by session
-capability — tables in an Iceberg-capable session (local filesystem
-state cannot shadow a catalog table), existing-path-wins otherwise,
-``./`` always forcing the path reading.
+One rule says what a ref is, and nothing is inferred: ``table:NAME``
+(``TABLE_PREFIX``) names a catalog table, and every other ref is a
+parquet path — dotted, bare or absolute alike. A read never probes the
+filesystem or the catalog to decide; a bucketed path write is handed
+its catalog name (``table_name``) rather than deriving one.
 
 Bucketed layout (the dedup family's 100TB co-location story): every
 dedup verdict rejoins the corpus on doc_id, and storing the corpus
@@ -39,8 +37,8 @@ writes a Hive-bucketed external table (``bucketBy + sortBy +
 saveAsTable`` — plain ``save()`` cannot carry bucket metadata), the
 Iceberg branch uses the ``bucket(n, col)`` partition transform.
 Reading the layout BACK with its bucketing visible needs the catalog
-entry (``spark.table(name)`` / ``read_table`` on the table name —
-the raw path sees only parquet files); on Iceberg the reader side
+entry (``spark.table(name)`` / ``read_table(spark, "table:" + name)``
+— the raw path sees only parquet files); on Iceberg the reader side
 additionally needs the storage-partitioned-join session confs
 (``SPJ_CONFS`` below).
 
@@ -61,9 +59,6 @@ requirement beyond the catalog itself.)
 """
 
 from __future__ import annotations
-
-import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -156,103 +151,6 @@ def apply_sorted_scan_confs(spark: SparkSession) -> dict[str, str]:
     return _apply_confs(spark, SORTED_SCAN_CONFS)
 
 
-def _path_shaped(ref: str) -> bool:
-    """Unambiguously a filesystem path: carries a separator, a URI
-    scheme, or a ``.parquet`` suffix. ONE definition — both
-    ``is_table_ref`` and ``read_table``'s implicit-catalog branch
-    classify with it (round-9 review: the rules were duplicated and
-    could drift)."""
-    return (
-        "/" in ref or "\\" in ref or "://" in ref or ref.endswith(".parquet")
-    )
-
-
-def is_table_ref(
-    ref: str, spark: SparkSession | None = None, ready: bool | None = None
-) -> bool:
-    """True for catalog table identifiers (``cat.db.tbl`` / ``db.tbl``),
-    False for filesystem paths. Paths carry a separator, a URI scheme,
-    or a ``.parquet`` suffix; a bare single-segment name is a relative
-    path (matching what ``spark.read.parquet`` always accepted).
-
-    Dotted names are ambiguous and resolve by session capability: in an
-    Iceberg-capable session (``spark`` passed and ``iceberg_ready``)
-    they are ALWAYS table identifiers — driver-local filesystem state
-    must never shadow a catalog table (a stray ``db.events`` directory
-    in the driver's CWD silently rerouting a snapshot commit into a
-    relative parquet dir would be a wrong-system write; round-7
-    review). Without an Iceberg session, an existing path wins over
-    the identifier reading, so ``--transcripts data.v2`` keeps working
-    (round-6 ADVICE) — existence checked against the session's DEFAULT
-    filesystem when it isn't the local one (round-7 ADVICE: Spark
-    resolves relative paths against the default FS, so on an
-    HDFS-default cluster a dotted dir that exists only on HDFS must
-    classify as a path, and a stray driver-local dir must not flip a
-    table read). In both regimes ``./data.v2`` forces the path
-    reading. ``ready`` lets a caller that already evaluated
-    ``iceberg_ready`` pass the answer in (the probe collects the
-    session's SQL confs — worth not repeating per call)."""
-    if _path_shaped(ref):
-        return False
-    if "." not in ref:
-        return False  # bare relative names are paths, not identifiers
-    if ready is None:
-        ready = spark is not None and iceberg_ready(spark)
-    if ready:
-        return True
-    return not _ref_exists(spark, ref)
-
-
-def _default_fs(spark: SparkSession):
-    """(Path constructor, default Hadoop FileSystem) for the session,
-    or None when the JVM bridge is unavailable. Separated out so tests
-    can substitute a fake DFS."""
-    try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        return jvm.org.apache.hadoop.fs.Path, jvm.org.apache.hadoop.fs.FileSystem.get(hconf)
-    except Exception:
-        return None
-
-
-def _ref_exists(spark: SparkSession | None, ref: str) -> bool:
-    """Does ``ref`` exist as a path where SPARK would resolve it? A
-    relative path resolves against the session's default filesystem —
-    only when that is the local one (the sandbox and every committed
-    run) is the driver-local ``os.path.exists`` the right oracle; on a
-    DFS-default cluster the check goes through the Hadoop FileSystem
-    API instead (round-7 ADVICE)."""
-    if spark is not None:
-        bridge = _default_fs(spark)
-        if bridge is not None:
-            mk_path, fs = bridge
-            try:
-                # getUri().getScheme() rather than getScheme(): some
-                # FileSystem impls (ViewFileSystem) THROW
-                # UnsupportedOperationException from getScheme(), and
-                # treating that as "local rules" would let a stray
-                # driver-local dir flip a table ref on exactly the
-                # DFS-default clusters this check protects (round-8
-                # ADVICE). The URI scheme never throws on a healthy
-                # bridge; the exception fallback now covers only a
-                # truly broken JVM bridge.
-                non_local = fs.getUri().getScheme() != "file"
-            except Exception:
-                non_local = False  # bridge broken: sandbox-local rules
-            if non_local:
-                try:
-                    return bool(fs.exists(mk_path(ref)))
-                except Exception:
-                    # the DFS is authoritative but unreachable: driver-local
-                    # state must NOT decide (that is the misclassification
-                    # this function exists to prevent) — report not-a-path,
-                    # so the identifier reading wins and a non-Iceberg
-                    # session fails LOUDLY in _require_iceberg instead of
-                    # silently writing a relative local dir
-                    return False
-    return os.path.exists(ref)
-
-
 def _sql_conf_keys(spark: SparkSession) -> set[str]:
     """Keys of every SQL conf the session will actually resolve —
     launch-time SparkConf entries AND runtime ``spark.conf.set`` ones
@@ -294,90 +192,32 @@ def _require_iceberg(spark: SparkSession, ref: str) -> None:
 TABLE_PREFIX = "table:"
 
 
-def _builtin_catalog_has(spark: SparkSession, ref: str) -> bool:
-    """Does the session's (non-Iceberg) catalog resolve ``ref`` as a
-    table? Exceptions (unknown catalog part, parse errors) mean no —
-    classification must never die on a ref that is really a path."""
+def _builtin_catalog_has(spark: SparkSession, name: str) -> bool:
+    """Does the session's (non-Iceberg) catalog resolve ``name`` as a
+    table? Exceptions (unknown catalog part, parse errors) mean no."""
     try:
-        return bool(spark.catalog.tableExists(ref))
+        return bool(spark.catalog.tableExists(name))
     except Exception:
         return False
 
 
 def read_table(spark: SparkSession, ref: str) -> DataFrame:
-    """Read ``ref`` — catalog table or parquet directory/file, chosen
-    by ``is_table_ref``. Both branches are plain scans Catalyst prunes
-    and pushes into.
+    """Read ``ref``: ``table:NAME`` through the catalog, anything else
+    as parquet. Both branches are plain scans Catalyst prunes and
+    pushes into.
 
-    A ``table:NAME`` prefix forces the catalog reading regardless of
-    classification — the explicit spelling for a Hive-bucketed layout
-    whose derived name collides with a filesystem path. Without the
-    prefix, a non-path-shaped ref that does NOT exist as a path but
-    DOES resolve in the session catalog is also served from the
-    catalog (round-8 ADVICE: ``cli --bucket-out`` produces a bucketed
-    table whose ONLY bucket-preserving read is ``spark.table(name)``;
-    ``--transcripts corpus_bucketed_t`` must therefore consume it
-    rather than fail as a missing relative dir, and
-    ``default.corpus_t`` must not demand Iceberg when the built-in
-    catalog serves it). An existing path still wins over the implicit
-    catalog reading — ``--transcripts mydata`` keeps reading a
-    directory (round-6 ADVICE)."""
-    if ref.startswith(TABLE_PREFIX):
-        return spark.read.table(ref[len(TABLE_PREFIX):])
-    ready = iceberg_ready(spark)  # evaluated ONCE per read (round-9 review)
-    if is_table_ref(ref, spark, ready=ready):
-        if ready:
-            return spark.read.table(ref)
-        if _builtin_catalog_has(spark, ref):
-            return spark.read.table(ref)  # e.g. default.corpus_t, Hive/built-in
-        _require_iceberg(spark, ref)  # not ready: raises the actionable error
-    if (
-        not _path_shaped(ref)
-        and not _ref_exists(spark, ref)
-        and _builtin_catalog_has(spark, ref)
-    ):
-        # bare catalog name (the --bucket-out derived-name shape): no
-        # such path anywhere Spark would look, but the catalog serves
-        # it — reading the raw parquet dir here would at best drop the
-        # bucket metadata the relayout exists for, at worst fail
-        return spark.read.table(ref)
-    return spark.read.parquet(ref)
-
-
-def derived_table_name(ref: str) -> str:
-    """Catalog-safe table name derived from a path ref's basename —
-    the default metastore entry for a bucketed path write (the entry
-    is what carries the bucket spec; see ``write_table``)."""
-    base = os.path.basename(ref.rstrip("/\\")) or "table"
-    name = re.sub(r"[^A-Za-z0-9_]", "_", base)
-    if name[0].isdigit():
-        name = "t_" + name
-    return name
-
-
-def _table_location(spark: SparkSession, name: str) -> str | None:
-    """The catalog table's storage location URI, or None if it cannot
-    be determined (then the caller must not guess)."""
-    try:
-        for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect():
-            if r["col_name"] == "Location":
-                return r["data_type"]
-    except Exception:
-        pass
-    return None
-
-
-def _same_location(existing_uri: str, ref: str) -> bool:
-    """Does the catalog location URI point at the path ``ref``? Local
-    ``file:`` URIs compare by absolute path; anything else compares
-    textually (conservative: a mismatch forces the explicit-name
-    error, never a silent repoint)."""
-    if existing_uri.startswith("file:"):
-        path = existing_uri[len("file:"):]
-        while path.startswith("//"):  # file:/p vs file:///p spellings
-            path = path[1:]
-        return os.path.abspath(path) == os.path.abspath(ref)
-    return existing_uri.rstrip("/") == ref.rstrip("/")
+    ``table:NAME`` is served by ``spark.read.table(NAME)`` when the
+    session's built-in catalog resolves NAME (a Hive-bucketed layout
+    from ``write_table(bucket_by=...)`` — its only bucket-preserving
+    read) or the session is Iceberg-capable; otherwise it raises
+    ``_require_iceberg``'s actionable error. Every other ref is read
+    with ``spark.read.parquet``, with no filesystem or catalog probe."""
+    if not ref.startswith(TABLE_PREFIX):
+        return spark.read.parquet(ref)
+    name = ref[len(TABLE_PREFIX):]
+    if not _builtin_catalog_has(spark, name):
+        _require_iceberg(spark, ref)
+    return spark.read.table(name)
 
 
 def write_table(
@@ -390,11 +230,12 @@ def write_table(
     table_name: str | None = None,
     single_file_buckets: bool = False,
 ) -> str | None:
-    """Write ``df`` to ``ref``. Parquet branch: the directory write
-    every committed test exercises. Iceberg branch: ``writeTo`` v2 —
-    ``overwrite`` maps to createOrReplace (a single snapshot commit,
-    the atomicity the reference's per-chunk retry protocol needed
-    bookkeeping for) and ``append`` to append.
+    """Write ``df`` to ``ref``: ``table:NAME`` takes the Iceberg
+    branch, every other ref the parquet path branch. Path branch: the
+    directory write every committed test exercises. Iceberg branch:
+    ``writeTo(NAME)`` v2 — ``overwrite`` maps to createOrReplace (a
+    single snapshot commit, the atomicity the reference's per-chunk
+    retry protocol needed bookkeeping for) and ``append`` to append.
 
     ``bucket_by=(n, col, ...)`` writes the BUCKETED layout the dedup
     family's verdict rejoins want at 100TB (module docstring). The two
@@ -402,11 +243,13 @@ def write_table(
 
     - path branch: Hive-bucketed EXTERNAL table — ``bucketBy(n, cols)
       .sortBy(sort_by or cols)`` with the data at ``ref`` and the
-      bucket metadata in a catalog entry named ``table_name`` (derived
-      from the path basename when omitted). Plain ``.save(path)``
-      cannot write bucketed (Spark requires ``saveAsTable``), and a
-      bucketed read MUST go through ``spark.table(name)`` — the raw
-      path is just parquet files. Returns the table name.
+      bucket metadata in a catalog entry named ``table_name``, which
+      the caller must give (``ValueError`` before any job runs
+      otherwise). Plain ``.save(path)`` cannot write bucketed (Spark
+      requires ``saveAsTable``), and a bucketed read MUST go through
+      the catalog entry (``spark.table(name)`` or
+      ``read_table(spark, "table:" + name)``) — the raw path is just
+      parquet files. Returns the table name.
     - Iceberg branch: the ``bucket(n, col)`` PARTITION TRANSFORM in
       ``partitionedBy`` (after any identity ``partition_by`` columns),
       one transform per bucket column. Iceberg sort order is a table
@@ -447,7 +290,7 @@ def write_table(
             "write_table: sort_by/table_name/single_file_buckets only "
             "apply to bucketed path writes (pass bucket_by)"
         )
-    if is_table_ref(ref, df.sparkSession):
+    if ref.startswith(TABLE_PREFIX):
         _require_iceberg(df.sparkSession, ref)
         from pyspark.sql import functions as F
         from pyspark.sql.functions import partitioning as P
@@ -461,7 +304,7 @@ def write_table(
                 "table properties (WRITE ORDERED BY / write.target-file-size) "
                 "and the ref already names the table"
             )
-        w = df.writeTo(ref).using("iceberg")
+        w = df.writeTo(ref[len(TABLE_PREFIX):]).using("iceberg")
         transforms = [F.col(c) for c in partition_by]
         if bucket_by is not None:
             transforms += [P.bucket(n_buckets, F.col(c)) for c in bucket_cols]
@@ -475,29 +318,15 @@ def write_table(
             raise ValueError(f"write_table: unsupported mode {mode!r} for tables")
         return None
     if bucket_by is not None:
-        name = table_name or derived_table_name(ref)
-        spark = df.sparkSession
-        if table_name is None and spark.catalog.tableExists(name):
-            # basename-derived names can collide across different paths:
-            # overwriting would silently REPOINT every reader of the
-            # existing table (spark.table(name) is the only bucketed
-            # read path) at this write's location. Allow the rewrite
-            # only when it targets the same location; otherwise demand
-            # an explicit table_name (round-8 review).
-            existing = _table_location(spark, name)
-            if existing is None or not _same_location(existing, ref):
-                # None means the location could not be DETERMINED, not
-                # that it matches: proceeding would overwrite a table
-                # whose readers we cannot prove point here (round-8
-                # ADVICE — "the caller must not guess" applies to this
-                # caller too)
-                where = existing if existing is not None else "an undeterminable location"
-                raise ValueError(
-                    f"write_table: derived table name {name!r} already "
-                    f"exists at {where!r}; writing {ref!r} under it "
-                    "would repoint existing readers — pass table_name "
-                    "explicitly"
-                )
+        if table_name is None:
+            # the catalog entry is what carries the bucket spec; a
+            # bucketed path write without one would be plain parquet
+            raise ValueError(
+                f"write_table: a bucketed path write needs table_name "
+                f"(the catalog entry that carries the bucket spec for "
+                f"{ref!r}); pass table_name, or a 'table:NAME' ref for "
+                "an Iceberg table"
+            )
         if single_file_buckets:
             if partition_by:
                 # each task would write one file per bucket PER
@@ -521,8 +350,8 @@ def write_table(
         )
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.option("path", ref).format("parquet").saveAsTable(name)
-        return name
+        writer.option("path", ref).format("parquet").saveAsTable(table_name)
+        return table_name
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

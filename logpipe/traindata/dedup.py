@@ -96,14 +96,6 @@ def with_ngrams(
     return d.withColumn("grams", ngrams_of(F.col("_toks"), n)).drop("_toks")
 
 
-def word_ngrams(text: Column, n: int) -> Column:
-    """Distinct word n-gram shingles (n=1 -> the word set).
-
-    Convenience single-expression form; prefer with_ngrams in plans
-    (see ngrams_of docstring for why)."""
-    return ngrams_of(tokens(text), n)
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 2,
@@ -141,33 +133,13 @@ def ngram_jaccard_pairs(
 MINHASH_MOD = 1 << 48  # 48-bit halves: h1 + k*h2 stays < 2^54 (no overflow)
 
 
-def minhash_signature(grams: Column, k: int = 32, portable: bool = True) -> Column:
-    """k-permutation minhash signature.
-
-    portable=True (default): Carter-Wegman family h_i = (h1 + i*h2)
-    mod 2^48 from ONE md5 per shingle (h1 = hex[1:12], h2 = hex[13:24])
-    — one hash invocation per shingle, and bit-identical in any engine
-    with md5 (the DuckDB oracle reproduces the whole LSH pipeline).
-    portable=False: seeded xxhash64 per permutation (marginally faster
-    JVM path when cross-engine parity isn't needed).
-    """
-    if not portable:
-        return F.array(
-            *[
-                F.array_min(F.transform(grams, lambda g: F.xxhash64(g, F.lit(i))))
-                for i in range(k)
-            ]
-        )
-    return minhash_from_hashes(gram_hashes(grams), k)
-
-
 def gram_hashes(grams: Column) -> Column:
     """shingles -> array<struct(h1,h2)> (ONE md5 per shingle).
 
     Keep this as its OWN projected column before fanning out to k
-    signature lambdas: Catalyst inlines column expressions into every
-    consumer, so computing it inside minhash_from_hashes would run md5
-    k times per shingle (measured 50x slowdown)."""
+    signature permutations: Catalyst inlines column expressions into
+    every consumer, so computing it inside each permutation would run
+    md5 k times per shingle (measured 50x slowdown)."""
     md5s = F.transform(grams, lambda g: F.md5(g))
     return F.transform(
         md5s,
@@ -175,21 +147,6 @@ def gram_hashes(grams: Column) -> Column:
             F.conv(F.substring(m, 1, 12), 16, 10).cast("long").alias("h1"),
             F.conv(F.substring(m, 13, 12), 16, 10).cast("long").alias("h2"),
         ),
-    )
-
-
-def minhash_from_hashes(hashes: Column, k: int = 32) -> Column:
-    """array<struct(h1,h2)> -> k-element signature (cheap arithmetic)."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    hashes,
-                    lambda s: F.pmod(s["h1"] + F.lit(i) * s["h2"], F.lit(MINHASH_MOD)),
-                )
-            )
-            for i in range(k)
-        ]
     )
 
 

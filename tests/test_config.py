@@ -235,12 +235,24 @@ def test_cli_bucket_out_relayout(spark, tmp_path, monkeypatch):
     # relayout knob validation fails fast, BEFORE a session spins up
     # (round-8 review: `or`-defaulting coerced an explicit 0; empty
     # cols surfaced as a write_table traceback)
+    def _no_session(**kw):
+        raise AssertionError("validation must fail before a session starts")
+
+    monkeypatch.setattr("logpipe.session.get_spark", _no_session)
+    out_x = ["--synth", "10", "--bucket-out", "x", "--bucket-table", "t"]
     with pytest.raises(SystemExit):
-        cli.main(["--synth", "10", "--bucket-out", "x", "--bucket-n", "0"])
+        cli.main([*out_x, "--bucket-n", "0"])
     with pytest.raises(SystemExit):
-        cli.main(["--synth", "10", "--bucket-out", "x", "--bucket-cols", " , "])
+        cli.main([*out_x, "--bucket-cols", " , "])
     with pytest.raises(SystemExit):
-        cli.main(["--synth", "10", "--bucket-out", "x", "--sort-cols", " , "])
+        cli.main([*out_x, "--sort-cols", " , "])
+    # a path --bucket-out names its catalog entry; a table:NAME one
+    # is the table and takes no --bucket-table
+    with pytest.raises(SystemExit):
+        cli.main(["--synth", "10", "--bucket-out", str(tmp_path / "nameless")])
+    with pytest.raises(SystemExit):
+        cli.main(["--synth", "10", "--bucket-out", "table:cat.db.t",
+                  "--bucket-table", "t"])
     with pytest.raises(SystemExit):  # sort knob is relayout-only
         cli.main(["--synth", "10", "--out", "o", "--manifest", "m",
                   "--sort-cols", "conv_id"])

@@ -4,7 +4,7 @@ pipeline job that reads it back with the bucketing visible. Every other
 bucketed-layout test writes and reads in one session — this one pins
 the actual workflow: session A (a real ``logpipe.cli`` subprocess)
 relays out, exits; session B (a fresh interpreter, fresh JVM) opens the
-table by bare name through ``tableio.read_table`` and compiles the
+table as ``table:NAME`` through ``tableio.read_table`` and compiles the
 stitch with ZERO exchanges AND zero sorts over ``Bucketed: true``
 scans — both the bucket spec and the in-bucket sortBy order live in
 the catalog entry, and both must survive the metastore round-trip for
@@ -47,9 +47,9 @@ spark = get_spark(app_name="xsess-b", master="local[4]",
 # this runtime dropped the legacy conf, so the sorts==0 assert below
 # can never silently test a session the conf no-opped in)
 apply_sorted_scan_confs(spark)
-# bare catalog name through the production read seam (round-8 ADVICE:
-# read_table serves catalog tables in non-Iceberg sessions)
-t = read_table(spark, "xs_transcripts_t")
+# the catalog table through the production read seam: table:NAME is
+# served by the built-in (here Hive) catalog in a non-Iceberg session
+t = read_table(spark, "table:xs_transcripts_t")
 out = stitch_multiline(t)
 plan = out._jdf.queryExecution().executedPlan().toString()
 agg = out.groupBy().sum("n_lines").first()
@@ -66,7 +66,7 @@ spark.stop()
 
 def test_bucketed_layout_survives_process_boundary(tmp_path):
     """cli --bucket-out in process A; fresh process B reads the table
-    by name and the whole stitch compiles shuffle-free AND sort-free.
+    as table:NAME and the whole stitch compiles shuffle-free AND sort-free.
     The one link of the layout story no same-session test can
     exercise."""
     wh = str(tmp_path / "warehouse")

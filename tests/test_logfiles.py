@@ -179,15 +179,21 @@ def test_line_splitters_never_emit_trailing_newline(spark, tmp_path):
     assert sorted(texts) == ["one", "two"] and all("\n" not in t for t in texts)
 
 
-def test_skip_long_lines_drops_not_truncates(spark, tmp_path):
-    """Skip_Long_Lines On (docker-runtime.conf:8-9): a line over the
-    buffer cap is DROPPED entirely — distinct from P2 truncation."""
+def test_skip_long_lines_drops_not_truncates(spark, tmp_path, monkeypatch):
+    """Skip_Long_Lines On (docker-runtime.conf:8-9, always on): a line
+    over the buffer cap is DROPPED entirely — distinct from P2
+    truncation. The cap is read at call time, so a lowered cap shows
+    the drop without writing a 10MB fixture."""
+    from logpipe.sources import logfiles
+
     f = tmp_path / "a.log"
     f.write_text(_DOCKER_LINE % "ok" + "\n" + _DOCKER_LINE % ("x" * 2000) + "\n")
 
-    kept = read_docker_logs(spark, str(f), skip_long_lines=1000).collect()
+    monkeypatch.setattr(logfiles, "DEFAULT_MAX_LINE_BYTES", 1000)
+    kept = read_docker_logs(spark, str(f)).collect()
     assert [r["text"] for r in kept] == ["ok"]
-    # without the cap both lines parse
+    # at the real 10MB cap both lines parse
+    monkeypatch.undo()
     assert read_docker_logs(spark, str(f)).count() == 2
 
 

@@ -1,8 +1,9 @@
 """tableio: the Iceberg/parquet table-format seam.
 
-The sandbox has no Iceberg runtime, so these tests pin the properties
-the adapter must hold WITHOUT it: path refs behave exactly like the
-direct parquet writes they replaced, table refs fail fast with
+One rule: 'table:NAME' is a catalog table, every other ref a parquet
+path. The test session has no Iceberg runtime, so these tests pin the
+properties the adapter must hold WITHOUT it: path refs behave exactly
+like the direct parquet writes they replaced, table refs fail fast with
 actionable guidance (not an analyzer stack trace), the readiness probe
 is honest (False here — no catalog, no jars) and reads the SESSION
 conf (runtime-set catalogs count), and the Iceberg branch's writeTo v2
@@ -15,53 +16,11 @@ import pytest
 from logpipe.tableio import (
     SPJ_CONFS,
     _sql_conf_keys,
-    derived_table_name,
     enable_spj,
-    is_table_ref,
     iceberg_ready,
     read_table,
     write_table,
 )
-
-
-def test_is_table_ref_classification(tmp_path, monkeypatch):
-    assert is_table_ref("catalog.db.events")
-    assert is_table_ref("db.events")
-    assert not is_table_ref("/data/events.parquet")
-    assert not is_table_ref("s3://bucket/events")
-    assert not is_table_ref("relative/dir")
-    assert not is_table_ref("events.parquet")
-    assert not is_table_ref("C:\\data\\events")
-    # round-6 ADVICE: a bare relative name (no dot) is a PATH — the old
-    # classification raised RuntimeError on `--transcripts mydata`
-    assert not is_table_ref("mydata")
-    # ...and an EXISTING dotted relative dir wins over the identifier
-    # reading (write `./data.v2` to force the path reading otherwise)
-    monkeypatch.chdir(tmp_path)
-    (tmp_path / "data.v2").mkdir()
-    assert not is_table_ref("data.v2")
-    assert is_table_ref("missing.v2")
-    assert not is_table_ref("./missing.v2")
-
-
-def test_dotted_ref_ignores_local_fs_in_iceberg_session(
-    tmp_path, monkeypatch, spark
-):
-    """In an Iceberg-capable session a dotted name is ALWAYS a table:
-    a stray driver-local `db.events` directory must not reroute a
-    catalog snapshot commit into a relative parquet dir (round-7
-    review — classification would otherwise depend on the driver's
-    CWD and flip run-to-run). `./` still forces the path reading."""
-    import logpipe.tableio as tio
-
-    monkeypatch.chdir(tmp_path)
-    (tmp_path / "db.events").mkdir()
-    # non-Iceberg session (the sandbox reality): existing path wins
-    assert not is_table_ref("db.events", spark)
-    # Iceberg-capable session: catalog wins over local fs state
-    monkeypatch.setattr(tio, "iceberg_ready", lambda s: True)
-    assert is_table_ref("db.events", spark)
-    assert not is_table_ref("./db.events", spark)
 
 
 def test_iceberg_not_ready_in_sandbox(spark):
@@ -137,7 +96,7 @@ def test_iceberg_write_contract_overwrite_partitioned(spark, iceberg_contract):
     the requested columns in order, then ONE createOrReplace (the
     single-snapshot-commit overwrite) and nothing else."""
     df = spark.range(3).selectExpr("id", "cast(id % 2 as string) as sink")
-    write_table(df, "cat.db.events", mode="overwrite", partition_by=("sink", "id"))
+    write_table(df, "table:cat.db.events", mode="overwrite", partition_by=("sink", "id"))
     (w,) = iceberg_contract
     assert w.ref == "cat.db.events"
     assert w.calls == [
@@ -150,21 +109,21 @@ def test_iceberg_write_contract_overwrite_partitioned(spark, iceberg_contract):
 def test_iceberg_write_contract_append_unpartitioned(spark, iceberg_contract):
     """append -> using('iceberg') then append(); no partitionedBy, no
     createOrReplace (append must never replace a table)."""
-    write_table(spark.range(3), "cat.db.events", mode="append")
+    write_table(spark.range(3), "table:cat.db.events", mode="append")
     (w,) = iceberg_contract
     assert w.calls == [("using", "iceberg"), ("append",)]
 
 
 def test_iceberg_write_contract_rejects_other_modes(spark, iceberg_contract):
     with pytest.raises(ValueError, match="unsupported mode"):
-        write_table(spark.range(3), "cat.db.events", mode="ignore")
+        write_table(spark.range(3), "table:cat.db.events", mode="ignore")
     (w,) = iceberg_contract
     assert ("createOrReplace",) not in w.calls
     assert ("append",) not in w.calls
 
 
 def test_iceberg_read_contract_routes_via_catalog(spark, monkeypatch):
-    """A table ref must be served by spark.read.table(ref) — the
+    """A table:NAME ref must be served by spark.read.table(NAME) — the
     catalog path — never spark.read.parquet."""
     import logpipe.tableio as tio
     from pyspark.sql import SparkSession
@@ -184,15 +143,15 @@ def test_iceberg_read_contract_routes_via_catalog(spark, monkeypatch):
     monkeypatch.setattr(
         SparkSession, "read", property(lambda self: _FakeReader())
     )
-    assert read_table(spark, "cat.db.events") == "sentinel-df"
+    assert read_table(spark, "table:cat.db.events") == "sentinel-df"
     assert calls == [("table", "cat.db.events")]
 
 
 def test_table_ref_without_iceberg_raises_actionable_error(spark):
     with pytest.raises(RuntimeError, match="spark.sql.catalog"):
-        read_table(spark, "cat.db.events")
+        read_table(spark, "table:cat.db.events")
     with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
-        write_table(spark.range(3), "cat.db.events")
+        write_table(spark.range(3), "table:cat.db.events")
 
 
 def test_path_branch_matches_direct_parquet_write(spark, tmp_path):
@@ -225,48 +184,6 @@ def test_path_branch_unpartitioned_roundtrip(spark, tmp_path):
     out = str(tmp_path / "flat")
     assert write_table(spark.range(7), out) is None
     assert read_table(spark, out).count() == 7
-
-
-def test_ref_exists_uses_default_fs_when_not_local(spark, tmp_path, monkeypatch):
-    """Round-7 ADVICE: Spark resolves relative paths against the
-    session's DEFAULT filesystem. On a DFS-default cluster a dotted
-    dir that exists only on the DFS must classify as a path, and a
-    stray driver-local dir must NOT flip a table read. The sandbox
-    default FS is local (where os.path.exists IS the right oracle —
-    pinned first), so the DFS regime is driven through a fake
-    FileSystem bridge."""
-    import logpipe.tableio as tio
-
-    bridge = tio._default_fs(spark)
-    assert bridge is not None and bridge[1].getUri().getScheme() == "file"
-
-    monkeypatch.chdir(tmp_path)
-    (tmp_path / "local.only").mkdir()
-
-    class _FakeUri:
-        def getScheme(self):
-            return "hdfs"
-
-    class _FakeFS:
-        def getUri(self):
-            return _FakeUri()
-
-        def exists(self, path):
-            return path == "dfs.only"
-
-    monkeypatch.setattr(tio, "_default_fs", lambda s: (lambda p: p, _FakeFS()))
-    # exists on the DFS -> path reading wins
-    assert not is_table_ref("dfs.only", spark)
-    # local-only dir is invisible to the default FS -> table reading
-    assert is_table_ref("local.only", spark)
-    # without a session the local check still applies
-    assert not is_table_ref("local.only")
-
-
-def test_derived_table_name():
-    assert derived_table_name("/data/corpus-v2.bucketed/") == "corpus_v2_bucketed"
-    assert derived_table_name("7days") == "t_7days"
-    assert derived_table_name("/") == "table"
 
 
 def test_spj_confs_roundtrip(spark):
@@ -342,7 +259,7 @@ def test_iceberg_write_contract_bucket_transform(spark, iceberg_contract):
     any identity partition columns, then one createOrReplace."""
     df = spark.range(3).selectExpr("id as doc_id", "cast(id as string) as lang")
     assert write_table(
-        df, "cat.db.corpus", mode="overwrite",
+        df, "table:cat.db.corpus", mode="overwrite",
         partition_by=("lang",), bucket_by=(32, "doc_id"),
     ) is None
     (w,) = iceberg_contract
@@ -359,9 +276,9 @@ def test_iceberg_bucket_rejects_path_only_knobs(spark, iceberg_contract):
     loudly instead of silently not applying."""
     df = spark.range(3).selectExpr("id as doc_id")
     with pytest.raises(ValueError, match="path-branch"):
-        write_table(df, "cat.db.corpus", bucket_by=(8, "doc_id"), sort_by=("doc_id",))
+        write_table(df, "table:cat.db.corpus", bucket_by=(8, "doc_id"), sort_by=("doc_id",))
     with pytest.raises(ValueError, match="path-branch"):
-        write_table(df, "cat.db.corpus", bucket_by=(8, "doc_id"), table_name="x")
+        write_table(df, "table:cat.db.corpus", bucket_by=(8, "doc_id"), table_name="x")
 
 
 def test_write_table_bucket_spec_validation(spark, tmp_path):
@@ -373,93 +290,17 @@ def test_write_table_bucket_spec_validation(spark, tmp_path):
         write_table(spark.range(3), str(tmp_path / "b"), sort_by=("id",))
     with pytest.raises(ValueError, match="bucketed path"):
         write_table(spark.range(3), str(tmp_path / "b"), table_name="x")
+    # a bucketed PATH write names its catalog entry: nothing derives one
+    with pytest.raises(ValueError, match="table_name"):
+        write_table(spark.range(3), str(tmp_path / "b"), bucket_by=(2, "id"))
+    assert not (tmp_path / "b").exists()
     # same misuse on a TABLE ref must raise identically, not silently
     # drop the knobs on the Iceberg branch (round-8 review) — validated
     # before branching, so no Iceberg stubs are needed
     with pytest.raises(ValueError, match="bucketed path"):
-        write_table(spark.range(3), "cat.db.t", sort_by=("id",))
+        write_table(spark.range(3), "table:cat.db.t", sort_by=("id",))
     with pytest.raises(ValueError, match="bucketed path"):
-        write_table(spark.range(3), "cat.db.t", table_name="x")
-
-
-def test_bucketed_write_derived_name_collision_guarded(spark, tmp_path):
-    """A basename-derived table name that already exists and points at
-    a DIFFERENT path must raise (overwriting would silently repoint
-    every spark.table() reader of the first corpus); rewriting the
-    SAME location stays allowed, and an explicit table_name opts out
-    (round-8 review)."""
-    df = spark.range(10).selectExpr("id as doc_id")
-    a = str(tmp_path / "a" / "corpus")
-    b = str(tmp_path / "b" / "corpus")
-    try:
-        assert write_table(df, a, bucket_by=(2, "doc_id")) == "corpus"
-        # same path again: a legitimate re-layout, allowed
-        assert write_table(df, a, bucket_by=(2, "doc_id")) == "corpus"
-        with pytest.raises(ValueError, match="repoint"):
-            write_table(df, b, bucket_by=(2, "doc_id"))
-        # explicit name: the caller took responsibility
-        assert write_table(
-            df, b, bucket_by=(2, "doc_id"), table_name="corpus_b"
-        ) == "corpus_b"
-    finally:
-        spark.sql("DROP TABLE IF EXISTS corpus")
-        spark.sql("DROP TABLE IF EXISTS corpus_b")
-
-
-def test_ref_exists_dfs_error_prefers_identifier(spark, tmp_path, monkeypatch):
-    """When the (authoritative, non-local) default FS cannot be probed,
-    driver-local state must NOT decide: the dotted ref classifies as a
-    table, so a non-Iceberg session fails loudly in _require_iceberg
-    instead of silently writing a relative local dir (round-8
-    review)."""
-    import logpipe.tableio as tio
-
-    monkeypatch.chdir(tmp_path)
-    (tmp_path / "stray.dir").mkdir()
-
-    class _Uri:
-        def getScheme(self):
-            return "hdfs"
-
-    class _BrokenFS:
-        def getUri(self):
-            return _Uri()
-
-        def exists(self, path):
-            raise RuntimeError("rpc timeout")
-
-    monkeypatch.setattr(tio, "_default_fs", lambda s: (lambda p: p, _BrokenFS()))
-    assert is_table_ref("stray.dir", spark)
-
-
-def test_ref_exists_scheme_from_uri_not_getscheme(spark, tmp_path, monkeypatch):
-    """The default-FS scheme probe must use fs.getUri().getScheme():
-    some FileSystem impls (ViewFileSystem) THROW from getScheme(), and
-    a probe that treated the throw as 'local rules' would let a stray
-    driver-local dir flip a table ref on exactly the DFS-default
-    clusters the check protects (round-8 ADVICE)."""
-    import logpipe.tableio as tio
-
-    monkeypatch.chdir(tmp_path)
-    (tmp_path / "viewfs.stray").mkdir()  # driver-local only
-
-    class _Uri:
-        def getScheme(self):
-            return "viewfs"
-
-    class _ViewFS:
-        def getScheme(self):  # ViewFileSystem behavior
-            raise RuntimeError("UnsupportedOperationException")
-
-        def getUri(self):
-            return _Uri()
-
-        def exists(self, path):
-            return False  # the authoritative DFS has no such dir
-
-    monkeypatch.setattr(tio, "_default_fs", lambda s: (lambda p: p, _ViewFS()))
-    # non-local rules apply: the driver-local dir must NOT flip the ref
-    assert is_table_ref("viewfs.stray", spark)
+        write_table(spark.range(3), "table:cat.db.t", table_name="x")
 
 
 def test_path_branch_bucketed_write_roundtrip(spark, tmp_path):
@@ -485,14 +326,13 @@ def test_path_branch_bucketed_write_roundtrip(spark, tmp_path):
 
 
 def test_read_table_serves_builtin_catalog_table(spark, tmp_path, monkeypatch):
-    """Round-8 ADVICE: the CLI must be able to CONSUME the layout
-    --bucket-out produces. A bare name that exists only in the session
-    catalog reads via the catalog (bucket metadata intact, pinned via
-    the bucketed scan); the dotted default.NAME spelling resolves
-    through the built-in catalog too instead of demanding Iceberg;
-    'table:NAME' forces the catalog reading explicitly; and an
-    existing path still wins over the implicit catalog reading
-    (round-6 contract: --transcripts mydata keeps reading a dir)."""
+    """The CLI must be able to CONSUME the layout --bucket-out
+    produces: 'table:NAME' reads a name the session's built-in catalog
+    resolves through the catalog (bucket metadata intact, pinned via
+    the bucketed scan), and the dotted default.NAME spelling resolves
+    there too instead of demanding Iceberg. Without the prefix nothing
+    is inferred: a ref is a parquet path even when the catalog holds a
+    table of that name and even in an Iceberg-capable session."""
     from pyspark.sql import functions as F
 
     df = spark.range(50).selectExpr("id as doc_id")
@@ -500,8 +340,7 @@ def test_read_table_serves_builtin_catalog_table(spark, tmp_path, monkeypatch):
     name = write_table(df, out, bucket_by=(2, "doc_id"), table_name="advice_bkt_t")
     try:
         assert name == "advice_bkt_t"
-        # bare catalog name, no such path -> catalog read with bucketing
-        got = read_table(spark, "advice_bkt_t")
+        got = read_table(spark, "table:advice_bkt_t")
         assert got.count() == 50
         plan = (
             got.groupBy("doc_id").agg(F.count("*"))
@@ -509,16 +348,10 @@ def test_read_table_serves_builtin_catalog_table(spark, tmp_path, monkeypatch):
         )
         assert "Bucketed: true" in plan, plan
         # dotted spelling: built-in catalog serves it, no Iceberg error
-        assert read_table(spark, "default.advice_bkt_t").count() == 50
-        # explicit spelling
-        assert read_table(spark, "table:advice_bkt_t").count() == 50
+        assert read_table(spark, "table:default.advice_bkt_t").count() == 50
 
-        # existing path beats the implicit catalog reading (routing
-        # pinned via a fake reader: the driver's Python CWD and the
-        # JVM's CWD differ under chdir, so a real relative read can't
-        # exercise this leg)
-        monkeypatch.chdir(tmp_path)
-        (tmp_path / "advice_bkt_t").mkdir()
+        # unprefixed refs are paths, whatever the catalog or session
+        # can serve (routing pinned via a fake reader)
         import logpipe.tableio as tio
         from pyspark.sql import SparkSession
 
@@ -533,15 +366,13 @@ def test_read_table_serves_builtin_catalog_table(spark, tmp_path, monkeypatch):
                 calls.append(("parquet", ref))
                 return "path-branch"
 
+        monkeypatch.setattr(tio, "iceberg_ready", lambda s: True)
         monkeypatch.setattr(
             SparkSession, "read", property(lambda self: _FakeReader())
         )
+        assert read_table(spark, "db.events") == "path-branch"
         assert read_table(spark, "advice_bkt_t") == "path-branch"
-        # ...and table: is the escape hatch when both exist
-        assert read_table(spark, "table:advice_bkt_t") == "catalog-branch"
-        assert calls == [
-            ("parquet", "advice_bkt_t"), ("table", "advice_bkt_t")
-        ]
+        assert calls == [("parquet", "db.events"), ("parquet", "advice_bkt_t")]
     finally:
         spark.sql("DROP TABLE IF EXISTS advice_bkt_t")
 
@@ -562,24 +393,6 @@ def test_single_file_buckets_rejects_partition_by(spark, tmp_path):
             table_name="sfb_reject_t",
         )
     assert not spark.catalog.tableExists("sfb_reject_t")
-
-
-def test_bucketed_write_unknown_location_refuses(spark, tmp_path, monkeypatch):
-    """When the existing same-named table's location cannot be
-    DETERMINED, the derived-name write must refuse rather than guess
-    (round-8 ADVICE: proceeding could silently repoint readers — the
-    exact hole the collision guard exists to close)."""
-    import logpipe.tableio as tio
-
-    df = spark.range(5).selectExpr("id as doc_id")
-    a = str(tmp_path / "loc" / "corpus_u")
-    try:
-        assert write_table(df, a, bucket_by=(2, "doc_id")) == "corpus_u"
-        monkeypatch.setattr(tio, "_table_location", lambda s, n: None)
-        with pytest.raises(ValueError, match="undeterminable"):
-            write_table(df, a, bucket_by=(2, "doc_id"))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS corpus_u")
 
 
 def test_iceberg_integration_spj_rejoin(spark, tmp_path):
@@ -626,14 +439,14 @@ def test_iceberg_integration_spj_rejoin(spark, tmp_path):
             F.col("id").alias("doc_id"),
             (F.col("id") % 3 == 0).alias("keep"),
         )
-        write_table(corpus, "it_test.db.corpus", bucket_by=(8, "doc_id"))
-        write_table(verdicts, "it_test.db.verdicts", bucket_by=(8, "doc_id"))
+        write_table(corpus, "table:it_test.db.corpus", bucket_by=(8, "doc_id"))
+        write_table(verdicts, "table:it_test.db.verdicts", bucket_by=(8, "doc_id"))
 
         prev = enable_spj(spark)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            c = read_table(spark, "it_test.db.corpus")
-            v = read_table(spark, "it_test.db.verdicts")
+            c = read_table(spark, "table:it_test.db.corpus")
+            v = read_table(spark, "table:it_test.db.verdicts")
             joined = c.join(v, "doc_id").filter(F.col("keep"))
             plan = joined._jdf.queryExecution().executedPlan().toString()
             # the storage-partitioned join: both sides grouped by the
