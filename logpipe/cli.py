@@ -181,8 +181,16 @@ def main(argv: list[str] | None = None) -> None:
                 "catalog entry that carries the bucket spec) and rejected "
                 "with a table:NAME one"
             )
-    elif sort_cols is not None or args.single_file_buckets:
-        p.error("--sort-cols/--single-file-buckets only apply to --bucket-out")
+    elif (
+        sort_cols is not None
+        or args.single_file_buckets
+        or args.bucket_table is not None
+        or args.bucket_n is not None
+    ):
+        p.error(
+            "--sort-cols/--single-file-buckets/--bucket-table/--bucket-n "
+            "only apply to --bucket-out"
+        )
     bad_conf = [c for c in args.conf if "=" not in c]
     if bad_conf:
         p.error(f"--conf takes K=V, got {bad_conf[0]!r}")

@@ -33,11 +33,15 @@ hardcoded operators.route (a union formulation would re-read the input
 and re-run the upstream joins once per re-injection round; at 100TB
 that's k extra full passes).
 
-The literal-tag reachability graph is still walked driver-side first
-(_reentry_rounds) to REJECT cyclic configs loudly — a tag cycle would
-loop forever in fluent-bit too; here it's a plan-time error.
-(Capture-group tags would force a data-dependent fixpoint loop with a
-count() per round; unsupported, loudly.)
+The expansion also refuses cyclic configs: it carries the path of
+literal tags it is inside, and a tag that re-enters its own path is a
+loop fluent-bit would spin on forever — here a plan-time ValueError
+naming the loop. The input-tag expansion tests every stage's Match at
+runtime, so every rule is reached from it and every cycle is found
+before any job runs; an acyclic config expands to a depth of at most
+its number of distinct literal tags. (Capture-group tags would force
+a data-dependent fixpoint loop with a count() per round; unsupported,
+loudly.)
 """
 
 from __future__ import annotations
@@ -140,112 +144,68 @@ def parse_rewrite_tag_conf(text: str) -> list[Stage]:
     return stages
 
 
-def _reentry_rounds(stages: list[Stage], max_rounds: int = 8) -> int:
-    """How many re-injection rounds literal-tag reachability needs.
-
-    Walks new_tag -> matching-stage edges; raises on depth > max_rounds
-    (a tag cycle would loop forever in fluent-bit too — emitter loops
-    are a misconfiguration there; here they're a plan-time error).
-    """
-    def matches_some_stage(tag: str) -> bool:
-        return any(re.match(glob_to_regex(s.match), tag) for s in stages)
-
-    frontier = {
-        r.new_tag for s in stages for r in s.rules if matches_some_stage(r.new_tag)
-    }
-    rounds = 1
-    while frontier:
-        rounds += 1
-        if rounds > max_rounds:
-            raise ValueError(
-                "rewrite_tag: tag re-emission graph does not terminate "
-                f"within {max_rounds} rounds (cycle in new_tag -> Match edges?)"
-            )
-        nxt = set()
-        for s in stages:
-            glob_re = glob_to_regex(s.match)
-            if any(re.match(glob_re, t) for t in frontier):
-                for r in s.rules:
-                    if matches_some_stage(r.new_tag):
-                        nxt.add(r.new_tag)
-        if nxt == frontier:  # reached a fixpoint that keeps re-matching
-            raise ValueError(
-                "rewrite_tag: cyclic re-emission between tags "
-                f"{sorted(frontier)} — fluent-bit would loop; refusing"
-            )
-        frontier = nxt
-    return rounds
-
-
 def _empty_tags() -> Column:
     return F.array().cast("array<string>")
 
 
+def _covered(stage: Stage, tag: str) -> bool:
+    return re.match(glob_to_regex(stage.match), tag) is not None
+
+
 def _final_tags_expr(
     stages: list[Stage],
-    tag: Column | None,
-    tag_literal: str | None,
-    depth: int,
+    tag: Column | str,
     conds: dict[tuple[int, int], Column],
     matches: dict[int, Column],
+    path: tuple[str, ...] = (),
 ) -> Column:
     """Array of FINAL tags a record ends up under, cascade + re-injection
-    fully expanded. ``tag_literal`` set = we're expanding the trajectory
-    of an emitted copy whose tag is known at plan time (stage Match
-    tests collapse to plan-time booleans); otherwise ``tag`` is the
-    input tag column. ``conds``/``matches`` are PRE-MATERIALIZED boolean
-    columns (one per rule regex / stage glob) — the expression here is
-    pure boolean algebra over them, so referencing a rule's condition
-    several times (fire, first-match mask, consumed) never duplicates
-    the underlying accessor expression: Catalyst does not inline a
-    non-cheap expression that is referenced more than once, so each
-    accessor is evaluated once per row."""
-    if depth < 0:  # _reentry_rounds bounds recursion; this is a backstop
-        raise RuntimeError("rewrite_tag: re-emission recursion exceeded bound")
+    fully expanded. ``tag`` is either the input tag column (every stage
+    Match is a runtime test) or the literal tag of an emitted copy (the
+    Match tests collapse to plan-time booleans). A literal tag no stage
+    covers is terminal; one already on ``path`` — the literal tags this
+    expansion is nested in — is a cycle and raises.
+
+    ``conds``/``matches`` are PRE-MATERIALIZED boolean columns (one per
+    rule regex / stage glob) — the expression here is pure boolean
+    algebra over them, so referencing a rule's condition several times
+    (fire, first-match mask, consumed) never duplicates the underlying
+    accessor expression: Catalyst does not inline a non-cheap expression
+    that is referenced more than once, so each accessor is evaluated
+    once per row."""
+    literal = isinstance(tag, str)
+    if literal:
+        if not any(_covered(s, tag) for s in stages):
+            return F.array(F.lit(tag))
+        if tag in path:
+            loop = " -> ".join(path[path.index(tag):] + (tag,))
+            raise ValueError(f"rewrite_tag: cyclic re-emission: {loop}")
+        path = path + (tag,)
     alive: Column = F.lit(True)
     parts: list[Column] = []
     for si, stage in enumerate(stages):
-        glob_re = glob_to_regex(stage.match)
-        if tag_literal is not None:
-            if not re.match(glob_re, tag_literal):
-                continue
+        if not literal:
+            applicable = alive & matches[si]
+        elif _covered(stage, tag):
             applicable = alive
         else:
-            applicable = alive & matches[si]
+            continue
         # first-match-wins: rule i fires iff applicable and rules <i missed
         prev_miss: Column = F.lit(True)
         consumed: Column | None = None
         for ri, r in enumerate(stage.rules):
             cond = conds[(si, ri)]
             fire = applicable & prev_miss & cond
-            parts.append(
-                F.when(
-                    fire, _literal_finals(stages, r.new_tag, depth, conds, matches)
-                ).otherwise(_empty_tags())
-            )
+            finals = _final_tags_expr(stages, r.new_tag, conds, matches, path)
+            parts.append(F.when(fire, finals).otherwise(_empty_tags()))
             if not r.keep:
                 consumed = fire if consumed is None else (consumed | fire)
             prev_miss = prev_miss & ~cond
         if consumed is not None:
             alive = alive & ~consumed
-    survivor_tag = F.lit(tag_literal) if tag_literal is not None else tag
+    survivor_tag = F.lit(tag) if literal else tag
     survivor = F.when(alive, F.array(survivor_tag)).otherwise(_empty_tags())
     return F.concat(*parts, survivor) if parts else survivor
-
-
-def _literal_finals(
-    stages: list[Stage],
-    new_tag: str,
-    depth: int,
-    conds: dict[tuple[int, int], Column],
-    matches: dict[int, Column],
-) -> Column:
-    """Final tags of an emitted copy with literal tag ``new_tag``: if no
-    stage's Match glob covers it, it is terminal; otherwise expand its
-    pass through the cascade (one recursion level per re-injection)."""
-    if not any(re.match(glob_to_regex(s.match), new_tag) for s in stages):
-        return F.array(F.lit(new_tag))
-    return _final_tags_expr(stages, None, new_tag, depth - 1, conds, matches)
 
 
 def apply_rewrite_tags(
@@ -255,7 +215,8 @@ def apply_rewrite_tags(
     (surviving originals keep their tag; emitted copies carry new_tag),
     all other columns passed through verbatim. Two projections + one
     generator — the input is scanned once regardless of how many
-    re-injection rounds the config implies.
+    re-injection rounds the config implies. Raises ValueError on a
+    cyclic config, before any job runs.
 
     The first projection materializes every rule condition and stage
     Match test ONCE as a boolean column; the finals expression is
@@ -264,45 +225,31 @@ def apply_rewrite_tags(
     more than once, so an accessor column is evaluated once per row
     instead of once per reference.
     """
-    rounds = _reentry_rounds(stages)  # also rejects cyclic configs
-
-    cond_cols: dict[tuple[int, int], str] = {}
-    match_cols: dict[int, str] = {}
-    staged = df
+    matches: dict[int, Column] = {}
+    conds: dict[tuple[int, int], Column] = {}
+    helpers: list[Column] = []
     for si, stage in enumerate(stages):
-        mc = f"_rw_m{si}"
-        match_cols[si] = mc
-        staged = staged.withColumn(
-            mc, F.col(tag_col).rlike(glob_to_regex(stage.match))
+        matches[si] = F.col(f"_rw_m{si}")
+        helpers.append(
+            F.col(tag_col).rlike(glob_to_regex(stage.match)).alias(f"_rw_m{si}")
         )
         for ri, r in enumerate(stage.rules):
-            cc = f"_rw_c{si}_{ri}"
-            cond_cols[(si, ri)] = cc
-            staged = staged.withColumn(
-                cc,
-                F.coalesce(
-                    parse_accessor(r.key).cast("string").rlike(r.regex), F.lit(False)
-                ),
-            )
+            conds[(si, ri)] = F.col(f"_rw_c{si}_{ri}")
+            cond = parse_accessor(r.key).cast("string").rlike(r.regex)
+            helpers.append(F.coalesce(cond, F.lit(False)).alias(f"_rw_c{si}_{ri}"))
 
-    finals = _final_tags_expr(
-        stages,
-        F.col(tag_col),
-        None,
-        rounds,
-        {k: F.col(v) for k, v in cond_cols.items()},
-        {k: F.col(v) for k, v in match_cols.items()},
-    )
-    # withColumn + explode + drop, NOT select(explode, *others): the
-    # select form asks the optimizer to rebuild every passthrough
-    # column inside the Generate's child projection; this shape is the
-    # same one operators.route uses
-    helper = list(cond_cols.values()) + list(match_cols.values())
+    finals = _final_tags_expr(stages, F.col(tag_col), conds, matches)
+    # withColumn(explode), NOT select(explode, *others): the select form
+    # asks the optimizer to rebuild every passthrough column inside the
+    # Generate's child projection; this shape is the same one
+    # operators.route uses. The last select drops the helpers and puts
+    # the final tag back in the input's column order.
     return (
-        staged.withColumn("_rw_final_tag", F.explode(finals))
-        .drop(tag_col, *helper)
-        .withColumnRenamed("_rw_final_tag", tag_col)
-        .select(*df.columns)  # restore original column order
+        df.select("*", *helpers)
+        .withColumn("_rw_final_tag", F.explode(finals))
+        .select(
+            *(F.col("_rw_final_tag").alias(c) if c == tag_col else c for c in df.columns)
+        )
     )
 
 

@@ -51,7 +51,6 @@ from __future__ import annotations
 
 from logpipe.plans.registry import (  # noqa: F401  (public machinery)
     QueryFn,
-    _REGISTRY,
     _docs,
     oracle_sql,
     queries,
@@ -77,7 +76,7 @@ for _mod in (_q_pipeline, _q_traindata, _q_curation):
         if _prev is not _val and _name not in (
             # shared imports each section module legitimately re-holds
             "F", "Window", "DataFrame", "SparkSession", "annotations",
-            "parse", "run_pipeline", "register", "_docs", "_REGISTRY",
+            "parse", "run_pipeline", "register", "_docs",
             "events_as_transcripts", "events_k8s_meta",
             "events_tool_meta", "load_events",
         ):

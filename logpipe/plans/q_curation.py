@@ -31,7 +31,7 @@ from logpipe.plans.q_traindata import (
     _pii_suffix_cols,
     _pii_suffix_sql,
 )
-from logpipe.plans.registry import _REGISTRY, _docs, register
+from logpipe.plans.registry import _docs, register
 from logpipe.sources.events import (
     events_as_transcripts,
     events_k8s_meta,
@@ -302,7 +302,7 @@ WITH RECURSIVE base AS (
 ), {_curation_tail_sql()}"""
 
 
-@register("curated_corpus_v5", None)  # SQL attached below (needs builder)
+@register("curated_corpus_v5", _curated_corpus_v5_sql())
 def curated_corpus_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TOTAL curation DAG: every shipped curation operator in ONE
     hash-matched query, with duplicate_span_trim's output (Lee et al.
@@ -426,12 +426,6 @@ def curated_corpus_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (ts.quality_score(F.col("text")) >= 0.6)
     ).select("doc_id", "source", ts.redact_pii(F.col("text")).alias("text"))
     return _curation_tail(kept)
-
-
-_REGISTRY["curated_corpus_v5"] = (
-    _REGISTRY["curated_corpus_v5"][0],
-    _curated_corpus_v5_sql(),
-)
 
 
 @register("streaming_route_counts", _FLAGSHIP_SQL)
@@ -568,7 +562,7 @@ FROM cand WHERE bit_count(xor(sa, sb)) <= {max_hamming}
 """
 
 
-@register("simhash_near_dups", None)
+@register("simhash_near_dups", _simhash_pairs_sql())
 def simhash_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs; the oracle recomputes the 64-bit
     signatures from scratch in SQL, so this row also gates
@@ -578,12 +572,6 @@ def simhash_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logpipe.traindata.dedup import simhash_near_dups
 
     return simhash_near_dups(_docs(spark, sf_dir), max_hamming=3, bands=4)
-
-
-_REGISTRY["simhash_near_dups"] = (
-    _REGISTRY["simhash_near_dups"][0],
-    _simhash_pairs_sql(),
-)
 
 
 # --- similarity search ----------------------------------------------------
@@ -667,7 +655,7 @@ SELECT id_a, id_b, cosine FROM v WHERE cosine >= {threshold}
 """
 
 
-@register("cosine_lsh_near_dups", None)  # SQL attached below (needs builder)
+@register("cosine_lsh_near_dups", _cosine_lsh_near_dups_sql())
 def cosine_lsh_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100TB embedding-dedup path (bucketed). ann.cosine_near_dups
     is its O(n²) exactness oracle — its own registry slot was folded
@@ -679,12 +667,6 @@ def cosine_lsh_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return cosine_lsh_near_dups(emb, threshold=0.4, n_planes=3, n_tables=12)
-
-
-_REGISTRY["cosine_lsh_near_dups"] = (
-    _REGISTRY["cosine_lsh_near_dups"][0],
-    _cosine_lsh_near_dups_sql(),
-)
 
 
 def _ann_lsh_topk_sql(k: int = 5, n_planes: int = 4, n_tables: int = 4) -> str:
@@ -711,23 +693,12 @@ WHERE rn <= {k}
 """
 
 
-@register("ann_lsh_topk", None)  # SQL attached below (needs builder)
+@register("ann_lsh_topk", _ann_lsh_topk_sql())
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logpipe.traindata.ann import lsh_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return lsh_topk(emb, query_ids=list(range(8)), k=5)
-
-
-_REGISTRY["ann_lsh_topk"] = (_REGISTRY["ann_lsh_topk"][0], _ann_lsh_topk_sql())
-
-
-@register("ann_ivf_topk", None)  # SQL attached below (needs builder)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from logpipe.traindata.ann import ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ivf_topk(emb, query_ids=list(range(8)), k=5, n_centroids=16, n_probe=4)
 
 
 def _ann_ivf_topk_sql(k: int = 5, n_centroids: int = 16, n_probe: int = 4) -> str:
@@ -772,4 +743,9 @@ WHERE rn <= {k}
 """
 
 
-_REGISTRY["ann_ivf_topk"] = (_REGISTRY["ann_ivf_topk"][0], _ann_ivf_topk_sql())
+@register("ann_ivf_topk", _ann_ivf_topk_sql())
+def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from logpipe.traindata.ann import ivf_topk
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return ivf_topk(emb, query_ids=list(range(8)), k=5, n_centroids=16, n_probe=4)

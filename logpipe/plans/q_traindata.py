@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from logpipe.plans.registry import _REGISTRY, _docs, register
+from logpipe.plans.registry import _docs, register
 
 # ===========================================================================
 # Training-data pipeline operators (dedup / similarity / text analysis)
@@ -754,7 +754,7 @@ LEFT JOIN per_doc ON t.doc_id = per_doc.doc_id
 """
 
 
-@register("textstats_profile", None)  # SQL attached below (needs builder)
+@register("textstats_profile", _textstats_profile_sql())
 def textstats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-doc text-analysis PROFILE: token counts (whitespace +
     BPE-ish), quality score, language ID, repetition signals
@@ -785,11 +785,6 @@ def textstats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return base.join(ts.top_token_stats(d), "doc_id")
 
-
-_REGISTRY["textstats_profile"] = (
-    _REGISTRY["textstats_profile"][0],
-    _textstats_profile_sql(),
-)
 
 
 # --- dataset assembly -------------------------------------------------------
@@ -1022,14 +1017,12 @@ SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= {threshold}
 """
 
 
-@register("minhash_lsh_dups", None)  # SQL attached below (needs builder)
+@register("minhash_lsh_dups", _minhash_sql())
 def minhash_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logpipe.traindata.dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(_docs(spark, sf_dir), n=2, k=32, bands=8, threshold=0.1)
 
-
-_REGISTRY["minhash_lsh_dups"] = (_REGISTRY["minhash_lsh_dups"][0], _minhash_sql())
 
 
 def _closure_ctes(pairs_cte: str = "mh", seed_cte: str = "documents") -> str:
@@ -1067,7 +1060,7 @@ SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id FROM cl
 """
 
 
-@register("near_dup_clusters", None)  # SQL attached below (needs builder)
+@register("near_dup_clusters", _near_dup_clusters_sql())
 def near_dup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignment over the minhash near-dup graph
     (min-label propagation; the 'keep one per cluster' dedup step)."""
@@ -1076,13 +1069,8 @@ def near_dup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_clusters(_docs(spark, sf_dir), n=2, k=32, bands=8, threshold=0.1)
 
 
-_REGISTRY["near_dup_clusters"] = (
-    _REGISTRY["near_dup_clusters"][0],
-    _near_dup_clusters_sql(),
-)
 
-
-@register("near_dup_clusters_star", None)  # same closure oracle, attached below
+@register("near_dup_clusters_star", _near_dup_clusters_sql())
 def near_dup_clusters_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al.) — the diameter-independent engine; must produce
@@ -1094,11 +1082,6 @@ def near_dup_clusters_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs(spark, sf_dir), n=2, k=32, bands=8, threshold=0.1
     )
 
-
-_REGISTRY["near_dup_clusters_star"] = (
-    _REGISTRY["near_dup_clusters_star"][0],
-    _near_dup_clusters_sql(),
-)
 
 
 def _near_dup_survivors_sql(threshold: float = 0.1) -> str:
@@ -1114,7 +1097,7 @@ GROUP BY d.lang
 """
 
 
-@register("near_dup_survivors", None)  # SQL attached below (needs builder)
+@register("near_dup_survivors", _near_dup_survivors_sql())
 def near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dedup OUTPUT: keep one doc per duplicate cluster (the
     min-id winner), reported per lang. Non-vacuous on this data (the
@@ -1130,11 +1113,6 @@ def near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_survivors"))
     )
 
-
-_REGISTRY["near_dup_survivors"] = (
-    _REGISTRY["near_dup_survivors"][0],
-    _near_dup_survivors_sql(),
-)
 
 
 def _pii_redact_sql(col: str) -> str:

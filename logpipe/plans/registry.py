@@ -3,10 +3,8 @@
 The registry is ONE ordered dict: modules register gates in import
 order (logpipe.plans.driver_queries imports the gate modules in the
 canonical order, so the driver's 50-query correctness window sees the
-same sequence the single-file layout had). ``register`` is the normal
-path; the attach-below pattern (``_REGISTRY[name] = (fn, sql)``) lets
-a gate attach an oracle built AFTER registration (builder-dependent
-SQL) — both mutate this module's shared dict.
+same sequence the single-file layout had). ``register`` is the one
+path in: every gate registers with its DuckDB oracle SQL.
 """
 
 from __future__ import annotations
@@ -17,10 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-_REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
+_REGISTRY: dict[str, tuple[QueryFn, str]] = {}
 
 
-def register(name: str, sql: str | None):
+def register(name: str, sql: str):
     def deco(fn: QueryFn):
         _REGISTRY[name] = (fn, sql)
         return fn
@@ -33,7 +31,7 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {k: v[1] for k, v in _REGISTRY.items() if v[1] is not None}
+    return {k: v[1] for k, v in _REGISTRY.items()}
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

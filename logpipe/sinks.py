@@ -23,7 +23,7 @@ an atomic rename-based commit protocol; per-batch atomicity -> the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALTS = 16
@@ -51,7 +51,6 @@ def write_sinks(
     base_path: str,
     n_partitions: int = 32,
     n_salts: int = DEFAULT_SALTS,
-    mode: str = "overwrite",
 ) -> None:
     """One pass, one shuffle: fan all routed rows out to
     {base_path}/sink=<container|job|export>/... parquet.
@@ -62,17 +61,14 @@ def write_sinks(
     """
     with_collector = log_events.withColumn(
         "collector",
-        F.when(
-            F.col("sink") == "export",
-            F.coalesce(F.col("labels")["monitor_log_collector"], F.lit("unknown")),
-        ).otherwise(F.lit("-")),
+        F.when(F.col("sink") == "export", _collector()).otherwise(F.lit("-")),
     )
     salted = salted_repartition(with_collector, "sink", n_partitions, n_salts)
     # tableio: a path ref writes a parquet dir (every committed test);
     # a table:NAME ref would commit an Iceberg snapshot
     from logpipe.tableio import write_table
 
-    write_table(salted, base_path, mode=mode, partition_by=("sink", "collector"))
+    write_table(salted, base_path, mode="overwrite", partition_by=("sink", "collector"))
 
 
 def read_sink(spark, base_path: str, sink: str) -> DataFrame:
@@ -108,6 +104,11 @@ PAYLOAD_BUCKETS = 8
 #: the label whose value is an export chunk's URL (URLFromLogLabel,
 #: out_erda/sender.go:74-77).
 URL_LABEL = "monitor_log_collector"
+
+
+def _collector() -> Column:
+    """An export row's collector: its URL label, 'unknown' when unset."""
+    return F.coalesce(F.col("labels")[URL_LABEL], F.lit("unknown"))
 
 
 def _event_dicts(chunk) -> list[dict]:
@@ -153,6 +154,41 @@ def _chunk_bodies(pdf, chunk_rows: int, gzip_level: int):
         yield start, chunk, buf.getvalue()
 
 
+def _payloads(
+    rows: DataFrame, key: str, schema: str, header, chunk_rows: int
+) -> DataFrame:
+    """The wire-payload encoder both builders share: one shuffle on
+    (key, content-hash bucket), then per group sorted, chunked, gzipped
+    bodies (_chunk_bodies). ``header(first_row)`` returns the per-chunk
+    header fields a sink adds (uri/url, retry_limit) from the chunk's
+    first row."""
+    import pandas as pd
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = []
+        for start, chunk, body in _chunk_bodies(pdf, chunk_rows, GZIP_LEVEL):
+            first = chunk.iloc[0]
+            out.append(
+                {
+                    key: first[key],
+                    "bucket": int(first["bucket"]),
+                    "chunk_idx": start // chunk_rows,
+                    "content_type": "application/json; charset=UTF-8",
+                    "content_encoding": "gzip",
+                    "n_events": len(chunk),
+                    "body": body,
+                    **header(first),
+                }
+            )
+        return pd.DataFrame(out)
+
+    bucketed = rows.withColumn(
+        "bucket",
+        F.pmod(F.xxhash64("id", "content"), F.lit(PAYLOAD_BUCKETS)).cast("int"),
+    )
+    return bucketed.groupBy(key, "bucket").applyInPandas(build, schema=schema)
+
+
 def build_http_payloads(log_events: DataFrame, chunk_rows: int = 1000) -> DataFrame:
     """O1/O2 wire payloads — the http outputs
     (conf/ds/fluent-bit.conf:207-237): per sink, chunked JSON-array
@@ -167,35 +203,13 @@ def build_http_payloads(log_events: DataFrame, chunk_rows: int = 1000) -> DataFr
     (sink, content-hash bucket), per-task memory bounded by
     |sink| / PAYLOAD_BUCKETS, bytes deterministic across retries.
     """
-    import pandas as pd
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        sink = pdf.iloc[0]["sink"]
-        uri, retry_limit = HTTP_SINKS[sink]
-        for start, chunk, body in _chunk_bodies(pdf, chunk_rows, GZIP_LEVEL):
-            out.append(
-                {
-                    "sink": sink,
-                    "bucket": int(chunk.iloc[0]["bucket"]),
-                    "chunk_idx": start // chunk_rows,
-                    "uri": uri,
-                    "content_type": "application/json; charset=UTF-8",
-                    "content_encoding": "gzip",
-                    "retry_limit": retry_limit,
-                    "n_events": len(chunk),
-                    "body": body,
-                }
-            )
-        return pd.DataFrame(out)
+    def header(first) -> dict:
+        uri, retry_limit = HTTP_SINKS[first["sink"]]
+        return {"uri": uri, "retry_limit": retry_limit}
 
-    tagged = log_events.filter(F.col("sink").isin(list(HTTP_SINKS))).withColumn(
-        "bucket",
-        F.pmod(F.xxhash64("id", "content"), F.lit(PAYLOAD_BUCKETS)).cast("int"),
-    )
-    return tagged.groupBy("sink", "bucket").applyInPandas(
-        build, schema=HTTP_PAYLOAD_SCHEMA
-    )
+    http = log_events.filter(F.col("sink").isin(list(HTTP_SINKS)))
+    return _payloads(http, "sink", HTTP_PAYLOAD_SCHEMA, header, chunk_rows)
 
 
 def build_export_payloads(log_events: DataFrame, chunk_rows: int = 1000) -> DataFrame:
@@ -225,37 +239,11 @@ def build_export_payloads(log_events: DataFrame, chunk_rows: int = 1000) -> Data
     ceil(hottest-collector-bytes / executor-task-budget) at the target
     scale.
     """
-    import pandas as pd
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for start, chunk, body in _chunk_bodies(pdf, chunk_rows, GZIP_LEVEL):
-            first_labels = chunk.iloc[0]["labels"] or {}
-            out.append(
-                {
-                    "collector": chunk.iloc[0]["collector"],
-                    "bucket": int(chunk.iloc[0]["bucket"]),
-                    "chunk_idx": start // chunk_rows,
-                    "url": first_labels.get(URL_LABEL, ""),
-                    "content_type": "application/json; charset=UTF-8",
-                    "content_encoding": "gzip",
-                    "n_events": len(chunk),
-                    "body": body,
-                }
-            )
-        return pd.DataFrame(out)
+    def header(first) -> dict:
+        return {"url": (first["labels"] or {}).get(URL_LABEL, "")}
 
-    export = (
-        log_events.filter(F.col("sink") == "export")
-        .withColumn(
-            "collector",
-            F.coalesce(F.col("labels")[URL_LABEL], F.lit("unknown")),
-        )
-        .withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("id", "content"), F.lit(PAYLOAD_BUCKETS)).cast("int"),
-        )
+    export = log_events.filter(F.col("sink") == "export").withColumn(
+        "collector", _collector()
     )
-    return export.groupBy("collector", "bucket").applyInPandas(
-        build, schema=PAYLOAD_SCHEMA
-    )
+    return _payloads(export, "collector", PAYLOAD_SCHEMA, header, chunk_rows)

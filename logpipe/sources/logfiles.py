@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from logpipe.functions import rfc3339_timestamp
-from logpipe.operators.parse import CRI_RE, _java
+from logpipe.operators.parse import _java, parse_cri
 from logpipe.operators.stitch import collapse_runs
 
 KUBE_FILENAME_RE = r"([a-z0-9\-.]+)_([a-z0-9\-.]+)_(.+)-([a-f0-9]{64})\.log$"
@@ -113,8 +113,8 @@ def parse_kube_filename(file_col) -> dict:
     name = F.element_at(F.split(file_col, "/"), -1)
     # _java for uniformity with every other Java consumption site
     # (round-9 ADVICE): the `.+` in group 3 would otherwise keep
-    # Java's default-dot semantics (excluding \r/NEL/LS) while CRI_RE
-    # in this same module is (?d)-aligned. Filenames realistically
+    # Java's default-dot semantics (excluding \r/NEL/LS) while the CRI
+    # grammar (parse.parse_cri) is (?d)-aligned. Filenames realistically
     # never carry those chars, but one rule for all sites beats a
     # documented scope carve-out.
     return {
@@ -217,16 +217,16 @@ def read_cri_logs(
     """CRI-runtime tail: `time stream logtag log` lines -> transcripts
     (Exclude_Path / Skip_Long_Lines as in read_docker_logs;
     cri-runtime.conf:4,9). conv_id is the file's base name."""
-    lines = _lines(spark, path, exclude_path)
-    return lines.select(
+    cri = parse_cri(F.col("line"))
+    return _lines(spark, path, exclude_path).select(
         F.element_at(F.split("file", "/"), -1).alias("conv_id"),
         F.col("line_no").cast("int").alias("turn_idx"),
-        F.regexp_extract("line", _java(CRI_RE), 2).alias("role"),
-        F.regexp_extract("line", _java(CRI_RE), 4).alias("text"),
+        cri["stream"].alias("role"),
+        cri["log"].alias("text"),
         F.lit(None).cast("string").alias("tool"),
-        rfc3339_timestamp(F.regexp_extract("line", _java(CRI_RE), 1)).alias("ts"),
+        rfc3339_timestamp(cri["time"]).alias("ts"),
         F.col("file"),
-        F.regexp_extract("line", _java(CRI_RE), 3).alias("logtag"),
+        cri["logtag"].alias("logtag"),
     )
 
 

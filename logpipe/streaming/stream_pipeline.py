@@ -7,8 +7,8 @@ this module runs the same DAG incrementally:
   maxFilesPerTrigger = the throttle's retain-mode pacing);
 - the whole parse -> enrich -> reshape -> route chain is stateless, so
   run_pipeline applies unchanged to the streaming frame;
-- fan-out via foreachBatch -> sinks.write_sinks in append mode: each
-  micro-batch commit is the analog of a fluent-bit chunk flush, with
+- fan-out via foreachBatch -> sinks.write_sinks into one directory
+  per micro-batch (batch=<id>): each micro-batch commit is the analog of a fluent-bit chunk flush, with
   the checkpoint directory playing the tail-position-DB role
   (resume-exactly-once over at-least-once retries);
 - multiline stitch needs state: streaming_stitch uses
@@ -54,7 +54,7 @@ def start_stream_pipeline(
     routed = (pipeline_fn or run_pipeline)(stream, k8s_meta, tool_meta)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_sinks(batch_df, f"{out_base}/batch={batch_id}", n_partitions=8, mode="overwrite")
+        write_sinks(batch_df, f"{out_base}/batch={batch_id}", n_partitions=8)
 
     return (
         routed.writeStream.foreachBatch(write_batch)

@@ -256,6 +256,12 @@ def test_cli_bucket_out_relayout(spark, tmp_path, monkeypatch):
     with pytest.raises(SystemExit):  # sort knob is relayout-only
         cli.main(["--synth", "10", "--out", "o", "--manifest", "m",
                   "--sort-cols", "conv_id"])
+    with pytest.raises(SystemExit):  # table name is relayout-only
+        cli.main(["--synth", "10", "--out", "o", "--manifest", "m",
+                  "--bucket-table", "ignored_t"])
+    with pytest.raises(SystemExit):  # bucket count is relayout-only
+        cli.main(["--synth", "10", "--out", "o", "--manifest", "m",
+                  "--bucket-n", "0"])
     with pytest.raises(SystemExit):  # --conf takes K=V
         cli.main(["--synth", "10", "--out", "o", "--manifest", "m",
                   "--conf", "not-a-pair"])

@@ -1,8 +1,9 @@
 """Config-driven rewrite_tag engine (operators/rewrite.py) vs the
 reference's rule semantics (conf/ds/fluent-bit.conf:181-193,
 plugins/filter_rewrite_tag): conf parsing, first-match-wins, keep
-true/false, static re-injection unroll, cycle refusal — and full parity
-with the hardcoded operators.route router on the flagship pipeline."""
+true/false, static re-injection unroll, cycle refusal, long chains —
+and full parity with the hardcoded operators.route router on the
+flagship pipeline."""
 
 from __future__ import annotations
 
@@ -103,17 +104,31 @@ def test_reinjected_copies_traverse_again(spark):
     assert got == ["b.mid", "c.final", "z.1"]
 
 
-def test_cyclic_config_refused():
-    conf = """
-[FILTER]
-    name rewrite_tag
-    match a.*
-    Rule $f .+ a.loop true
-"""
-    from logpipe.operators.rewrite import _reentry_rounds
+def test_cyclic_config_refused(spark):
+    """A tag cycle would loop forever in fluent-bit; the engine refuses
+    it at plan time, through the public entry point: a self-loop and a
+    two-tag loop."""
+    df = spark.createDataFrame([("a.1", "v")], "tag string, f string")
+    for rules in ([("a.*", "a.loop")], [("a.*", "b.x"), ("b.*", "a.y")]):
+        conf = "".join(
+            f"[FILTER]\n name rewrite_tag\n match {m}\n Rule $f .+ {t} true\n"
+            for m, t in rules
+        )
+        with pytest.raises(ValueError, match="cycl"):
+            apply_rewrite_tags(df, parse_rewrite_tag_conf(conf))
 
-    with pytest.raises(ValueError, match="cycl|terminate"):
-        _reentry_rounds(parse_rewrite_tag_conf(conf))
+
+def test_long_acyclic_chain_routes(spark):
+    """A 9-stage keep=false chain t0 -> t1 -> ... -> t9 is acyclic, so
+    it expands however many re-injection rounds it takes: the row ends
+    under t9 alone."""
+    conf = "".join(
+        f"[FILTER]\n name rewrite_tag\n match t{i}\n Rule $f .+ t{i + 1} false\n"
+        for i in range(9)
+    )
+    df = spark.createDataFrame([("t0", "v")], "tag string, f string")
+    out = apply_rewrite_tags(df, parse_rewrite_tag_conf(conf))
+    assert [r["tag"] for r in out.collect()] == ["t9"]
 
 
 def test_null_conv_id_still_routes(spark):
