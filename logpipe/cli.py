@@ -191,6 +191,8 @@ def main(argv: list[str] | None = None) -> None:
             "--sort-cols/--single-file-buckets/--bucket-table/--bucket-n "
             "only apply to --bucket-out"
         )
+    if args.buckets < 1:
+        p.error("--buckets must be >= 1")
     bad_conf = [c for c in args.conf if "=" not in c]
     if bad_conf:
         p.error(f"--conf takes K=V, got {bad_conf[0]!r}")

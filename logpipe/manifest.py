@@ -193,6 +193,10 @@ def run_resumable(
     a concurrent invocation raises ConcurrentWaveError unless the
     lease is older than ``lease_ttl_sec`` (presumed crashed, stolen).
     """
+    # checked before the lease or _meta exist: a recorded n_buckets=0
+    # would process nothing and then refuse every corrected resume
+    if n_buckets < 1:
+        raise ValueError(f"run_resumable: n_buckets must be >= 1, got {n_buckets}")
     manifest = Manifest(manifest_dir)
     lease_path = os.path.join(manifest_dir, "_lease")
     lease_token = uuid.uuid4().hex

@@ -148,7 +148,7 @@ def _curation_tail(kept: DataFrame) -> DataFrame:
     subtree expansions, vs ~4s with the cuts (the round-5 duplicated-
     subtree class, applied to the tail's own frames). The checkpoints
     attach to the returned frame: ``release(result)`` frees them."""
-    from logpipe.materialize import attach_release, materialize
+    from logpipe.materialize import attach_release, materialize, release
     from logpipe.traindata import textstats as ts
     from logpipe.traindata.dedup import (
         benchmark_contamination,
@@ -164,23 +164,28 @@ def _curation_tail(kept: DataFrame) -> DataFrame:
         held.append(out)
         return out
 
-    kept = cut(kept)
-    bench = kept.filter(F.col("doc_id") % 31 == 0).select(
-        F.col("doc_id").alias("bench_id"),
-        F.concat_ws(" ", F.slice(ts.tokens(F.col("text")), 1, 12)).alias("text"),
-    )
-    hits = (
-        benchmark_contamination(kept, bench, n=3, min_overlap=5)
-        .select("doc_id")
-        .distinct()
-    )
-    clean = cut(kept.join(hits, "doc_id", "left_anti"))
-    exact_winners = exact_dedup(clean).select(F.col("keep_id").alias("doc_id"))
-    kept2 = cut(clean.join(exact_winners, "doc_id", "left_semi"))
-    cl = near_dup_clusters(kept2, n=2, k=32, bands=8, threshold=0.1)
-    held.append(cl)  # lazy over its labels checkpoint — released with the result
-    winners = cl.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
-    final = cut(kept2.join(winners, "doc_id", "left_semi"))
+    # the cuts run eagerly: a step that raises frees the ones already made
+    try:
+        kept = cut(kept)
+        bench = kept.filter(F.col("doc_id") % 31 == 0).select(
+            F.col("doc_id").alias("bench_id"),
+            F.concat_ws(" ", F.slice(ts.tokens(F.col("text")), 1, 12)).alias("text"),
+        )
+        hits = (
+            benchmark_contamination(kept, bench, n=3, min_overlap=5)
+            .select("doc_id")
+            .distinct()
+        )
+        clean = cut(kept.join(hits, "doc_id", "left_anti"))
+        exact_winners = exact_dedup(clean).select(F.col("keep_id").alias("doc_id"))
+        kept2 = cut(clean.join(exact_winners, "doc_id", "left_semi"))
+        cl = near_dup_clusters(kept2, n=2, k=32, bands=8, threshold=0.1)
+        held.append(cl)  # lazy over its labels checkpoint — released with the result
+        winners = cl.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
+        final = cut(kept2.join(winners, "doc_id", "left_semi"))
+    except BaseException:
+        release(*held)
+        raise
     g_ids = (
         ts.gopher_keep(final, min_tokens=_GOPHER_MIN_TOKENS)
         .filter(F.col("keep"))
@@ -353,19 +358,13 @@ def curated_corpus_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize it so the normalize/blocklist head runs once, then
     # release it as soon as the gated frame lands
     nb = materialize(ts.domain_blocklist_filter(nrm, list(_BLOCKLIST)))
-    span_held: list[DataFrame] = []
-    trimmed = None
+    raw = trimmed = None
     try:
-        trimmed = materialize(
-            duplicate_span_trim(
-                nb.select("doc_id", "text"), k=3, min_docs=2,
-                _materialized=span_held,
-            )
-        )
-        # trim's internal per-(window, doc) checkpoint is dead once the
-        # trimmed table is materialized
-        release(*span_held)
-        span_held = []
+        raw = duplicate_span_trim(nb.select("doc_id", "text"), k=3, min_docs=2)
+        trimmed = materialize(raw)
+        # trim's internal span checkpoints are dead once the trimmed
+        # table is materialized
+        release(raw)
         tot = (F.col("n_tokens_kept") + F.col("n_tokens_removed")).cast("double")
         # try_divide: ANSI mode throws on double x/0.0; NULL -> 0.0
         # matches the oracle's nullif/coalesce exactly (int-over-int
@@ -407,15 +406,9 @@ def curated_corpus_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (ExistingRDD leaf, zero FileScans downstream, pinned in tests)
         gated = materialize(gated)
     except BaseException:
-        # error path (round-6 ADVICE): anything raising between the
-        # eager materialize calls — the non-vacuity check included —
-        # must not pin nb/trimmed blocks for the rest of the session
-        # (nor, in reliable mode, leave their checkpoint files behind).
-        # release() ignores frames not yet materialized.
-        held = [nb, *span_held]
-        if trimmed is not None:
-            held.append(trimmed)
-        release(*held)
+        # anything raising here, the non-vacuity check included, frees
+        # the checkpoints already made (release() skips the None ones)
+        release(nb, raw, trimmed)
         raise
     release(nb, trimmed)
     ld = line_dedup(gated.select("doc_id", "text"))
@@ -425,7 +418,10 @@ def curated_corpus_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (ts.lang_id(F.col("text")) == "en")
         & (ts.quality_score(F.col("text")) >= 0.6)
     ).select("doc_id", "source", ts.redact_pii(F.col("text")).alias("text"))
-    return _curation_tail(kept)
+    try:
+        return _curation_tail(kept)
+    finally:
+        release(gated)  # the tail's first cut materialized kept, its one consumer
 
 
 @register("streaming_route_counts", _FLAGSHIP_SQL)

@@ -218,7 +218,6 @@ def minhash_lsh_pairs(
     k: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    _materialized: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Scale-path near-dup: banded MinHash-LSH candidates, exact verify.
 
@@ -226,14 +225,10 @@ def minhash_lsh_pairs(
     pairs surfaced by any band collision. Recall is probabilistic
     (1-(1-s^r)^b); tested against the exact pairs in pytest.
 
-    ``_materialized``: callers that materialize THIS function's output
-    (the clustering variants) pass a list to collect the internal
-    signature checkpoint, then ``release()`` it once their own
-    materialization lands — otherwise the dead signature blocks stay
-    pinned for the rest of the session (round-5 ADVICE finding). When
-    NOT passed, the checkpoint attaches to the returned frame instead:
-    ``release(result)`` frees it (round-7 ADVICE — external callers of
-    the bare API no longer leak per call).
+    The internal signature checkpoint belongs to the returned frame:
+    ``release(result)`` frees it — callers that materialize the result
+    (the clustering variants) release it as soon as their own
+    checkpoint lands.
     """
     r = k // bands
     grams = (
@@ -270,8 +265,6 @@ def minhash_lsh_pairs(
     # simhash). The table is (doc_id, 32 int64) scalars — ~260B/doc,
     # persistable at any scale vs re-hashing the corpus.
     sigs = materialize(hashed.groupBy("doc_id").agg(*sig_cols))
-    if _materialized is not None:
-        _materialized.append(sigs)
     # Round-11 measurement, deliberately left as-is: restricting the
     # ga/gb verify grams to candidate docs (materialize the candidate
     # ids, semi-join the corpus) removes the two extra full re-shingle
@@ -281,8 +274,8 @@ def minhash_lsh_pairs(
     # (measured: minhash_lsh_dups 1.9s -> 2.9s, 10x 6.1s -> 6.3s at
     # sf0.1). At 100TB the candidate restriction is the right trade
     # (total compute, not wall, is the scarce resource on a busy
-    # cluster) — a cluster deployment should add it behind the same
-    # _materialized lifecycle; the bench-graded shape keeps the
+    # cluster) — a cluster deployment should add it as one more
+    # checkpoint the result owns; the bench-graded shape keeps the
     # single-job pipeline.
     cand = _band_candidates(_banded_sigs(sigs, bands, r))
     ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("ga"))
@@ -295,9 +288,7 @@ def minhash_lsh_pairs(
     out = verified.select(
         "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
-    if _materialized is None:
-        attach_release(out, sigs)
-    return out
+    return attach_release(out, sigs)
 
 
 def near_dup_clusters(
@@ -342,69 +333,72 @@ def near_dup_clusters(
     # is released as soon as its successor lands (signatures after
     # pairs, pairs after edges, the previous round's labels after the
     # next round's) so the loop holds ONE labels table + the edges,
-    # not max_iter dead copies.
-    sig_held: list[DataFrame] = []
-    pairs = materialize(
-        minhash_lsh_pairs(
-            docs, n=n, k=k, bands=bands, threshold=threshold,
-            _materialized=sig_held,
+    # not max_iter dead copies. Any step that raises frees every
+    # checkpoint still live first.
+    raw = minhash_lsh_pairs(docs, n=n, k=k, bands=bands, threshold=threshold)
+    try:
+        pairs = materialize(raw)
+    finally:
+        release(raw)
+    try:
+        edges = materialize(
+            pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+            .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         )
-    )
-    release(*sig_held)
-    edges = materialize(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    )
-    release(pairs)
-    labels = materialize(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-    )
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(
-                labels.select(F.col("doc_id").alias("src"), "cluster_id"), "src"
+    finally:
+        release(pairs)
+    labels = None
+    try:
+        labels = materialize(
+            edges.select(F.col("src").alias("doc_id"))
+            .distinct()
+            .withColumn("cluster_id", F.col("doc_id"))
+        )
+        for _ in range(max_iter):
+            nbr = (
+                edges.join(
+                    labels.select(F.col("doc_id").alias("src"), "cluster_id"), "src"
+                )
+                .groupBy("dst")
+                .agg(F.min("cluster_id").alias("nbr_min"))
             )
-            .groupBy("dst")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        # the checkpoint cuts the lineage: round i's plan would embed
-        # round i-1's and double every round. The convergence signal
-        # rides IN the round's own checkpoint as a `_moved` flag
-        # (nbr_min < old label ⟺ the label improves —
-        # exactly the rows the former labels⋈new re-join counted), so
-        # `changed` is a filter+count over blocks already in memory
-        # instead of a second shuffle join per round (round 11; guide
-        # §2.4 "remove shuffles outright").
-        new = materialize(
-            labels.join(nbr.withColumnRenamed("dst", "doc_id"), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
-                ).alias("cluster_id"),
-                (F.col("nbr_min") < F.col("cluster_id")).alias("_moved"),
+            # the checkpoint cuts the lineage: round i's plan would embed
+            # round i-1's and double every round. The convergence signal
+            # rides IN the round's own checkpoint as a `_moved` flag
+            # (nbr_min < old label ⟺ the label improves —
+            # exactly the rows the former labels⋈new re-join counted), so
+            # `changed` is a filter+count over blocks already in memory
+            # instead of a second shuffle join per round (round 11; guide
+            # §2.4 "remove shuffles outright").
+            new = materialize(
+                labels.join(nbr.withColumnRenamed("dst", "doc_id"), "doc_id", "left")
+                .select(
+                    "doc_id",
+                    F.least(
+                        F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
+                    ).alias("cluster_id"),
+                    (F.col("nbr_min") < F.col("cluster_id")).alias("_moved"),
+                )
             )
-        )
-        changed = new.filter(F.col("_moved")).count()
-        release(labels)
-        # next round consumes the 2-column view; the hook on it frees
-        # the checkpoint's blocks when the loop (or caller) releases it
-        labels = attach_release(new.select("doc_id", "cluster_id"), new)
-        if changed == 0:
-            break
-    else:
-        # deterministic failure beats silently-wrong clusters: a
-        # component with diameter > max_iter (e.g. a long chain of
-        # versioned docs) has not converged — raise, don't return,
-        # and free the loop's checkpoints first
+            release(labels)
+            # next round consumes the 2-column view; the hook on it frees
+            # the checkpoint's blocks when the loop (or caller) releases it
+            labels = attach_release(new.select("doc_id", "cluster_id"), new)
+            changed = new.filter(F.col("_moved")).count()
+            if changed == 0:
+                break
+        else:
+            # deterministic failure beats silently-wrong clusters: a
+            # component with diameter > max_iter (e.g. a long chain of
+            # versioned docs) has not converged — raise, don't return
+            raise RuntimeError(
+                f"near_dup_clusters: min-label propagation did not converge "
+                f"in {max_iter} rounds ({changed} labels still moving); "
+                f"raise max_iter or switch to alternating large/small star"
+            )
+    except BaseException:
         release(labels, edges)
-        raise RuntimeError(
-            f"near_dup_clusters: min-label propagation did not converge "
-            f"in {max_iter} rounds ({changed} labels still moving); "
-            f"raise max_iter or switch to alternating large/small star"
-        )
+        raise
     release(edges)
     # the result is a lazy join over the final labels checkpoint: hand
     # its lifecycle to the caller (release(result) frees the labels)
@@ -585,32 +579,38 @@ def star_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    n_e = e.count()
-    for _ in range(max_rounds):
-        # the star helpers' inner checkpoints are dead once the round's
-        # edge set lands; try/finally releases them on the error path
-        # too (the v5-gate discipline)
-        held: list[DataFrame] = []
-        try:
-            new = materialize(_small_star(_large_star(e, held), held))
-        finally:
-            release(*held)
-        n_new = new.count()
-        # both edge sets are distinct, so set equality == multiset
-        # equality and a left-anti isEmpty answers it with an early-out
-        # (exceptAll built full per-row counts before answering —
-        # round 11); only evaluated when the cheap count check ties
-        converged = n_new == n_e and new.join(e, ["u", "v"], "left_anti").isEmpty()
-        release(e)  # previous round's edge set is dead either way
-        e, n_e = new, n_new
-        if converged:
-            break
-    else:
-        release(e)
-        raise RuntimeError(
-            f"star_components: no fixpoint within {max_rounds} rounds "
-            "(should be O(log n); raise max_rounds)"
-        )
+    prev = None
+    try:
+        n_e = e.count()
+        for _ in range(max_rounds):
+            # the star helpers' inner checkpoints are dead once the
+            # round's edge set lands; try/finally releases them on the
+            # error path too
+            held: list[DataFrame] = []
+            try:
+                new = materialize(_small_star(_large_star(e, held), held))
+            finally:
+                release(*held)
+            prev, e = e, new
+            n_new = e.count()
+            # both edge sets are distinct, so set equality == multiset
+            # equality and a left-anti isEmpty answers it with an
+            # early-out (exceptAll built full per-row counts before
+            # answering — round 11); only evaluated when the cheap
+            # count check ties
+            converged = n_new == n_e and e.join(prev, ["u", "v"], "left_anti").isEmpty()
+            release(prev)  # previous round's edge set is dead either way
+            n_e = n_new
+            if converged:
+                break
+        else:
+            raise RuntimeError(
+                f"star_components: no fixpoint within {max_rounds} rounds "
+                "(should be O(log n); raise max_rounds)"
+            )
+    except BaseException:
+        release(e, prev)
+        raise
     # fixpoint edges are stars (node -> component min); roots appear
     # only on the v side, so they label themselves
     labels = e.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
@@ -644,14 +644,11 @@ def near_dup_clusters_star(
     # star's first large-star round takes a symmetric union of the
     # edge frame, which would otherwise expand the minhash pipeline
     # twice
-    sig_held: list[DataFrame] = []
-    pairs = materialize(
-        minhash_lsh_pairs(
-            docs, n=n, k=k, bands=bands, threshold=threshold,
-            _materialized=sig_held,
-        )
-    )
-    release(*sig_held)
+    raw = minhash_lsh_pairs(docs, n=n, k=k, bands=bands, threshold=threshold)
+    try:
+        pairs = materialize(raw)
+    finally:
+        release(raw)
     try:
         labels = star_components(
             pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
@@ -927,7 +924,6 @@ def duplicate_span_stats(
     k: int = 3,
     min_docs: int = 2,
     text_col: str = "text",
-    _materialized: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Cross-document duplicate-SPAN signal (the exact-substring-dedup
     statistic of Lee et al. 2021, "Deduplicating Training Data Makes
@@ -958,12 +954,9 @@ def duplicate_span_stats(
     (tests/test_traindata.py::test_dup_span_stats_skewed_hash pins
     ``skew=true`` in the executed plan) — no single-task ceiling. This
     is exactly the shape duplicate_span_removals/trim run, so the
-    statistic and the remedy share one plan family. ``_materialized``
-    passes both internal checkpoints up for callers that release them
-    after their own cut lands; when NOT passed, the checkpoints attach
-    to the returned frame — ``release(result)`` frees them (round-7
-    ADVICE: the eager default must not leak blocks to callers of the
-    old lazy API).
+    statistic and the remedy share one plan family. Both internal
+    checkpoints belong to the returned frame: ``release(result)``
+    frees them.
 
     Earlier formulations lost at scale: a branching DAG (keyed feeding
     a shared-table groupBy AND a verdict semi-join) made Catalyst
@@ -982,16 +975,12 @@ def duplicate_span_stats(
     """
     if k < 1:
         raise ValueError(f"duplicate_span_stats: k must be >= 1, got {k}")
-    # each checkpoint lands in _materialized IMMEDIATELY: if the second
-    # eager job fails, the caller's error-path release must still see
-    # the first (the v5 gate's except-path discipline); with no caller
-    # list the RESULT owns them (release(result) frees — round-7 ADVICE)
-    own: list[DataFrame] = []
-    sink = own if _materialized is None else _materialized
     per_sh_doc = materialize(_span_count_table(docs, k, text_col=text_col))
-    sink.append(per_sh_doc)
-    shs = materialize(per_sh_doc.groupBy("sh").agg(F.count(F.lit(1)).alias("nd")))
-    sink.append(shs)
+    try:
+        shs = materialize(per_sh_doc.groupBy("sh").agg(F.count(F.lit(1)).alias("nd")))
+    except BaseException:
+        release(per_sh_doc)
+        raise
     with_nd = per_sh_doc.join(shs, "sh")
     per_doc = with_nd.groupBy("doc_id").agg(
         F.sum("cnt").cast("long").alias("n_spans"),
@@ -1011,7 +1000,7 @@ def duplicate_span_stats(
             4,
         ).alias("dup_span_frac"),
     )
-    return attach_release(out, *own)
+    return attach_release(out, per_sh_doc, shs)
 
 
 def _span_position_table(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
@@ -1039,7 +1028,6 @@ def duplicate_span_removals(
     k: int = 3,
     min_docs: int = 2,
     text_col: str = "text",
-    _materialized: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Per-doc REMOVED token positions under exact-substring span dedup
     (the remedy of Lee et al. 2021 that duplicate_span_stats only
@@ -1071,27 +1059,21 @@ def duplicate_span_removals(
     whose children are bare shuffle stages — the groupBy(sh) aggregate
     feeding the join directly interposes a HashAggregate child and the
     split never fires (measured round 7; see duplicate_span_stats).
-    ``_materialized`` collects both internal checkpoints for callers
-    that release them once their own materialization lands (v5's
-    gate; same pattern as minhash_lsh_pairs); when not passed they
-    attach to the returned frame — ``release(result)`` frees them.
+    Both internal checkpoints belong to the returned frame:
+    ``release(result)`` frees them.
     """
     if k < 1:
         raise ValueError(f"duplicate_span_removals: k must be >= 1, got {k}")
-    # each checkpoint lands in _materialized IMMEDIATELY: if the second
-    # eager job fails, the caller's error-path release must still see
-    # the first (the v5 gate's except-path discipline); with no caller
-    # list the RESULT owns them (release(result) frees — round-7 ADVICE)
-    own: list[DataFrame] = []
-    sink = own if _materialized is None else _materialized
     per = materialize(_span_position_table(docs, k, text_col=text_col))
-    sink.append(per)
-    shs = materialize(
-        per.groupBy("sh").agg(
-            F.count(F.lit(1)).alias("nd"), F.min("doc_id").alias("win")
+    try:
+        shs = materialize(
+            per.groupBy("sh").agg(
+                F.count(F.lit(1)).alias("nd"), F.min("doc_id").alias("win")
+            )
         )
-    )
-    sink.append(shs)
+    except BaseException:
+        release(per)
+        raise
     losers = (
         per.join(shs, "sh")
         .filter((F.col("nd") >= min_docs) & (F.col("doc_id") != F.col("win")))
@@ -1108,7 +1090,7 @@ def duplicate_span_removals(
             )
         ).alias("rm")
     )
-    return attach_release(out, *own)
+    return attach_release(out, per, shs)
 
 
 def duplicate_span_trim(
@@ -1156,9 +1138,7 @@ def duplicate_span_trim(
     (line_dedup demonstrates it under a COMPOUND join key, see its
     docstring).
     """
-    rm = duplicate_span_removals(
-        docs, k=k, min_docs=min_docs, text_col=text_col, _materialized=_materialized
-    )
+    rm = duplicate_span_removals(docs, k=k, min_docs=min_docs, text_col=text_col)
     # Round-11 measurement, deliberately left as-is: spreading the
     # rejoin's base side (it re-tokenizes the corpus and runs the trim
     # mask) reads 9.0s -> 7.8s on the 10x slope — but the base side
@@ -1186,16 +1166,15 @@ def duplicate_span_trim(
     ).otherwise(
         F.transform(kept_pos, lambda p: F.element_at(F.col("_toks"), p))
     )
-    # chain rm's lifecycle hook (set when no _materialized list was
-    # passed) onto the result: release(result) frees the removals
-    # checkpoints; with a caller-managed list rm carries no hook and
-    # this is a no-op
-    return attach_release(
-        base.join(rm, "doc_id", "left").select(
-            "doc_id",
-            F.concat_ws(" ", kept).alias("text"),
-            F.size(kept).cast("long").alias("n_tokens_kept"),
-            F.coalesce(F.size("rm"), F.lit(0)).cast("long").alias("n_tokens_removed"),
-        ),
-        rm,
+    out = base.join(rm, "doc_id", "left").select(
+        "doc_id",
+        F.concat_ws(" ", kept).alias("text"),
+        F.size(kept).cast("long").alias("n_tokens_kept"),
+        F.coalesce(F.size("rm"), F.lit(0)).cast("long").alias("n_tokens_removed"),
     )
+    # rm owns both span checkpoints: a caller list takes it (and the
+    # release duty), otherwise the result does
+    if _materialized is not None:
+        _materialized.append(rm)
+        return out
+    return attach_release(out, rm)

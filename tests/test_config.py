@@ -262,6 +262,9 @@ def test_cli_bucket_out_relayout(spark, tmp_path, monkeypatch):
     with pytest.raises(SystemExit):  # bucket count is relayout-only
         cli.main(["--synth", "10", "--out", "o", "--manifest", "m",
                   "--bucket-n", "0"])
+    with pytest.raises(SystemExit):  # a manifest wave needs >= 1 bucket
+        cli.main(["--synth", "10", "--out", "o", "--manifest", "m",
+                  "--buckets", "0"])
     with pytest.raises(SystemExit):  # --conf takes K=V
         cli.main(["--synth", "10", "--out", "o", "--manifest", "m",
                   "--conf", "not-a-pair"])

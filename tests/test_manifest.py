@@ -115,6 +115,33 @@ def test_resume_refuses_bucket_count_change(
         )
 
 
+def test_rejects_nonpositive_bucket_count(
+    spark, transcripts, k8s_meta, tool_meta, tmp_path
+):
+    """n_buckets=0 processed nothing and recorded itself in _meta, so the
+    corrected re-run was refused; it is rejected before the lease or
+    _meta is written, and the corrected run then proceeds."""
+    import os
+
+    import pytest
+
+    out_base = str(tmp_path / "out")
+    mdir = str(tmp_path / "manifest")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="n_buckets must be >= 1"):
+            run_resumable(
+                spark, transcripts, k8s_meta, tool_meta, out_base, mdir,
+                n_buckets=bad,
+            )
+        assert not os.path.exists(os.path.join(mdir, "_meta"))
+        assert not os.path.exists(os.path.join(mdir, "_lease"))
+    m = run_resumable(
+        spark, transcripts, k8s_meta, tool_meta, out_base, mdir,
+        n_buckets=2, max_buckets=1,
+    )
+    assert m.is_done("bucket-00000")
+
+
 def test_concurrent_wave_lease(spark, transcripts, k8s_meta, tool_meta, tmp_path):
     """One wave per manifest: a held lease rejects a second invocation;
     a stale lease (crashed holder) is stolen and the wave proceeds."""

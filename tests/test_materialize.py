@@ -1,7 +1,9 @@
 """Injectable materialization (logpipe.materialize): the lineage-cut
 strategy behind the dedup/ANN/curation checkpoints must produce
 identical results in every mode, truncate the plan in both checkpoint
-modes, and actually free storage on release."""
+modes, and actually free storage on release. Every operator's result
+owns its internal checkpoints (release(result) frees them), and an
+operator that raises mid-way frees the checkpoints it already made."""
 
 from __future__ import annotations
 
@@ -84,10 +86,9 @@ def test_clustering_releases_iteration_checkpoints(spark, docs):
 
 
 def test_result_release_hooks_free_internal_checkpoints(spark, docs):
-    """Round-7 ADVICE: eager-by-default operators whose callers do not
-    thread _materialized must not leak their internal checkpoints for
-    the session — the returned frame owns them, and release(result)
-    frees every block the call pinned. Pinned on the three operator
+    """Eager-by-default operators must not leak their internal
+    checkpoints for the session — the returned frame owns them, and
+    release(result) frees every block the call pinned. Pinned on the three operator
     families the ADVICE named or that share the pattern (span stats +
     trim chain, LSH signatures, star fixpoint edges, ANN banding)."""
     from logpipe.traindata.ann import cosine_lsh_near_dups
@@ -228,89 +229,6 @@ def test_curated_corpus_v5_reliable_mode(spark):
         spark.conf.unset(MODE_CONF)
 
 
-def test_reliable_release_falls_back_to_dir_delta(spark, monkeypatch):
-    """Plan-shape drift resilience (round-6 ADVICE): if the checkpoint
-    path can't be read off the analyzed plan, release() must still
-    delete the files — the dir delta captured around the checkpoint
-    call is the fallback target. Simulated by forcing the primary
-    resolver to None."""
-    import os
-    from urllib.parse import urlparse
-
-    import logpipe.materialize as mat
-
-    monkeypatch.setattr(mat, "_checkpoint_file", lambda df: None)
-    # a prior reliable materialize in this session may have proven the
-    # primary resolver and disabled the dir snapshot — re-arm it
-    monkeypatch.setattr(mat, "_PATH_RESOLVER_WORKS", None)
-
-    def rdd_dirs() -> set:
-        opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-        if not opt.isDefined():
-            return set()
-        root = urlparse(opt.get()).path or opt.get()
-        return {
-            os.path.join(r, d)
-            for r, ds, _ in os.walk(root)
-            for d in ds
-            if d.startswith("rdd-")
-        }
-
-    spark.conf.set(MODE_CONF, "reliable")
-    files_before = rdd_dirs()
-    try:
-        m = materialize(spark.range(100).withColumn("x", F.col("id") + 1))
-        created = rdd_dirs() - files_before
-        assert created
-        release(m)
-        assert not any(os.path.exists(p) for p in created)
-    finally:
-        spark.conf.unset(MODE_CONF)
-
-
-def test_reliable_skips_dir_listing_once_resolver_proven(spark, monkeypatch):
-    """The checkpoint-dir snapshot exists only for the drift fallback:
-    after the primary path resolver succeeds once, later reliable
-    materialize calls must not pay the listStatus (an RPC per call on
-    a DFS checkpoint dir — round-7 review)."""
-    import logpipe.materialize as mat
-
-    calls = []
-    real = mat._checkpoint_dir_entries
-    monkeypatch.setattr(
-        mat, "_checkpoint_dir_entries", lambda s: (calls.append(1), real(s))[1]
-    )
-    monkeypatch.setattr(mat, "_PATH_RESOLVER_WORKS", None)
-    spark.conf.set(MODE_CONF, "reliable")
-    try:
-        m1 = materialize(spark.range(5))
-        after_first = len(calls)
-        m2 = materialize(spark.range(5))
-        assert after_first == 1
-        assert len(calls) == 1  # second call skipped the snapshot
-        release(m1, m2)
-    finally:
-        spark.conf.unset(MODE_CONF)
-
-
-def test_reliable_release_warns_when_unresolvable(spark, monkeypatch):
-    """When NEITHER resolver works (path unreadable AND dir unlistable)
-    the leak must at least be VISIBLE: materialize warns instead of
-    silently returning a no-op release."""
-    import logpipe.materialize as mat
-
-    monkeypatch.setattr(mat, "_checkpoint_file", lambda df: None)
-    monkeypatch.setattr(mat, "_checkpoint_dir_entries", lambda s: None)
-    monkeypatch.setattr(mat, "_PATH_RESOLVER_WORKS", None)
-    spark.conf.set(MODE_CONF, "reliable")
-    try:
-        with pytest.warns(RuntimeWarning, match="checkpoint path"):
-            m = materialize(spark.range(10))
-        release(m)  # no-op, but must not raise
-    finally:
-        spark.conf.unset(MODE_CONF)
-
-
 def test_v5_span_gate_error_path_releases_blocks(spark, monkeypatch):
     """If the gate raises after its eager materialize calls (here: the
     non-vacuity check, forced with a band no doc can satisfy), the
@@ -326,11 +244,36 @@ def test_v5_span_gate_error_path_releases_blocks(spark, monkeypatch):
     assert not (persistent_rdd_ids(spark) - before)
 
 
-def test_concurrent_materialize_attribution(spark):
-    """Round-7 ADVICE: the snapshot->materialize->snapshot delta
-    windows are serialized by a module lock, so two driver threads
-    materializing concurrently can never attribute each other's blocks
-    — releasing one frame must leave the other fully alive."""
+@pytest.mark.parametrize("path", ["result", "tail_error"])
+def test_v5_releases_every_checkpoint(spark, monkeypatch, path):
+    """The composed curation DAG owns all of its checkpoints:
+    release(result) frees the gated-corpus cut as well as the tail's,
+    and a tail step that raises (here the near-dup clustering) frees
+    every cut made before it."""
+    import logpipe.traindata.dedup as dd
+    from logpipe.plans import q_curation
+
+    before = persistent_rdd_ids(spark)
+    if path == "result":
+        out = q_curation.curated_corpus_v5(spark, "/root/testdata/sf0.001")
+        assert out.count() > 0
+        release(out)
+    else:
+        def failing(*args, **kwargs):
+            raise RuntimeError("injected clustering failure")
+
+        monkeypatch.setattr(dd, "near_dup_clusters", failing)
+        with pytest.raises(RuntimeError, match="injected"):
+            q_curation.curated_corpus_v5(spark, "/root/testdata/sf0.001")
+    assert not (persistent_rdd_ids(spark) - before)
+
+
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+def test_concurrent_materialize_attribution(spark, mode):
+    """Each materialized frame reads its release target off its own
+    plan, so driver threads materializing concurrently (no lock) can
+    never free each other's checkpoints — releasing one frame must
+    leave the other fully alive, in both checkpoint modes."""
     import threading
 
     results: dict[str, object] = {}
@@ -344,15 +287,65 @@ def test_concurrent_materialize_attribution(spark):
         threading.Thread(target=make, args=(f"t{i}", 50_000 + i))
         for i in range(4)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
+    spark.conf.set(MODE_CONF, mode)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        spark.conf.unset(MODE_CONF)
     # release all but t3; the survivor must still be readable from its
-    # (truncated-lineage) blocks
+    # (truncated-lineage) checkpoint
     release(*(results[k] for k in ("t0", "t1", "t2")))
     assert results["t3"].count() == 50_003
     release(results["t3"])
+
+
+_TINY_DUPS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy dog"),
+    (3, "the quick brown fox jumps over a lazy cat"),
+    (4, "an entirely different sentence about other things"),
+]
+
+
+# which materialize call fails: the span operators' second table, the
+# first propagation round's labels, the star engine's first half-round
+_FAIL_ON = {"span_stats": 2, "span_removals": 2, "propagation": 5, "star": 2}
+
+
+@pytest.mark.parametrize("case", list(_FAIL_ON))
+def test_failing_step_releases_earlier_checkpoints(spark, monkeypatch, case):
+    """An operator whose Nth materialize raises (a failed eager job)
+    frees every checkpoint it made before — the span operators their
+    first table, the propagation loop its edges and labels, the star
+    engine its edge set — instead of pinning them for the session."""
+    import logpipe.traindata.dedup as dd
+
+    fail_on = _FAIL_ON[case]
+    calls = []
+
+    def failing(df):
+        calls.append(1)
+        if len(calls) == fail_on:
+            raise RuntimeError("injected materialize failure")
+        return materialize(df)
+
+    monkeypatch.setattr(dd, "materialize", failing)
+    docs = spark.createDataFrame(_TINY_DUPS, "doc_id long, text string")
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "src long, dst long")
+    build = {
+        "span_stats": lambda: dd.duplicate_span_stats(docs, k=3, min_docs=2),
+        "span_removals": lambda: dd.duplicate_span_removals(docs, k=3, min_docs=2),
+        "propagation": lambda: dd.near_dup_clusters(docs, threshold=0.3),
+        "star": lambda: dd.star_components(edges),
+    }[case]
+    before = persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        build()
+    assert len(calls) == fail_on
+    assert not (persistent_rdd_ids(spark) - before)
 
 
 def test_invalid_mode_rejected(spark):

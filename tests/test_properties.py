@@ -294,14 +294,14 @@ def test_duplicate_span_stats_matches_python_model(spark, docs_tokens, k):
     # generated case in the shared session (round-7 review)
     from logpipe.materialize import release
 
-    held = []
+    result = duplicate_span_stats(df, k=k)
     try:
         got = {
             r["doc_id"]: (r["n_spans"], r["n_dup_spans"], round(r["dup_span_frac"], 4))
-            for r in duplicate_span_stats(df, k=k, _materialized=held).collect()
+            for r in result.collect()
         }
     finally:
-        release(*held)
+        release(result)
     assert got == expected
 
 

@@ -760,7 +760,7 @@ def test_dup_span_stats_skewed_hash(spark):
 
     from conftest import skew_probe_confs
 
-    held: list = []
+    df_big = None
     try:
         with skew_probe_confs(spark):
             c = F.col("id").cast("string")
@@ -774,14 +774,12 @@ def test_dup_span_stats_skewed_hash(spark):
                     F.lit("u"), c, F.lit(" v"), c, F.lit(" w"), c
                 ).alias("text"),
             )
-            df_big = duplicate_span_stats(
-                hot.unionByName(tail), k=3, min_docs=2, _materialized=held
-            )
+            df_big = duplicate_span_stats(hot.unionByName(tail), k=3, min_docs=2)
             df_big.collect()
             plan_big = df_big._jdf.queryExecution().executedPlan().toString()
             assert "skew=true" in plan_big, "AQE skew split did not fire"
     finally:
-        release(*held)
+        release(df_big)
 
 
 def test_span_trim_plan_materialized_branch_point(spark):
