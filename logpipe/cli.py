@@ -202,14 +202,18 @@ def main(argv: list[str] | None = None) -> None:
     from logpipe.manifest import run_resumable
     from logpipe.session import get_spark
 
-    cfg = C.from_env(
-        throttle_rate=args.throttle_rate,
-        throttle_retain=(
-            None if args.throttle_retain is None else args.throttle_retain == "true"
-        ),
-        throttle_bucket=args.throttle_bucket,
-        cluster_name=args.cluster_name,
-    )
+    try:
+        cfg = C.from_env(
+            throttle_rate=args.throttle_rate,
+            throttle_retain=(
+                None if args.throttle_retain is None else args.throttle_retain == "true"
+            ),
+            throttle_bucket=args.throttle_bucket,
+            exclude_path=None if args.exclude_path is None else tuple(args.exclude_path),
+            cluster_name=args.cluster_name,
+        )
+    except ValueError as e:
+        p.error(str(e))
 
     from logpipe.plans.pipeline import run_pipeline
 
@@ -247,8 +251,7 @@ def main(argv: list[str] | None = None) -> None:
 
         from logpipe.sources.logfiles import docker_mode_join, read_docker_logs
 
-        exclude = tuple(args.exclude_path) if args.exclude_path else cfg.exclude_path
-        raw = read_docker_logs(spark, args.logs_dir, exclude_path=exclude)
+        raw = read_docker_logs(spark, args.logs_dir, exclude_path=cfg.exclude_path)
         # one tailed FILE is the reference's conv unit: suffix the
         # kube-derived conv_id with a file hash so two files that
         # extract to the same (pod, ns, container) — restarts, rotation,

@@ -333,21 +333,28 @@ def _run_wave(
 
     # ONE write pass for the whole wave; dynamic partition overwrite
     # replaces exactly the bucket/sink partitions this wave produces,
-    # leaving completed buckets' directories untouched
+    # leaving completed buckets' directories untouched. The mode is an
+    # option of this one write, so the session conf (and every other
+    # write in the session) stays as it was.
     out = (pipeline_fn or run_pipeline)(
         part, k8s_meta, tool_meta, passthrough=("bucket",)
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("bucket", "sink").parquet(out_base)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket", "sink")
+        .parquet(out_base)
+    )
+
+    # PHYSICAL lineage: the parquet files each (bucket, sink) partition
+    # landed as — one recursive listing RPC for the whole wave, grouped
+    # driver-side (never per-partition probes). The same listing names
+    # the buckets this wave wrote.
+    files = _partition_file_stats(spark, out_base, set(pending))
+    written = sorted(files)
 
     # per-bucket/per-sink metrics: one scan of the NEWLY written bucket
-    # directories only (verifies what physically landed on disk);
-    # existence check is the same single listStatus, not per-bucket RPCs
-    written = sorted(_existing_bucket_dirs(spark, out_base) & set(pending))
+    # directories only (verifies what physically landed on disk)
     counts: dict[int, dict[str, dict[str, int]]] = {b: {} for b in pending}
     if written:
         for r in (
@@ -364,11 +371,6 @@ def _run_wave(
                 "rows": r["rows"],
                 "content_bytes": r["content_bytes"],
             }
-
-    # PHYSICAL lineage: the parquet files each (bucket, sink) partition
-    # landed as — one recursive listing RPC for the whole wave, grouped
-    # driver-side (never per-partition probes)
-    files = _partition_file_stats(spark, out_base, set(pending))
     for b, per_sink in files.items():
         for sink, st in per_sink.items():
             counts[b].setdefault(sink, {}).update(st)

@@ -208,12 +208,11 @@ def _final_tags_expr(
     return F.concat(*parts, survivor) if parts else survivor
 
 
-def apply_rewrite_tags(
-    df: DataFrame, stages: list[Stage], tag_col: str = "tag"
-) -> DataFrame:
-    """Run the full rewrite_tag cascade; returns one row per FINAL record
-    (surviving originals keep their tag; emitted copies carry new_tag),
-    all other columns passed through verbatim. Two projections + one
+def apply_rewrite_tags(df: DataFrame, stages: list[Stage]) -> DataFrame:
+    """Run the full rewrite_tag cascade over the `tag` column; returns
+    one row per FINAL record (surviving originals keep their tag;
+    emitted copies carry new_tag), all other columns passed through
+    verbatim. Two projections + one
     generator — the input is scanned once regardless of how many
     re-injection rounds the config implies. Raises ValueError on a
     cyclic config, before any job runs.
@@ -231,14 +230,14 @@ def apply_rewrite_tags(
     for si, stage in enumerate(stages):
         matches[si] = F.col(f"_rw_m{si}")
         helpers.append(
-            F.col(tag_col).rlike(glob_to_regex(stage.match)).alias(f"_rw_m{si}")
+            F.col("tag").rlike(glob_to_regex(stage.match)).alias(f"_rw_m{si}")
         )
         for ri, r in enumerate(stage.rules):
             conds[(si, ri)] = F.col(f"_rw_c{si}_{ri}")
             cond = parse_accessor(r.key).cast("string").rlike(r.regex)
             helpers.append(F.coalesce(cond, F.lit(False)).alias(f"_rw_c{si}_{ri}"))
 
-    finals = _final_tags_expr(stages, F.col(tag_col), conds, matches)
+    finals = _final_tags_expr(stages, F.col("tag"), conds, matches)
     # withColumn(explode), NOT select(explode, *others): the select form
     # asks the optimizer to rebuild every passthrough column inside the
     # Generate's child projection; this shape is the same one
@@ -248,7 +247,7 @@ def apply_rewrite_tags(
         df.select("*", *helpers)
         .withColumn("_rw_final_tag", F.explode(finals))
         .select(
-            *(F.col("_rw_final_tag").alias(c) if c == tag_col else c for c in df.columns)
+            *(F.col("_rw_final_tag").alias(c) if c == "tag" else c for c in df.columns)
         )
     )
 
@@ -281,41 +280,30 @@ REFERENCE_SINK_DISPATCH: list[tuple[str, str]] = [
 ]
 
 
-def dispatch_sinks(
-    df: DataFrame,
-    dispatch: list[tuple[str, str]] = REFERENCE_SINK_DISPATCH,
-    tag_col: str = "tag",
-) -> DataFrame:
+def dispatch_sinks(df: DataFrame) -> DataFrame:
     """Map final tags to sink names (F13 Match) — first glob wins."""
     sink: Column | None = None
-    for glob, name in dispatch:
-        cond = F.col(tag_col).rlike(glob_to_regex(glob))
+    for glob, name in REFERENCE_SINK_DISPATCH:
+        cond = F.col("tag").rlike(glob_to_regex(glob))
         sink = F.when(cond, name) if sink is None else sink.when(cond, name)
     return df.withColumn("sink", sink)
 
 
-def route_with_rules(
-    df: DataFrame,
-    conf_text: str = REFERENCE_ROUTER_CONF,
-    dispatch: list[tuple[str, str]] = REFERENCE_SINK_DISPATCH,
-    initial_tag: Column | None = None,
-) -> DataFrame:
+def route_with_rules(df: DataFrame) -> DataFrame:
     """Drop-in alternative to operators.route.route(): tag the rows,
-    run the declared cascade, dispatch tags to sinks, drop the tag.
+    run the declared cascade (REFERENCE_ROUTER_CONF), dispatch tags to
+    sinks, drop the tag.
 
     The initial tag mirrors the tail input's path-derived
     `kube.<pod>...` tag (conf/ds/docker-runtime.conf:4 Tag kube.*);
-    any kube.* value routes identically, so the default uses conv_id
-    when present.
+    any kube.* value routes identically, so it uses conv_id when
+    present.
     """
-    if initial_tag is None:
-        base = F.col("conv_id") if "conv_id" in df.columns else F.lit("var.log")
-        # null-safe: a NULL conv_id must not produce a NULL tag (NULL
-        # poisons every rlike in the cascade and the row would vanish
-        # where route() still routes it)
-        initial_tag = F.concat(
-            F.lit("kube."), F.coalesce(base.cast("string"), F.lit(""))
-        )
+    base = F.col("conv_id") if "conv_id" in df.columns else F.lit("var.log")
+    # null-safe: a NULL conv_id must not produce a NULL tag (NULL
+    # poisons every rlike in the cascade and the row would vanish
+    # where route() still routes it)
+    initial_tag = F.concat(F.lit("kube."), F.coalesce(base.cast("string"), F.lit("")))
     tagged = df.withColumn("tag", initial_tag)
-    routed = apply_rewrite_tags(tagged, parse_rewrite_tag_conf(conf_text))
-    return dispatch_sinks(routed, dispatch).drop("tag")
+    routed = apply_rewrite_tags(tagged, parse_rewrite_tag_conf(REFERENCE_ROUTER_CONF))
+    return dispatch_sinks(routed).drop("tag")

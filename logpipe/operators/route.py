@@ -53,9 +53,9 @@ def sink_array(collector_label: Column, define_tag: Column) -> Column:
     return F.concat(export_part, final_part)
 
 
-def route(df: DataFrame, collector_col: str = "monitor_log_collector",
-          define_tag_col: str = "define_tag") -> DataFrame:
-    """Explode the row to one copy per destination sink (adds `sink`)."""
+def route(df: DataFrame) -> DataFrame:
+    """Explode the row to one copy per destination sink (adds `sink`),
+    reading `monitor_log_collector` and `define_tag`."""
     return df.withColumn(
-        "sink", F.explode(sink_array(F.col(collector_col), F.col(define_tag_col)))
+        "sink", F.explode(sink_array(F.col("monitor_log_collector"), F.col("define_tag")))
     )

@@ -105,10 +105,7 @@ def collapse_runs(
 
 
 def stitch_multiline(
-    df: DataFrame,
-    firstline_re: str = FIRSTLINE_RE,
-    text_col: str = "text",
-    is_start=None,
+    df: DataFrame, firstline_re: str = FIRSTLINE_RE, is_start=None
 ) -> DataFrame:
     """F3 stitcher: one STITCHED_SCHEMA row per group (collapse_runs
     with '\\n', keeping the firstline's turn_idx, role, tool and ts).
@@ -118,11 +115,10 @@ def stitch_multiline(
     grammar's NOT-a-continuation rule, ``is_start=java_group_start()``.
     """
     if is_start is None:
-        is_start = F.col(text_col).rlike(firstline_re)
-    runs = collapse_runs(df, is_start, "\n", text=text_col, carry=("role", "tool", "ts"))
+        is_start = F.col("text").rlike(firstline_re)
+    runs = collapse_runs(df, is_start, "\n", carry=("role", "tool", "ts"))
     return runs.select(
-        "conv_id", "grp", "turn_idx", "role",
-        F.col(text_col).alias("text"), "tool", "ts", "n_lines",
+        "conv_id", "grp", "turn_idx", "role", "text", "tool", "ts", "n_lines"
     )
 
 
@@ -190,9 +186,7 @@ def session_stats(
     )
 
 
-def stitch_multiline_pandas(
-    df: DataFrame, firstline_re: str = FIRSTLINE_RE
-) -> DataFrame:
+def stitch_multiline_pandas(df: DataFrame) -> DataFrame:
     """Exact-sequential stitcher via applyInPandas (grouped-map, Arrow).
 
     Semantically identical to stitch_multiline (tested); use when the
@@ -203,7 +197,7 @@ def stitch_multiline_pandas(
     import pandas as pd
     import re
 
-    pat = re.compile(firstline_re)
+    pat = re.compile(FIRSTLINE_RE)
 
     def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("turn_idx")

@@ -613,7 +613,7 @@ n AS (SELECT vec_id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e)
 """
 
 
-def _banded_sql(n_planes: int, n_tables: int, dim: int = 64) -> str:
+def _banded_sql(n_planes: int, n_tables: int) -> str:
     """UNION ALL of per-table sign-bit bucket selects over CTE `n`."""
     from logpipe.traindata.ann import _hyperplanes
 
@@ -622,7 +622,7 @@ def _banded_sql(n_planes: int, n_tables: int, dim: int = 64) -> str:
 
     selects = []
     for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed=7 + 13 * t)
+        planes = _hyperplanes(n_planes, seed=7 + 13 * t)
         bucket = " + ".join(
             f"(CASE WHEN list_dot_product(emb, {plane_lit(p)}) > 0 THEN {2**i} ELSE 0 END)"
             for i, p in enumerate(planes)

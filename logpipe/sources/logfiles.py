@@ -167,7 +167,6 @@ def read_docker_logs(
 def fragment_join(
     df: DataFrame,
     partial_col: str = "partial",
-    order_col: str = "turn_idx",
     carry: tuple[str, ...] = ("role", "tool", "ts", "file"),
 ) -> DataFrame:
     """Rejoin records the runtime split out of ONE over-long app line:
@@ -185,27 +184,27 @@ def fragment_join(
     a trailing newline continues) and CRI logtag P/F (cri partial
     records continue until the next F record).
     """
-    prev = F.lag(partial_col).over(Window.partitionBy("conv_id").orderBy(order_col))
+    prev = F.lag(partial_col).over(Window.partitionBy("conv_id").orderBy("turn_idx"))
     is_start = ~F.coalesce(prev, F.lit(False))
-    runs = collapse_runs(df, is_start, "", order=order_col, carry=carry)
+    runs = collapse_runs(df, is_start, "", carry=carry)
     return runs.drop("grp", "n_lines")
 
 
-def docker_mode_join(df: DataFrame, order_col: str = "turn_idx") -> DataFrame:
+def docker_mode_join(df: DataFrame) -> DataFrame:
     """Docker_Mode On: see fragment_join (the `partial` marker comes
     from read_docker_logs — log without the trailing newline)."""
     return fragment_join(
-        df, "partial", order_col, carry=("role", "tool", "ts", "file", "docker_id")
+        df, "partial", carry=("role", "tool", "ts", "file", "docker_id")
     )
 
 
-def cri_mode_join(df: DataFrame, order_col: str = "turn_idx") -> DataFrame:
+def cri_mode_join(df: DataFrame) -> DataFrame:
     """CRI partial-record rejoin: logtag 'P' continues into the next
     record, 'F' closes it (conf/ds/parsers.conf:25-30 cri format;
     cri-runtime.conf Multiline handling)."""
     return fragment_join(
         df.withColumn("partial", F.col("logtag") == "P"),
-        "partial", order_col, carry=("role", "tool", "ts", "file", "logtag"),
+        "partial", carry=("role", "tool", "ts", "file", "logtag"),
     )
 
 
@@ -230,10 +229,10 @@ def read_cri_logs(
     )
 
 
-def ignore_older(df: DataFrame, cutoff, ts_col: str = "ts") -> DataFrame:
+def ignore_older(df: DataFrame, cutoff) -> DataFrame:
     """`ignore_older 5m` (conf/eci/fluent-bit.conf:18): drop records
     older than the cutoff. The reference skips stale files at tail
     start; the batch analog is an event-time predicate, which Catalyst
     pushes into the scan (partition pruning on ts-partitioned tables).
     """
-    return df.filter(F.col(ts_col) >= F.lit(cutoff))
+    return df.filter(F.col("ts") >= F.lit(cutoff))

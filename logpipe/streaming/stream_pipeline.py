@@ -99,26 +99,23 @@ def streaming_sink_counts(
 
 THROTTLE_STATE_SCHEMA = "buckets array<long>, counts array<long>"
 
+#: Event-time buckets of throttle state kept per conv_id (the
+#: reference's `Window` ring, throttle.c).
+THROTTLE_RING = 16
 
-def streaming_throttle_drop(
-    stream: DataFrame,
-    rate: int,
-    key: str = "conv_id",
-    ts_col: str = "ts",
-    order_col: str = "turn_idx",
-    bucket: str = "day",
-    ring: int = 16,
-):
+
+def streaming_throttle_drop(stream: DataFrame, rate: int, bucket: str = "day"):
     """F1 retain=false as a STATEFUL streaming operator: drop records
-    once their (key, event-time bucket) count exceeds `rate`.
+    once their (conv_id, event-time bucket) count exceeds `rate`.
 
     State mirrors the reference's bucket ring (throttle.c keeps a ring
-    of `Window` counters advanced per `Interval`): per key, the counts
-    of the last `ring` buckets; older buckets are pruned, bounding the
-    state size no matter how long the stream runs. Counting is exact
-    under in-order per-key delivery (the tail position-DB guarantee —
-    same caveat as streaming_stitch); cross-micro-batch equality with
-    the batch throttle_drop is pinned by tests.
+    of `Window` counters advanced per `Interval`): per conv_id, the
+    counts of the last THROTTLE_RING buckets; older buckets are
+    pruned, bounding the state size no matter how long the stream
+    runs. Counting is exact under in-order per-key delivery (the tail
+    position-DB guarantee — same caveat as streaming_stitch);
+    cross-micro-batch equality with the batch throttle_drop is pinned
+    by tests.
     """
     import pandas as pd
 
@@ -134,20 +131,20 @@ def streaming_throttle_drop(
         batch = pd.concat(list(pdfs)) if pdfs is not None else pd.DataFrame()
         if not len(batch):
             return
-        batch = batch.sort_values(order_col)
-        b = batch[ts_col].dt.floor(freq).astype("int64")
+        batch = batch.sort_values("turn_idx")
+        b = batch["ts"].dt.floor(freq).astype("int64")
         rank = b.groupby(b).cumcount()
         prior = b.map(m).fillna(0).astype("int64")
         keep = (prior + rank) < rate
         for bk, n in b.value_counts().items():
             m[int(bk)] = m.get(int(bk), 0) + int(n)
-        pruned = sorted(m.items())[-ring:]  # keep the newest `ring` buckets
+        pruned = sorted(m.items())[-THROTTLE_RING:]  # keep the newest buckets
         state.update(([int(k) for k, _ in pruned], [int(v) for _, v in pruned]))
         kept = batch.loc[keep, cols]
         if len(kept):
             yield kept
 
-    return stream.groupBy(key).applyInPandasWithState(
+    return stream.groupBy("conv_id").applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=THROTTLE_STATE_SCHEMA,

@@ -29,16 +29,19 @@ BASE_EPOCH = 1704067200  # 2024-01-01T00:00:00Z, fixed (no wall clock)
 _LEVELS = ["INFO", "WARN", "ERROR", "DEBUG", "Trace", "Alert", "info", "warn"]
 
 
-def _h(seed: int, *cols) -> F.Column:
-    """Deterministic non-negative int64 from (seed, cols)."""
-    return F.abs(F.xxhash64(F.lit(seed), *cols))
+#: Hash seed of every generated column: one fixed dataset per size.
+SEED = 42
+
+
+def _h(salt: int, *cols) -> F.Column:
+    """Deterministic non-negative int64 from (SEED + salt, cols)."""
+    return F.abs(F.xxhash64(F.lit(SEED + salt), *cols))
 
 
 def synth_transcripts(
     spark: SparkSession,
     n_rows: int = 10_000,
     n_convs: int = 64,
-    seed: int = 42,
     oversize_permille: int = 20,
 ) -> DataFrame:
     """Transcripts table (conv_id, turn_idx, role, text, tool, ts).
@@ -47,10 +50,10 @@ def synth_transcripts(
     2% default for truncation-coverage in tests, ~1 for realistic
     throughput benches (log lines are usually a few hundred bytes)."""
     df = spark.range(n_rows)
-    h = _h(seed, F.col("id"))
+    h = _h(0, F.col("id"))
 
     # skew: ~15% of rows on conv 0 of each 64-conv block, rest uniform
-    conv_num = F.when(h % 100 < 15, F.lit(0)).otherwise(_h(seed + 1, F.col("id")) % n_convs)
+    conv_num = F.when(h % 100 < 15, F.lit(0)).otherwise(_h(1, F.col("id")) % n_convs)
     df = df.withColumn("conv_num", conv_num)
 
     # per-conv turn numbering: stable order by global id.
@@ -61,30 +64,30 @@ def synth_transcripts(
     df = df.withColumn("turn_idx", F.row_number().over(w).cast("int"))
 
     role = (
-        F.when(_h(seed + 2, F.col("id")) % 10 < 4, "assistant")
-        .when(_h(seed + 2, F.col("id")) % 10 < 7, "user")
-        .when(_h(seed + 2, F.col("id")) % 10 < 9, "tool")
+        F.when(_h(2, F.col("id")) % 10 < 4, "assistant")
+        .when(_h(2, F.col("id")) % 10 < 7, "user")
+        .when(_h(2, F.col("id")) % 10 < 9, "tool")
         .otherwise("system")
     )
 
     level = F.element_at(
         F.array(*[F.lit(x) for x in _LEVELS]),
-        (_h(seed + 3, F.col("id")) % len(_LEVELS) + 1).cast("int"),
+        (_h(3, F.col("id")) % len(_LEVELS) + 1).cast("int"),
     )
-    svc = F.concat(F.lit("svc-"), (_h(seed + 4, F.col("id")) % 8).cast("string"))
+    svc = F.concat(F.lit("svc-"), (_h(4, F.col("id")) % 8).cast("string"))
     uuid_ish = F.lower(
         F.concat_ws(
             "-",
-            F.lpad(F.hex(_h(seed + 5, F.col("id")) % F.lit(2**32)), 8, "0"),
-            F.lpad(F.hex(_h(seed + 6, F.col("id")) % F.lit(2**16)), 4, "0"),
-            F.lpad(F.hex(_h(seed + 7, F.col("id")) % F.lit(2**16)), 4, "0"),
-            F.lpad(F.hex(_h(seed + 8, F.col("id")) % F.lit(2**16)), 4, "0"),
-            F.lpad(F.hex(_h(seed + 9, F.col("id")) % F.lit(2**48)), 12, "0"),
+            F.lpad(F.hex(_h(5, F.col("id")) % F.lit(2**32)), 8, "0"),
+            F.lpad(F.hex(_h(6, F.col("id")) % F.lit(2**16)), 4, "0"),
+            F.lpad(F.hex(_h(7, F.col("id")) % F.lit(2**16)), 4, "0"),
+            F.lpad(F.hex(_h(8, F.col("id")) % F.lit(2**16)), 4, "0"),
+            F.lpad(F.hex(_h(9, F.col("id")) % F.lit(2**48)), 12, "0"),
         )
     )
-    filler = F.concat(F.lit("payload-"), F.hex(_h(seed + 10, F.col("id"))))
+    filler = F.concat(F.lit("payload-"), F.hex(_h(10, F.col("id"))))
 
-    kind = _h(seed + 11, F.col("id")) % 1000
+    kind = _h(11, F.col("id")) % 1000
     dt = F.from_unixtime(F.lit(BASE_EPOCH) + F.col("id") % 86400, "yyyy-MM-dd HH:mm:ss")
     text = (
         # 35%: erda-info bracketed line (grok hit)
@@ -111,7 +114,7 @@ def synth_transcripts(
     )
 
     tool = F.when(
-        role == "tool", F.concat(F.lit("tool-"), (_h(seed + 12, F.col("id")) % 16).cast("string"))
+        role == "tool", F.concat(F.lit("tool-"), (_h(12, F.col("id")) % 16).cast("string"))
     ).otherwise(F.lit(None).cast("string"))
 
     out = df.select(
@@ -125,7 +128,7 @@ def synth_transcripts(
     return out
 
 
-def synth_k8s_meta(spark: SparkSession, n_convs: int = 64, seed: int = 42) -> DataFrame:
+def synth_k8s_meta(spark: SparkSession, n_convs: int = 64) -> DataFrame:
     """Small enrichment dim keyed by conv_id (broadcast side).
 
     ~20% of convs carry monitor_log_collector (export route),
@@ -133,7 +136,7 @@ def synth_k8s_meta(spark: SparkSession, n_convs: int = 64, seed: int = 42) -> Da
     """
     df = spark.range(n_convs)
     cid = F.concat(F.lit("conv-"), F.lpad(F.col("id").cast("string"), 5, "0"))
-    h = _h(seed + 100, F.col("id"))
+    h = _h(100, F.col("id"))
     sfx = (F.col("id") % 1000).cast("string")
     # routing coverage is deterministic by conv number so all four
     # cases exist at any n_convs >= 10: collector only (id%5==0),
@@ -147,8 +150,8 @@ def synth_k8s_meta(spark: SparkSession, n_convs: int = 64, seed: int = 42) -> Da
         cid.alias("conv_id"),
         F.concat(F.lit("pod-"), sfx).alias("pod_name"),
         F.concat(F.lit("ns-"), (F.col("id") % 8).cast("string")).alias("namespace_name"),
-        F.lower(F.hex(_h(seed + 101, F.col("id")))).alias("docker_id"),
-        F.lower(F.hex(_h(seed + 102, F.col("id")))).alias("container_hash"),
+        F.lower(F.hex(_h(101, F.col("id")))).alias("docker_id"),
+        F.lower(F.hex(_h(102, F.col("id")))).alias("container_hash"),
         F.concat(F.lit("registry/app:"), sfx).alias("container_image"),
         (h % 5).cast("string").alias("org_id"),
         F.concat(F.lit("org-"), (h % 5).cast("string")).alias("org_name"),
@@ -175,7 +178,7 @@ def synth_k8s_meta(spark: SparkSession, n_convs: int = 64, seed: int = 42) -> Da
     )
 
 
-def synth_tool_meta(spark: SparkSession, n_tools: int = 16, seed: int = 42) -> DataFrame:
+def synth_tool_meta(spark: SparkSession, n_tools: int = 16) -> DataFrame:
     """Lua-lookup dim: tool -> cgroup cpuset path.
 
     Shape mirrors the reference fixture
@@ -189,8 +192,8 @@ def synth_tool_meta(spark: SparkSession, n_tools: int = 16, seed: int = 42) -> D
         F.concat(F.lit("tool-"), F.col("id").cast("string")).alias("tool"),
         F.concat(
             F.lit("/kubepods/besteffort/pod"),
-            F.lower(F.hex(_h(seed + 200, F.col("id")))),
+            F.lower(F.hex(_h(200, F.col("id")))),
             F.lit("/"),
-            F.lower(F.concat(F.hex(_h(seed + 201, F.col("id"))), F.hex(_h(seed + 202, F.col("id"))))),
+            F.lower(F.concat(F.hex(_h(201, F.col("id"))), F.hex(_h(202, F.col("id"))))),
         ).alias("cpuset"),
     )

@@ -30,6 +30,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+#: Width of the `embedding` vectors the hyperplanes project.
+EMBED_DIM = 64
+
+#: lsh_topk's banding: sign bits per table and independent tables.
+TOPK_PLANES = 4
+TOPK_TABLES = 4
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential double dot product (matches DuckDB list_dot_product)."""
@@ -44,8 +51,8 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("_norm", norm(F.col(vec_col)))
+def with_norm(df: DataFrame) -> DataFrame:
+    return df.withColumn("_norm", norm(F.col("embedding")))
 
 
 def cosine_topk(
@@ -87,16 +94,13 @@ def cosine_topk(
     )
 
 
-def cosine_near_dups(emb: DataFrame, threshold: float = 0.9, modulus: int = 1) -> DataFrame:
-    """All pairs with cosine >= threshold (optionally on the vec_id %
-    modulus == 0 subset to bound the quadratic pair count).
+def cosine_near_dups(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
+    """All pairs with cosine >= threshold.
 
     O(n²) by construction — this is the exactness oracle that gates
     cosine_lsh_near_dups (the 100TB path) in tests; do not run it on
     an unblocked corpus."""
     base = with_norm(emb)
-    if modulus > 1:
-        base = base.filter(F.col("vec_id") % modulus == 0)
     a = base.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"), F.col("_norm").alias("na")
     )
@@ -111,7 +115,7 @@ def cosine_near_dups(emb: DataFrame, threshold: float = 0.9, modulus: int = 1) -
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
+def _hyperplanes(n_planes: int, seed: int = 7) -> list[list[float]]:
     """Deterministic GAUSSIAN unit hyperplanes — pure function of
     (seed, plane, coord) so every executor (and the DuckDB oracle,
     which gets them inlined as literals) agrees.
@@ -129,29 +133,29 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     planes = []
     for p in range(n_planes):
         v: list[float] = []
-        for c in range(0, dim, 2):
+        for c in range(0, EMBED_DIM, 2):
             h = hashlib.md5(f"{seed}:{p}:{c}".encode()).hexdigest()
             u1 = (int(h[:8], 16) + 1) / (2**32 + 1)
             u2 = int(h[8:16], 16) / 2**32
             r = math.sqrt(-2 * math.log(u1))
             v += [r * math.cos(2 * math.pi * u2), r * math.sin(2 * math.pi * u2)]
-        v = v[:dim]
+        v = v[:EMBED_DIM]
         n = math.sqrt(sum(x * x for x in v)) or 1.0
         planes.append([x / n for x in v])
     return planes
 
 
-def _bucket_col(n_planes: int, n_tables: int, dim: int) -> Column:
+def _bucket_col(n_planes: int, n_tables: int) -> Column:
     """array<long> of per-table sign-bit bucket ids for `embedding`
     (Arrow-vectorized numpy kernel; bit i of table t = sign of the
     projection onto deterministic plane (t, i), packed 2^i)."""
     from logpipe.traindata._lsh_udf import bucket_udf
 
-    tables = [_hyperplanes(dim, n_planes, seed=7 + 13 * t) for t in range(n_tables)]
+    tables = [_hyperplanes(n_planes, seed=7 + 13 * t) for t in range(n_tables)]
     return bucket_udf(tables)(F.col("embedding"))
 
 
-def _banded(emb: DataFrame, n_planes: int, n_tables: int, dim: int) -> DataFrame:
+def _banded(emb: DataFrame, n_planes: int, n_tables: int) -> DataFrame:
     """(vec_id, table, bucket) — multi-table hyperplane banding,
     PAYLOAD-FREE: the banded frame is exploded x n_tables and
     self-joined, so embeddings must not ride through it (same rule as
@@ -159,7 +163,7 @@ def _banded(emb: DataFrame, n_planes: int, n_tables: int, dim: int) -> DataFrame
     set afterwards."""
     return emb.select(
         "vec_id",
-        F.posexplode(_bucket_col(n_planes, n_tables, dim)).alias("table", "bucket"),
+        F.posexplode(_bucket_col(n_planes, n_tables)).alias("table", "bucket"),
     )
 
 
@@ -168,7 +172,6 @@ def cosine_lsh_near_dups(
     threshold: float = 0.4,
     n_planes: int = 3,
     n_tables: int = 12,
-    dim: int = 64,
 ) -> DataFrame:
     """Scale-path embedding near-dup: bucketed candidates, exact verify.
 
@@ -214,7 +217,7 @@ def cosine_lsh_near_dups(
     # _band_candidates for the quadratic-output honesty note).
     from logpipe.materialize import attach_release, materialize
 
-    banded = materialize(_banded(emb, n_planes, n_tables, dim))
+    banded = materialize(_banded(emb, n_planes, n_tables))
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -247,20 +250,13 @@ def cosine_lsh_near_dups(
     )
 
 
-def lsh_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    n_planes: int = 4,
-    n_tables: int = 4,
-    dim: int = 64,
-) -> DataFrame:
+def lsh_topk(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
 
-    Each of n_tables independent tables buckets vectors by n_planes
-    sign bits; candidates = union over tables of same-bucket vectors
-    (equi-join on (table, bucket), no crossJoin), then EXACT cosine
-    re-rank. More tables -> higher recall, more candidates scanned
+    Each of TOPK_TABLES independent tables buckets vectors by
+    TOPK_PLANES sign bits; candidates = union over tables of
+    same-bucket vectors (equi-join on (table, bucket), no crossJoin),
+    then EXACT cosine re-rank. More tables -> higher recall, more candidates scanned
     (recall ≈ 1-(1-p^planes)^tables, p = 1 - θ/π).
 
     Recall < 1 by construction; measured vs cosine_topk in pytest.
@@ -277,7 +273,7 @@ def lsh_topk(
     base = emb.select(
         "vec_id",
         "embedding",
-        F.posexplode(_bucket_col(n_planes, n_tables, dim)).alias("table", "bucket"),
+        F.posexplode(_bucket_col(TOPK_PLANES, TOPK_TABLES)).alias("table", "bucket"),
     )
     q = base.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"),

@@ -29,10 +29,10 @@ from logpipe.spread import shuffle_partitions, spread_for_compute
 from logpipe.traindata.textstats import fingerprint, tokens
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Group by content fingerprint: keep lowest doc_id, count dups."""
     return (
-        docs.withColumn("fp", fingerprint(F.col(text_col)))
+        docs.withColumn("fp", fingerprint(F.col("text")))
         .groupBy("fp")
         .agg(
             F.min("doc_id").alias("keep_id"),
@@ -77,9 +77,7 @@ def ngrams_of(toks: Column, n: int) -> Column:
     return F.array_distinct(grams)
 
 
-def with_ngrams(
-    docs: DataFrame, n: int, text_col: str = "text", drop_gramless: bool = False
-) -> DataFrame:
+def with_ngrams(docs: DataFrame, n: int, drop_gramless: bool = False) -> DataFrame:
     """docs + `grams` column, tokens materialized once per row.
 
     ``drop_gramless=True`` drops docs that would yield zero grams by
@@ -90,7 +88,7 @@ def with_ngrams(
     token split is a small tree, the full zip_with shingle tree is not
     (round-3 plan audit flagged the duplicated gram expression in the
     pushed filter)."""
-    d = docs.withColumn("_toks", tokens(F.col(text_col)))
+    d = docs.withColumn("_toks", tokens(F.col("text")))
     if drop_gramless:
         d = d.filter(F.size("_toks") >= max(n, 1))
     return d.withColumn("grams", ngrams_of(F.col("_toks"), n)).drop("_toks")
@@ -417,13 +415,11 @@ def benchmark_contamination(
     bench: DataFrame,
     n: int = 3,
     min_overlap: int = 1,
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    bench_id_col: str = "bench_id",
 ) -> DataFrame:
     """Decontamination: flag training docs sharing >= ``min_overlap``
-    distinct n-grams with a benchmark/eval document (the standard
-    n-gram-overlap contamination check run before training).
+    distinct n-grams with a benchmark/eval document (bench_id, text)
+    (the standard n-gram-overlap contamination check run before
+    training).
 
     Returns (doc_id, bench_id, n_shared, frac_doc_grams) per
     contaminated (doc, bench) pair — n_shared = count of distinct
@@ -445,7 +441,7 @@ def benchmark_contamination(
     # the array to materialize ONCE per doc behind a Generate barrier;
     # the inner explode then reads the materialized field (0.60s, same
     # rows/values — round 11, the gram_hashes inlining class again).
-    d = with_ngrams(docs, n, text_col=text_col).select(
+    d = with_ngrams(docs, n).select(
         "doc_id",
         F.explode(
             F.array(
@@ -458,11 +454,7 @@ def benchmark_contamination(
         F.explode("_w.g").alias("gram"),
     )
     b = (
-        with_ngrams(
-            bench.select(F.col(bench_id_col).alias("doc_id"), bench_text_col),
-            n,
-            text_col=bench_text_col,
-        )
+        with_ngrams(bench.select(F.col("bench_id").alias("doc_id"), "text"), n)
         .select(F.col("doc_id").alias("bench_id"), F.explode("grams").alias("gram"))
         .distinct()
     )
@@ -674,7 +666,7 @@ def near_dup_clusters_star(
 SIMHASH_BITS = 60  # 15 md5 hex chars -> fits a signed 64-bit long
 
 
-def simhash_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_table(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) — 60-bit SimHash (Charikar) per document.
 
     Engine-portable construction (md5-derived token hashes, mirrored by
@@ -705,7 +697,7 @@ def simhash_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     tok = docs.select(
         "doc_id",
-        F.explode_outer(F.array_distinct(tokens(F.lower(F.col(text_col))))).alias(
+        F.explode_outer(F.array_distinct(tokens(F.lower(F.col("text"))))).alias(
             "tok"
         ),
     )
@@ -791,7 +783,7 @@ def simhash_near_dups(
     )
 
 
-def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """C4/RefinedWeb-style GLOBAL line-level dedup: every distinct line
     (boilerplate footers, nav text, repeated sentences) survives only in
     the LOWEST-doc_id document containing it, and only at its first
@@ -840,7 +832,7 @@ def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     lines = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("lh", F.md5("line"))
     winners = lines.groupBy("lh").agg(F.min("doc_id").alias("win_doc"))
     kept = (
@@ -870,7 +862,7 @@ def line_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _span_frame(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
+def _span_frame(docs: DataFrame, k: int) -> DataFrame:
     """The shared head of the span family: (doc_id, _spans) — tokens,
     POSITIONAL k-gram windows (NOT distinct: every position counts;
     < k-token docs get an empty array), with the derived spread
@@ -878,8 +870,8 @@ def _span_frame(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
     purely for parallelism on few-split inputs). One definition so the
     stats/removals tables cannot diverge on tokenization, the window
     guard, or the spread rule (round-7 review)."""
-    d = spread_for_compute(docs.select("doc_id", text_col))
-    d = d.withColumn("_toks", tokens(F.col(text_col)))
+    d = spread_for_compute(docs.select("doc_id", "text"))
+    d = d.withColumn("_toks", tokens(F.col("text")))
     return d.select(
         "doc_id",
         F.when(F.size("_toks") >= k, _ngram_windows(F.col("_toks"), k))
@@ -888,7 +880,7 @@ def _span_frame(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
     )
 
 
-def _span_hash_frame(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
+def _span_hash_frame(docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, _shs) — the span windows of _span_frame hashed IN THE
     ARRAY to 16-byte ``unhex(md5(window))`` binaries before the
     explode. Same md5 bits as the previous post-explode ``md5(span)``
@@ -899,14 +891,14 @@ def _span_hash_frame(docs: DataFrame, k: int, text_col: str = "text") -> DataFra
     "shuffle fewer bytes": count table 1.80s -> 1.07s, position table
     1.56s -> 1.10s at sf0.1). The window text itself never leaves the
     map side anywhere in the span family."""
-    spans = _span_frame(docs, k, text_col=text_col)
+    spans = _span_frame(docs, k)
     return spans.select(
         "doc_id",
         F.transform("_spans", lambda s: F.unhex(F.md5(s))).alias("_shs"),
     )
 
 
-def _span_count_table(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
+def _span_count_table(docs: DataFrame, k: int) -> DataFrame:
     """LAZY per-(window, doc) count table: (sh=unhex(md5(window)),
     doc_id, cnt=occurrences of that window in that doc). ONE LINEAR
     CHAIN, one explode pass over _span_hash_frame, groupBy (sh, doc)
@@ -914,17 +906,12 @@ def _span_count_table(docs: DataFrame, k: int, text_col: str = "text") -> DataFr
     hash, id, count) scalars. Exposed for plan pinning;
     duplicate_span_stats materializes it before the multiplicity
     branch."""
-    hashed = _span_hash_frame(docs, k, text_col=text_col)
+    hashed = _span_hash_frame(docs, k)
     keyed = hashed.select("doc_id", F.explode("_shs").alias("sh"))
     return keyed.groupBy("sh", "doc_id").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def duplicate_span_stats(
-    docs: DataFrame,
-    k: int = 3,
-    min_docs: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
+def duplicate_span_stats(docs: DataFrame, k: int = 3, min_docs: int = 2) -> DataFrame:
     """Cross-document duplicate-SPAN signal (the exact-substring-dedup
     statistic of Lee et al. 2021, "Deduplicating Training Data Makes
     Language Models Better", public): for every k-token window position
@@ -975,7 +962,7 @@ def duplicate_span_stats(
     """
     if k < 1:
         raise ValueError(f"duplicate_span_stats: k must be >= 1, got {k}")
-    per_sh_doc = materialize(_span_count_table(docs, k, text_col=text_col))
+    per_sh_doc = materialize(_span_count_table(docs, k))
     try:
         shs = materialize(per_sh_doc.groupBy("sh").agg(F.count(F.lit(1)).alias("nd")))
     except BaseException:
@@ -1003,14 +990,14 @@ def duplicate_span_stats(
     return attach_release(out, per_sh_doc, shs)
 
 
-def _span_position_table(docs: DataFrame, k: int, text_col: str = "text") -> DataFrame:
+def _span_position_table(docs: DataFrame, k: int) -> DataFrame:
     """LAZY per-(window, doc) position table: (sh=unhex(md5(window)),
     doc_id, poss=[1-based window positions]). One linear chain — one
     posexplode pass over _span_hash_frame, groupBy (sh, doc) — every
     hash exchange carries (16-byte hash, id, int-list) scalars.
     Exposed for plan pinning; duplicate_span_removals materializes it
     before branching."""
-    hashed = _span_hash_frame(docs, k, text_col=text_col)
+    hashed = _span_hash_frame(docs, k)
     keyed = hashed.select(
         "doc_id", F.posexplode("_shs").alias("wpos0", "sh")
     ).select(
@@ -1023,12 +1010,7 @@ def _span_position_table(docs: DataFrame, k: int, text_col: str = "text") -> Dat
     )
 
 
-def duplicate_span_removals(
-    docs: DataFrame,
-    k: int = 3,
-    min_docs: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
+def duplicate_span_removals(docs: DataFrame, k: int = 3, min_docs: int = 2) -> DataFrame:
     """Per-doc REMOVED token positions under exact-substring span dedup
     (the remedy of Lee et al. 2021 that duplicate_span_stats only
     measures): a k-token window whose text occurs in >= ``min_docs``
@@ -1064,7 +1046,7 @@ def duplicate_span_removals(
     """
     if k < 1:
         raise ValueError(f"duplicate_span_removals: k must be >= 1, got {k}")
-    per = materialize(_span_position_table(docs, k, text_col=text_col))
+    per = materialize(_span_position_table(docs, k))
     try:
         shs = materialize(
             per.groupBy("sh").agg(
@@ -1097,7 +1079,6 @@ def duplicate_span_trim(
     docs: DataFrame,
     k: int = 3,
     min_docs: int = 2,
-    text_col: str = "text",
     _materialized: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact-substring span dedup (Lee et al. 2021's actual remedy —
@@ -1138,7 +1119,7 @@ def duplicate_span_trim(
     (line_dedup demonstrates it under a COMPOUND join key, see its
     docstring).
     """
-    rm = duplicate_span_removals(docs, k=k, min_docs=min_docs, text_col=text_col)
+    rm = duplicate_span_removals(docs, k=k, min_docs=min_docs)
     # Round-11 measurement, deliberately left as-is: spreading the
     # rejoin's base side (it re-tokenizes the corpus and runs the trim
     # mask) reads 9.0s -> 7.8s on the 10x slope — but the base side
@@ -1150,7 +1131,7 @@ def duplicate_span_trim(
     # demonstration pins (test_span_trim_bucketed_rejoin). The span
     # subtree's own spread is safe because it sits behind the
     # materialized position-table checkpoint.
-    base = docs.select("doc_id", tokens(F.col(text_col)).alias("_toks"))
+    base = docs.select("doc_id", tokens(F.col("text")).alias("_toks"))
     # kept 1-based positions in original order: sequence(1, n) minus rm.
     # array_except builds rm's hash set ONCE per row; rm non-null implies
     # size(_toks) >= k >= 1 (removals only emits docs that had windows),

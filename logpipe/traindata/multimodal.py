@@ -3,10 +3,10 @@
 Images/audio/video are carried as `binary` columns with a `kind` tag
 and a metadata struct; decode / feature-extract / resize / frame-sample
 run as Arrow-batched pandas functions over mapInPandas. The CODEC step
-is substituted (no image/audio libs in this container): when
-PIL/soundfile are absent, `decode_features` falls back to a
-deterministic fake decoder (payload-byte features) and `resize_image`
-treats the payload as a raw byte grid — the Spark-side plumbing
+is substituted (the project depends on no image/audio codec):
+`decode_features` is a deterministic fake decoder (payload-byte
+features) and `resize_image` treats the payload as a raw byte grid —
+the Spark-side plumbing
 (schema, partitioning, UDF signature, Arrow batch shape) and the
 numpy resample kernel are fully real and tested; a deployment with
 codecs swaps only the bytes->grid step.
@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 MEDIA_SCHEMA = "media_id long, kind string, payload binary, width int, height int, duration_ms int"
 FEATURE_SCHEMA = "media_id long, kind string, n_bytes long, features array<double>"
 FRAME_SCHEMA = "media_id long, frame_idx int, frame_bytes long"
+N_FEATURES = 8     # decode_features' vector length
+FRAME_BYTES = 16   # frame_sample's payload bytes per frame
 
 
 def synth_media(spark: SparkSession, n_rows: int = 256, seed: int = 42) -> DataFrame:
@@ -47,23 +49,18 @@ def synth_media(spark: SparkSession, n_rows: int = 256, seed: int = 42) -> DataF
     )
 
 
-def decode_features(media: DataFrame, n_features: int = 8, extractor=None) -> DataFrame:
+def decode_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: binary payload -> small vector.
 
-    ``extractor``: optional ``bytes -> list[float]`` plugged in by a
-    deployment that ships real codecs (PIL decode + pooling, etc.).
-    Default is the deterministic byte-derived kernel (first n bytes /
-    255) so tests assert exact values with no codec dependency. The
-    Arrow plumbing (batch iterator, schema, null payloads) is identical
-    either way.
+    The kernel is deterministic and byte-derived (the first N_FEATURES
+    bytes / 255, zero-padded) so tests assert exact values with no
+    codec dependency; a real codec would replace ``fn`` and keep the
+    Arrow plumbing (batch iterator, schema, null payloads).
     """
 
-    def default_extractor(payload: bytes) -> list:
-        raw = payload[:n_features]
-        v = [b / 255.0 for b in raw]
-        return v + [0.0] * (n_features - len(v))
-
-    fn = extractor or default_extractor
+    def fn(payload: bytes) -> list:
+        v = [b / 255.0 for b in payload[:N_FEATURES]]
+        return v + [0.0] * (N_FEATURES - len(v))
 
     def extract(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -87,8 +84,8 @@ def decode_features(media: DataFrame, n_features: int = 8, extractor=None) -> Da
     return media.mapInPandas(extract, schema=FEATURE_SCHEMA)
 
 
-def frame_sample(media: DataFrame, every_bytes: int = 16) -> DataFrame:
-    """Video frame sampling stand-in: one 'frame' per every_bytes chunk
+def frame_sample(media: DataFrame) -> DataFrame:
+    """Video frame sampling stand-in: one 'frame' per FRAME_BYTES chunk
     of the payload (the real decoder would emit decoded frames) —
     exercises the 1->N mapInPandas fan-out shape."""
 
@@ -108,17 +105,17 @@ def frame_sample(media: DataFrame, every_bytes: int = 16) -> DataFrame:
             # vectorized 1->N fan-out: per-payload frame counts, then one
             # repeat + one global arange (no per-row Python loop)
             sizes = vid["payload"].map(len).to_numpy(dtype="int64")
-            n_frames = (sizes + every_bytes - 1) // every_bytes
+            n_frames = (sizes + FRAME_BYTES - 1) // FRAME_BYTES
             media_id = np.repeat(vid["media_id"].to_numpy(), n_frames)
             # frame_idx: global arange minus each payload's start offset
             starts = np.repeat(np.cumsum(n_frames) - n_frames, n_frames)
             frame_idx = np.arange(int(n_frames.sum())) - starts
-            tail = np.repeat(sizes, n_frames) - frame_idx * every_bytes
+            tail = np.repeat(sizes, n_frames) - frame_idx * FRAME_BYTES
             yield pd.DataFrame(
                 {
                     "media_id": media_id,
                     "frame_idx": frame_idx.astype("int32"),
-                    "frame_bytes": np.minimum(tail, every_bytes),
+                    "frame_bytes": np.minimum(tail, FRAME_BYTES),
                 }
             )
 

@@ -46,14 +46,10 @@ def _hash_frac(key: Column, salt: str) -> Column:
     return _hash_u32(key, salt).cast("double") / F.lit(float(1 << 32))
 
 
-def hash_split(
-    docs: DataFrame,
-    weights: dict[str, float] | None = None,
-    key: str = "doc_id",
-) -> DataFrame:
+def hash_split(docs: DataFrame, weights: dict[str, float] | None = None) -> DataFrame:
     """Add a `split` column by deterministic hash bucket.
 
-    Default 90/5/5 train/val/test. Assignment depends only on the key
+    Default 90/5/5 train/val/test. Assignment depends only on doc_id
     (salted independently of the other sampling ops), so re-runs, added
     partitions, and other engines agree — the property that matters
     when the corpus is rebuilt incrementally. Weights must sum to 1.
@@ -67,7 +63,7 @@ def hash_split(
     items = list(weights.items())
     if len(items) == 1:
         return docs.withColumn("split", F.lit(items[0][0]))
-    frac = _hash_frac(F.col(key), "split")
+    frac = _hash_frac(F.col("doc_id"), "split")
     expr = None
     acc = 0.0
     for name, w in items[:-1]:
@@ -82,17 +78,15 @@ def hash_split(
 def mixture_sample(
     docs: DataFrame,
     rates: dict[str, float],
-    source_col: str = "source",
-    key: str = "doc_id",
     default_rate: float = 1.0,
 ) -> DataFrame:
     """Deterministic per-source re-weighting (data mixing): a doc with
     rate r is kept floor(r) times plus once more iff its hash fraction
     < frac(r). Downsampling (r<1) keeps a stable subset; upsampling
     (r>1) emits repeated copies with a `copy` index (0-based) so
-    downstream shuffles still have a unique (key, copy) identity.
+    downstream shuffles still have a unique (doc_id, copy) identity.
 
-    Pure function of (key, source) — rebuilding the corpus reproduces
+    Pure function of (doc_id, source) — rebuilding the corpus reproduces
     the exact same mixture; no shuffle (projection + generator).
     """
     import math
@@ -105,14 +99,14 @@ def mixture_sample(
     rate = None
     for s, r in rates.items():
         rate = (
-            F.when(F.col(source_col) == s, float(r))
+            F.when(F.col("source") == s, float(r))
             if rate is None
-            else rate.when(F.col(source_col) == s, float(r))
+            else rate.when(F.col("source") == s, float(r))
         )
     rate = rate.otherwise(float(default_rate)) if rate is not None else F.lit(
         float(default_rate)
     )
-    frac = _hash_frac(F.col(key), "mix")
+    frac = _hash_frac(F.col("doc_id"), "mix")
     n_copies = F.floor(rate).cast("int") + F.when(
         frac < rate - F.floor(rate), 1
     ).otherwise(0)
@@ -128,7 +122,6 @@ def pack_chunks(
     docs: DataFrame,
     budget: int = 2048,
     n_buckets: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Assign each doc to a (bucket, chunk) of ~`budget` tokens.
 
@@ -150,7 +143,7 @@ def pack_chunks(
     """
     b = F.pmod(_hash_u32(F.col("doc_id"), "pack"), F.lit(n_buckets))
     d = docs.withColumn("bucket", b).withColumn(
-        "n_tokens", token_count(F.col(text_col))
+        "n_tokens", token_count(F.col("text"))
     )
     order_cols = ["doc_id"] + (["copy"] if "copy" in docs.columns else [])
     w = (

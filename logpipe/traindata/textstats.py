@@ -64,9 +64,13 @@ def pii_counts(text: Column) -> dict[str, Column]:
 # terminal-punctuation lines, short-line fraction, lorem-ipsum and
 # curly-brace markers. All columnar (split + filter + size).
 C4_TERMINAL_PUNCT = (".", "!", "?", '"')
+C4_SHORT_LINE_TOKENS = 3   # a line under this many tokens is short
+C4_MIN_PUNCT_FRAC = 0.5    # keep: share of lines ending in terminal punct
+C4_MAX_SHORT_FRAC = 0.5    # keep: share of short lines
+C4_MIN_LINES = 1
 
 
-def c4_line_stats(text: Column, short_line_tokens: int = 3) -> dict[str, Column]:
+def c4_line_stats(text: Column) -> dict[str, Column]:
     """Per-doc line-quality signals: {n_lines, frac_lines_punct,
     frac_short_lines, has_lorem_ipsum, has_brace}. Fractions are
     single-pass double divisions (oracle-bit-identical); empty lines
@@ -85,7 +89,7 @@ def c4_line_stats(text: Column, short_line_tokens: int = 3) -> dict[str, Column]
     short = F.size(
         F.filter(
             lines,
-            lambda x: F.size(F.split(x, r"\s+")) < short_line_tokens,
+            lambda x: F.size(F.split(x, r"\s+")) < C4_SHORT_LINE_TOKENS,
         )
     )
     denom = F.when(n > 0, n.cast("double"))
@@ -98,18 +102,13 @@ def c4_line_stats(text: Column, short_line_tokens: int = 3) -> dict[str, Column]
     }
 
 
-def c4_keep(
-    text: Column,
-    min_punct_frac: float = 0.5,
-    max_short_frac: float = 0.5,
-    min_lines: int = 1,
-) -> Column:
+def c4_keep(text: Column) -> Column:
     """C4-flavored doc-level keep decision over c4_line_stats."""
     s = c4_line_stats(text)
     return (
-        (s["n_lines"] >= min_lines)
-        & (s["frac_lines_punct"] >= min_punct_frac)
-        & (s["frac_short_lines"] <= max_short_frac)
+        (s["n_lines"] >= C4_MIN_LINES)
+        & (s["frac_lines_punct"] >= C4_MIN_PUNCT_FRAC)
+        & (s["frac_short_lines"] <= C4_MAX_SHORT_FRAC)
         & ~s["has_lorem_ipsum"]
         & ~s["has_brace"]
     )
@@ -194,13 +193,13 @@ def dup_ngram_fraction(text: Column, n: int = 2) -> Column:
     return F.when(F.size(toks) >= n, F.round(frac, 4)).otherwise(F.lit(0.0))
 
 
-def top_token_stats(docs, text_col: str = "text"):
+def top_token_stats(docs):
     """(doc_id, top_token_frac): share of the document covered by its
     single most frequent token (Gopher top-1 coverage filter). Explode +
     two partial-aggregating groupBys on doc_id — shuffle key is the doc
     id, token fan-out collapses map-side. Token-less docs score 0.0.
     """
-    tok = docs.select("doc_id", F.explode(tokens(F.col(text_col))).alias("tok"))
+    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     per_tok = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     per_doc = per_tok.groupBy("doc_id").agg(
         F.max("c").alias("top"), F.sum("c").alias("total")
@@ -248,44 +247,44 @@ def normalize_controls(text: Column) -> Column:
     return F.trim(out)
 
 
-def gopher_signals(docs, text_col: str = "text"):
+def gopher_signals(docs):
     """(doc_id, n_tokens, alpha_ratio, dup_bigram_frac, top_token_frac)
     — the Gopher-style (Rae et al. 2021, public) repetition/quality
     signal set, columnar except the top-token pass (explode + two
     partial-agg groupBys keyed on doc_id)."""
     base = docs.select(
         "doc_id",
-        token_count(F.col(text_col)).alias("n_tokens"),
-        F.round(alpha_ratio(F.col(text_col)), 4).alias("alpha_ratio"),
-        dup_ngram_fraction(F.col(text_col), n=2).alias("dup_bigram_frac"),
+        token_count(F.col("text")).alias("n_tokens"),
+        F.round(alpha_ratio(F.col("text")), 4).alias("alpha_ratio"),
+        dup_ngram_fraction(F.col("text"), n=2).alias("dup_bigram_frac"),
     )
-    return base.join(top_token_stats(docs, text_col=text_col), "doc_id")
+    return base.join(top_token_stats(docs), "doc_id")
 
 
-def gopher_keep(
-    docs,
-    text_col: str = "text",
-    min_tokens: int = 20,
-    max_tokens: int = 100_000,
-    min_alpha: float = 0.55,
-    max_dup_bigram: float = 0.2,
-    max_top_token: float = 0.2,
-):
+# Gopher keep thresholds (Rae et al. 2021) other than the per-corpus
+# min_tokens; they exercise both branches on the test data.
+GOPHER_MAX_TOKENS = 100_000
+GOPHER_MIN_ALPHA = 0.55
+GOPHER_MAX_DUP_BIGRAM = 0.2
+GOPHER_MAX_TOP_TOKEN = 0.2
+
+
+def gopher_keep(docs, min_tokens: int = 20):
     """Composite Gopher-flavored keep decision over gopher_signals —
-    returns the signals plus `keep`. Thresholds are the knobs a corpus
-    curator tunes; defaults exercise both branches on the test data."""
-    s = gopher_signals(docs, text_col=text_col)
+    returns the signals plus `keep`. ``min_tokens`` is the knob a
+    corpus curator tunes; the other thresholds are GOPHER_* above."""
+    s = gopher_signals(docs)
     keep = (
         (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
-        & (F.col("alpha_ratio") >= min_alpha)
-        & (F.col("dup_bigram_frac") <= max_dup_bigram)
-        & (F.col("top_token_frac") <= max_top_token)
+        & (F.col("n_tokens") <= GOPHER_MAX_TOKENS)
+        & (F.col("alpha_ratio") >= GOPHER_MIN_ALPHA)
+        & (F.col("dup_bigram_frac") <= GOPHER_MAX_DUP_BIGRAM)
+        & (F.col("top_token_frac") <= GOPHER_MAX_TOP_TOKEN)
     )
     return s.withColumn("keep", keep)
 
 
-def domain_blocklist_filter(docs, blocklist: list[str], text_col: str = "text"):
+def domain_blocklist_filter(docs, blocklist: list[str]):
     """Drop documents containing a URL whose domain is on the blocklist
     (spam/SEO/adult-list filtering). The blocklist is tiny -> broadcast;
     the corpus side explodes extracted domains and anti-joins on the
@@ -293,7 +292,7 @@ def domain_blocklist_filter(docs, blocklist: list[str], text_col: str = "text"):
     spark = docs.sparkSession
     bl = spark.createDataFrame([(d,) for d in blocklist], "domain string")
     doms = docs.select(
-        "doc_id", F.explode(extract_domains(F.col(text_col))).alias("domain")
+        "doc_id", F.explode(extract_domains(F.col("text"))).alias("domain")
     )
     bad = doms.join(F.broadcast(bl), "domain", "left_semi").select("doc_id").distinct()
     return docs.join(bad, "doc_id", "left_anti")

@@ -109,10 +109,13 @@ def test_cli_throttle_drop_wiring(spark, tmp_path, monkeypatch):
     assert out_rows(t2) < out_rows(t1)
 
 
-def test_cli_logs_dir_mode_excludes_self(spark, tmp_path, monkeypatch):
+def test_cli_logs_dir_mode_excludes_self(spark, tmp_path, monkeypatch, capsys):
     """--logs-dir reads docker-runtime JSON logs through the S1 source;
     the default Exclude_Path (entrypoint.sh:19-21) drops the
-    collector's own log file from the listing."""
+    collector's own log file from the listing. A blank --exclude-path
+    glob goes through PipelineConfig's glob check and is refused before
+    a session starts, instead of replacing the default with a pattern
+    that matches nothing."""
     import json
 
     from logpipe import cli
@@ -149,6 +152,17 @@ def test_cli_logs_dir_mode_excludes_self(spark, tmp_path, monkeypatch):
     )
     contents = [r["content"] for r in back.select("content").collect()]
     assert contents and all(c == "hello" for c in contents)
+
+    capsys.readouterr()
+    with pytest.raises(SystemExit) as exc:
+        cli.main(
+            ["--logs-dir", str(logs / "*.log"), "--exclude-path", "",
+             "--out", str(tmp_path / "out2"),
+             "--manifest", str(tmp_path / "mf2"), "--buckets", "1"]
+        )
+    assert exc.value.code == 2
+    assert "exclude_path must be non-empty glob strings" in capsys.readouterr().err
+    assert not (tmp_path / "out2").exists()
 
 
 def test_cli_bucket_out_relayout(spark, tmp_path, monkeypatch):

@@ -107,29 +107,38 @@ def test_multiline_stitch_on_reference_fixtures(spark):
 _DOCKER_LINE = (
     '{"log": "%s\\n", "stream": "stdout", "time": "2024-01-01T00:00:00.000000001Z"}'
 )
+_CRI_LINE = "2024-01-01T00:00:00.000000001Z stdout F %s"
 
 
-def test_exclude_path_prunes_at_listing(spark, tmp_path):
-    """Exclude_Path (docker-runtime.conf:4; default *fluent-bit*.log,
-    entrypoint.sh:19-21): excluded files are dropped from the listing —
-    the collector never ingests its own logs."""
-    (tmp_path / "app.log").write_text(_DOCKER_LINE % "hello" + "\n")
-    (tmp_path / "web.log").write_text(_DOCKER_LINE % "world" + "\n")
-    (tmp_path / "fluent-bit-abc.log").write_text(_DOCKER_LINE % "self" + "\n")
+@pytest.mark.parametrize("tail", ["docker", "cri"])
+def test_exclude_path_prunes_at_listing(spark, tmp_path, tail):
+    """Exclude_Path (docker-runtime.conf:4, cri-runtime.conf:4; default
+    *fluent-bit*.log, entrypoint.sh:19-21): excluded files are dropped
+    from the listing — the collector never ingests its own logs."""
+    line = _CRI_LINE if tail == "cri" else _DOCKER_LINE
+
+    def read(spark, path, **kw):
+        if tail == "cri":
+            return read_cri_logs(spark, path, **kw)
+        return read_docker_logs(spark, path, **kw)
+
+    (tmp_path / "app.log").write_text(line % "hello" + "\n")
+    (tmp_path / "web.log").write_text(line % "world" + "\n")
+    (tmp_path / "fluent-bit-abc.log").write_text(line % "self" + "\n")
     glob = str(tmp_path / "*.log")
 
     # two kept files: the pruned listing reaches the reader as a list
-    df = read_docker_logs(spark, glob, exclude_path=("*fluent-bit*.log",))
+    df = read(spark, glob, exclude_path=("*fluent-bit*.log",))
     files = [r["file"] for r in df.select("file").distinct().collect()]
     assert len(files) == 2 and not any("fluent-bit" in f for f in files)
     assert sorted(r["text"] for r in df.collect()) == ["hello", "world"]
     # without exclusion every file is read
-    assert read_docker_logs(spark, glob).select("file").distinct().count() == 3
+    assert read(spark, glob).select("file").distinct().count() == 3
     # everything excluded -> empty frame, not an error
-    assert read_docker_logs(spark, glob, exclude_path=("*.log",)).count() == 0
+    assert read(spark, glob, exclude_path=("*.log",)).count() == 0
     # DIRECTORY input: exclusion must test the files inside, not the
     # directory path itself (the natural call shape for a tail path)
-    ddf = read_docker_logs(spark, str(tmp_path), exclude_path=("*fluent-bit*.log",))
+    ddf = read(spark, str(tmp_path), exclude_path=("*fluent-bit*.log",))
     dfiles = [r["file"] for r in ddf.select("file").distinct().collect()]
     assert len(dfiles) == 2 and not any("fluent-bit" in f for f in dfiles)
 
