@@ -56,6 +56,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from logpipe.plans.pipeline import run_pipeline
+
 
 class Manifest:
     """Directory of per-unit JSON lineage entries with atomic commit."""
@@ -178,16 +180,16 @@ def run_resumable(
     manifest_dir: str,
     n_buckets: int = 8,
     max_buckets: int | None = None,
-    pipeline_fn=None,
+    pipeline_fn=run_pipeline,
     lease_ttl_sec: float = 3600.0,
 ) -> Manifest:
     """Bucket-wise pipeline run with manifest resume.
 
     ``max_buckets`` limits how many incomplete buckets to process this
     invocation (used by tests to simulate a mid-job crash).
-    ``pipeline_fn``: alternative plan with run_pipeline's signature
-    (e.g. the CLI's wrapper that applies throttle-drop and the cluster
-    name); default = the typed flagship.
+    ``pipeline_fn``: the plan, with run_pipeline's signature (the CLI
+    passes its wrapper that applies throttle-drop and the cluster
+    name).
 
     Single-writer: an exclusive `_lease` file is taken for the wave;
     a concurrent invocation raises ConcurrentWaveError unless the
@@ -272,8 +274,6 @@ def _run_wave(
     lease_path: str,
     lease_token: str,
 ) -> Manifest:
-    from logpipe.plans.pipeline import run_pipeline
-
     # the bucketing function is part of the checkpoint's identity:
     # resuming with a different n_buckets would skip units whose conv
     # sets were computed under the old modulus (rows lost + duplicated)
@@ -336,7 +336,7 @@ def _run_wave(
     # leaving completed buckets' directories untouched. The mode is an
     # option of this one write, so the session conf (and every other
     # write in the session) stays as it was.
-    out = (pipeline_fn or run_pipeline)(
+    out = pipeline_fn(
         part, k8s_meta, tool_meta, passthrough=("bucket",)
     )
     (

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from logpipe.operators.route import SINK_JOB
+from logpipe.operators.rewrite import SINK_JOB
 
 
 def project_log_event(df: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:

@@ -16,8 +16,8 @@ plans.pipeline.log_event_tail (and the heads that feed it):
   nest nest             -> map construction             (F11)
 
 All of this stays inside one whole-stage-codegen span. This module
-keeps the map-side helpers: the presence test, the nest map builder
-and the dice_* compat pairs.
+keeps the map-side helpers: the nest map builder and the dice_*
+compat pairs.
 """
 
 from __future__ import annotations
@@ -26,11 +26,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from logpipe.schema import DICE_COMPAT_KEYS
-
-
-def nonempty(c: Column) -> Column:
-    """fluent-bit 'key present' test: non-null AND non-empty string."""
-    return c.isNotNull() & (c != F.lit(""))
 
 
 def build_map(pairs: dict[str, Column]) -> Column:

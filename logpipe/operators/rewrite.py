@@ -1,12 +1,14 @@
-"""Config-driven rewrite_tag rule engine (SURVEY.md §2.3 F12, generic).
+"""Routing — the config-driven rewrite_tag engine plus the output
+Match dispatch (SURVEY.md §2.3 F12/F13).
 
 The reference's router is DECLARED, not coded: each fluent-bit
 `[FILTER] name rewrite_tag` block carries `Rule $key regex new_tag keep`
 lines (conf/ds/fluent-bit.conf:181-193), and adding a route means adding
-a conf line. `operators.route` hardcodes the two shipped rules; this
-module is the general engine — parse the same conf syntax, compile the
-rule cascade to ONE columnar expression, and statically unroll
-fluent-bit's re-emission loop.
+a conf line. This module is that router: parse the conf syntax, compile
+the rule cascade to ONE columnar expression, statically unroll
+fluent-bit's re-emission loop, and map each final tag to its sink.
+`route` runs the reference's shipped rules (REFERENCE_ROUTER_CONF)
+and output globs (REFERENCE_SINK_DISPATCH); both plans call it.
 
 Reference semantics reproduced (fluent-bit rewrite_tag docs +
 plugins/filter_rewrite_tag):
@@ -28,10 +30,9 @@ new_tags are literals (no $0 captures): an emitted copy's entire
 subsequent trajectory through the stages depends only on (its literal
 tag, the row's fields), so the re-injection recursion expands at PLAN
 time instead of requiring union-of-rounds branches. One scan, one
-generator, no Union, no UDF, no shuffle — identical plan shape to the
-hardcoded operators.route (a union formulation would re-read the input
-and re-run the upstream joins once per re-injection round; at 100TB
-that's k extra full passes).
+generator, no Union, no UDF, no shuffle (a union formulation would
+re-read the input and re-run the upstream joins once per re-injection
+round; at 100TB that's k extra full passes).
 
 The expansion also refuses cyclic configs: it carries the path of
 literal tags it is inside, and a tag that re-enters its own path is a
@@ -93,13 +94,20 @@ def glob_to_regex(glob: str) -> str:
     return "^" + ".*".join(re.escape(part) for part in glob.split("*")) + "$"
 
 
+# fluent-bit's flb_utils_bool spellings (compared case-insensitively)
+_BOOLS = {"true": True, "on": True, "yes": True, "false": False, "off": False, "no": False}
+
+
 def parse_rewrite_tag_conf(text: str) -> list[Stage]:
     """Parse the rewrite_tag [FILTER] blocks out of a fluent-bit conf.
 
     Recognizes exactly the reference's syntax (conf/ds/fluent-bit.conf):
     `[FILTER]` section headers, `name rewrite_tag`, `match <glob>`,
-    `Rule $key regex new_tag true|false` (shlex-split, so a quoted regex
-    may contain spaces). Non-rewrite_tag blocks are skipped.
+    `Rule $key regex new_tag keep` (shlex-split, so a quoted regex
+    may contain spaces). ``keep`` takes fluent-bit's boolean spellings
+    (flb_utils_bool: true/on/yes, false/off/no, any case); any other
+    value is a ValueError naming the line, never a silent false.
+    Non-rewrite_tag blocks are skipped.
     """
     stages: list[Stage] = []
     cur: dict | None = None
@@ -136,9 +144,13 @@ def parse_rewrite_tag_conf(text: str) -> list[Stage]:
                     f"rewrite_tag: capture-group tags unsupported ({new_tag!r}); "
                     "literal tags only (keeps the re-emission unroll static)"
                 )
+            if keep.lower() not in _BOOLS:
+                raise ValueError(
+                    f"rewrite_tag: keep must be true/on/yes or false/off/no, "
+                    f"got {keep!r} in Rule line {line!r}"
+                )
             cur["rules"].append(
-                Rule(key=key, regex=regex, new_tag=new_tag,
-                     keep=keep.lower() == "true")
+                Rule(key=key, regex=regex, new_tag=new_tag, keep=_BOOLS[keep.lower()])
             )
     flush()
     return stages
@@ -240,9 +252,8 @@ def apply_rewrite_tags(df: DataFrame, stages: list[Stage]) -> DataFrame:
     finals = _final_tags_expr(stages, F.col("tag"), conds, matches)
     # withColumn(explode), NOT select(explode, *others): the select form
     # asks the optimizer to rebuild every passthrough column inside the
-    # Generate's child projection; this shape is the same one
-    # operators.route uses. The last select drops the helpers and puts
-    # the final tag back in the input's column order.
+    # Generate's child projection. The last select drops the helpers
+    # and puts the final tag back in the input's column order.
     return (
         df.select("*", *helpers)
         .withColumn("_rw_final_tag", F.explode(finals))
@@ -253,6 +264,10 @@ def apply_rewrite_tags(df: DataFrame, stages: list[Stage]) -> DataFrame:
 
 
 # --- the reference's shipped router, declared as conf -----------------------
+
+SINK_CONTAINER = "container"  # http /collect/logs/container (conf/ds/fluent-bit.conf:207-221)
+SINK_JOB = "job"              # http /collect/logs/job       (conf/ds/fluent-bit.conf:223-237)
+SINK_EXPORT = "export"        # out_erda dynamic-URL sink    (conf/ds/fluent-bit.conf:239-243)
 
 #: Semantics of conf/ds/fluent-bit.conf:181-193 in the engine's input
 #: column names (labels map is built by then; define_tag is the
@@ -274,10 +289,15 @@ REFERENCE_ROUTER_CONF = """
 #: Output-side Match dispatch (conf/ds/fluent-bit.conf:207-243): final
 #: tag glob -> sink name. First glob wins, like fluent-bit match order.
 REFERENCE_SINK_DISPATCH: list[tuple[str, str]] = [
-    ("erda.log.export", "export"),
-    ("erda.log.job", "job"),
-    ("kube.*", "container"),
+    ("erda.log.export", SINK_EXPORT),
+    ("erda.log.job", SINK_JOB),
+    ("kube.*", SINK_CONTAINER),
 ]
+
+#: The tail input's tag (conf/ds/docker-runtime.conf:4 Tag kube.*,
+#: expanded from the file path). Only the kube.* Match globs read it,
+#: and any kube.* value routes identically, so every row starts here.
+INPUT_TAG = "kube.var.log.containers"
 
 
 def dispatch_sinks(df: DataFrame) -> DataFrame:
@@ -289,21 +309,12 @@ def dispatch_sinks(df: DataFrame) -> DataFrame:
     return df.withColumn("sink", sink)
 
 
-def route_with_rules(df: DataFrame) -> DataFrame:
-    """Drop-in alternative to operators.route.route(): tag the rows,
-    run the declared cascade (REFERENCE_ROUTER_CONF), dispatch tags to
-    sinks, drop the tag.
-
-    The initial tag mirrors the tail input's path-derived
-    `kube.<pod>...` tag (conf/ds/docker-runtime.conf:4 Tag kube.*);
-    any kube.* value routes identically, so it uses conv_id when
-    present.
-    """
-    base = F.col("conv_id") if "conv_id" in df.columns else F.lit("var.log")
-    # null-safe: a NULL conv_id must not produce a NULL tag (NULL
-    # poisons every rlike in the cascade and the row would vanish
-    # where route() still routes it)
-    initial_tag = F.concat(F.lit("kube."), F.coalesce(base.cast("string"), F.lit("")))
-    tagged = df.withColumn("tag", initial_tag)
+def route(df: DataFrame) -> DataFrame:
+    """F12/F13: one row per destination sink (adds `sink`). Tags every
+    row INPUT_TAG, runs the declared cascade (REFERENCE_ROUTER_CONF:
+    an export copy for a collector label, keep=true; job replaces
+    container for a define_tag, keep=false), dispatches the final tags
+    to sinks and drops the tag. Reads `labels` and `define_tag`."""
+    tagged = df.withColumn("tag", F.lit(INPUT_TAG))
     routed = apply_rewrite_tags(tagged, parse_rewrite_tag_conf(REFERENCE_ROUTER_CONF))
     return dispatch_sinks(routed).drop("tag")

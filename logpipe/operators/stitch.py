@@ -18,10 +18,6 @@ or java grammar, sep '\\n'), sources.logfiles.fragment_join (sep ''),
 the java_multiline_stitch gate, and sessionize_by_gap (run_index only).
 Leading rows before the first start (grp=0) form their own run — same
 as fluent-bit flushing orphan continuations.
-
-An `applyInPandas` variant (exact sequential semantics, Arrow batches)
-is kept for parity testing and for grammars where the group rule isn't
-expressible as a running sum.
 """
 
 from __future__ import annotations
@@ -31,11 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from logpipe.operators.parse import FIRSTLINE_RE
-
-STITCHED_SCHEMA = (
-    "conv_id string, grp long, turn_idx int, role string, text string, "
-    "tool string, ts timestamp, n_lines int"
-)
 
 
 def run_index(
@@ -107,8 +98,9 @@ def collapse_runs(
 def stitch_multiline(
     df: DataFrame, firstline_re: str = FIRSTLINE_RE, is_start=None
 ) -> DataFrame:
-    """F3 stitcher: one STITCHED_SCHEMA row per group (collapse_runs
-    with '\\n', keeping the firstline's turn_idx, role, tool and ts).
+    """F3 stitcher: one (conv_id, grp, turn_idx, role, text, tool, ts,
+    n_lines) row per group (collapse_runs with '\\n', keeping the
+    firstline's turn_idx, role, tool and ts).
 
     ``is_start``: optional boolean Column overriding the group-start
     rule (default: text matches ``firstline_re``) — e.g. the java
@@ -184,40 +176,3 @@ def session_stats(
         .cast("long")
         .alias("span_sec"),
     )
-
-
-def stitch_multiline_pandas(df: DataFrame) -> DataFrame:
-    """Exact-sequential stitcher via applyInPandas (grouped-map, Arrow).
-
-    Semantically identical to stitch_multiline (tested); use when the
-    grouping rule needs imperative state. One pandas batch per conv —
-    fine for bounded convs, not for the hot-key tail (prefer the
-    window variant at scale).
-    """
-    import pandas as pd
-    import re
-
-    pat = re.compile(FIRSTLINE_RE)
-
-    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx")
-        is_first = pdf["text"].str.match(pat).fillna(False)
-        grp = is_first.astype("int64").cumsum()
-        out = []
-        for g, sub in pdf.assign(grp=grp).groupby("grp", sort=True):
-            first = sub.iloc[0]
-            out.append(
-                {
-                    "conv_id": first["conv_id"],
-                    "grp": int(g),
-                    "turn_idx": int(first["turn_idx"]),
-                    "role": first["role"],
-                    "text": "\n".join(sub["text"].tolist()),
-                    "tool": first["tool"],
-                    "ts": first["ts"],
-                    "n_lines": int(len(sub)),
-                }
-            )
-        return pd.DataFrame(out)
-
-    return df.groupBy("conv_id").applyInPandas(stitch, schema=STITCHED_SCHEMA)

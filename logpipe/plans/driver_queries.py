@@ -1,9 +1,9 @@
 """Driver-facing query/oracle registry (the correctness gate).
 
 Each entry: name -> (spark_callable(spark, sf_dir) -> DataFrame,
-oracle ANSI-SQL for DuckDB over the same parquet views, or None for
-non-SQL-expressible ops). Column names and types are aligned between
-both sides (the driver sorts columns by name and value-hashes).
+oracle ANSI-SQL for DuckDB over the same parquet views). Every entry
+has an oracle. Column names and types are aligned between both sides
+(the driver sorts columns by name and value-hashes).
 
 Since round 8 the gates live in three section modules — imported here
 in the CANONICAL registration order, so ``queries()`` yields the same
@@ -27,24 +27,29 @@ Numeric-parity rules used throughout (Spark double math vs DuckDB):
   trees on identical inputs, plus round(..., 4) belt-and-braces;
 - hashes -> md5 only (bit-identical in Spark and DuckDB).
 
-EAGER GATES — construction is NOT side-effect free for every entry:
-`flagship_rules_route_counts` (runs three pipelines + parity asserts,
-returns collected rows), `streaming_route_counts` (runs a Structured
-Streaming query against a scratch dir), `curated_corpus_v5` (the
-span gate materializes eagerly and raises on vacuous branches), and
-`dup_span_trim` (materializes the per-(window, doc) span table before
-the removals join), and `dup_span_stats` (its default join shape
-materializes the count table the same way; the block is driver-owned
-for the session — bench/dump_plans release it by rdd-id delta) all
-execute Spark jobs, and may raise, when the registry callable is
-invoked. Registry consumers that only want a PLAN must use the lazy
-helper instead where one exists (`flagship_rules_frame`), or release
-the eager entries' checkpoint blocks by rdd-id delta after reading the
-plan — the pattern dump_plans.py follows. The similarity builders that
-cut lineage before a self-join or an iterative loop (minhash, simhash,
-cosine LSH, near-dup clustering) and `ann_ivf_topk` (collects its
-centroids) also run jobs when built; every other entry builds with
-zero jobs (tests/test_registry.py lists both sets and checks them).
+EAGER GATES — construction is NOT side-effect free for every entry.
+Five gates execute Spark jobs, and may raise, when the registry
+callable is invoked:
+- `flagship_rules_route_counts` runs three pipelines plus the
+  K8S-Logging.Exclude parity asserts and returns the collected rows;
+- `streaming_route_counts` runs a Structured Streaming query against
+  a scratch dir;
+- `curated_corpus_v5` materializes its span gate and raises on vacuous
+  branches;
+- `dup_span_trim` materializes the per-(window, doc) span table before
+  the removals join;
+- `dup_span_stats` materializes its count table and per-hash
+  multiplicity table the same way.
+Their checkpoint blocks are driver-owned for the session: a consumer
+that only wants a PLAN releases them by rdd-id delta after reading it,
+the pattern dump_plans.py and bench follow. Seven more builders run
+jobs by construction: the ones that cut lineage before a self-join or
+an iterative loop (`minhash_lsh_dups`, `simhash_near_dups`,
+`cosine_lsh_near_dups`, and the near-dup clustering family
+`near_dup_clusters`, `near_dup_clusters_star`, `near_dup_survivors`),
+and `ann_ivf_topk`, which collects its centroids. Every other entry
+builds with zero jobs (tests/test_registry.py lists both sets and
+checks them).
 """
 
 from __future__ import annotations
@@ -60,7 +65,6 @@ from logpipe.plans.registry import (  # noqa: F401  (public machinery)
 # Import the gate modules IN ORDER (this is what populates the
 # registry), then re-export their names so every pre-split consumer —
 # `from logpipe.plans.driver_queries import curated_corpus_v5`,
-# dump_plans' `getattr(driver_queries, "flagship_rules_frame")`,
 # bench's direct gate imports — keeps working unchanged. setdefault:
 # the machinery names above win; later modules never shadow earlier
 # ones (no name is defined twice across the sections — asserted).

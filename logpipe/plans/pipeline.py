@@ -16,7 +16,8 @@ then ``log_event_tail``, the tail the ECI plan (plans/eci.py) shares:
        -> compat: id copy, static cluster tag, dice_* copies (F5-F9)
        -> nest tags/labels maps (F10/F11)
        -> role -> stream
-       -> route (F12/F13: container | job | export with keep=true dup)
+       -> route (F12/F13, the declared rewrite_tag conf: container |
+          job | export with keep=true dup)
        -> LogEvent projection (O4)
 
 The whole pre-route chain is narrow (zero shuffles: both joins
@@ -40,7 +41,7 @@ from logpipe.operators import parse
 from logpipe.operators.enrich import enrich_k8s, enrich_tool
 from logpipe.operators.project import project_log_event
 from logpipe.operators.reshape import build_map, dice_compat_pairs
-from logpipe.operators.route import route
+from logpipe.operators.rewrite import route
 
 DEFAULT_CLUSTER = "erda-cluster"
 
@@ -60,7 +61,6 @@ def run_pipeline(
     passthrough: tuple[str, ...] = (),
     honor_k8s_exclude: bool = False,
     broadcast_dims: bool = True,
-    router_fn=None,
     spread: bool | None = None,
 ) -> DataFrame:
     """transcripts + dims -> routed LogEvent rows (schema.LOG_EVENT).
@@ -75,10 +75,6 @@ def run_pipeline(
     ``broadcast_dims``: False drops the hard broadcast hints so AQE
     sizes the dim joins at runtime (see operators.enrich.enrich_k8s) —
     set this when dim cardinality is unbounded.
-    ``router_fn``: alternative F12/F13 router with route()'s contract
-    (df in, df + `sink` out) — e.g. the config-driven
-    operators.rewrite.route_with_rules engine. Default: the typed
-    two-rule route().
     ``spread``: round-robin parallelism spread (logpipe.spread): the
     whole pre-route chain is narrow by design, so over a few-split
     input (the single-row-group bench parquet) every parse regex,
@@ -131,7 +127,6 @@ def run_pipeline(
         tags=tags,
         collector=F.col("monitor_log_collector"),
         define_tag=F.col("define_tag"),
-        router=router_fn or route,
         passthrough=passthrough,
     )
 
@@ -143,7 +138,6 @@ def log_event_tail(
     tags: dict[str, Column],
     collector: Column,
     define_tag: Column,
-    router=route,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """The tail both plans share (SURVEY.md §3.1, §3.3 "same compat /
@@ -154,8 +148,6 @@ def log_event_tail(
     expressions over ``df``; ``tags`` is the plan's ordered tag pairs,
     appended after ``level`` and ``request_id`` (map entry order is the
     dict's — landed parquet maps and ``to_json(tags)`` keep it).
-    ``router`` has route()'s contract (df in, df + ``sink`` out) and
-    sees every other column of ``df`` (route_with_rules reads conv_id).
     Two selects, no withColumn chain: the first projects the grok
     struct once, the second reads it by field.
     """
@@ -163,8 +155,7 @@ def log_event_tail(
     df = df.select("*", parse.erda_info_struct(content).alias("_g"))
     tag_pairs = {"level": F.col("_g.level"), "request_id": F.col("_g.request_id"), **tags}
     # the columns projected below replace same-named head columns
-    out = ("_g", "content", "id", "tags", "labels", "stream",
-           "monitor_log_collector", "define_tag")
+    out = ("_g", "content", "id", "tags", "labels", "stream", "define_tag")
     keep = [c for c in df.columns if c not in out]
     df = df.select(
         *keep,
@@ -179,12 +170,12 @@ def log_event_tail(
         F.when(F.col("role").isin("tool", "system"), F.lit("stderr"))
         .otherwise(F.lit("stdout"))
         .alias("stream"),
-        collector.alias("monitor_log_collector"),
         define_tag.alias("define_tag"),
     )
-    # F12/F13 routing (export keep=true duplication; job keep=false);
-    # O4 LogEvent projection — __pri_* (define_tag et al) die here (F9)
-    return project_log_event(router(df), passthrough=passthrough)
+    # F12/F13 routing through the declared rewrite_tag conf (export
+    # keep=true duplication; job keep=false); O4 LogEvent projection —
+    # __pri_* (define_tag et al) die here (F9)
+    return project_log_event(route(df), passthrough=passthrough)
 
 
 def sink_counts(log_events: DataFrame) -> DataFrame:

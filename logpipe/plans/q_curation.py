@@ -600,7 +600,7 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- deterministic DuckDB replays of the hyperplane/IVF ANN paths ---------
 # The planes and the centroid rule are pure functions — planes are
-# md5-derived Box-Muller Gaussians of (seed, plane, coord) (see
+# md5-derived Box-Muller Gaussians of (table seed, plane, coord) (see
 # ann._hyperplanes); centroids are the lowest-md5(vec_id) sample — so the
 # "approximate" queries are exactly reproducible: the oracle re-runs the
 # SAME banding /
@@ -622,7 +622,7 @@ def _banded_sql(n_planes: int, n_tables: int) -> str:
 
     selects = []
     for t in range(n_tables):
-        planes = _hyperplanes(n_planes, seed=7 + 13 * t)
+        planes = _hyperplanes(n_planes, t)
         bucket = " + ".join(
             f"(CASE WHEN list_dot_product(emb, {plane_lit(p)}) > 0 THEN {2**i} ELSE 0 END)"
             for i, p in enumerate(planes)

@@ -54,6 +54,13 @@ FROM s GROUP BY sink
 """
 
 
+def _per_sink_agg(out: DataFrame) -> DataFrame:
+    return out.groupBy("sink").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.length("content")).alias("content_bytes"),
+    )
+
+
 @register("flagship_route_counts", _FLAGSHIP_SQL)
 def flagship_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir)
@@ -63,52 +70,27 @@ def flagship_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sink/export consumers — whose per-row downstream work is heavy —
     # keep the derived default and measured 4.66s -> 2.8-3.4s with it
     # (round 11; logpipe.spread).
-    out = run_pipeline(
+    return _per_sink_agg(run_pipeline(
         events_as_transcripts(ev), events_k8s_meta(ev), events_tool_meta(ev),
         spread=False,
-    )
-    return out.groupBy("sink").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.length("content")).alias("content_bytes"),
-    )
-
-
-# Config-driven rewrite_tag engine (operators/rewrite.py): the flagship
-# router re-DECLARED as the reference's conf text (fluent-bit.conf:181-193)
-# and run through the generic cascade — must hit the SAME oracle as the
-# hardcoded route().
-def _per_sink_agg(out: DataFrame) -> DataFrame:
-    return out.groupBy("sink").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.length("content")).alias("content_bytes"),
-    )
-
-
-def flagship_rules_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The rules-router flagship aggregate as a lazy frame — the plan
-    surface for PLANS.md (the registered gate below collects it before
-    its in-run K8S-Logging.Exclude assert, so ITS returned frame is a
-    local relation with no pipeline plan left to inspect)."""
-    from logpipe.operators.rewrite import route_with_rules
-
-    ev = load_events(spark, sf_dir)
-    return _per_sink_agg(
-        run_pipeline(
-            events_as_transcripts(ev), events_k8s_meta(ev), events_tool_meta(ev),
-            router_fn=route_with_rules,
-        )
-    )
+    ))
 
 
 @register("flagship_rules_route_counts", _FLAGSHIP_SQL)
 def flagship_rules_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The default pipeline (derived spread, unlike flagship_route_counts)
+    routed through the declared rewrite_tag conf, against the same
+    oracle — plus the in-run K8S-Logging.Exclude parity assert below."""
+
     def rows(agg: DataFrame) -> list:
         return sorted(
             (r["sink"], r["n_rows"], r["content_bytes"]) for r in agg.collect()
         )
 
     ev = load_events(spark, sf_dir)
-    rules = rows(flagship_rules_frame(spark, sf_dir))
+    rules = rows(_per_sink_agg(run_pipeline(
+        events_as_transcripts(ev), events_k8s_meta(ev), events_tool_meta(ev),
+    )))
     # folded K8S-Logging.Exclude gate (round 6 — its registry slot went
     # to dup_span_trim): the pipeline's JOIN-based exclusion (annotated
     # pods dropped after the enrich join, honor_k8s_exclude=True) must
@@ -145,7 +127,7 @@ def flagship_rules_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# A FOUR-stage config the hardcoded router can't express — proves the
+# A FOUR-stage config beyond the shipped two rules — proves the
 # engine is rule-driven, exercises first-match keep=false short-circuit
 # AND a second re-injection round (erda.log.job copies re-enter the
 # cascade and may emit job.audited, the in_emitter loop of

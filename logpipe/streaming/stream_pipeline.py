@@ -45,13 +45,10 @@ def start_stream_pipeline(
     out_base: str,
     checkpoint: str,
     max_files_per_trigger: int | None = 4,
-    pipeline_fn=None,
 ):
-    """Run the flagship DAG incrementally; returns the StreamingQuery.
-    ``pipeline_fn``: alternative stateless plan with run_pipeline's
-    signature (e.g. run_pipeline with a rules router bound)."""
+    """Run the flagship DAG incrementally; returns the StreamingQuery."""
     stream = read_transcript_stream(spark, input_path, max_files_per_trigger)
-    routed = (pipeline_fn or run_pipeline)(stream, k8s_meta, tool_meta)
+    routed = run_pipeline(stream, k8s_meta, tool_meta)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_sinks(batch_df, f"{out_base}/batch={batch_id}", n_partitions=8)

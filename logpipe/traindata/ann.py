@@ -115,10 +115,11 @@ def cosine_near_dups(emb: DataFrame, threshold: float = 0.9) -> DataFrame:
     )
 
 
-def _hyperplanes(n_planes: int, seed: int = 7) -> list[list[float]]:
-    """Deterministic GAUSSIAN unit hyperplanes — pure function of
-    (seed, plane, coord) so every executor (and the DuckDB oracle,
-    which gets them inlined as literals) agrees.
+def _hyperplanes(n_planes: int, table: int) -> list[list[float]]:
+    """Deterministic GAUSSIAN unit hyperplanes of LSH table ``table`` —
+    pure function of (seed, plane, coord), seed = 7 + 13 * table, so
+    every executor (and the DuckDB oracle, which gets them inlined as
+    literals) agrees.
 
     Box-Muller over md5-derived uniforms: md5 gives genuinely
     independent coordinates across planes AND tables. (A previous
@@ -130,6 +131,7 @@ def _hyperplanes(n_planes: int, seed: int = 7) -> list[list[float]]:
     """
     import hashlib
 
+    seed = 7 + 13 * table
     planes = []
     for p in range(n_planes):
         v: list[float] = []
@@ -151,7 +153,7 @@ def _bucket_col(n_planes: int, n_tables: int) -> Column:
     projection onto deterministic plane (t, i), packed 2^i)."""
     from logpipe.traindata._lsh_udf import bucket_udf
 
-    tables = [_hyperplanes(n_planes, seed=7 + 13 * t) for t in range(n_tables)]
+    tables = [_hyperplanes(n_planes, t) for t in range(n_tables)]
     return bucket_udf(tables)(F.col("embedding"))
 
 

@@ -50,7 +50,11 @@ QUERIES = [
         "flagship_route_counts",
         "the whole pre-route chain must be exchange-free: two "
         "BroadcastHashJoins, projections/filters, then ONE shuffle for "
-        "the per-sink aggregate (map-side partial agg first).",
+        "the per-sink aggregate (map-side partial agg first). The "
+        "conf-declared rewrite_tag cascade compiles to one Generate "
+        "(finals explode) — no Union (a union-of-rounds formulation "
+        "re-scans the input per re-injection round), no Exchange "
+        "before the per-sink aggregate.",
     ),
     (
         "log_event_projection",
@@ -151,19 +155,6 @@ QUERIES = [
         "nation/region stay explicit broadcasts.",
     ),
     (
-        # the registered gate collects in-run (K8S-Logging.Exclude fold)
-        # and returns a local relation, so the pipeline plan is
-        # snapshotted from the lazy frame it collects
-        "flagship_rules_frame",
-        "the conf-declared rewrite_tag cascade must compile to the SAME "
-        "plan shape as the hardcoded router: one scan, broadcast joins, "
-        "one Generate (finals explode) — no Union (a union-of-rounds "
-        "formulation re-scans the input per re-injection round), no "
-        "Exchange before the per-sink aggregate. (This is the lazy "
-        "frame the registered flagship_rules_route_counts gate "
-        "collects before its in-run K8S-Logging.Exclude assert.)",
-    ),
-    (
         "benchmark_contamination",
         "the bench gram set enters as a BroadcastExchange (eval sets "
         "are tiny); corpus grams explode and hash-join without any "
@@ -200,8 +191,8 @@ def main() -> None:
     from logpipe.materialize import persistent_rdd_ids, release_rdd_ids
 
     for name, note in QUERIES:
-        fn = qs.get(name) or getattr(driver_queries, name)
-        # eager gates (dup_span_stats' default shape, trim, v5)
+        fn = qs[name]
+        # eager gates (dup_span_stats, dup_span_trim, v5)
         # checkpoint at CONSTRUCTION: release each query's block delta
         # after its plan is dumped, like bench._run_entry does
         pre = persistent_rdd_ids(spark)

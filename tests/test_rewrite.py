@@ -1,9 +1,9 @@
 """Config-driven rewrite_tag engine (operators/rewrite.py) vs the
 reference's rule semantics (conf/ds/fluent-bit.conf:181-193,
 plugins/filter_rewrite_tag): conf parsing, first-match-wins, keep
-true/false, static re-injection unroll, cycle refusal, long chains —
-and full parity with the hardcoded operators.route router on the
-flagship pipeline."""
+true/false, static re-injection unroll, cycle refusal, long chains.
+The router both plans run is checked end to end against pyref
+(test_pipeline_e2e.py::test_e2e_equality)."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from logpipe.operators.rewrite import (
     apply_rewrite_tags,
     glob_to_regex,
     parse_rewrite_tag_conf,
-    route_with_rules,
+    route,
 )
 
 
@@ -30,6 +30,13 @@ def test_conf_parsing():
     )
     r1 = stages[1].rules[0]
     assert (r1.new_tag, r1.keep) == ("erda.log.job", False)
+    # keep takes fluent-bit's boolean spellings, any case
+    for word, keep in [("true", True), ("On", True), ("YES", True),
+                       ("false", False), ("off", False), ("No", False)]:
+        (stage,) = parse_rewrite_tag_conf(
+            f"[FILTER]\n name rewrite_tag\n Rule $a .+ t {word}\n"
+        )
+        assert stage.rules[0].keep is keep, word
 
 
 def test_conf_rejections():
@@ -41,6 +48,13 @@ def test_conf_rejections():
         parse_rewrite_tag_conf(
             "[FILTER]\n name rewrite_tag\n Rule $a (x)(y) new.$1 true\n"
         )
+    # a keep value fluent-bit would not read as a boolean is refused,
+    # naming the line, instead of silently dropping the original
+    for word in ("treu", "1", "keep"):
+        with pytest.raises(ValueError, match=f"Rule line .*{word}"):
+            parse_rewrite_tag_conf(
+                f"[FILTER]\n name rewrite_tag\n Rule $a .+ t {word}\n"
+            )
 
 
 def test_glob_to_regex():
@@ -132,30 +146,15 @@ def test_long_acyclic_chain_routes(spark):
 
 
 def test_null_conv_id_still_routes(spark):
-    """A NULL conv_id must not poison the tag cascade: the row routes
-    exactly as route() would route it (here: define_tag set -> job)."""
+    """A NULL conv_id must not poison the tag cascade: every row starts
+    under the literal input tag, so it routes on its fields alone (here:
+    define_tag set -> job)."""
     df = spark.createDataFrame(
         [(None, {}, "job-x")],
         "conv_id string, labels map<string,string>, define_tag string",
     )
-    got = [r["sink"] for r in route_with_rules(df).collect()]
+    got = [r["sink"] for r in route(df).collect()]
     assert got == ["job"]
-
-
-def test_engine_parity_with_hardcoded_router(
-    spark, transcripts, k8s_meta, tool_meta
-):
-    """route_with_rules (conf-declared) must reproduce the hardcoded
-    route() row-for-row on the full flagship pipeline."""
-    from logpipe.plans.pipeline import run_pipeline
-
-    typed = run_pipeline(transcripts, k8s_meta, tool_meta)
-    ruled = run_pipeline(
-        transcripts, k8s_meta, tool_meta, router_fn=route_with_rules
-    )
-    cols = ["sink", "source", "id", "stream", "content", "timestamp"]
-    assert typed.select(cols).exceptAll(ruled.select(cols)).count() == 0
-    assert ruled.select(cols).exceptAll(typed.select(cols)).count() == 0
 
 
 def test_engine_plan_stays_narrow(spark):

@@ -1,11 +1,11 @@
-"""F3 multiline stitch: property tests + variant parity (SURVEY.md §7.3)."""
+"""F3 multiline stitch: property tests (SURVEY.md §7.3)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from logpipe.operators.parse import FIRSTLINE_RE
-from logpipe.operators.stitch import stitch_multiline, stitch_multiline_pandas
+from logpipe.operators.stitch import stitch_multiline
 
 
 def test_stitch_split_identity(spark, transcripts):
@@ -70,15 +70,6 @@ def test_sessionize_by_gap(spark):
     assert stats[("c1", 1)] == (2, 1, 10)
     assert stats[("c1", 2)][0] == 2 and stats[("c1", 2)][1] == 3
     assert stats[("c2", 1)] == (1, 5, 0)
-
-
-def test_pandas_variant_parity(spark, transcripts):
-    src = transcripts.filter(F.length("text") < 1000)
-    a = stitch_multiline(src)
-    b = stitch_multiline_pandas(src)
-    cols = ["conv_id", "grp", "turn_idx", "role", "text", "n_lines"]
-    assert a.select(cols).exceptAll(b.select(cols)).count() == 0
-    assert b.select(cols).exceptAll(a.select(cols)).count() == 0
 
 
 def test_java_grammar_stitches_datetime_less_trace(spark):

@@ -282,34 +282,6 @@ def test_pacing_bounds_batch_size(spark, tmp_path):
     assert max(batch_sizes) <= 2 * 60 // 6 + 20  # bounded per trigger
 
 
-def test_rule_engine_streams_too(spark, transcripts, k8s_meta, tool_meta, tmp_path):
-    """The config-driven rewrite_tag engine is a pure projection +
-    generator, so it composes with Structured Streaming unchanged:
-    stream output through route_with_rules == batch output through the
-    hardcoded router."""
-    import functools
-
-    from logpipe.operators.rewrite import route_with_rules
-
-    inp = str(tmp_path / "in")
-    transcripts.filter(F.col("turn_idx") <= 40).repartition(2).write.parquet(inp)
-
-    ruled_fn = functools.partial(run_pipeline, router_fn=route_with_rules)
-    q = start_stream_pipeline(
-        spark, inp, k8s_meta, tool_meta, str(tmp_path / "out"),
-        str(tmp_path / "ckpt"), max_files_per_trigger=1, pipeline_fn=ruled_fn,
-    )
-    q.awaitTermination(300)
-
-    got = spark.read.option("basePath", str(tmp_path / "out")).parquet(
-        f"{tmp_path}/out/batch=*"
-    )
-    expected = run_pipeline(spark.read.parquet(inp), k8s_meta, tool_meta)
-    cols = ["sink", "source", "id", "stream", "content", "timestamp"]
-    assert expected.select(cols).exceptAll(got.select(cols)).count() == 0
-    assert got.select(cols).exceptAll(expected.select(cols)).count() == 0
-
-
 def test_streaming_stitch_java_grammar(spark, tmp_path):
     """continuation_re mode: a datetime-less exception header anchors
     its own group and its frames/Caused-by glue to it across the
