@@ -23,36 +23,40 @@ plugins/filter_rewrite_tag):
   their new tag (the in_emitter), where they traverse the stages
   again — matched by the new tag this time.
 
-Spark-first shape: the WHOLE cascade — including fluent-bit's
-re-injection loop — compiles to ONE pure array<string> expression of
-final tags per input row, then one `explode`. This is possible because
-new_tags are literals (no $0 captures): an emitted copy's entire
-subsequent trajectory through the stages depends only on (its literal
-tag, the row's fields), so the re-injection recursion expands at PLAN
-time instead of requiring union-of-rounds branches. One scan, one
-generator, no Union, no UDF, no shuffle (a union formulation would
-re-read the input and re-run the upstream joins once per re-injection
-round; at 100TB that's k extra full passes).
+Spark-first shape: records enter under a literal input tag and every
+new_tag is a literal (no $0 captures), so a record's entire trajectory
+through the stages depends only on (its literal tag, the row's fields).
+Every Match glob is therefore a plan-time test, and the WHOLE cascade —
+including fluent-bit's re-injection loop — expands at PLAN time into
+(condition, final tag) pairs whose conditions are boolean algebra over
+the rule regexes; one `explode` emits the finals whose conditions hold.
+`route` resolves each final tag to its sink in Python while the plan is
+built, so the generator emits sink names and no per-row Match test is
+left. One scan, one generator, no Union, no UDF, no shuffle (a union
+formulation would re-read the input and re-run the upstream joins once
+per re-injection round; at 100TB that's k extra full passes).
 
 The expansion also refuses cyclic configs: it carries the path of
 literal tags it is inside, and a tag that re-enters its own path is a
 loop fluent-bit would spin on forever — here a plan-time ValueError
-naming the loop. The input-tag expansion tests every stage's Match at
-runtime, so every rule is reached from it and every cycle is found
-before any job runs; an acyclic config expands to a depth of at most
-its number of distinct literal tags. (Capture-group tags would force
-a data-dependent fixpoint loop with a count() per round; unsupported,
-loudly.)
+naming the loop, raised before any job runs for every cycle reachable
+from the input tag (an unreachable one never runs); an acyclic config
+expands to a depth of at most its number of distinct literal tags.
+(Capture-group tags would force a data-dependent fixpoint loop with a
+count() per round; unsupported, loudly.)
 """
 
 from __future__ import annotations
 
 import re
 import shlex
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from logpipe.operators.parse import _java
 
 
 @dataclass(frozen=True)
@@ -90,7 +94,7 @@ def parse_accessor(key: str) -> Column:
 
 
 def glob_to_regex(glob: str) -> str:
-    """fluent-bit Match glob (* only) -> anchored Java regex."""
+    """fluent-bit Match glob (* only) -> anchored regex."""
     return "^" + ".*".join(re.escape(part) for part in glob.split("*")) + "$"
 
 
@@ -156,111 +160,103 @@ def parse_rewrite_tag_conf(text: str) -> list[Stage]:
     return stages
 
 
-def _empty_tags() -> Column:
-    return F.array().cast("array<string>")
+def _covered(glob: str, tag: str) -> bool:
+    return re.match(glob_to_regex(glob), tag) is not None
 
 
-def _covered(stage: Stage, tag: str) -> bool:
-    return re.match(glob_to_regex(stage.match), tag) is not None
-
-
-def _final_tags_expr(
+def _expand(
     stages: list[Stage],
-    tag: Column | str,
+    tag: str,
     conds: dict[tuple[int, int], Column],
-    matches: dict[int, Column],
     path: tuple[str, ...] = (),
-) -> Column:
-    """Array of FINAL tags a record ends up under, cascade + re-injection
-    fully expanded. ``tag`` is either the input tag column (every stage
-    Match is a runtime test) or the literal tag of an emitted copy (the
-    Match tests collapse to plan-time booleans). A literal tag no stage
-    covers is terminal; one already on ``path`` — the literal tags this
-    expansion is nested in — is a cycle and raises.
+) -> list[tuple[Column, str]]:
+    """(condition, final tag) pairs for a record entering the cascade
+    under the literal ``tag``, cascade + re-injection fully expanded:
+    one copy of the record ends under each final tag whose condition
+    holds. Every stage Match is a plan-time test on the literal tag. A
+    tag no stage covers is terminal; one already on ``path`` — the
+    literal tags this expansion is nested in — is a cycle and raises.
 
-    ``conds``/``matches`` are PRE-MATERIALIZED boolean columns (one per
-    rule regex / stage glob) — the expression here is pure boolean
-    algebra over them, so referencing a rule's condition several times
-    (fire, first-match mask, consumed) never duplicates the underlying
-    accessor expression: Catalyst does not inline a non-cheap expression
-    that is referenced more than once, so each accessor is evaluated
-    once per row."""
-    literal = isinstance(tag, str)
-    if literal:
-        if not any(_covered(s, tag) for s in stages):
-            return F.array(F.lit(tag))
-        if tag in path:
-            loop = " -> ".join(path[path.index(tag):] + (tag,))
-            raise ValueError(f"rewrite_tag: cyclic re-emission: {loop}")
-        path = path + (tag,)
+    ``conds`` are PRE-MATERIALIZED boolean columns (one per rule
+    regex), so the conditions here are pure boolean algebra over them:
+    referencing a rule's condition several times (fire, first-match
+    mask, consumed) never duplicates the underlying accessor
+    expression, because Catalyst does not inline a non-cheap expression
+    that is referenced more than once."""
+    if not any(_covered(s.match, tag) for s in stages):
+        return [(F.lit(True), tag)]
+    if tag in path:
+        loop = " -> ".join(path[path.index(tag):] + (tag,))
+        raise ValueError(f"rewrite_tag: cyclic re-emission: {loop}")
+    path = path + (tag,)
     alive: Column = F.lit(True)
-    parts: list[Column] = []
+    pairs: list[tuple[Column, str]] = []
     for si, stage in enumerate(stages):
-        if not literal:
-            applicable = alive & matches[si]
-        elif _covered(stage, tag):
-            applicable = alive
-        else:
+        if not _covered(stage.match, tag):
             continue
-        # first-match-wins: rule i fires iff applicable and rules <i missed
+        # first-match-wins: rule i fires iff alive and rules <i missed
         prev_miss: Column = F.lit(True)
         consumed: Column | None = None
         for ri, r in enumerate(stage.rules):
             cond = conds[(si, ri)]
-            fire = applicable & prev_miss & cond
-            finals = _final_tags_expr(stages, r.new_tag, conds, matches, path)
-            parts.append(F.when(fire, finals).otherwise(_empty_tags()))
+            fire = alive & prev_miss & cond
+            pairs += [(fire & c, t) for c, t in _expand(stages, r.new_tag, conds, path)]
             if not r.keep:
                 consumed = fire if consumed is None else (consumed | fire)
             prev_miss = prev_miss & ~cond
         if consumed is not None:
             alive = alive & ~consumed
-    survivor_tag = F.lit(tag) if literal else tag
-    survivor = F.when(alive, F.array(survivor_tag)).otherwise(_empty_tags())
-    return F.concat(*parts, survivor) if parts else survivor
+    return pairs + [(alive, tag)]
 
 
-def apply_rewrite_tags(df: DataFrame, stages: list[Stage]) -> DataFrame:
-    """Run the full rewrite_tag cascade over the `tag` column; returns
-    one row per FINAL record (surviving originals keep their tag;
-    emitted copies carry new_tag), all other columns passed through
-    verbatim. Two projections + one
-    generator — the input is scanned once regardless of how many
-    re-injection rounds the config implies. Raises ValueError on a
-    cyclic config, before any job runs.
-
-    The first projection materializes every rule condition and stage
-    Match test ONCE as a boolean column; the finals expression is
-    boolean algebra over those. This matters beyond tidiness: Catalyst's
-    CollapseProject declines to inline non-cheap expressions referenced
-    more than once, so an accessor column is evaluated once per row
-    instead of once per reference.
-    """
-    matches: dict[int, Column] = {}
+def _explode_finals(
+    df: DataFrame,
+    stages: list[Stage],
+    input_tag: str,
+    out_col: str,
+    label: Callable[[str], str | None],
+) -> DataFrame:
+    """One row per final record, with ``label(final tag)`` in
+    ``out_col``. The first projection materializes every rule condition
+    ONCE as a boolean column (see ``_expand``); the generator emits the
+    plan-time labels of the finals whose conditions hold."""
     conds: dict[tuple[int, int], Column] = {}
     helpers: list[Column] = []
     for si, stage in enumerate(stages):
-        matches[si] = F.col(f"_rw_m{si}")
-        helpers.append(
-            F.col("tag").rlike(glob_to_regex(stage.match)).alias(f"_rw_m{si}")
-        )
         for ri, r in enumerate(stage.rules):
-            conds[(si, ri)] = F.col(f"_rw_c{si}_{ri}")
-            cond = parse_accessor(r.key).cast("string").rlike(r.regex)
-            helpers.append(F.coalesce(cond, F.lit(False)).alias(f"_rw_c{si}_{ri}"))
+            name = f"_rw_c{si}_{ri}"
+            conds[(si, ri)] = F.col(name)
+            cond = parse_accessor(r.key).cast("string").rlike(_java(r.regex))
+            helpers.append(F.coalesce(cond, F.lit(False)).alias(name))
 
-    finals = _final_tags_expr(stages, F.col("tag"), conds, matches)
-    # withColumn(explode), NOT select(explode, *others): the select form
-    # asks the optimizer to rebuild every passthrough column inside the
-    # Generate's child projection. The last select drops the helpers
-    # and puts the final tag back in the input's column order.
-    return (
-        df.select("*", *helpers)
-        .withColumn("_rw_final_tag", F.explode(finals))
-        .select(
-            *(F.col("_rw_final_tag").alias(c) if c == "tag" else c for c in df.columns)
+    labels = F.concat(
+        *(
+            F.when(c, F.array(F.lit(label(t)).cast("string")))
+            .otherwise(F.array().cast("array<string>"))
+            for c, t in _expand(stages, input_tag, conds)
         )
     )
+    # withColumn(explode), NOT select(explode, *others): the select form
+    # asks the optimizer to rebuild every passthrough column inside the
+    # Generate's child projection.
+    return (
+        df.select("*", *helpers)
+        .withColumn(out_col, F.explode(labels))
+        .drop(*conds.values())
+    )
+
+
+def apply_rewrite_tags(df: DataFrame, stages: list[Stage], input_tag: str) -> DataFrame:
+    """Run the full rewrite_tag cascade over rows that enter under the
+    literal ``input_tag``; returns one row per FINAL record with its
+    tag in `tag` (surviving originals keep ``input_tag``; emitted
+    copies carry new_tag), all other columns passed through verbatim.
+    One projection + one generator — the input is scanned once
+    regardless of how many re-injection rounds the config implies.
+    Raises ValueError on a cycle reachable from ``input_tag``, before
+    any job runs.
+    """
+    return _explode_finals(df, stages, input_tag, "tag", lambda tag: tag)
 
 
 # --- the reference's shipped router, declared as conf -----------------------
@@ -300,21 +296,20 @@ REFERENCE_SINK_DISPATCH: list[tuple[str, str]] = [
 INPUT_TAG = "kube.var.log.containers"
 
 
-def dispatch_sinks(df: DataFrame) -> DataFrame:
-    """Map final tags to sink names (F13 Match) — first glob wins."""
-    sink: Column | None = None
-    for glob, name in REFERENCE_SINK_DISPATCH:
-        cond = F.col("tag").rlike(glob_to_regex(glob))
-        sink = F.when(cond, name) if sink is None else sink.when(cond, name)
-    return df.withColumn("sink", sink)
+_ROUTER_STAGES = parse_rewrite_tag_conf(REFERENCE_ROUTER_CONF)
+
+
+def _sink_of(tag: str) -> str | None:
+    """F13 Match: the first REFERENCE_SINK_DISPATCH glob covering
+    ``tag`` names its sink; None (a NULL sink) if none does."""
+    return next((name for glob, name in REFERENCE_SINK_DISPATCH if _covered(glob, tag)), None)
 
 
 def route(df: DataFrame) -> DataFrame:
-    """F12/F13: one row per destination sink (adds `sink`). Tags every
-    row INPUT_TAG, runs the declared cascade (REFERENCE_ROUTER_CONF:
-    an export copy for a collector label, keep=true; job replaces
-    container for a define_tag, keep=false), dispatches the final tags
-    to sinks and drops the tag. Reads `labels` and `define_tag`."""
-    tagged = df.withColumn("tag", F.lit(INPUT_TAG))
-    routed = apply_rewrite_tags(tagged, parse_rewrite_tag_conf(REFERENCE_ROUTER_CONF))
-    return dispatch_sinks(routed).drop("tag")
+    """F12/F13: one row per destination sink (adds `sink`). Every row
+    enters the declared cascade (REFERENCE_ROUTER_CONF: an export copy
+    for a collector label, keep=true; job replaces container for a
+    define_tag, keep=false) under INPUT_TAG, and each final tag is
+    resolved to its sink while the plan is built, so the generator
+    emits sink names. Reads `labels` and `define_tag`."""
+    return _explode_finals(df, _ROUTER_STAGES, INPUT_TAG, "sink", _sink_of)

@@ -132,7 +132,6 @@ def sessionize_by_gap(
     df: DataFrame,
     gap_sec: int = 1800,
     key: str = "conv_id",
-    ts_col: str = "ts",
     order_col: str = "turn_idx",
 ) -> DataFrame:
     """Time-gap sessionization: a new session starts when the gap to
@@ -145,7 +144,7 @@ def sessionize_by_gap(
     # compare in MICROS: a seconds cast truncates and moves session
     # boundaries by up to 1s (TIMESTAMP_NTZ goes via a timestamp cast —
     # identity under the UTC session TZ, same as project_log_event)
-    epoch = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    epoch = F.unix_micros(F.col("ts").cast("timestamp"))
     prev = F.lag(epoch).over(Window.partitionBy(key).orderBy(order_col))
     is_start = prev.isNull() | (epoch - prev > gap_sec * 1_000_000)
     return df.withColumn("session_id", run_index(is_start, key, order_col))
@@ -155,21 +154,20 @@ def session_stats(
     df: DataFrame,
     gap_sec: int = 1800,
     key: str = "conv_id",
-    ts_col: str = "ts",
     order_col: str = "turn_idx",
 ) -> DataFrame:
     """Per-session aggregate over sessionize_by_gap: turn count, span,
     first turn — the partial-agg-friendly rollup (map-side combine on
     (key, session_id))."""
-    s = sessionize_by_gap(df, gap_sec, key, ts_col, order_col)
+    s = sessionize_by_gap(df, gap_sec, key, order_col)
     return s.groupBy(key, "session_id").agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.min(order_col).alias("first_turn"),
-        F.min(ts_col).alias("start_ts"),
+        F.min("ts").alias("start_ts"),
         F.floor(
             (
-                F.max(F.unix_micros(F.col(ts_col).cast("timestamp")))
-                - F.min(F.unix_micros(F.col(ts_col).cast("timestamp")))
+                F.max(F.unix_micros(F.col("ts").cast("timestamp")))
+                - F.min(F.unix_micros(F.col("ts").cast("timestamp")))
             )
             / F.lit(1_000_000)
         )

@@ -28,7 +28,6 @@ def throttle_drop(
     df: DataFrame,
     rate: int,
     key: str = "conv_id",
-    ts_col: str = "ts",
     order_col: str = "turn_idx",
     bucket: str = "second",
 ) -> DataFrame:
@@ -36,7 +35,7 @@ def throttle_drop(
 
     Deterministic (ordered by order_col), one shuffle on (key, bucket).
     """
-    w = Window.partitionBy(key, F.date_trunc(bucket, F.col(ts_col))).orderBy(order_col)
+    w = Window.partitionBy(key, F.date_trunc(bucket, F.col("ts"))).orderBy(order_col)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= rate)
@@ -48,14 +47,13 @@ def throttle_audit(
     df: DataFrame,
     rate: int,
     key: str = "conv_id",
-    ts_col: str = "ts",
     bucket: str = "second",
 ) -> DataFrame:
     """Retain=true mode audit: (key, window_start, n) for buckets whose
     row count exceeds `rate` — the windows where the reference would
     have slept (pacing), reported instead of enforced."""
     return (
-        df.groupBy(key, F.date_trunc(bucket, F.col(ts_col)).alias("window_start"))
+        df.groupBy(key, F.date_trunc(bucket, F.col("ts")).alias("window_start"))
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > rate)
     )

@@ -567,7 +567,7 @@ def simhash_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-gated in tests/test_traindata.py)."""
     from logpipe.traindata.dedup import simhash_near_dups
 
-    return simhash_near_dups(_docs(spark, sf_dir), max_hamming=3, bands=4)
+    return simhash_near_dups(_docs(spark, sf_dir), max_hamming=3)
 
 
 # --- similarity search ----------------------------------------------------

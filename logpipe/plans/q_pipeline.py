@@ -174,12 +174,11 @@ def rewrite_engine_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_events(spark, sf_dir)
     df = ev.select(
-        F.concat(F.lit("kube."), F.col("event_type")).alias("tag"),
         F.when(F.col("user_id") % 5 == 0, F.lit("coll")).alias("collector"),
         F.when((F.col("user_id") % 10).isin(3, 7), F.lit("job")).alias("define_tag"),
         F.col("event_type").alias("etype"),
     )
-    out = apply_rewrite_tags(df, parse_rewrite_tag_conf(_REWRITE_ENGINE_CONF))
+    out = apply_rewrite_tags(df, parse_rewrite_tag_conf(_REWRITE_ENGINE_CONF), "kube.events")
     return out.select(
         F.when(F.col("tag").startswith("kube."), F.lit("container"))
         .otherwise(F.col("tag"))
@@ -753,7 +752,7 @@ def throttle_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_events(spark, sf_dir)
     kept = op_drop(
-        ev, rate=3, key="user_id", ts_col="ts", order_col="event_id", bucket="day"
+        ev, rate=3, key="user_id", order_col="event_id", bucket="day"
     )
     return kept.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("kept"),
@@ -779,7 +778,7 @@ def throttle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from logpipe.operators.throttle import throttle_audit as op_audit
 
     ev = load_events(spark, sf_dir)
-    return op_audit(ev, rate=3, key="user_id", ts_col="ts", bucket="day")
+    return op_audit(ev, rate=3, key="user_id", bucket="day")
 
 
 # ---------------------------------------------------------------------------
@@ -1022,9 +1021,7 @@ def session_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir).select(
         F.col("user_id"), F.col("event_id"), F.col("ts")
     )
-    out = session_stats(
-        ev, gap_sec=1800, key="user_id", ts_col="ts", order_col="event_id"
-    )
+    out = session_stats(ev, gap_sec=1800, key="user_id", order_col="event_id")
     return out.select(
         "user_id",
         F.col("session_id").cast("long").alias("session_id"),

@@ -383,7 +383,7 @@ def media_resize_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_media,
     )
 
-    media = synth_media(spark, n_rows=256, seed=42)
+    media = synth_media(spark, n_rows=256)
     feats = decode_features(media).select(
         "media_id",
         "kind",
@@ -780,7 +780,7 @@ def textstats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts.bpe_ish_token_count(F.col("text")).alias("n_bpe_ish"),
         ts.quality_score(F.col("text")).alias("quality"),
         ts.lang_id(F.col("text")).alias("pred_lang"),
-        ts.dup_ngram_fraction(F.col("text"), n=2).alias("dup_bigram_frac"),
+        ts.dup_ngram_fraction(F.col("text")).alias("dup_bigram_frac"),
         ts.fingerprint(F.col("text")).alias("fp"),
     )
     return base.join(ts.top_token_stats(d), "doc_id")

@@ -166,11 +166,10 @@ def read_docker_logs(
 
 def fragment_join(
     df: DataFrame,
-    partial_col: str = "partial",
     carry: tuple[str, ...] = ("role", "tool", "ts", "file"),
 ) -> DataFrame:
     """Rejoin records the runtime split out of ONE over-long app line:
-    a record marked partial continues into the next record.
+    a record whose `partial` flag is set continues into the next record.
 
     Fragments concatenate with NO separator (they are pieces of one
     line, unlike the multiline filter which joins distinct lines with
@@ -184,7 +183,7 @@ def fragment_join(
     a trailing newline continues) and CRI logtag P/F (cri partial
     records continue until the next F record).
     """
-    prev = F.lag(partial_col).over(Window.partitionBy("conv_id").orderBy("turn_idx"))
+    prev = F.lag("partial").over(Window.partitionBy("conv_id").orderBy("turn_idx"))
     is_start = ~F.coalesce(prev, F.lit(False))
     runs = collapse_runs(df, is_start, "", carry=carry)
     return runs.drop("grp", "n_lines")
@@ -193,9 +192,7 @@ def fragment_join(
 def docker_mode_join(df: DataFrame) -> DataFrame:
     """Docker_Mode On: see fragment_join (the `partial` marker comes
     from read_docker_logs — log without the trailing newline)."""
-    return fragment_join(
-        df, "partial", carry=("role", "tool", "ts", "file", "docker_id")
-    )
+    return fragment_join(df, carry=("role", "tool", "ts", "file", "docker_id"))
 
 
 def cri_mode_join(df: DataFrame) -> DataFrame:
@@ -204,7 +201,7 @@ def cri_mode_join(df: DataFrame) -> DataFrame:
     cri-runtime.conf Multiline handling)."""
     return fragment_join(
         df.withColumn("partial", F.col("logtag") == "P"),
-        "partial", carry=("role", "tool", "ts", "file", "logtag"),
+        carry=("role", "tool", "ts", "file", "logtag"),
     )
 
 

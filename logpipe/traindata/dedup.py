@@ -664,6 +664,7 @@ def near_dup_clusters_star(
 
 
 SIMHASH_BITS = 60  # 15 md5 hex chars -> fits a signed 64-bit long
+SIMHASH_BANDS = 4  # simhash_near_dups' exact-match chunks per signature
 
 
 def simhash_table(docs: DataFrame) -> DataFrame:
@@ -722,12 +723,10 @@ def simhash_table(docs: DataFrame) -> DataFrame:
     return agg.select("doc_id", sig.alias("simhash"))
 
 
-def simhash_near_dups(
-    docs: DataFrame, max_hamming: int = 3, bands: int = 4
-) -> DataFrame:
-    """SimHash near-dup pairs: band the 60-bit signature into `bands`
-    15-bit chunks (pigeonhole: hamming<=3 pairs share >=1 exact chunk
-    when bands=4), bucket-join on (band, chunk), verify true hamming.
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup pairs: band the 60-bit signature into
+    SIMHASH_BANDS 15-bit chunks (pigeonhole: hamming<=3 pairs share >=1
+    exact chunk), bucket-join on (band, chunk), verify true hamming.
 
     The signature table is materialize()d before the self-join: the
     join gives Catalyst no reusable exchange (the small side
@@ -737,7 +736,7 @@ def simhash_near_dups(
     The materialized table is (doc_id, int64) scalars, trivially
     checkpointable at any scale (mode-injectable: logpipe.materialize).
     """
-    width = SIMHASH_BITS // bands
+    width = SIMHASH_BITS // SIMHASH_BANDS
     sigs = materialize(simhash_table(docs))
     banded = sigs.select(
         "doc_id",
@@ -751,7 +750,7 @@ def simhash_near_dups(
                         .bitwiseAND(F.lit((1 << width) - 1))
                         .alias("chunk"),
                     )
-                    for i in range(bands)
+                    for i in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("bk"),

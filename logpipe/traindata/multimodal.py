@@ -30,10 +30,10 @@ N_FEATURES = 8     # decode_features' vector length
 FRAME_BYTES = 16   # frame_sample's payload bytes per frame
 
 
-def synth_media(spark: SparkSession, n_rows: int = 256, seed: int = 42) -> DataFrame:
+def synth_media(spark: SparkSession, n_rows: int = 256) -> DataFrame:
     """Deterministic fake media table: payload = repeated md5 bytes."""
     df = spark.range(n_rows)
-    h = F.md5(F.concat(F.lit(f"media-{seed}-"), F.col("id").cast("string")))
+    h = F.md5(F.concat(F.lit("media-42-"), F.col("id").cast("string")))
     kind = (
         F.when(F.col("id") % 3 == 0, "image")
         .when(F.col("id") % 3 == 1, "audio")

@@ -174,23 +174,21 @@ def quality_score(text: Column) -> Column:
     )
 
 
-def dup_ngram_fraction(text: Column, n: int = 2) -> Column:
-    """Gopher-style repetition signal: fraction of n-gram POSITIONS that
-    repeat an earlier n-gram ((total - distinct) / total). High values
+def dup_ngram_fraction(text: Column) -> Column:
+    """Gopher-style repetition signal: fraction of bigram POSITIONS that
+    repeat an earlier bigram ((total - distinct) / total). High values
     flag machine-generated / boilerplate-heavy documents. Columnar:
     zip_with over shifted token slices (no per-position indexing), no
-    shuffle. Docs with < n tokens score 0.0.
+    shuffle. Docs with < 2 tokens score 0.0.
     """
     toks = tokens(text)
-    cnt = F.size(toks) - (n - 1)
-    acc = F.slice(toks, 1, cnt)
-    for j in range(1, n):
-        acc = F.zip_with(
-            acc, F.slice(toks, j + 1, cnt), lambda x, y: F.concat_ws(" ", x, y)
-        )
-    distinct = F.size(F.array_distinct(acc))
+    cnt = F.size(toks) - 1
+    bigrams = F.zip_with(
+        F.slice(toks, 1, cnt), F.slice(toks, 2, cnt), lambda x, y: F.concat_ws(" ", x, y)
+    )
+    distinct = F.size(F.array_distinct(bigrams))
     frac = (cnt - distinct).cast("double") / cnt.cast("double")
-    return F.when(F.size(toks) >= n, F.round(frac, 4)).otherwise(F.lit(0.0))
+    return F.when(F.size(toks) >= 2, F.round(frac, 4)).otherwise(F.lit(0.0))
 
 
 def top_token_stats(docs):
@@ -256,7 +254,7 @@ def gopher_signals(docs):
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
         F.round(alpha_ratio(F.col("text")), 4).alias("alpha_ratio"),
-        dup_ngram_fraction(F.col("text"), n=2).alias("dup_bigram_frac"),
+        dup_ngram_fraction(F.col("text")).alias("dup_bigram_frac"),
     )
     return base.join(top_token_stats(docs), "doc_id")
 

@@ -52,8 +52,9 @@ QUERIES = [
         "BroadcastHashJoins, projections/filters, then ONE shuffle for "
         "the per-sink aggregate (map-side partial agg first). The "
         "conf-declared rewrite_tag cascade compiles to one Generate "
-        "(finals explode) — no Union (a union-of-rounds formulation "
-        "re-scans the input per re-injection round), no Exchange "
+        "that explodes sink names resolved at plan time — no Union "
+        "(a union-of-rounds formulation re-scans the input per "
+        "re-injection round), no Exchange "
         "before the per-sink aggregate.",
     ),
     (

@@ -79,7 +79,7 @@ def test_throttle_drop_matches_python_model(spark, rows, rate):
     got = {
         r["turn_idx"]
         for r in throttle_drop(
-            df, rate=rate, key="conv_id", ts_col="ts",
+            df, rate=rate, key="conv_id",
             order_col="turn_idx", bucket="day",
         ).collect()
     }

@@ -7,6 +7,8 @@ The router both plans run is checked end to end against pyref
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -58,8 +60,6 @@ def test_conf_rejections():
 
 
 def test_glob_to_regex():
-    import re
-
     assert re.match(glob_to_regex("kube.*"), "kube.ns.pod")
     assert not re.match(glob_to_regex("kube.*"), "erda.log.job")
     assert re.match(glob_to_regex("erda.log.job"), "erda.log.job")
@@ -80,18 +80,16 @@ def test_first_match_wins_and_keep(spark):
     match in.*
     Rule $a .+ stage2.saw true
 """
-    df = spark.createDataFrame(
-        [("in.1", "hit"), ("in.2", "miss")], "tag string, a string"
-    )
+    df = spark.createDataFrame([("hit",), ("miss",)], "a string")
     got = sorted(
         (r["tag"], r["a"])
-        for r in apply_rewrite_tags(df, parse_rewrite_tag_conf(conf)).collect()
+        for r in apply_rewrite_tags(df, parse_rewrite_tag_conf(conf), "in.1").collect()
     )
-    # in.1: rule1 fires (not rule2), original dies, stage2 skipped
-    # in.2: stage1 rule1 misses, rule2 fires keep=true; stage2 also fires
+    # hit: rule1 fires (not rule2), original dies, stage2 skipped
+    # miss: stage1 rule1 misses, rule2 fires keep=true; stage2 also fires
     assert got == [
         ("first.won", "hit"),
-        ("in.2", "miss"),
+        ("in.1", "miss"),
         ("second.never", "miss"),
         ("stage2.saw", "miss"),
     ]
@@ -110,26 +108,27 @@ def test_reinjected_copies_traverse_again(spark):
     match b.*
     Rule $f .+ c.final true
 """
-    df = spark.createDataFrame([("a.1", "v"), ("z.1", "v")], "tag string, f string")
-    got = sorted(
-        r["tag"]
-        for r in apply_rewrite_tags(df, parse_rewrite_tag_conf(conf)).collect()
-    )
-    assert got == ["b.mid", "c.final", "z.1"]
+    df = spark.createDataFrame([("v",)], "f string")
+    stages = parse_rewrite_tag_conf(conf)
+    got = sorted(r["tag"] for r in apply_rewrite_tags(df, stages, "a.1").collect())
+    assert got == ["b.mid", "c.final"]
+    # a tag no stage covers passes through untouched
+    got = [r["tag"] for r in apply_rewrite_tags(df, stages, "z.1").collect()]
+    assert got == ["z.1"]
 
 
 def test_cyclic_config_refused(spark):
     """A tag cycle would loop forever in fluent-bit; the engine refuses
     it at plan time, through the public entry point: a self-loop and a
     two-tag loop."""
-    df = spark.createDataFrame([("a.1", "v")], "tag string, f string")
+    df = spark.createDataFrame([("v",)], "f string")
     for rules in ([("a.*", "a.loop")], [("a.*", "b.x"), ("b.*", "a.y")]):
         conf = "".join(
             f"[FILTER]\n name rewrite_tag\n match {m}\n Rule $f .+ {t} true\n"
             for m, t in rules
         )
         with pytest.raises(ValueError, match="cycl"):
-            apply_rewrite_tags(df, parse_rewrite_tag_conf(conf))
+            apply_rewrite_tags(df, parse_rewrite_tag_conf(conf), "a.1")
 
 
 def test_long_acyclic_chain_routes(spark):
@@ -140,8 +139,8 @@ def test_long_acyclic_chain_routes(spark):
         f"[FILTER]\n name rewrite_tag\n match t{i}\n Rule $f .+ t{i + 1} false\n"
         for i in range(9)
     )
-    df = spark.createDataFrame([("t0", "v")], "tag string, f string")
-    out = apply_rewrite_tags(df, parse_rewrite_tag_conf(conf))
+    df = spark.createDataFrame([("v",)], "f string")
+    out = apply_rewrite_tags(df, parse_rewrite_tag_conf(conf), "t0")
     assert [r["tag"] for r in out.collect()] == ["t9"]
 
 
@@ -157,11 +156,36 @@ def test_null_conv_id_still_routes(spark):
     assert got == ["job"]
 
 
+def test_rule_regexes_use_onig_dot(spark):
+    """Rule regexes run with Onig's `.` (every character but \\n), as
+    fluent-bit and pyref do: a define_tag of "\\r" routes to job, and a
+    collector label of "\\u2028" gets an export copy. Java's default
+    `.` excludes both characters."""
+    df = spark.createDataFrame(
+        [("a", {}, "\r"), ("b", {"monitor_log_collector": "\u2028"}, None)],
+        "id string, labels map<string,string>, define_tag string",
+    )
+    got = sorted((r["id"], r["sink"]) for r in route(df).collect())
+    assert got == [("a", "job"), ("b", "container"), ("b", "export")]
+
+
+def test_route_dispatches_at_plan_time(spark):
+    """Final tags resolve to sinks while the plan is built: the
+    optimized plan runs one RLIKE per declared Rule, each on an input
+    column, and none on the generated `sink`."""
+    df = spark.createDataFrame(
+        [({"monitor_log_collector": "c"}, "j")],
+        "labels map<string,string>, define_tag string",
+    )
+    plan = route(df)._jdf.queryExecution().optimizedPlan().toString()
+    subjects = re.findall(r"RLIKE\((\w+)#", plan)
+    assert sorted(subjects) == ["define_tag", "labels"], plan
+
+
 def test_engine_plan_stays_narrow(spark):
     """The cascade compiles to projections + a generator — no exchange
     (shuffle) may appear in the routed plan before aggregation."""
     df = spark.range(100).select(
-        F.concat(F.lit("kube."), F.col("id").cast("string")).alias("tag"),
         F.when(F.col("id") % 3 == 0, F.lit("c")).alias("collector"),
         F.when(F.col("id") % 5 == 0, F.lit("j")).alias("define_tag"),
     )
@@ -175,7 +199,7 @@ def test_engine_plan_stays_narrow(spark):
     match kube.*
     Rule $define_tag .+ erda.log.job false
 """
-    out = apply_rewrite_tags(df, parse_rewrite_tag_conf(conf))
+    out = apply_rewrite_tags(df, parse_rewrite_tag_conf(conf), "kube.1")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     # re-injection compiles into the finals expression, not a Union of

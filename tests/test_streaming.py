@@ -244,7 +244,7 @@ def test_streaming_throttle_drop_across_batches(spark, tmp_path):
         r["turn_idx"]
         for r in throttle_drop(
             spark.read.parquet(inp), rate=3, key="conv_id",
-            ts_col="ts", order_col="turn_idx", bucket="day",
+            order_col="turn_idx", bucket="day",
         ).collect()
     }
     assert got == batch_kept
